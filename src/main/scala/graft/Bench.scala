@@ -1106,7 +1106,9 @@ object Bench {
     // full contract line is untouched, no `queries` entry is removed or
     // renamed.
     val failedNames = results.collect { case (k, _, false, _) => k }
-    val failedCompact = failedNames.take(20)
+    // "..." marks a list cut at 20 names (n_failed carries the full count)
+    val failedCompact = (failedNames.take(20) ++
+        (if (failedNames.size > 20) Seq("...") else Nil))
       .map("\"" + _ + "\"").mkString("[", ",", "]")
     def probeNum(json: String, key: String): String = {
       // pull one numeric field out of an already-rendered probe fragment

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -57,17 +58,32 @@ final class CoachingPipeline(embedder: EmbeddingProvider, chat: ChatProvider,
   def embedMessages(prospect: DataFrame): DataFrame =
     MlPredict.withEmbedding(prospect, embedder, "message", "embedding")
 
+  // The store as a broadcast variable, made on first use from the first
+  // retrieving frame's SparkContext: each executor fetches one copy, and
+  // the search UDFs capture only this handle, so the per-task binary of
+  // every (micro-)batch stays a few KB instead of carrying the corpus.
+  // It is a snapshot: on a cluster, executors do not see later changes to
+  // a mutable store, so build a new pipeline after re-indexing one.
+  @transient private var storeBc: Broadcast[VectorStore] = _
+  private def broadcastStore(frame: DataFrame): Broadcast[VectorStore] =
+    synchronized {
+      if (storeBc == null)
+        storeBc = frame.sparkSession.sparkContext.broadcast(store)
+      storeBc
+    }
+
   /** Stage: embeddings → rag_results (reference :367-385): lateral
     * VECTOR_SEARCH k=3 then reshape to exactly-3 ARRAY<STRUCT<document_id,
     * chunks>> dropping the embeddings. element_at is 1-based like Flink
-    * subscripts; <3 hits yields NULL elements (SURVEY.md §7.4 #5). */
+    * subscripts; <3 hits yields NULL elements (SURVEY.md §7.4 #5). The
+    * search runs per row against the broadcast store. */
   def retrieve(embedded: DataFrame): DataFrame = {
-    val st = store; val kk = k; val nc = numCandidates
+    val bc = broadcastStore(embedded); val kk = k; val nc = numCandidates
     // non-deterministic: the search is expensive (remote in prod) — keep
     // Catalyst from re-executing it via CSE or reordering filters above it
     // (SURVEY.md §7.4 #2).
     val searchUdf = udf((q: Seq[Float]) =>
-      if (q == null) Seq.empty[SearchHit] else st.search(q.toArray, kk, nc))
+      if (q == null) Seq.empty[SearchHit] else bc.value.search(q.toArray, kk, nc))
       .asNondeterministic()
     val hits = embedded.withColumn("search_results", searchUdf(col("embedding")))
     // try_element_at: <k hits must yield NULL entries, not an ANSI
@@ -85,10 +101,10 @@ final class CoachingPipeline(embedder: EmbeddingProvider, chat: ChatProvider,
     * diversified at weight `lambda`. Same exactly-k
     * ARRAY<STRUCT<document_id, chunks>> contract, NULL tail for <k. */
   def retrieveDiverse(embedded: DataFrame, lambda: Double = 0.7): DataFrame = {
-    val st = store; val kk = k; val nc = numCandidates
+    val bc = broadcastStore(embedded); val kk = k; val nc = numCandidates
     val searchUdf = udf((q: Seq[Float]) =>
       if (q == null) Seq.empty[SearchHit]
-      else st.searchDiverse(q.toArray, kk, lambda, nc))
+      else bc.value.searchDiverse(q.toArray, kk, lambda, nc))
       .asNondeterministic()
     val hits = embedded.withColumn("search_results", searchUdf(col("embedding")))
     def entry(i: Int) = struct(

@@ -104,7 +104,9 @@ object CoachingBroadcaster {
 /** @param ingress message-ingress hook (the reference's
   *   `POST /api/send-message` → send_to_kafka, api_routes.py:25-45):
   *   called with the message text on a cache MISS; wire it to the
-  *   streaming chain's input (a topic append / MemoryStream add).
+  *   streaming chain's input (a topic append / MemoryStream add). The
+  *   server serializes its calls under one lock, so a hook that is not
+  *   thread-safe (MemoryStream.addData) needs no lock of its own.
   * @param cache the CSV response cache behind the CRUD routes
   *   (reference cache_routes.py:16-103) and the send-message
   *   cached-short-circuit.
@@ -131,6 +133,8 @@ final class CoachingServer(broadcaster: CoachingBroadcaster,
   import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 
   private var server: HttpServer = _
+  // handler threads run concurrently; the ingress hook sees one at a time
+  private val ingressLock = new Object
   private var pool: java.util.concurrent.ExecutorService = _
 
   // Spark ships Jackson; the serve layer reuses it for the route JSON
@@ -263,7 +267,7 @@ final class CoachingServer(broadcaster: CoachingBroadcaster,
                   "full_data" -> row)))
               case None => ingress match {
                 case Some(send) =>
-                  send(m)
+                  ingressLock.synchronized(send(m))
                   respond(x, 200, toJson(Map("status" -> "sent",
                     "message" -> m)))
                 case None =>

@@ -65,13 +65,39 @@ object VectorStoreRegistry {
 }
 
 /** Exact cosine top-k over an in-memory corpus; build once on the driver
-  * (or from a DataFrame) and let Spark broadcast it inside the search UDF's
-  * closure — one copy per executor, queries never shuffle.
+  * (or from a DataFrame). Per-row callers ship it as a Spark broadcast
+  * variable (CoachingPipeline.retrieve holds a `Broadcast[VectorStore]`
+  * and its search UDF captures only that handle), so each executor
+  * fetches one copy and task binaries stay small; queries never shuffle.
   */
 final class BroadcastBruteForceStore(
     corpus: Array[(String, String, Array[Float])]) extends VectorStore {
 
   override def size: Int = corpus.length
+
+  /** Squared norm of each corpus vector, summed in index order exactly as
+    * [[cosine]] sums it, so the scan's scores stay bit-identical. */
+  private val sqNorms: Array[Double] = corpus.map(e => sqNorm(e._3))
+
+  private def sqNorm(v: Array[Float]): Double = {
+    var n = 0.0; var i = 0
+    while (i < v.length) { n += v(i).toDouble * v(i); i += 1 }
+    n
+  }
+
+  /** cosine(query, corpus(i)) given the query's squared norm `qn`: one
+    * multiply-add per element. A length mismatch takes [[cosine]], which
+    * sums every term over the shorter prefix. */
+  private def sim(query: Array[Float], qn: Double, i: Int): Double = {
+    val v = corpus(i)._3
+    if (v.length != query.length) cosine(query, v)
+    else {
+      var dot = 0.0; var j = 0
+      while (j < v.length) { dot += query(j).toDouble * v(j); j += 1 }
+      val nb = sqNorms(i)
+      if (qn == 0 || nb == 0) -1.0 else dot / (math.sqrt(qn) * math.sqrt(nb))
+    }
+  }
 
   private def cosine(a: Array[Float], b: Array[Float]): Double = {
     var dot = 0.0; var na = 0.0; var nb = 0.0
@@ -92,9 +118,10 @@ final class BroadcastBruteForceStore(
       Ordering.by[(Double, Int), (Double, Int)](t => (t._1, -t._2))(
         Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int)).reverse
     val pq = scala.collection.mutable.PriorityQueue.empty[(Double, Int)]
+    val qn = sqNorm(query)
     var i = 0
     while (i < corpus.length) {
-      val s = cosine(query, corpus(i)._3)
+      val s = sim(query, qn, i)
       if (pq.size < k) pq.enqueue((s, i))
       else if (s > pq.head._1) { pq.dequeue(); pq.enqueue((s, i)) }
       i += 1
@@ -114,17 +141,13 @@ final class BroadcastBruteForceStore(
     * score). */
   override def searchDiverse(query: Array[Float], k: Int, lambda: Double,
                              numCandidates: Int): Seq[SearchHit] = {
-    def norm0(v: Array[Float]): Boolean = {
-      var i = 0; var n = 0.0
-      while (i < v.length) { n += v(i).toDouble * v(i); i += 1 }
-      n == 0.0
-    }
-    if (norm0(query)) return Nil
+    val qn = sqNorm(query)
+    if (qn == 0.0) return Nil
     val candN = math.max(2 * k, 8)
     // top-candN corpus indices by (sim desc, index asc) — the same
     // ordering contract as search()
-    val top = corpus.indices.filter(i => !norm0(corpus(i)._3))
-      .map(i => (cosine(query, corpus(i)._3), i))
+    val top = corpus.indices.filter(i => sqNorms(i) != 0.0)
+      .map(i => (sim(query, qn, i), i))
       .sortBy { case (s, i) => (-s, i) }.take(candN)
     val picked = graft.operators.SimilaritySearch.mmrGreedy(
       top.map { case (s, i) => (i, s, corpus(i)._3) }, lambda, k)

@@ -1503,14 +1503,23 @@ object StreamingOps {
     fs.delete(new org.apache.hadoop.fs.Path(staging), true)
     // atomic pointer swap: temp file + rename(OVERWRITE). The manifest
     // itself was committed as the claim, before staging.
-    val rootPath = new org.apache.hadoop.fs.Path(root)
     val tmp = new org.apache.hadoop.fs.Path(s"$root/_CURRENT.tmp")
-    val out = fs.create(tmp, true)
+    val cur = new org.apache.hadoop.fs.Path(s"$root/_CURRENT")
+    val pfs = pointerFs(fs)
+    val out = pfs.create(tmp, true)
     try out.write(next.toString.getBytes("UTF-8")) finally out.close()
-    org.apache.hadoop.fs.FileContext
-      .getFileContext(rootPath.toUri, spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, new org.apache.hadoop.fs.Path(s"$root/_CURRENT"),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    if (pfs.isInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem]) {
+      // rename(2) replaces the pointer in one atomic step. The pointer
+      // has no .crc (a checksummed rename moves data and .crc as two
+      // steps, and a reader between them fails its checksum); drop the
+      // stale one a checksummed writer may have left.
+      pfs.delete(new org.apache.hadoop.fs.Path(s"$root/._CURRENT.crc"), false)
+      require(pfs.rename(tmp, cur), s"snapshot publish: rename $tmp → $cur failed")
+    } else
+      org.apache.hadoop.fs.FileContext
+        .getFileContext(new org.apache.hadoop.fs.Path(root).toUri,
+          spark.sparkContext.hadoopConfiguration)
+        .rename(tmp, cur, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
     // post-swap readback: the claim must still carry THIS publish's
     // nonce. Two writers sharing a writerId can interleave a
     // reclaim-steal (B mistakes live A's claim for A's crash); the
@@ -1641,12 +1650,22 @@ object StreamingOps {
     currentSnapshotId(fs, root).filter(id => fs.exists(
       new org.apache.hadoop.fs.Path(s"$root/_manifests/m$id")))
 
+  /** The filesystem the `_CURRENT` pointer is read and written through:
+    * the raw one under a checksummed wrapper (the local filesystem), so
+    * the pointer has no `.crc` sidecar that could lag its data file. */
+  private def pointerFs(fs: org.apache.hadoop.fs.FileSystem)
+      : org.apache.hadoop.fs.FileSystem = fs match {
+    case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+    case other => other
+  }
+
   private def currentSnapshotId(fs: org.apache.hadoop.fs.FileSystem,
                                 root: String): Option[Long] = {
     val p = new org.apache.hadoop.fs.Path(s"$root/_CURRENT")
-    if (!fs.exists(p)) None
+    val pfs = pointerFs(fs)
+    if (!pfs.exists(p)) None
     else {
-      val in = fs.open(p)
+      val in = pfs.open(p)
       try {
         val s = new String(
           org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim

@@ -239,6 +239,38 @@ class IndexSyncSpec extends SparkSpec {
     } finally sink.stop()
   }
 
+  test("a reader polling readSnapshot never trips over the sink's pointer swap") {
+    implicit val ctx = spark.sqlContext
+    val root = tmp("pointer-race") + "/snap"
+    val input = MemoryStream[(Long, Long, String, String)]
+    // every version is retained, so only the _CURRENT swap is under test
+    val sink = StreamingOps.snapshotUpsertSink(
+        input.toDF.toDF("doc_id", "seq", "op", "text"), root,
+        keepVersions = 64, numBuckets = 2)
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
+      .start()
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val reads = new java.util.concurrent.atomic.AtomicLong(0)
+    @volatile var publishing = true
+    val reader = new Thread(() =>
+      try while (publishing) {
+        StreamingOps.readSnapshot(spark, root)
+        reads.incrementAndGet()
+      } catch { case t: Throwable => failure.set(t) })
+    reader.setDaemon(true)
+    try {
+      reader.start()
+      (1L to 50L).foreach { b =>
+        input.addData((b % 7, b, "upsert", s"text $b"))
+        sink.processAllAvailable()
+      }
+    } finally { publishing = false; reader.join(30000); sink.stop() }
+    failure.get shouldBe null
+    reads.get should be > 0L
+    StreamingOps.readSnapshot(spark, root).get.count() shouldBe 7L
+  }
+
   test("standingIndexSync: the rate-clocked standing pump keeps the index fresh across store mutations") {
     implicit val ctx = spark.sqlContext
     val base = tmp("standing")

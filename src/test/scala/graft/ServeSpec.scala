@@ -406,6 +406,53 @@ class ServeHttpSurfaceSpec extends SparkSpec {
     } finally { query.stop(); server.stop() }
   }
 
+  test("concurrent POSTs through an unsynchronized MemoryStream hook are each answered exactly once") {
+    implicit val ctx = spark.sqlContext
+    ModelRegistry.registerReferenceModels()
+    val embedder = new MockEmbedder(32)
+    val knowledge = Seq(
+      ("kb/pricing.md", "Pricing", "kb", "pricing objection handling guide"))
+      .toDF("document_id", "document_name", "document_category", "document_text")
+    val boot = new CoachingPipeline(embedder, new MockChat,
+      new BroadcastBruteForceStore(Array.empty))
+    val store = BroadcastBruteForceStore.fromDataFrame(boot.indexKnowledge(knowledge))
+    val pipeline = new CoachingPipeline(embedder, new MockChat, store)
+
+    val input = MemoryStream[(String, String, java.sql.Timestamp)]
+    val coached = pipeline.coach(
+      StreamingOps.dedupWithTtl(
+        input.toDF.toDF("message", "speaker", "ts"), "message", "ts"))
+    val b = new CoachingBroadcaster()
+    val (_, events) = b.subscribe()
+    // MemoryStream.addData is not thread-safe; the server must serialize
+    // the hook's calls itself
+    val server = new CoachingServer(b,
+      ingress = Some(m => input.addData((m, "prospect",
+        new java.sql.Timestamp(System.currentTimeMillis())))))
+    val port = server.start()
+    val query = CoachingServer.pushSink(coached, b)
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("graft-http-concurrent").toString)
+      .start()
+    val posters = java.util.concurrent.Executors.newFixedThreadPool(16)
+    try {
+      val messages = (0 until 200).map(i => s"concurrent question $i")
+      val posted = messages.map { m =>
+        posters.submit(() => req("POST",
+          s"http://127.0.0.1:$port/api/send-message",
+          Some(s"""{"message":"$m"}"""))._1)
+      }
+      posted.map(_.get(60, java.util.concurrent.TimeUnit.SECONDS)).toSet shouldBe Set(200)
+      query.processAllAvailable()
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      val answered = Iterator.continually(events.poll())
+        .takeWhile(_ != null).map(e => mapper.readTree(e).path("message").asText())
+        .toSeq
+      (messages.toSet -- answered) shouldBe empty // none lost
+      answered should have size messages.size.toLong // none twice
+    } finally { posters.shutdownNow(); query.stop(); server.stop() }
+  }
+
   test("coaching-advice endpoint answers from the advice function") {
     val server = new CoachingServer(new CoachingBroadcaster(),
       advice = Some(m =>

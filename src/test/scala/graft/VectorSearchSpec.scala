@@ -37,6 +37,64 @@ class BroadcastStoreSpec extends AnyFunSuite with Matchers {
     store.search(Array(0f, 1f, 0f), 10).map(_.document_id).head shouldBe "d3"
     store.search(Array(0f, 1f, 0f), 10) should have size 4
   }
+
+  // Reference scan: per-pair cosine summed over the shorter prefix, zero
+  // norm → -1.0, then a full sort (score desc, smaller index wins ties).
+  private def refCosine(a: Array[Float], b: Array[Float]): Double = {
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    val n = math.min(a.length, b.length)
+    while (i < n) {
+      dot += a(i).toDouble * b(i); na += a(i).toDouble * a(i); nb += b(i).toDouble * b(i)
+      i += 1
+    }
+    if (na == 0 || nb == 0) -1.0 else dot / (math.sqrt(na) * math.sqrt(nb))
+  }
+  private def refSearch(c: Array[(String, String, Array[Float])],
+                        q: Array[Float], k: Int): Seq[(String, String, Double)] =
+    c.indices.map(i => (refCosine(q, c(i)._3), i))
+      .sortWith { case ((s1, i1), (s2, i2)) =>
+        val o = java.lang.Double.compare(s1, s2)
+        o > 0 || (o == 0 && i1 < i2)
+      }
+      .take(k).map { case (s, i) => (c(i)._1, c(i)._2, s) }
+
+  test("search is bit-identical to the reference cosine scan on seeded corpora") {
+    val rnd = new scala.util.Random(11)
+    def vec(d: Int): Array[Float] = Array.fill(d)(rnd.nextGaussian().toFloat)
+    (1 to 20).foreach { trial =>
+      val d = 4 + rnd.nextInt(60)
+      val base = Array.tabulate(40 + rnd.nextInt(40))(i => (s"d$i", s"c$i", vec(d)))
+      // zero vectors, exact duplicates (tied scores), a scaled copy (the
+      // same cosine up to rounding) and vectors shorter and longer than d
+      val corpus = base ++ Array(
+        ("zero", "z", new Array[Float](d)),
+        ("dup", "x", base(0)._3.clone()),
+        ("scaled", "s", base(1)._3.map(_ * 4f)),
+        ("short", "p", base(2)._3.take(d / 2)),
+        ("long", "l", base(3)._3 ++ vec(3)))
+      val s = new BroadcastBruteForceStore(corpus)
+      val queries = Seq(vec(d), base(0)._3, base(2)._3, new Array[Float](d),
+        vec(d + 5), vec(d / 2))
+      for (q <- queries; k <- Seq(1, 3, 7, corpus.length + 5)) withClue(s"trial $trial k=$k") {
+        s.search(q, k, 150).map(h => (h.document_id, h.chunks, h.score)) shouldBe
+          refSearch(corpus, q, k)
+      }
+    }
+  }
+
+  test("search keeps exact ties, zero-norm -1.0 scores and k > corpus size") {
+    val tied = new BroadcastBruteForceStore(Array(
+      ("z1", "", Array(0f, 0f)), ("a", "", Array(1f, 1f)),
+      ("b", "", Array(1f, 1f)), ("z2", "", Array(0f, 0f)), ("c", "", Array(2f, 2f))))
+    val hits = tied.search(Array(3f, 3f), 10, 150)
+    hits.map(_.document_id) shouldBe Seq("a", "b", "c", "z1", "z2")
+    hits.map(_.score).drop(3) shouldBe Seq(-1.0, -1.0)
+    hits.map(_.score).take(3).distinct should have size 1
+    // a zero query scores every entry -1.0: corpus order is the ranking
+    tied.search(Array(0f, 0f), 10, 150).map(h => (h.document_id, h.score)) shouldBe
+      Seq("z1", "a", "b", "z2", "c").map(_ -> -1.0)
+  }
 }
 
 class VectorOpsSpec extends SparkSpec {
