@@ -176,7 +176,8 @@ object TextAnalysis {
     * derived from it → equi-join over the aggregated pairs →
     * broadcast 1-row total → per-doc tf-weighted mean. Same shape as
     * tf-idf: doc/term-keyed shuffles over aggregated rows, nothing
-    * quadratic. */
+    * quadratic. Eager: the call itself runs ONE job (the counts'
+    * local checkpoint; see [[tfidfTopTerms]]). */
   def unigramSurprisal(df: DataFrame, textCol: String, idCol: String): DataFrame = {
     val toks = df.select(col(idCol).as("doc_id"),
       explode(regexp_extract_all(lower(col(textCol)), lit("[a-z0-9]+"), lit(0)))
@@ -188,8 +189,7 @@ object TextAnalysis {
     // and joins the aggregated pairs (guide §2.3/§2.4). The per-doc
     // mean is the tf-weighted mean over distinct terms — identical up
     // to float summation order, far below the round-6 convention.
-    // Bounded intermediate (distinct (doc, term) pairs); eager local
-    // checkpoint, same caveats as [[tfidfTopTerms]].
+    // Bounded intermediate (distinct (doc, term) pairs).
     val tc = toks.groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf")).localCheckpoint(true)
     val termCount = tc.groupBy(col("term")).agg(sum(col("tf")).as("c"))
@@ -220,7 +220,8 @@ object TextAnalysis {
     * equi-joins over the aggregated pairs → per-doc count-weighted
     * mean. All shuffles are key-uniform aggregates/joins, nothing
     * quadratic; the model tables are corpus-bounded aggregates, the
-    * same class as [[tfIdf]]'s term table. */
+    * same class as [[tfIdf]]'s term table. Eager: the call itself runs
+    * ONE job (the counts' local checkpoint; see [[tfidfTopTerms]]). */
   def bigramSurprisal(df: DataFrame, textCol: String, idCol: String): DataFrame = {
     val toks = df.select(col(idCol).as("doc_id"),
       regexp_extract_all(lower(col(textCol)), lit("[a-z0-9]+"), lit(0)).as("ts"))
@@ -237,8 +238,7 @@ object TextAnalysis {
     // explode once and joins the aggregated pairs (guide §2.3/§2.4).
     // The per-doc mean is the count-weighted mean over distinct
     // bigrams — identical up to float summation order, far below the
-    // round-6 convention. Bounded intermediate; eager local
-    // checkpoint, same caveats as [[tfidfTopTerms]].
+    // round-6 convention. Bounded intermediate.
     val pc = pairs.groupBy(col("doc_id"), col("l"), col("r"))
       .agg(count(lit(1)).as("n")).localCheckpoint(true)
     val bgCount = pc.groupBy(col("l"), col("r")).agg(sum(col("n")).as("c_lr"))
@@ -327,7 +327,9 @@ object TextAnalysis {
     * HANDFUL of language rows → one broadcast hash join against the
     * ≤ langs×257-row model → doc-keyed sum → per-doc argmax window
     * (partitioned by doc — uniform, never global). Docs with no
-    * trigrams (empty text) score on priors alone. */
+    * trigrams (empty text) score on priors alone. Eager: the call itself
+    * runs ONE job (the merged model's local checkpoint; see
+    * [[tfidfTopTerms]]). */
   def langIdNbClassify(docs: DataFrame, model: DataFrame,
                        idCol: String = "doc_id",
                        textCol: String = "text"): DataFrame = {
@@ -552,7 +554,10 @@ object TextAnalysis {
     * Plan shape: token explode → (doc, term) count (map-side combinable)
     * → term-keyed df aggregate joined back on term (high-cardinality
     * equi-join) → broadcast 1-row N → per-doc window top-k. Three
-    * shuffles, all on high-cardinality keys; N is an O(1) broadcast. */
+    * shuffles, all on high-cardinality keys; N is an O(1) broadcast.
+    * Eager: the call itself runs ONE job, the (doc, term) counts' local
+    * checkpoint; on a cluster, executor loss then fails the query
+    * instead of recomputing them. */
   def tfidfTopTerms(df: DataFrame, textCol: String, idCol: String,
                     k: Int = 3): DataFrame = {
     val toks = df.select(col(idCol).as("doc_id"),
@@ -563,9 +568,7 @@ object TextAnalysis {
     // re-executed per reference (guide §2.4 — the bm25 postings
     // pattern). Bounded: one row per distinct (doc, term), the
     // aggregated face of the corpus, far smaller than the token
-    // explode. Eager local checkpoint: construction runs a job;
-    // executor loss on a cluster fails the query instead of recomputing
-    // lineage (acceptable for a bounded intermediate).
+    // explode.
     val tf = toks.groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf")).localCheckpoint(true)
     val docFreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))

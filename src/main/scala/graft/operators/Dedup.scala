@@ -289,10 +289,11 @@ object Dedup {
     * is one join + one map-side-combinable min aggregate;
     * `localCheckpoint` truncates the growing lineage so the loop doesn't
     * re-plan from scratch (on a cluster, checkpoint to reliable storage
-    * instead). Superseded rounds' checkpoint blocks are unreferenced
-    * each iteration and reclaimed asynchronously by Spark's
-    * ContextCleaner. Returns (id, comp) for every id that appears in a
-    * pair. */
+    * instead). Each round's convergence test rides its checkpoint job
+    * ([[Checkpoint]]), and each superseded round — and, once converged,
+    * the edge set — is released explicitly, so the result retains only
+    * the final labels' checkpoint. Returns (id, comp) for every id that
+    * appears in a pair. */
   def connectedComponents(pairs: DataFrame, aCol: String = "id_a",
                           bCol: String = "id_b",
                           maxIters: Int = 50): DataFrame = {
@@ -301,14 +302,14 @@ object Dedup {
     // pair lineage twice, and pairs are usually an LSH band expansion —
     // the most expensive subtree in the query (guide: don't compute
     // things twice). Released after the edge set materializes.
-    val p0 = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .localCheckpoint()
-    val edges = p0
+    val (p0, _) = Checkpoint(
+      pairs.select(col(aCol).as("src"), col(bCol).as("dst")))
+    val (edges, _) = Checkpoint(p0
       .union(p0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint()
-    unpersistCheckpoint(p0)
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("comp", col("id")).localCheckpoint()
+      .distinct())
+    Checkpoint.release(p0)
+    var labels = Checkpoint(edges.select(col("src").as("id")).distinct()
+      .withColumn("comp", col("id")))._1
     var converged = false
     var iters = 0
     while (!converged) {
@@ -323,20 +324,20 @@ object Dedup {
       // convergence rides the SAME checkpoint job as an observed
       // changed-labels count (the pageRank mass recipe) — the former
       // next⋈labels isEmpty probe was one extra join job per round
-      val obs = org.apache.spark.sql.Observation(s"cc_changed_$iters")
-      val next = labels
+      val (next, m) = Checkpoint(labels
         .join(nbrMin, Seq("id"), "left")
         .select(col("id"),
           least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp"),
-          col("comp").as("__cc_prev"))
-        .observe(obs, coalesce(sum(
+          col("comp").as("__cc_prev")),
+        coalesce(sum(
           when(col("comp") =!= col("__cc_prev"), 1L).otherwise(0L)),
           lit(0L)).as("changed"))
-        .localCheckpoint()
-      converged = obs.get("changed").asInstanceOf[Long] == 0L
-      unpersistCheckpoint(labels)
+      converged = m.getLong(0) == 0L
+      Checkpoint.release(labels)
       labels = next
     }
+    // the labels below never read the edge set again
+    Checkpoint.release(edges)
     labels.select(col("id"), col("comp"))
   }
 
@@ -571,17 +572,6 @@ object Dedup {
       .filter(col("u") =!= col("v")).distinct()
   }
 
-  /** Release the block-manager storage behind a localCheckpoint'ed
-    * DataFrame (its plan is a LogicalRDD over the materialized blocks;
-    * Dataset.unpersist only covers cacheManager entries, not these).
-    * No-op for any other plan shape. */
-  private def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   private[graft] def altStarWithRounds(pairs: DataFrame, aCol: String,
                                        bCol: String,
                                        maxIters: Int): (DataFrame, Int) = {
@@ -589,14 +579,18 @@ object Dedup {
     // below otherwise each inline the caller's whole pair lineage —
     // usually an LSH band expansion, the most expensive subtree in the
     // query — so it executed twice. Released after both deriveds land.
-    val p0 = pairs.select(col(aCol).as("u"), col(bCol).as("v"))
-      .localCheckpoint()
-    val allNodes = p0.select(col("u").as("id"))
-      .union(p0.select(col("v").as("id"))).distinct().localCheckpoint()
-    var edges = p0
-      .filter(col("u") =!= col("v")).distinct().localCheckpoint()
-    unpersistCheckpoint(p0)
-    var edgeCount = edges.count()
+    val (p0, _) = Checkpoint(
+      pairs.select(col(aCol).as("u"), col(bCol).as("v")))
+    val (allNodes, _) = Checkpoint(p0.select(col("u").as("id"))
+      .union(p0.select(col("v").as("id"))).distinct())
+    // each edge set's size rides its own checkpoint job as an observed
+    // count instead of a separate count() job
+    val rows = count(lit(1)).as("n")
+    val (e0, n0) = Checkpoint(
+      p0.filter(col("u") =!= col("v")).distinct(), rows)
+    Checkpoint.release(p0)
+    var edges = e0
+    var edgeCount = n0.getLong(0)
     var rounds = 0
     var converged = false
     while (!converged) {
@@ -604,23 +598,19 @@ object Dedup {
       require(rounds <= maxIters,
         s"connectedComponentsAltStar did not converge within $maxIters " +
           "rounds (expected O(log n); check for label-type mismatches)")
-      val next = altStarRound(edges).localCheckpoint()
+      val (next, n) = Checkpoint(altStarRound(edges), rows)
       // set equality of two DISTINCT edge sets: equal counts + empty
       // one-way difference. left_anti is one equi-join over the already
       // materialized checkpoints — except() would re-distinct both sides
       // and was the dominant per-round cost at bench scale. The previous
-      // round's count is carried in a var (it was this round's
-      // next.count()) instead of re-scanned every round.
-      val nextCount = next.count()
+      // round's count is carried in a var instead of re-scanned.
+      val nextCount = n.getLong(0)
       converged = nextCount == edgeCount &&
         next.join(edges, Seq("u", "v"), "left_anti").isEmpty
       edgeCount = nextCount
-      // `next` is eagerly materialized and the convergence check has
-      // consumed the last read of the PREVIOUS round's blocks — release
-      // them, or the job retains O(rounds) edge-set copies in the block
-      // manager for its whole lifetime. The final round's blocks stay
-      // live (the labels below read them at consumption time).
-      unpersistCheckpoint(edges)
+      // the convergence check was the last read of the previous round
+      // (the final round's blocks stay: the labels below read them)
+      Checkpoint.release(edges)
       edges = next
     }
     // fixpoint edges are stars center=component min: labels are the

@@ -45,7 +45,9 @@ object Lexical {
     * and the term join; both key on `term` — salt hot stopword terms or
     * pre-filter them if the corpus is pathological. Scores are rounded
     * to 6 decimals (the cross-engine sum-order convention) and ties
-    * break on nid, so the DuckDB oracle reproduces ranks exactly. */
+    * break on nid, so the DuckDB oracle reproduces ranks exactly.
+    * Eager: the call itself runs ONE job, the postings' local
+    * checkpoint (on a cluster, executor loss then fails the query). */
   def bm25TopK(queries: DataFrame, corpus: DataFrame, k: Int,
                k1: Double = 1.2, b: Double = 0.75,
                qId: String = "doc_id", qText: String = "text",

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The link graph of a web corpus — outlink extraction from HTML and
@@ -13,9 +13,10 @@ import org.apache.spark.sql.functions._
   * [[graft.functions.TextExtraction]]); PageRank is the standard
   * distributed shape: per iteration one src-keyed equi-join, one
   * dst-keyed partial-agg sum, and ONE scalar (the dangling mass)
-  * across the driver — the Lloyd-transfer bound. Iterations
-  * localCheckpoint like the alt-star component loop, so lineage stays
-  * flat at any iteration count. */
+  * across the driver — the Lloyd-transfer bound. Every iterative
+  * operator here checkpoints each round through [[Checkpoint]] (one
+  * job that also observes the round's scalars), so lineage stays flat
+  * at any iteration count, and releases the round it supersedes. */
 object WebGraph {
 
   /** href targets of `<a href=...>` anchors — double-quoted,
@@ -165,16 +166,12 @@ object WebGraph {
     * hubs are pages that point at good authorities; iterate
     * a ← Aᵀh, h ← Aa with L2 normalization after each half-step.
     * Same distributed shape as [[pageRank]]: per half-step one
-    * edge-keyed join + one partial-agg sum, then ONE localCheckpoint
-    * job (flat lineage) whose action ALSO computes the L2 norm via an
-    * `observe` metric — scores are stored unnormalized with the norm
-    * carried as a driver scalar, and the division folds into the next
-    * half-step's per-element expression, so the emitted values are
-    * bit-identical to dividing eagerly while each half-step costs one
-    * job instead of two (the norm aggregate no longer runs as its own
-    * job). Duplicate edges vote once. A normless half-step (no edges)
-    * keeps its zeros instead of dividing by zero. Returns
-    * (id, hub, authority). */
+    * edge-keyed join + one partial-agg sum, then ONE [[Checkpoint]]
+    * job that also observes the L2 norm — scores stay unnormalized and
+    * the division folds into the next half-step, so values are
+    * bit-identical to dividing eagerly. Duplicate edges vote once. A
+    * normless half-step (no edges) keeps its zeros instead of dividing
+    * by zero. Returns (id, hub, authority). */
   def hits(nodes: DataFrame, edges: DataFrame, iters: Int = 2,
            idCol: String = "id", srcCol: String = "src",
            dstCol: String = "dst"): DataFrame = {
@@ -187,22 +184,16 @@ object WebGraph {
     e.count() // materialize: reused 2× per iteration, and the cached
     // size feeds the half-step join planning (removing this job
     // measured web_hits consistently ~15% SLOWER — kept)
-    var obsId = 0
-    // one job: checkpoint the raw scores AND observe their sum of
-    // squares (coalesce: sum over ZERO rows — an empty node set — is
-    // null); returns the frame plus the L2 norm (1.0 when normless)
-    def materialize(scored: DataFrame, c: String): (DataFrame, Double) = {
-      obsId += 1
-      val obs = Observation(s"hits_ssq_$obsId")
-      val out = scored
-        .observe(obs, coalesce(sum(col(c) * col(c)), lit(0.0)).as("ssq"))
-        .localCheckpoint(true)
-      val nrm = math.sqrt(obs.get("ssq").asInstanceOf[Double])
-      (out, if (nrm > 0) nrm else 1.0)
+    // the L2 norm each half-step's checkpoint job observes (coalesce:
+    // sum over ZERO rows — an empty node set — is null; 1.0 when
+    // normless)
+    def l2(c: String): Column = {
+      val nrm = sqrt(coalesce(sum(col(c) * col(c)), lit(0.0)))
+      when(nrm > 0, nrm).otherwise(lit(1.0)).as("norm")
     }
     try {
-      var hub = ids.select(col("id"), lit(1.0).as("hub"))
-        .localCheckpoint(true) // doubles as the ids materializer
+      // doubles as the ids materializer
+      var hub = Checkpoint(ids.select(col("id"), lit(1.0).as("hub")))._1
       var hubNorm = 1.0 // the classic init: raw ones, NOT normalized
       // the initial authority vector is plan-only: iters >= 1 means it
       // is always reassigned before anything executes it — its former
@@ -213,19 +204,21 @@ object WebGraph {
         val a0 = e.join(hub, e("src") === hub("id"))
           .groupBy(col("dst"))
           .agg(sum(col("hub") / lit(hubNorm)).as("s"))
-        val at = materialize(
+        val (a, an) = Checkpoint(
           ids.join(a0, ids("id") === a0("dst"), "left")
             .select(ids("id"), coalesce(col("s"), lit(0.0)).as("authority")),
-          "authority")
-        auth = at._1; authNorm = at._2
+          l2("authority"))
+        Checkpoint.release(auth)
+        auth = a; authNorm = an.getDouble(0)
         val h0 = e.join(auth, e("dst") === auth("id"))
           .groupBy(col("src"))
           .agg(sum(col("authority") / lit(authNorm)).as("s"))
-        val ht = materialize(
+        val (h, hn) = Checkpoint(
           ids.join(h0, ids("id") === h0("src"), "left")
             .select(ids("id"), coalesce(col("s"), lit(0.0)).as("hub")),
-          "hub")
-        hub = ht._1; hubNorm = ht._2
+          l2("hub"))
+        Checkpoint.release(hub)
+        hub = h; hubNorm = hn.getDouble(0)
       }
       hub.join(auth, Seq("id"))
         .select(col("id"), (col("hub") / lit(hubNorm)).as("hub"),
@@ -307,20 +300,20 @@ object WebGraph {
     // Location header) is NOT an edge: dropped here, so its source is
     // simply absent from the output instead of emitting the
     // contradiction (resolved=true, final_url=NULL) the law forbids
-    var m = redirects
+    var m = Checkpoint(redirects
       .select(col(srcCol).as("u"), col(dstCol).as("v"))
       .filter(col("u").isNotNull && col("v").isNotNull)
       .groupBy(col("u")).agg(min(col("v")).as("v"))
-      .withColumn("h", lit(1L))
-      .localCheckpoint(true)
+      .withColumn("h", lit(1L)))._1
     (1 to rounds).foreach { _ =>
       val m2 = m.select(col("u").as("u2"), col("v").as("v2"),
         col("h").as("h2"))
-      m = m.join(m2, m("v") === m2("u2"), "left")
+      val (next, _) = Checkpoint(m.join(m2, m("v") === m2("u2"), "left")
         .select(m("u"),
           coalesce(col("v2"), m("v")).as("v"),
-          (m("h") + coalesce(col("h2"), lit(0L))).as("h"))
-        .localCheckpoint(true)
+          (m("h") + coalesce(col("h2"), lit(0L))).as("h")))
+      Checkpoint.release(m)
+      m = next
     }
     // a row is terminal iff its target has no redirect of its own
     val srcs = m.select(col("u").as("t"))
@@ -519,10 +512,8 @@ object WebGraph {
     * convention), so total mass stays 1 and unreachable nodes stay
     * at exactly 0 instead of collecting teleport floor.
     *
-    * Same distributed shape as [[pageRank]]: per iteration one
-    * src-keyed join + one dst-keyed partial-agg sum + ONE
-    * localCheckpoint job carrying the mass scalars as `observe`
-    * metrics. Seeds not in `nodes` are ignored (inner join); empty
+    * Same distributed shape as [[pageRank]] (the shared
+    * [[iterateRank]] loop). Seeds not in `nodes` are ignored; empty
     * effective seed set refuses loudly (the teleport vector would be
     * all-zero). Returns (id, trustrank). */
   def trustRank(nodes: DataFrame, edges: DataFrame, seeds: DataFrame,
@@ -552,13 +543,9 @@ object WebGraph {
     val lost = e.join(ids, e("dst") === ids("id"), "left_anti")
       .groupBy(col("src")).agg(count(lit(1)).as("lost_cnt"))
       .withColumnRenamed("src", "lost_src")
-    // static per-node annotation: teleport weight v, dangling flag,
-    // out-of-set leak fraction — the pageRank recipe with v in place
-    // of the uniform 1/n. Built once, consumed once by the init
-    // checkpoint, whose localCheckpoint then CARRIES the annotation
-    // columns through every iteration — the former per-frame
-    // persist+count materialization jobs are gone (guide §2.4: the
-    // init action populates the ids/seeded/e/outdeg caches as it runs)
+    // static per-node annotation (teleport weight v, dangling flag,
+    // out-of-set leak fraction): pageRank's with v in place of the
+    // uniform 1/n, carried through every round by the init checkpoint
     val flagged = seeded
       .join(outdeg, seeded("id") === outdeg("src"), "left")
       .join(lost, seeded("id") === lost("lost_src"), "left")
@@ -569,47 +556,18 @@ object WebGraph {
         col("deg").isNull.as("dangling"),
         (coalesce(col("lost_cnt"), lit(0L)).cast("double") /
           coalesce(col("deg"), lit(1L)).cast("double")).as("frac_lost"))
-    var obsId = 0
-    def materialize(df: DataFrame): (DataFrame, Double, Long) = {
-      obsId += 1
-      val obs = Observation(s"trustrank_mass_$obsId")
-      val out = df.observe(obs,
-          coalesce(sum(when(col("dangling"), col("trustrank"))), lit(0.0))
-            .as("dangling_mass"),
-          coalesce(sum(col("trustrank") * col("frac_lost")), lit(0.0))
-            .as("lost_mass"),
-          coalesce(sum(when(col("v") > 0.0, lit(1L))), lit(0L))
-            .as("n_seeds"))
-        .localCheckpoint(true)
-      val mm = obs.get
-      (out, mm("dangling_mass").asInstanceOf[Double] +
-        mm("lost_mass").asInstanceOf[Double],
-        mm("n_seeds").asInstanceOf[Long])
-    }
     try {
-      val init = materialize(flagged.select(col("id"), col("v"),
-        col("dangling"), col("frac_lost"), col("v").as("trustrank")))
-      require(init._3 > 0,
+      val (init, m0) = Checkpoint(flagged.select(col("id"), col("v"),
+          col("dangling"), col("frac_lost"), col("v").as("trustrank")),
+        leakedMass("trustrank"),
+        coalesce(sum(when(col("v") > 0.0, lit(1L))), lit(0L)).as("n_seeds"))
+      require(m0.getLong(1) > 0,
         "trustRank: no seed is present in the node set — the teleport " +
           "vector would be all-zero; pass at least one in-set seed")
-      var ranks = init._1
-      var mass = init._2
-      (1 to iters).foreach { _ =>
-        val contrib = e
-          .join(ranks, e("src") === ranks("id"))
-          .join(outdeg, Seq("src"))
-          .select(col("dst"), (col("trustrank") / col("deg")).as("c"))
-          .groupBy(col("dst")).agg(sum(col("c")).as("inflow"))
-        val t = materialize(ranks
-          .join(contrib, ranks("id") === contrib("dst"), "left")
-          .select(ranks("id"), col("v"), col("dangling"),
-            col("frac_lost"),
-            (lit(1.0 - d) * col("v") +
-              lit(d) * (coalesce(col("inflow"), lit(0.0)) +
-                lit(mass) * col("v"))).as("trustrank")))
-        ranks = t._1; mass = t._2
-      }
-      ranks.select(col("id"), col("trustrank"))
+      iterateRank(init, m0.getDouble(0), e, outdeg, "trustrank", iters) {
+        (inflow, mass) =>
+          lit(1.0 - d) * col("v") + lit(d) * (inflow + lit(mass) * col("v"))
+      }.select(col("id"), col("trustrank"))
     } finally {
       ids.unpersist(); seeded.unpersist(); e.unpersist()
       outdeg.unpersist()
@@ -623,16 +581,13 @@ object WebGraph {
     * link outside the fetched set) — redistributed uniformly, so the
     * vector keeps summing to 1.
     *
-    * Per iteration ONE job: contributions = edges ⋈ ranks ⋈
-    * out-degrees (one src-keyed shuffle), summed per dst (partial-agg
-    * combinable), and the new vector localCheckpoints (truncated
-    * lineage — the alt-star recipe; an unbroken 20-iteration plan
-    * would be exponential to analyze). The redistribution scalar for
-    * the NEXT iteration rides that same checkpoint action as `observe`
-    * metrics over a static per-node (dangling, frac_lost) annotation —
-    * the per-iteration anti-join aggregate job is gone. Duplicate
-    * edges count once (a page linking twice votes once — the
-    * convention the oracle replays).
+    * Per iteration ONE job ([[iterateRank]]): contributions = edges ⋈
+    * ranks ⋈ out-degrees (one src-keyed shuffle), summed per dst, and
+    * the new vector checkpoints (an unbroken 20-iteration plan would be
+    * exponential to analyze) while observing the next iteration's
+    * redistribution mass over a static per-node (dangling, frac_lost)
+    * annotation. Duplicate edges count once (a page linking twice
+    * votes once — the convention the oracle replays).
     *
     * Returns (id, pagerank) — callers round for oracles (unordered
     * float summation is ulp-stable far below the repo's round-6
@@ -655,16 +610,13 @@ object WebGraph {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // static annotation, computed once: dangling flag + the fraction
-    // of each node's out-edges that leave the node set (their
-    // contributions would otherwise silently vanish from total mass)
-    // lost's key renames: outdeg and lost both descend from e, so a
-    // bare `src` on both sides of flagged's joins is the SAME
-    // attribute id — Spark's ambiguous-self-join check rejects it.
-    // Consumed once by the init checkpoint, which then CARRIES the
-    // annotation columns (and __n) through every iteration — the
-    // former persist+count materialization jobs are gone (guide §2.4:
-    // the init action populates the ids/e/outdeg caches as it runs)
+    // static annotation: dangling flag + the fraction of each node's
+    // out-edges that leave the node set (their contributions would
+    // otherwise vanish from total mass), carried with __n through
+    // every round by the init checkpoint. lost's key renames: outdeg
+    // and lost both descend from e, so a bare `src` on both sides of
+    // flagged's joins is the SAME attribute id — Spark's
+    // ambiguous-self-join check rejects it.
     val lost = e.join(ids, e("dst") === ids("id"), "left_anti")
       .groupBy(col("src")).agg(count(lit(1)).as("lost_cnt"))
       .withColumnRenamed("src", "lost_src")
@@ -676,48 +628,55 @@ object WebGraph {
         (coalesce(col("lost_cnt"), lit(0L)).cast("double") /
           coalesce(col("deg"), lit(1L)).cast("double")).as("frac_lost"),
         col("__n"))
-    var obsId = 0
-    // ONE job: checkpoint the vector AND observe next iteration's
-    // redistribution mass (dangling rank as the exact old subset sum —
-    // `when` without otherwise leaves non-dangling rows null, which
-    // sum skips — plus the out-of-set leak)
-    def materialize(df: DataFrame): (DataFrame, Double) = {
-      obsId += 1
-      val obs = Observation(s"pagerank_mass_$obsId")
-      val out = df.observe(obs,
-          coalesce(sum(when(col("dangling"), col("pagerank"))), lit(0.0))
-            .as("dangling_mass"),
-          coalesce(sum(col("pagerank") * col("frac_lost")), lit(0.0))
-            .as("lost_mass"))
-        .localCheckpoint(true)
-      val m = obs.get
-      (out, m("dangling_mass").asInstanceOf[Double] +
-        m("lost_mass").asInstanceOf[Double])
-    }
     try {
-      val init = materialize(flagged.select(col("id"),
-        col("dangling"), col("frac_lost"), col("__n"),
-        (lit(1.0) / col("__n")).as("pagerank")))
-      var ranks = init._1
-      var mass = init._2
-      (1 to iters).foreach { _ =>
-        val contrib = e
-          .join(ranks, e("src") === ranks("id"))
-          .join(outdeg, Seq("src"))
-          .select(col("dst"), (col("pagerank") / col("deg")).as("c"))
-          .groupBy(col("dst")).agg(sum(col("c")).as("inflow"))
-        val t = materialize(ranks
-          .join(contrib, ranks("id") === contrib("dst"), "left")
-          .select(ranks("id"), col("dangling"), col("frac_lost"),
-            col("__n"),
-            (lit(1.0 - d) / col("__n") +
-              lit(d) * (coalesce(col("inflow"), lit(0.0)) +
-                lit(mass) / col("__n"))).as("pagerank")))
-        ranks = t._1; mass = t._2
-      }
-      ranks.select(col("id"), col("pagerank"))
+      val (init, m0) = Checkpoint(flagged.select(col("id"),
+          col("dangling"), col("frac_lost"), col("__n"),
+          (lit(1.0) / col("__n")).as("pagerank")),
+        leakedMass("pagerank"))
+      iterateRank(init, m0.getDouble(0), e, outdeg, "pagerank", iters) {
+        (inflow, mass) =>
+          lit(1.0 - d) / col("__n") + lit(d) * (inflow + lit(mass) / col("__n"))
+      }.select(col("id"), col("pagerank"))
     } finally {
       ids.unpersist(); e.unpersist(); outdeg.unpersist()
     }
+  }
+
+  /** The mass a rank vector `r` leaks per round, observed by each
+    * checkpoint job: the dangling rank (`when` without otherwise leaves
+    * non-dangling rows null, which sum skips) plus the out-of-set edge
+    * leak. */
+  private def leakedMass(r: String): Column =
+    (coalesce(sum(when(col("dangling"), col(r))), lit(0.0)) +
+      coalesce(sum(col(r) * col("frac_lost")), lit(0.0))).as("mass")
+
+  /** The power iteration [[pageRank]] and [[trustRank]] share, from the
+    * checkpointed `start` (rank column `r` last, after its per-node
+    * annotations) and its leaked `mass0`: per round one src-keyed
+    * contribution join + one dst-keyed partial-agg sum, then ONE
+    * [[Checkpoint]] job that also observes the next round's mass, and
+    * the superseded round is released. `rank(inflow, mass)` is the new
+    * value of `r`. */
+  private def iterateRank(start: DataFrame, mass0: Double, e: DataFrame,
+                          outdeg: DataFrame, r: String, iters: Int)(
+      rank: (Column, Double) => Column): DataFrame = {
+    val annotations = start.columns.dropRight(1)
+    var ranks = start
+    var mass = mass0
+    (1 to iters).foreach { _ =>
+      val contrib = e
+        .join(ranks, e("src") === ranks("id"))
+        .join(outdeg, Seq("src"))
+        .select(col("dst"), (col(r) / col("deg")).as("c"))
+        .groupBy(col("dst")).agg(sum(col("c")).as("inflow"))
+      val (next, m) = Checkpoint(ranks
+          .join(contrib, ranks("id") === contrib("dst"), "left")
+          .select(annotations.map(ranks(_)) :+
+            rank(coalesce(col("inflow"), lit(0.0)), mass).as(r): _*),
+        leakedMass(r))
+      Checkpoint.release(ranks)
+      ranks = next; mass = m.getDouble(0)
+    }
+    ranks
   }
 }

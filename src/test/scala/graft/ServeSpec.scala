@@ -292,56 +292,30 @@ class ServeHttpSurfaceSpec extends SparkSpec {
     val server = new CoachingServer(new CoachingBroadcaster(),
       cache = Some(backend))
     val port = server.start()
-    val started = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        started.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    // FIFO flush: the listener bus delivers job-start events in
-    // submission order, so once the sentinel job (submitted AFTER the
-    // probed requests returned) is counted, every job those requests
-    // could have launched has been counted too — no sleeps. The
-    // sentinel is an RDD count — exactly ONE job, where a DataFrame
-    // count under AQE is two (shuffle stage + result stage).
-    var sentinels = 0
-    def jobsSettled(): Int = {
-      val before = started.get()
-      spark.sparkContext.parallelize(Seq(1), 1).count()
-      sentinels += 1
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (started.get() <= before && System.nanoTime() < deadline)
-        Thread.sleep(5)
-      started.get() - sentinels
-    }
     try {
       val base = s"http://127.0.0.1:$port"
       req("POST", s"$base/cached_responses", Some(
         """{"question":"What about pricing?","response":"Lead with value."}"""))._1 shouldBe 200
       // warm: first read after the mutation loads the image (≥1 job)
-      req("GET", s"$base/cached_responses")._1 shouldBe 200
-      val warm = jobsSettled()
-      warm should be >= 1
+      jobsDuring {
+        req("GET", s"$base/cached_responses")._1 shouldBe 200
+      } should be >= 1
       // probed requests: a cache-hit send-message and a full list —
       // both must be pure map probes, zero jobs
-      val (_, hit) = req("POST", s"$base/api/send-message",
-        Some("""{"message":"  what about PRICING?  "}"""))
-      hit should include(""""status":"cached"""")
-      req("GET", s"$base/api/cached-questions")._1 shouldBe 200
-      req("GET", s"$base/cached_responses")._1 shouldBe 200
-      (jobsSettled() - warm) shouldBe 0 // ZERO jobs across three requests
+      jobsDuring {
+        val (_, hit) = req("POST", s"$base/api/send-message",
+          Some("""{"message":"  what about PRICING?  "}"""))
+        hit should include(""""status":"cached"""")
+        req("GET", s"$base/api/cached-questions")._1 shouldBe 200
+        req("GET", s"$base/cached_responses")._1 shouldBe 200
+      } shouldBe 0 // ZERO jobs across three requests
       // a mutation invalidates: the next read runs a load job again
       req("DELETE", s"$base/cached_responses?message=" +
         java.net.URLEncoder.encode("What about pricing?", "UTF-8"))._1 shouldBe 200
-      val afterDelete = jobsSettled()
-      req("GET", s"$base/cached_responses") shouldBe (200, "[]")
-      (jobsSettled() - afterDelete) should be >= 1 // the image reload
-    } finally {
-      server.stop()
-      spark.sparkContext.removeSparkListener(listener)
-    }
+      jobsDuring {
+        req("GET", s"$base/cached_responses") shouldBe (200, "[]")
+      } should be >= 1 // the image reload
+    } finally server.stop()
   }
 
   test("POST /api/send-message feeds the streaming chain; the coached response arrives over /events") {
