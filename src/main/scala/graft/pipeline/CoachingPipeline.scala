@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -72,11 +72,23 @@ final class CoachingPipeline(embedder: EmbeddingProvider, chat: ChatProvider,
       storeBc
     }
 
+  /** The exactly-k rag_results ARRAY<STRUCT<document_id, chunks>> of
+    * `hits` (hit structs, best first). try_element_at: <k hits must
+    * yield NULL entries, not an ANSI out-of-bounds error (SURVEY.md
+    * §7.4 #5; Spark 4 ANSI default). */
+  private def ragSlots(hits: Column): Column = {
+    def entry(i: Int) = struct(
+      try_element_at(hits, lit(i))("document_id").as("document_id"),
+      try_element_at(hits, lit(i))("chunks").as("chunks"))
+    array((1 to k).map(entry): _*).as("rag_results")
+  }
+
   /** Stage: embeddings → rag_results (reference :367-385): lateral
-    * VECTOR_SEARCH k=3 then reshape to exactly-3 ARRAY<STRUCT<document_id,
-    * chunks>> dropping the embeddings. element_at is 1-based like Flink
-    * subscripts; <3 hits yields NULL elements (SURVEY.md §7.4 #5). The
-    * search runs per row against the broadcast store. */
+    * VECTOR_SEARCH k (the reference's 3 by default) then reshape to
+    * exactly-k ARRAY<STRUCT<document_id, chunks>> dropping the
+    * embeddings. element_at is 1-based like Flink subscripts; <k hits
+    * yields NULL elements (SURVEY.md §7.4 #5). The search runs per row
+    * against the broadcast store. */
   def retrieve(embedded: DataFrame): DataFrame = {
     val bc = broadcastStore(embedded); val kk = k; val nc = numCandidates
     // non-deterministic: the search is expensive (remote in prod) — keep
@@ -86,13 +98,7 @@ final class CoachingPipeline(embedder: EmbeddingProvider, chat: ChatProvider,
       if (q == null) Seq.empty[SearchHit] else bc.value.search(q.toArray, kk, nc))
       .asNondeterministic()
     val hits = embedded.withColumn("search_results", searchUdf(col("embedding")))
-    // try_element_at: <k hits must yield NULL entries, not an ANSI
-    // out-of-bounds error (SURVEY.md §7.4 #5; Spark 4 ANSI default).
-    def entry(i: Int) = struct(
-      try_element_at(col("search_results"), lit(i))("document_id").as("document_id"),
-      try_element_at(col("search_results"), lit(i))("chunks").as("chunks"))
-    hits.select(col("message"), col("speaker"),
-      array(entry(1), entry(2), entry(3)).as("rag_results"))
+    hits.select(col("message"), col("speaker"), ragSlots(col("search_results")))
   }
 
   /** [[retrieve]] with MMR-diversified slots (VectorStore.searchDiverse):
@@ -107,11 +113,7 @@ final class CoachingPipeline(embedder: EmbeddingProvider, chat: ChatProvider,
       else bc.value.searchDiverse(q.toArray, kk, lambda, nc))
       .asNondeterministic()
     val hits = embedded.withColumn("search_results", searchUdf(col("embedding")))
-    def entry(i: Int) = struct(
-      try_element_at(col("search_results"), lit(i))("document_id").as("document_id"),
-      try_element_at(col("search_results"), lit(i))("chunks").as("chunks"))
-    hits.select(col("message"), col("speaker"),
-      array(entry(1), entry(2), entry(3)).as("rag_results"))
+    hits.select(col("message"), col("speaker"), ragSlots(col("search_results")))
   }
 
   /** Scale-path retrieval (S5): the index stays a DataFrame and the top-k
@@ -140,12 +142,8 @@ final class CoachingPipeline(embedder: EmbeddingProvider, chat: ChatProvider,
     val entries = topk.groupBy(col("__qid"))
       .agg(array_sort(collect_list(struct(
         col("rank"), col("document_id"), col("chunks")))).as("hits"))
-    def entry(i: Int) = struct(
-      try_element_at(col("hits"), lit(i))("document_id").as("document_id"),
-      try_element_at(col("hits"), lit(i))("chunks").as("chunks"))
     q.join(entries, Seq("__qid"), "left")
-      .select(col("message"), col("speaker"),
-        array(entry(1), entry(2), entry(3)).as("rag_results"))
+      .select(col("message"), col("speaker"), ragSlots(col("hits")))
   }
 
   /** Diversified retrieval: [[retrieveJoin]]'s contract with the top-k
@@ -173,12 +171,8 @@ final class CoachingPipeline(embedder: EmbeddingProvider, chat: ChatProvider,
     val entries = topk.groupBy(col("__qid"))
       .agg(array_sort(collect_list(struct(
         col("rank"), col("document_id"), col("chunks")))).as("hits"))
-    def entry(i: Int) = struct(
-      try_element_at(col("hits"), lit(i))("document_id").as("document_id"),
-      try_element_at(col("hits"), lit(i))("chunks").as("chunks"))
     q.join(entries, Seq("__qid"), "left")
-      .select(col("message"), col("speaker"),
-        array(entry(1), entry(2), entry(3)).as("rag_results"))
+      .select(col("message"), col("speaker"), ragSlots(col("hits")))
   }
 
   /** Full chain on the join-retrieval path — for indexes too large to
@@ -206,17 +200,13 @@ final class CoachingPipeline(embedder: EmbeddingProvider, chat: ChatProvider,
     val entries = topk.groupBy(col("qid"))
       .agg(array_sort(collect_list(struct(
         col("rank"), col("document_id"), col("chunks")))).as("hits"))
-    def entry(i: Int) = struct(
-      try_element_at(col("hits"), lit(i))("document_id").as("document_id"),
-      try_element_at(col("hits"), lit(i))("chunks").as("chunks"))
     // entries is ≤ one row per distinct message in the batch — always
     // the broadcast side. Without the hint the per-micro-batch planner
     // has no stats for this derived frame (topic-decoded batch →
     // aggregate) and can fall back to a sort-merge join, paying two
     // shuffles per TRIGGER in streaming serving.
     q.join(broadcast(entries), q("__qid") === entries("qid"), "left")
-      .select(col("message"), col("speaker"),
-        array(entry(1), entry(2), entry(3)).as("rag_results"))
+      .select(col("message"), col("speaker"), ragSlots(col("hits")))
   }
 
   /** Full chain served by the persisted index — the over-budget regime

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 
+import graft.functions.Bpe
 import graft.operators.{Dedup, WebGraph}
 
 /** The iterative operators' shared checkpoint step: what a finished
@@ -56,12 +57,19 @@ class CheckpointSpec extends SparkSpec {
     // probe) shows up here before it shows up in a bench row
     val chainNodes = (1L to 16L).toDF("id")
     val chainEdges = chain.toDF("src", "dst")
+    // BPE training on a fixed 4-document corpus, 3 merges: 4 jobs with
+    // no merge, then 2 per merge round for its pair-count argmax (0–3
+    // merges run 4, 6, 8, 10 jobs); a per-round materialization
+    // creeping back would add to every round
+    val bpeDocs = Seq((1L, "low low low lower"), (2L, "newest newest"),
+      (3L, "widest low"), (4L, "lowest newer")).toDF("doc_id", "text")
     // shared 4-core test session; altStar's edge counts ride its
     // checkpoint jobs (a count() per round made it 52)
     val jobs = Seq(
       jobsDuring(WebGraph.pageRank(chainNodes, chainEdges, iters = 5)),
       jobsDuring(Dedup.connectedComponents(chain)),
-      jobsDuring(Dedup.connectedComponentsAltStar(chain)))
-    jobs shouldBe Seq(42, 84, 40)
+      jobsDuring(Dedup.connectedComponentsAltStar(chain)),
+      jobsDuring(Bpe.train(bpeDocs, "text", steps = 3)))
+    jobs shouldBe Seq(42, 84, 40, 10)
   }
 }

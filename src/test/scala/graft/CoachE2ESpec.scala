@@ -210,6 +210,46 @@ class CoachE2ESpec extends SparkSpec {
     docs(storePipeline.retrieveDiverse(embedded, lambda = 1.0)) shouldBe plain
   }
 
+  test("rag_results carries exactly k slots on every retrieval path (k = 2 and 5)") {
+    ModelRegistry.registerReferenceModels()
+    // six one-chunk docs: enough hits to fill k = 5 on every path
+    val knowledge = Seq("pricing discounts", "implementation rollout",
+        "competitor comparison", "schema registries", "caching latency",
+        "networking protocols").zipWithIndex
+      .map { case (t, i) => (s"kb/d$i.md", s"D$i", "kb", t) }
+      .toDF("document_id", "document_name", "document_category", "document_text")
+    val embedder = new MockEmbedder(64)
+    val index = new CoachingPipeline(embedder, new MockChat,
+      new BroadcastBruteForceStore(Array.empty)).indexKnowledge(knowledge)
+    val store = BroadcastBruteForceStore.fromDataFrame(index)
+    val dir = java.nio.file.Files.createTempDirectory("graft-coach-k")
+    try {
+      val idxStore = graft.store.VectorStores.adaptive(index, dir.toString,
+        broadcastBytes = 1L).asInstanceOf[graft.store.IvfFlatIndexStore]
+      val messages = Seq(("pricing discounts for rollout", "prospect"))
+        .toDF("message", "speaker")
+      for (k <- Seq(2, 5)) {
+        val pipeline = new CoachingPipeline(embedder, new MockChat, store, k = k)
+        val embedded = pipeline.embedMessages(messages)
+        Seq(
+          "retrieve" -> pipeline.retrieve(embedded),
+          "retrieveDiverse" -> pipeline.retrieveDiverse(embedded),
+          "retrieveJoin" -> pipeline.retrieveJoin(embedded, index),
+          "retrieveJoinDiverse" -> pipeline.retrieveJoinDiverse(embedded, index),
+          "retrieveIndexed" -> pipeline.retrieveIndexed(embedded, idxStore)
+        ).foreach { case (path, df) =>
+          withClue(s"$path at k = $k: ") {
+            val ids = df.select(col("rag_results")("document_id"))
+              .collect().head.getSeq[String](0)
+            ids should have length k.toLong
+            ids.distinct should have length k.toLong
+            ids should not contain (null: String)
+          }
+        }
+      }
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+  }
+
   test("cache hit short-circuits the LLM chain; misses run it (F5 flow)") {
     ModelRegistry.registerReferenceModels()
     val embedder = new MockEmbedder(32)
