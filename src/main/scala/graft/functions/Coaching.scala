@@ -14,13 +14,17 @@ import graft.core.Tables
   */
 object Coaching {
 
-  /** The exact CONCAT prompt of the reference (E1): message + 3 retrieved
-    * (document_id, chunks) pairs, 1-based subscripts matching Flink's.
+  /** The exact CONCAT prompt of the reference (E1): message + `slots`
+    * retrieved (document_id, chunks) pairs, 1-based subscripts matching
+    * Flink's. `slots` is the pipeline's retrieval k (the reference's 3),
+    * so every retrieved hit reaches the prompt.
     * try_element_at, NOT element_at: under Spark 4's default ANSI mode a
     * plain element_at THROWS on out-of-bounds, but the reference semantics
-    * for <3 retrieval hits are a NULL element (→ NULL prompt), per
+    * for <slots retrieval hits are a NULL element (→ NULL prompt), per
     * SURVEY.md §7.4 #5. `ragResults` is ARRAY<STRUCT<document_id, chunks>>. */
-  def buildCoachingPrompt(message: Column, ragResults: Column): Column = {
+  def buildCoachingPrompt(message: Column, ragResults: Column,
+                          slots: Int = 3): Column = {
+    require(slots >= 1, s"buildCoachingPrompt: slots must be >= 1: $slots")
     // Field-first extraction: try_element_at over two plain string arrays
     // instead of ExtractValue(ElementAt(array<struct>)) — identical
     // semantics (1-based subscript, NULL out-of-bounds → NULL prompt), but
@@ -35,7 +39,7 @@ object Coaching {
     concat(Seq(
       lit("## PROSPECT MESSAGE: "), message,
       lit("\n\n## RAG DOCUMENTS:\n")) ++
-      doc(1) ++ Seq(lit("\n\n")) ++ doc(2) ++ Seq(lit("\n\n")) ++ doc(3): _*)
+      (1 to slots).map(doc).reduce(_ ++ Seq(lit("\n\n")) ++ _): _*)
   }
 
   /** Filename part of a slash path (reference prompt rule: from

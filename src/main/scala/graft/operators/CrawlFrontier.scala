@@ -1203,18 +1203,11 @@ object CrawlFrontier {
     * compactionDayBound(...)` (the loadDue convention) and the GC
     * pass touches only the old buckets where corpses froze, never
     * the live schedule. Unconditionally sound BECAUSE of the freeze:
-    * no interval, clamp, or seeded cadence enters the bound.
-    * `legacyMaxWaitS` is the on-disk compat slack for frontiers
-    * persisted BEFORE the freeze (their corpses sit at death + wait):
-    * pass the largest interval any row could have carried (the law's
-    * maxIntervalS, or the largest seeded cadence — changefreq
-    * 'never' is 2 years) and those corpses stay in range too. */
-  def compactionDayBound(now: Long, deadRetentionS: Long,
-                         legacyMaxWaitS: Long = 0L): Long = {
-    require(deadRetentionS > 0 && legacyMaxWaitS >= 0,
-      s"need positive retention, non-negative slack: " +
-        s"$deadRetentionS/$legacyMaxWaitS")
-    (now - deadRetentionS + legacyMaxWaitS) / 86400L
+    * no interval, clamp, or seeded cadence enters the bound. */
+  def compactionDayBound(now: Long, deadRetentionS: Long): Long = {
+    require(deadRetentionS > 0,
+      s"deadRetentionS must be positive: $deadRetentionS")
+    (now - deadRetentionS) / 86400L
   }
 
   /** Persist a frontier partitioned by next-fetch DAY — the layout

@@ -1383,15 +1383,18 @@ object SimilaritySearch {
     // mapping without touching the data at search time. Zero-row
     // tolerant: an EMPTY shell (centroids only, rows arriving later via
     // the sync pump / streamed appends) is a legitimate bootstrap
-    locally {
-      import org.apache.spark.sql.types._
-      readParquetOrEmpty(spark, s"$path/payload",
-        StructType(Seq(StructField("cluster", IntegerType),
-          StructField("nid", StringType))))
-        .groupBy(col("cluster")).count()
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/cellstats")
-    }
+    writeCellstats(spark, s"$path/payload", s"$path/cellstats")
   }
+
+  /** Per-cell row counts of a payload dir, written as a cellstats
+    * sidecar (≤ #cells rows). A payload dir with no parquet files (an
+    * empty shell, a fully-deleted index after a rewrite) yields
+    * zero-row cellstats. */
+  private def writeCellstats(spark: org.apache.spark.sql.SparkSession,
+                             payloadDir: String, statsDir: String): Unit =
+    readParquetOrEmpty(spark, payloadDir, rawPayloadSchema(Nil))
+      .groupBy(col("cluster")).count()
+      .coalesce(1).write.mode("overwrite").parquet(statsDir)
 
   /** numCandidates → probe depth: the smallest P such that the P
     * SMALLEST cells already cover `numCandidates` rows — conservative
@@ -1466,37 +1469,19 @@ object SimilaritySearch {
     // built ONCE (file listing + schema resolution amortized across
     // searches, the sidecars pattern); partition pruning still applies
     // per call through the filter below
-    // an emptied-then-compacted index must serve ZERO hits, not crash
-    // on schema inference (payload col types degrade to string in that
-    // zero-row edge — harmless with no rows to carry them)
-    val rawSchema = rawPayloadSchema(payloadCols)
-    val raw0 = payloadFrame
-      .getOrElse(readParquetOrEmpty(spark, s"$path/payload", rawSchema))
+    val raw0 = payloadFrame.getOrElse(readPayload(spark, path, payloadCols))
       .filter(col("cluster").isin(probed: _*))
     // metadata pre-filter BEFORE dedup/tombstones/scoring: Catalyst
     // pushes it into the parquet scan next to the partition filter
     val raw = payloadFilter.map(raw0.filter).getOrElse(raw0)
-    // tombstone mask BEFORE the replay dedup: on an upsert-maintained
-    // index a nid can carry several VERSIONS (distinct __useq), and a
-    // dedup running first could keep a version the mask is about to
-    // hide — mask first, and what survives per nid is either unique or
-    // byte-identical replays, which dropDuplicates then handles
-    val masked = maskTombstones(spark, path, withUseq(raw))
     // dedupReplays: an index fed by at-least-once micro-batch appends
     // may hold replayed duplicates (identical rows, same content nid)
-    // until the next compaction — mask them here at the cost of one
-    // extra shuffle. HIGHEST version wins (not an arbitrary
-    // dropDuplicates): a replay interleaved with newer upserts can
-    // leave same-nid rows of different versions that no tombstone
-    // separates, and serving the stale one would be a silent
-    // divergence. Batch-built / freshly-compacted indexes are
-    // duplicate-free, so the DEFAULT search plan skips it.
+    // until the next compaction — serve [[liveRows]] at the cost of one
+    // extra shuffle. Batch-built / freshly-compacted indexes are
+    // duplicate-free, so the DEFAULT search plan only masks tombstones.
     val payload =
-      if (dedupReplays) {
-        val dw = Window.partitionBy(col("nid")).orderBy(col("__useq").desc)
-        masked.withColumn("__rn", row_number().over(dw))
-          .filter(col("__rn") === 1).drop("__rn")
-      } else masked
+      if (dedupReplays) liveRows(spark, Seq(path -> raw))
+      else maskTombstones(spark, path, raw)
     val q = queries.select(col(qId).as("qid"), col(qVec).as("qvec"),
       explode(probeClusters(col(qVec), cents, nProbe)).as("cluster"))
     val d = cents.head.length
@@ -1533,62 +1518,21 @@ object SimilaritySearch {
                          payloadCols: Seq[String] = Nil): Unit = {
     val spark = batch.sparkSession
     val cents = centroidsOf(spark, path)
-    // match the index's own file convention (one cheap footer read,
-    // cached once versioned): a versioned payload gets version -1 rows
-    // (supersedable by any upsert), a legacy payload stays legacy —
-    // files in one payload dir must stay schema-UNIFORM or plain
-    // inference on the read paths silently drops the version column
-    // for every row
-    val versionCol =
-      if (payloadVersioned(spark, path)) Seq(lit(-1L).as("__useq"))
-      else Seq.empty[Column]
+    // version -1, as a batch build writes: any upsert supersedes it
     val assigned = ivfAssign(batch, cents, cVec)
       .select(Seq(col(cId).as("nid"), col(cVec).as("nvec"),
-        col("cluster")) ++ versionCol ++ payloadCols.map(col): _*)
+        col("cluster"), lit(-1L).as("__useq")) ++ payloadCols.map(col): _*)
     payloadWriter(assigned).mode("append").partitionBy("cluster")
       .parquet(s"$path/payload")
     bumpCellstats(spark, path, assigned)
-  }
-
-  /** Whether the payload's files carry the `__useq` version column —
-    * reliable under the schema-UNIFORM invariant the writers maintain
-    * (a dir is either all-versioned or all-legacy, never mixed). An
-    * empty or file-less payload counts as versioned: there is no
-    * legacy file to conflict with. */
-  private def payloadHasUseq(spark: org.apache.spark.sql.SparkSession,
-                             path: String): Boolean =
-    try spark.read.parquet(s"$path/payload")
-      .schema.fieldNames.contains("__useq")
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") ||
-            e.getMessage.contains("PATH_NOT_FOUND") => true
-    }
-
-  /** [[payloadHasUseq]] behind the sticky-true cache (see the cache
-    * note): a versioned payload never legitimately reverts, so the
-    * per-batch schema probe collapses to one set lookup on a standing
-    * upsert chain, while a legacy verdict re-probes every time and
-    * notices the compaction upgrade. */
-  private def payloadVersioned(spark: org.apache.spark.sql.SparkSession,
-                               path: String): Boolean = {
-    val (_, dir) = qualifiedDir(spark, s"$path/payload")
-    val key = dir.toString
-    if (versionedPayloads.contains(key)) true
-    else {
-      val v = payloadHasUseq(spark, path)
-      if (v) versionedPayloads.add(key)
-      v
-    }
   }
 
   // ——— per-index invariants cache ———————————————————————————————————
   // A standing chain (the sync pump's upserts, per-micro-batch indexed
   // retrieval) pays the same fixed driver jobs EVERY batch for state
   // that changes rarely or only under this writer's own hand: the
-  // centroid matrix (immutable between rebuilds), the payload's
-  // versioned-schema flag (flips once, legacy→versioned), and the
-  // cellstats counts (rewritten only by this single writer or a
+  // centroid matrix (immutable between rebuilds) and the cellstats
+  // counts (rewritten only by this single writer or a
   // maintenance pass). Each is cached process-wide, keyed by the
   // QUALIFIED sidecar path, and invalidated by a filesystem stat
   // stamp instead of a Spark read+collect job: ~3 fixed jobs per batch
@@ -1615,12 +1559,6 @@ object SimilaritySearch {
     new java.util.concurrent.ConcurrentHashMap[String, Stamped[Seq[Seq[Float]]]]()
   private val cellstatsCache =
     new java.util.concurrent.ConcurrentHashMap[String, Stamped[Map[Int, Long]]]()
-  // sticky TRUE only: an index never legitimately goes versioned →
-  // legacy (the library stopped writing legacy payloads at r14; only
-  // hand-crafted files could), while a cached FALSE would suppress the
-  // re-probe that notices compaction's legacy→versioned upgrade
-  private val versionedPayloads =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   private def qualifiedDir(spark: org.apache.spark.sql.SparkSession,
                            dir: String)
@@ -1734,31 +1672,18 @@ object SimilaritySearch {
     * survives. Sequence numbers must be >= 0 and monotone per key
     * across calls (the CDC changelog contract); a DELETE is a
     * tombstone at the delete's own seq — see
-    * [[graft.streaming.IndexSync]] for the composed consumer.
-    *
-    * Legacy (pre-version-column) indexes are REFUSED with a pointed
-    * error: their files lack `__useq`, and mixing makes schema
-    * inference on the read paths unreliable. [[compactIvfFlatIndex]]
-    * rewrites the payload with the column — compact once, then
-    * upsert. */
+    * [[graft.streaming.IndexSync]] for the composed consumer. */
   def upsertIvfFlatBatch(batch: DataFrame, path: String,
                          cId: String = "vec_id", cVec: String = "embedding",
                          cSeq: String = "seq",
                          payloadCols: Seq[String] = Nil,
                          tombstoneOld: Boolean = true): Unit = {
     val spark = batch.sparkSession
-    require(payloadVersioned(spark, path),
-      s"upsertIvfFlatBatch: the index at $path predates versioned " +
-        "upserts (its payload files lack the __useq column). Run " +
-        "compactIvfFlatIndex once — it rewrites the payload " +
-        "versioned — then upsert.")
     val cents = centroidsOf(spark, path)
     // the seq contract (>= 0, never null) is enforced per row: a NULL
-    // seq would write a null-seq tombstone — which the mask rule reads
-    // as the legacy mask-EVERYTHING form — while the payload row's
-    // null version normalizes to -1, so the key's own new version
-    // would be masked forever and the next compaction would silently
-    // drop the key. Loud beats that.
+    // seq would write a null-seq tombstone and a null-version row,
+    // which the mask rule never orders — the key would serve or vanish
+    // by accident. Loud beats that.
     val vSeq = {
       val s = col(cSeq).cast("long")
       when(s.isNotNull && s >= 0L, s).otherwise(raise_error(lit(
@@ -1786,9 +1711,8 @@ object SimilaritySearch {
   /** Append VERSIONED tombstones (nid, seq) — the delete half of the
     * CDC apply: a tombstone at `seq` masks every row of its nid with
     * `__useq <= seq`, so a later RE-INSERT at a higher seq resurrects
-    * the key (unlike [[deleteFromIvfFlatIndex]]'s legacy seq-less
-    * form, which masks unconditionally until compaction). Idempotent
-    * under replay. */
+    * the key (unlike [[deleteFromIvfFlatIndex]]'s MaxValue seq, which
+    * masks every version until compaction). Idempotent under replay. */
   def tombstoneIvfFlat(spark: org.apache.spark.sql.SparkSession,
                        path: String, tombs: DataFrame): Unit =
     tombs.select(col("nid").cast("string").as("nid"),
@@ -1799,122 +1723,139 @@ object SimilaritySearch {
     * `tombstones` sidecar (cheap, no partition rewrite);
     * [[searchIvfFlatIndex]] masks tombstoned rows with a broadcast
     * anti-join and [[compactIvfFlatIndex]] removes them physically.
-    * Idempotent: deleting an nid twice appends a duplicate tombstone,
-    * which masks identically and compacts away. */
+    * Each tombstone carries seq Long.MaxValue, so it masks every
+    * version of its nid. Idempotent: deleting an nid twice appends a
+    * duplicate tombstone, which masks identically and compacts away. */
   def deleteFromIvfFlatIndex(spark: org.apache.spark.sql.SparkSession,
                              path: String, nids: Seq[String]): Unit = {
     import spark.implicits._
-    nids.toDF("nid").write.mode("append").parquet(s"$path/tombstones")
+    nids.map((_, Long.MaxValue)).toDF("nid", "seq")
+      .write.mode("append").parquet(s"$path/tombstones")
   }
 
-  /** Compact a persisted IVF-Flat index: rewrite the payload with
-    * replay-duplicates dropped (exact-duplicate rows share an nid) and
-    * tombstoned rows removed, coalesced to `filesPerCell` files per
-    * cluster partition; refresh cellstats from the rewritten truth and
-    * clear the tombstones. After compaction, searches need neither
+  /** Compact a persisted IVF-Flat index: rewrite the payload as its
+    * [[liveRows]] (replayed duplicates and superseded versions
+    * dropped, tombstoned rows removed), one file per cluster
+    * partition; refresh cellstats from the rewritten truth and clear
+    * the tombstones. After compaction, searches need neither
     * `dedupReplays` nor the tombstone mask — the weekly maintenance
     * pass a real 100 TB index runs (small-file collapse + physical
-    * delete). The rewrite stages through `payload.compact` then swaps
-    * directories, so a crash mid-compact leaves the original payload
-    * intact. */
-
+    * delete). The rewrite goes through [[writeCompacted]], so a crash
+    * mid-compact leaves the original payload intact. */
   def compactIvfFlatIndex(spark: org.apache.spark.sql.SparkSession,
-                          path: String): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def hPath(s: String) = new org.apache.hadoop.fs.Path(s)
-    val fs = hPath(path).getFileSystem(hconf)
-    val tombDir = hPath(s"$path/tombstones")
-    // mergeSchema: compaction is THE repair pass for a payload whose
-    // files mix legacy and versioned schemas (plain inference would
-    // silently drop __useq for every row); it rewrites versioned, so
-    // the post-compact index is schema-uniform and upsertable
-    val raw0 = withUseq(spark.read.option("mergeSchema", "true")
-      .parquet(s"$path/payload"))
-    val masked = maskTombstones(spark, path, raw0)
-    // keep the HIGHEST surviving version per nid — post-mask that is
-    // the live version plus possibly its byte-identical replays
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("nid")).orderBy(col("__useq").desc)
-    val payload = masked.withColumn("__rn", row_number().over(w))
+                          path: String): Unit =
+    writeCompacted(spark, path,
+      liveRows(spark, Seq(path -> readPayload(spark, path))))
+
+  /** THE live-rows rule of the index, shared by the dedupReplays
+    * search, compaction, merge and migration: each index's own
+    * tombstones mask its payload ([[maskTombstones]]), then the HIGHEST
+    * surviving `__useq` per nid wins. Masking first matters: a nid can
+    * carry several versions, and a dedup running first could keep one
+    * the mask is about to hide. Post-mask ties are byte-identical
+    * replays (content-keyed nids), so which one wins is immaterial.
+    * Several indexes (a merge) mask separately — their seq spaces do
+    * not compose — before the one cross-index pick. */
+  private def liveRows(spark: org.apache.spark.sql.SparkSession,
+                       payloads: Seq[(String, DataFrame)]): DataFrame = {
+    val masked = payloads
+      .map { case (path, df) => maskTombstones(spark, path, df) }
+      .reduce(_ unionByName _)
+    val w = Window.partitionBy(col("nid")).orderBy(col("__useq").desc)
+    masked.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
+  }
+
+  /** The rewrite step compaction, merge and migration share: stage
+    * `payload` one file per cell at `payload.staged`, count its cells
+    * from the STAGED dir (after the swap a lazy frame over the old
+    * payload would re-read deleted files; a fully-deleted index stages
+    * no parquet file and still gets zero-row cellstats), swap both in
+    * with [[swapDir]], and clear the tombstones the rewrite applied. */
+  private def writeCompacted(spark: org.apache.spark.sql.SparkSession,
+                             root: String, payload: DataFrame): Unit = {
     // repartition on the partition column: every cell's rows land in
     // one task, so each cluster directory collapses to ONE file (the
     // small-file fix micro-batch appends make necessary)
     payloadWriter(payload.repartition(col("cluster")))
       .mode("overwrite").partitionBy("cluster")
-      .parquet(s"$path/payload.compact")
-    // cellstats from the STAGED dir, before the swap: after the swap
-    // the pre-swap lazy frame would re-read a deleted path, and a
-    // fully-emptied index leaves the staged dir without parquet files
-    // (no schema to infer) — compaction must still complete, writing
-    // zero-row cellstats
-    locally {
-      import org.apache.spark.sql.types._
-      readParquetOrEmpty(spark, s"$path/payload.compact",
-        StructType(Seq(StructField("cluster", IntegerType),
-          StructField("nid", StringType))))
-        .groupBy(col("cluster")).count()
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$path/cellstats.compact")
-    }
-    // renames CHECKED: Hadoop rename returns false instead of throwing
-    // on object-store backends — a silent false here would strand the
-    // index mid-swap with no error
+      .parquet(s"$root/payload.staged")
+    writeCellstats(spark, s"$root/payload.staged", s"$root/cellstats.staged")
+    val (fs, dir) = qualifiedDir(spark, root)
+    def at(name: String) = new org.apache.hadoop.fs.Path(dir, name)
+    swapDir(fs, at("payload.staged"), at("payload"))
+    if (fs.exists(at("tombstones"))) fs.delete(at("tombstones"), true)
+    swapDir(fs, at("cellstats.staged"), at("cellstats"))
+  }
+
+  /** Replace `live` (if present) with `staged`: retire the live dir to
+    * `<live>.old`, move the staged one in, drop the retired one. Both
+    * renames are CHECKED: Hadoop rename returns false instead of
+    * throwing on object-store backends, and a silent false would strand
+    * the index mid-swap with no error. */
+  private[graft] def swapDir(fs: org.apache.hadoop.fs.FileSystem,
+                             staged: org.apache.hadoop.fs.Path,
+                             live: org.apache.hadoop.fs.Path): Unit = {
     def renamed(from: org.apache.hadoop.fs.Path,
                 to: org.apache.hadoop.fs.Path): Unit =
-      require(fs.rename(from, to),
-        s"compactIvfFlatIndex: rename $from -> $to failed")
-    val live = hPath(s"$path/payload")
-    val staged = hPath(s"$path/payload.compact")
-    val retired = hPath(s"$path/payload.old")
+      if (!fs.rename(from, to)) throw new java.io.IOException(
+        s"IVF-Flat index swap: rename $from -> $to failed")
+    val retired = live.suffix(".old")
     if (fs.exists(retired)) fs.delete(retired, true)
-    renamed(live, retired)
+    if (fs.exists(live)) renamed(live, retired)
     renamed(staged, live)
     fs.delete(retired, true)
-    if (fs.exists(tombDir)) fs.delete(tombDir, true)
-    val statsLive = hPath(s"$path/cellstats")
-    if (fs.exists(statsLive)) fs.delete(statsLive, true)
-    renamed(hPath(s"$path/cellstats.compact"), statsLive)
   }
 
   /** The IVF-flat payload frame's schema for the zero-file fallback —
-    * THE single definition, shared by the search path and the store's
-    * payload pin so the two cannot drift. */
+    * THE single definition of the payload layout every writer produces:
+    * (nid, nvec, cluster, __useq, payload columns…). */
   private[graft] def rawPayloadSchema(payloadCols: Seq[String])
       : org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
     StructType(Seq(StructField("nid", StringType),
       StructField("nvec", ArrayType(FloatType)),
-      StructField("cluster", IntegerType)) ++
+      StructField("cluster", IntegerType),
+      StructField("__useq", LongType)) ++
       payloadCols.map(c => StructField(c, StringType)))
   }
 
-  /** The versioned-tombstone sidecar schema, read EXPLICITLY so legacy
-    * seq-less tombstone files (null seq → mask-everything) and
-    * versioned ones coexist in a dir without schema-inference games. */
+  /** THE payload read every index path shares (search, the serving
+    * store's pin, report, compaction, merge, migration). An existing
+    * payload dir with no parquet files reads as an empty frame of
+    * [[rawPayloadSchema]] — an emptied-then-compacted index serves ZERO
+    * hits (payload column types degrade to string in that zero-row
+    * edge, harmless with no rows to carry them). Every writer gives
+    * each row a non-null `__useq` version (a batch build -1, an upsert
+    * its change seq), so a payload without the column was not written
+    * by this library: it is refused here, where the schema is already
+    * resolved, at no extra IO. */
+  private[graft] def readPayload(spark: org.apache.spark.sql.SparkSession,
+                                 path: String,
+                                 payloadCols: Seq[String] = Nil): DataFrame = {
+    val df = readParquetOrEmpty(spark, s"$path/payload",
+      rawPayloadSchema(payloadCols))
+    if (!df.columns.contains("__useq")) throw new IllegalStateException(
+      s"unversioned IVF-Flat payload at $path: its files lack the " +
+        "__useq version column every writer of this library produces. " +
+        "Rebuild the index with writeIvfFlatIndex.")
+    df
+  }
+
+  /** The tombstone sidecar schema (nid, seq), read explicitly so the
+    * mask needs no footer inference. */
   private[graft] def tombstoneSchema: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
     StructType(Seq(StructField("nid", StringType),
       StructField("seq", LongType)))
   }
 
-  /** Normalize a payload frame to carry a non-null `__useq` version:
-    * legacy rows (no column, or null from a mixed read) become -1 —
-    * below every real change seq, so any versioned tombstone
-    * supersedes them, and the legacy seq-less tombstone (MaxValue)
-    * supersedes everything. */
-  private[graft] def withUseq(df: DataFrame): DataFrame =
-    if (df.columns.contains("__useq"))
-      df.withColumn("__useq", coalesce(col("__useq"), lit(-1L)))
-    else df.withColumn("__useq", lit(-1L))
-
-  /** THE single tombstone-masking rule, shared by search, compaction,
-    * report, merge, and migration: a tombstone at seq s hides rows of
-    * its nid with `__useq <= s`; a legacy seq-less tombstone reads as
-    * MaxValue (hides every version until compaction clears it). The
-    * payload must already be [[withUseq]]-normalized. The tombstone
-    * aggregate is bounded by the deleted/updated key count and
-    * broadcasts. */
+  /** THE single tombstone-masking rule, shared by search, report,
+    * IndexSync's bootstrap guard and [[liveRows]]: a tombstone at seq s
+    * hides rows of its nid with `__useq <= s` ([[deleteFromIvfFlatIndex]]
+    * writes Long.MaxValue, hiding every version until compaction clears
+    * it). The tombstone aggregate is bounded by the deleted/updated key
+    * count and broadcasts. */
   private[graft] def maskTombstones(
       spark: org.apache.spark.sql.SparkSession, path: String,
       payload: DataFrame): DataFrame = {
@@ -1925,7 +1866,7 @@ object SimilaritySearch {
       val tombs = spark.read.schema(tombstoneSchema)
         .parquet(s"$path/tombstones")
         .groupBy(col("nid"))
-        .agg(max(coalesce(col("seq"), lit(Long.MaxValue))).as("__tseq"))
+        .agg(max(col("seq")).as("__tseq"))
       payload.join(broadcast(tombs), Seq("nid"), "left")
         .filter(col("__tseq").isNull || col("__useq") > col("__tseq"))
         .drop("__tseq")
@@ -1937,16 +1878,11 @@ object SimilaritySearch {
     * inference has nothing to read) — synthesize an empty frame with
     * the given column layout. Any other AnalysisException (missing
     * path, unreadable files) propagates: a typo'd path must stay a
-    * pointed error, never a confidently-empty result. Shared by the
-    * compact / report / search paths so the fallback cannot drift.
-    * In the empty case caller-defined payload column TYPES degrade to
-    * the provided defaults — harmless at zero rows. */
-  private[graft] def readParquetOrEmpty(
+    * pointed error, never a confidently-empty result. */
+  private def readParquetOrEmpty(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      emptySchema: org.apache.spark.sql.types.StructType,
-      mergeSchema: Boolean = false)
-      : DataFrame =
-    try spark.read.option("mergeSchema", mergeSchema.toString).parquet(path)
+      emptySchema: org.apache.spark.sql.types.StructType): DataFrame =
+    try spark.read.parquet(path)
     catch {
       case e: org.apache.spark.sql.AnalysisException
           if e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") =>
@@ -1976,21 +1912,12 @@ object SimilaritySearch {
         spark.read.schema(tombstoneSchema).parquet(s"$path/tombstones")
           .select(col("nid")).distinct().count()
       else 0L
-    // a fully-emptied index (every row deleted, then compacted) leaves
-    // a payload directory with NO parquet files — schema inference
-    // fails, and the health report is exactly the diagnostic someone
-    // runs against such an index, so read it as empty instead (other
-    // read failures still propagate — see readParquetOrEmpty);
-    // mergeSchema: the report must stay truthful on a mixed
-    // legacy+versioned payload awaiting its repair compaction
-    val payload = {
-      import org.apache.spark.sql.types._
-      withUseq(readParquetOrEmpty(spark, s"$path/payload",
-        StructType(Seq(StructField("cluster", IntegerType),
-          StructField("nid", StringType))), mergeSchema = true))
-        .select(col("cluster"), col("nid"), col("__useq"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+    // a fully-emptied index (every row deleted, then compacted) reads
+    // as empty — the health report is exactly the diagnostic someone
+    // runs against such an index (see readPayload)
+    val payload = readPayload(spark, path)
+      .select(col("cluster"), col("nid"), col("__useq"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // coalesce every aggregate: an EMPTY payload (all rows deleted,
       // then compacted away) must report zeros, not NPE on a
@@ -2007,11 +1934,8 @@ object SimilaritySearch {
       val dupRows = payload.groupBy(col("nid")).count()
         .filter(col("count") > 1)
         .agg(coalesce(sum(col("count") - 1), lit(0L))).as[Long].head()
-      // live = what a dedupReplays+tombstone-masked search serves —
-      // the versioned mask first (so a superseded version never
-      // counts), then one row per surviving nid
-      val live = maskTombstones(spark, path, payload)
-        .dropDuplicates("nid").count()
+      // live = what a dedupReplays search serves
+      val live = liveRows(spark, Seq(path -> payload)).count()
       // small-file pressure via the Hadoop FS API (any filesystem)
       val payloadDir = new org.apache.hadoop.fs.Path(s"$path/payload")
       val fs = payloadDir.getFileSystem(hconf)
@@ -2032,13 +1956,14 @@ object SimilaritySearch {
     * index). Cell geometry must match: the centroid sidecars are
     * asserted equal, because rows keep their cluster through the merge
     * (a merge across different centroid sets is a re-encode — build a
-    * fresh index from the unioned raw vectors instead). Content-keyed
-    * rows (same nid) appearing in several sources dedupe to one;
-    * every source's tombstones apply and the target starts clean of
-    * them. Output is written compacted (one file per cell) via the
-    * same stage-then-swap as [[compactIvfFlatIndex]], so `target` may
-    * BE one of the sources (fold-into-live) and a crash mid-merge
-    * leaves it intact. */
+    * fresh index from the unioned raw vectors instead). The target
+    * holds the sources' [[liveRows]]: every source's tombstones apply,
+    * content-keyed rows (same nid) in several sources dedupe to the
+    * highest version, and the target starts clean of tombstones.
+    * Output is written compacted (one file per cell) via the same
+    * [[writeCompacted]] as [[compactIvfFlatIndex]], so `target` may BE
+    * one of the sources (fold-into-live) and a crash mid-merge leaves
+    * it intact. */
   def mergeIvfFlatIndexes(spark: org.apache.spark.sql.SparkSession,
                           sources: Seq[String], target: String): Unit = {
     require(sources.nonEmpty, "mergeIvfFlatIndexes: no sources")
@@ -2050,54 +1975,23 @@ object SimilaritySearch {
       "mergeIvfFlatIndexes: sources have different centroid sets — " +
         "merging across cell geometries requires a re-encode " +
         "(writeIvfFlatIndex over the unioned raw vectors)")
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def hPath(s: String) = new org.apache.hadoop.fs.Path(s)
-    val fs = hPath(target).getFileSystem(hconf)
-    // each source's OWN versioned tombstones apply before the union
-    // dedupes — cross-source they don't compose (independent seq
-    // spaces), and within a source the mask rule is [[maskTombstones]]
-    val perSource = sources.map(s => maskTombstones(spark, s,
-      withUseq(spark.read.option("mergeSchema", "true")
-        .parquet(s"$s/payload"))))
-    // column sets must MATCH (withUseq already normalizes the version
-    // column away as a difference): null-filling a payload column
-    // across half a merged corpus would be silent — refuse loudly and
-    // let the operator align the sources first
+    val payloads = sources.map(s => s -> readPayload(spark, s))
+    // column sets must MATCH: null-filling a payload column across half
+    // a merged corpus would be silent — refuse loudly and let the
+    // operator align the sources first
     locally {
-      val colSets = perSource.map(_.columns.toSet)
+      val colSets = payloads.map(_._2.columns.toSet)
       require(colSets.forall(_ == colSets.head),
         "mergeIvfFlatIndexes: sources carry different payload columns — " +
           sources.zip(colSets).map { case (s, c) =>
             s"$s: ${c.toSeq.sorted.mkString("[", ",", "]")}"
           }.mkString("; "))
     }
-    val maskedUnion = perSource.reduce(_ unionByName _)
-    // content-keyed rows in several sources dedupe to the HIGHEST
-    // version (ties — the common same-content case — break arbitrarily
-    // among byte-identical rows)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("nid")).orderBy(col("__useq").desc)
-    val payload = maskedUnion.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-    payloadWriter(payload.repartition(col("cluster")))
-      .mode("overwrite").partitionBy("cluster")
-      .parquet(s"$target/payload.merge")
-    val live = hPath(s"$target/payload")
-    val staged = hPath(s"$target/payload.merge")
-    val retired = hPath(s"$target/payload.old")
-    if (fs.exists(retired)) fs.delete(retired, true)
-    if (fs.exists(live)) fs.rename(live, retired)
-    fs.rename(staged, live)
-    fs.delete(retired, true)
-    val targetTombs = hPath(s"$target/tombstones")
-    if (fs.exists(targetTombs)) fs.delete(targetTombs, true)
+    writeCompacted(spark, target, liveRows(spark, payloads))
     import spark.implicits._
     centSets.head.zipWithIndex.map { case (v, i) => (i, v) }
       .toDF("cid", "vec")
       .coalesce(1).write.mode("overwrite").parquet(s"$target/centroids")
-    spark.read.parquet(s"$target/payload")
-      .groupBy(col("cluster")).count()
-      .coalesce(1).write.mode("overwrite").parquet(s"$target/cellstats")
   }
 
   /** Re-encode an IVF-Flat index onto NEW centroids — the migration
@@ -2107,11 +2001,11 @@ object SimilaritySearch {
     * payload, re-assign every row to its nearest NEW cell, and write
     * the result as a fresh compacted index at `newPath`.
     *
-    * Semantics: replayed duplicates collapse (nid-keyed, like
-    * compaction) and the OLD index's tombstones are APPLIED — a deleted
-    * row must not resurrect through a migration — so the migrated index
-    * carries no tombstones sidecar and equals a fresh
-    * [[writeIvfFlatIndex]] build over the old index's LIVE rows
+    * Semantics: the migrated rows are the old index's [[liveRows]] —
+    * replayed duplicates collapse and the OLD index's tombstones are
+    * APPLIED (a deleted row must not resurrect through a migration) —
+    * so the migrated index carries no tombstones sidecar and equals a
+    * fresh [[writeIvfFlatIndex]] build over the old index's LIVE rows
     * (IvfPqIndexSpec pins the search-parity).
     *
     * Plan shape: ONE distributed pass — partition-pruned-free full scan
@@ -2128,26 +2022,13 @@ object SimilaritySearch {
     require(newPath != path,
       "migrateIvfFlatIndex: newPath must differ from the live index " +
         "(re-encode lands beside it; swap by pointer after validation)")
+    val live = liveRows(spark,
+      Seq(path -> readPayload(spark, path).drop("cluster")))
+    writeCompacted(spark, newPath, ivfAssign(live, newCentroids, "nvec"))
     import spark.implicits._
-    // versioned mask first (a superseded upsert version must not ride
-    // a migration), then the highest surviving version per nid
-    val masked = maskTombstones(spark, path,
-      withUseq(spark.read.option("mergeSchema", "true")
-        .parquet(s"$path/payload")).drop("cluster"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("nid")).orderBy(col("__useq").desc)
-    val live = masked.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-    payloadWriter(ivfAssign(live, newCentroids, "nvec")
-        .repartition(col("cluster")))
-      .mode("overwrite").partitionBy("cluster")
-      .parquet(s"$newPath/payload")
     newCentroids.zipWithIndex.map { case (v, i) => (i, v) }
       .toDF("cid", "vec")
       .coalesce(1).write.mode("overwrite").parquet(s"$newPath/centroids")
-    spark.read.parquet(s"$newPath/payload")
-      .groupBy(col("cluster")).count()
-      .coalesce(1).write.mode("overwrite").parquet(s"$newPath/cellstats")
   }
 
   /** The distinct coarse cells a query batch probes at depth `nProbe` —

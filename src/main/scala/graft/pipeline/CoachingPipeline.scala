@@ -216,10 +216,11 @@ final class CoachingPipeline(embedder: EmbeddingProvider, chat: ChatProvider,
     generate(retrieveIndexed(embedMessages(filterProspect(messages)), index))
       .withColumn("coaching_parsed", Coaching.parseCoaching(col("coaching_response")))
 
-  /** Stage: rag_results → LLM response (reference :412-433). */
+  /** Stage: rag_results → LLM response (reference :412-433). The
+    * prompt names all k slots, so it matches the rag_results shape. */
   def generate(ragResults: DataFrame): DataFrame = {
     val withPrompt = ragResults
-      .withColumn("prompt", Coaching.buildCoachingPrompt(col("message"), col("rag_results")))
+      .withColumn("prompt", Coaching.buildCoachingPrompt(col("message"), col("rag_results"), k))
       .withColumn("rag_results_string", to_json(col("rag_results")))
       .select("message", "rag_results_string", "prompt")
     MlPredict.withCompletion(withPrompt, chat, "coaching_response_generator",

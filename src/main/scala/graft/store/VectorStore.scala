@@ -241,14 +241,11 @@ final class IvfFlatIndexStore(spark: SparkSession, path: String,
     * maintenance (append/delete/compact/merge) call [[refreshStats]] —
     * it re-pins against the new state — or never pin at all. */
   def pinPayload(): this.type = {
-    // same empty-index tolerance as the search path: a fully-emptied
-    // compacted index pins a zero-row frame instead of failing schema
-    // inference; the schema comes from the search path's own
-    // constructor so the two cannot drift
-    payloadCache = graft.operators.SimilaritySearch.readParquetOrEmpty(
-      spark, s"$path/payload",
-      graft.operators.SimilaritySearch.rawPayloadSchema(
-        Seq("document_id", "chunks")))
+    // the search path's own payload read, so the two cannot drift: a
+    // fully-emptied compacted index pins a zero-row frame, an
+    // unversioned payload is refused
+    payloadCache = graft.operators.SimilaritySearch.readPayload(
+      spark, path, Seq("document_id", "chunks"))
     this
   }
   /** Drop the cached cellstats (call after upserts/compaction/merge so

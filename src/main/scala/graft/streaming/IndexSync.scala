@@ -295,17 +295,14 @@ object IndexSync {
     *    bootstrap only. */
   private def assertBootstrapSafe(spark: SparkSession, indexPath: String,
                                   pull: DataFrame, idCol: String): Unit = {
-    import org.apache.spark.sql.types._
-    // explicit schema: tolerates an empty shell (no payload files) and
-    // legacy pre-__useq files (missing column reads null → -1); a
-    // payload dir not created yet at all is the emptiest shell of all
+    // the shared payload read tolerates an empty shell (no payload
+    // files); a payload dir not created yet at all is the emptiest
+    // shell of all
     val idx =
-      try spark.read.schema(StructType(Seq(
-          StructField("nid", StringType), StructField("__useq", LongType))))
-        .parquet(s"$indexPath/payload")
+      try graft.operators.SimilaritySearch.readPayload(spark, indexPath)
       catch { case _: org.apache.spark.sql.AnalysisException => return }
     val served = graft.operators.SimilaritySearch.maskTombstones(
-      spark, indexPath, graft.operators.SimilaritySearch.withUseq(idx))
+      spark, indexPath, idx)
     val cov = pull.select(col(idCol).cast("string").as("nid"),
       col("seq").cast("long").as("__pseq"))
     // one 2-column scan feeds both the refusal probe and the backfill:

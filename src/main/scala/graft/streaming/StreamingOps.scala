@@ -382,23 +382,6 @@ object StreamingOps {
             r.getSeq[Float](2).toArray)))
       }
 
-  /** S4 at scale: continuous maintenance of the PERSISTED IVF-Flat
-    * index — each micro-batch of (document_id, chunks, embedding) rows
-    * is coarse-assigned with the index's own centroids sidecar and
-    * APPENDED to its cluster partitions as a distributed partitioned
-    * write: no driver collect of vectors, no in-memory bound, unlike
-    * [[upsertSink]]. The direct analog of the reference's
-    * continuously-running MongoDB sink connector upserting the Atlas
-    * vector collection (main.tf:594-635).
-    *
-    * The index must exist with a NON-EMPTY seed build
-    * (SimilaritySearch.writeIvfFlatIndex — its centroids fix the cell
-    * geometry, and parquet needs at least one payload file to carry
-    * the schema). Replays under at-least-once delivery re-append identical
-    * content-keyed rows: searches mask them with `dedupReplays=true`
-    * until SimilaritySearch.compactIvfFlatIndex removes them
-    * physically (StreamingSpec pins batch-vs-streamed hash identity
-    * and replay idempotence). */
   /** Streaming CDC apply — each micro-batch of changelog rows
     * (id, seq, op∈upsert|delete, payload…) folds into a BUCKETED
     * versioned parquet snapshot via
@@ -481,10 +464,8 @@ object StreamingOps {
                 org.apache.spark.sql.types.StructField("__deleted",
                   org.apache.spark.sql.types.BooleanType)))
             // SCHEMA EVOLUTION (add-only + safe promotions): the stored
-            // schema comes from the live manifest (or one footer read,
-            // once, for a store that predates recorded schemas — its
-            // next publish records one). Payload columns this sink
-            // streams that the store has never seen WIDEN the layout
+            // schema comes from the live manifest. Payload columns this
+            // sink streams that the store has never seen WIDEN the layout
             // (existing rows read as null there); stored columns this
             // sink does not stream are CARRIED, with upserted rows
             // taking null (an upsert is a full-row replace — the
@@ -504,11 +485,7 @@ object StreamingOps {
             // so an id-type change re-keys every bucket — a full
             // republish by nature, offered as the one-call
             // [[promoteSnapshotIdType]] maintenance op.
-            val stored: Option[org.apache.spark.sql.types.StructType] =
-              cur.flatMap(_.schema).orElse(cur.flatMap(m =>
-                m.buckets.toSeq.sortBy(_._1).headOption.map { case (bk, v) =>
-                  spark.read.parquet(s"$root/b$bk/v$v").schema }))
-            val widened = stored match {
+            val widened = cur.map(_.schema) match {
               case None => batchSchema
               case Some(st) =>
                 require(st.head.name == idCol,
@@ -687,32 +664,9 @@ object StreamingOps {
     val fs = snapshotFs(spark, root)
     val id = version.orElse(currentSnapshotId(fs, root))
     id.map { n =>
-      val mPath = new org.apache.hadoop.fs.Path(s"$root/_manifests/m$n")
-      val raw =
-        if (fs.exists(mPath)) {
-          // claim-first publishing means an existing manifest may be
-          // UNCOMMITTED (an in-flight publish's claim, or a crashed
-          // pre-swap one whose bucket dirs the replay will rewrite) —
-          // a version-addressed read must not serve past the pointer
-          if (version.isDefined &&
-              !committedManifestId(fs, root).exists(_ >= n))
-            throw new IllegalStateException(
-              s"readSnapshot: version $n of $root is not committed " +
-                "(claimed by an in-flight or crashed publish; the live " +
-                "pointer has not reached it)")
-          val m = readSnapshotManifest(fs, mPath, n)
-          val paths = m.buckets.toSeq.sortBy(_._1)
-            .map { case (bk, v) => s"$root/b$bk/v$v" }
-          readBuckets(spark, m, paths)
-        } else if (fs.exists(
-            new org.apache.hadoop.fs.Path(s"$root/v$n"))) {
-          // legacy single-dir layout (pre-bucketing): reads stay
-          // compatible without migration — only WRITES require
-          // migrateSnapshotLayout
-          spark.read.parquet(s"$root/v$n")
-        } else throw new IllegalStateException(
-          s"readSnapshot: version $n of $root is not retained " +
-            "(pruned by keepVersions retention, or never committed)")
+      val m = manifestAt(fs, root, n, "readSnapshot", version.isDefined)
+      val raw = readBuckets(spark, m, m.buckets.toSeq.sortBy(_._1)
+        .map { case (bk, v) => s"$root/b$bk/v$v" })
       if (includeTombstones) raw
       else raw.filter(!coalesce(col("__deleted"), lit(false)))
         .drop("__seq", "__deleted")
@@ -755,54 +709,28 @@ object StreamingOps {
         s"snapshotChangelog: no committed snapshot at $root"))
     require(fromVersion <= toId,
       s"snapshotChangelog: fromVersion $fromVersion is newer than $toId")
-    def manifest(id: Long): SnapshotManifest = {
-      val p = new org.apache.hadoop.fs.Path(s"$root/_manifests/m$id")
-      if (!fs.exists(p)) throw new IllegalStateException(
-        s"snapshotChangelog: snapshot $id of $root is not retained " +
-          "(pruned by keepVersions retention, or never committed)")
-      // see readSnapshot: a manifest past the pointer is an
-      // uncommitted publish claim, not a diffable version
-      if (!committedManifestId(fs, root).exists(_ >= id))
-        throw new IllegalStateException(
-          s"snapshotChangelog: snapshot $id of $root is not committed " +
-            "(claimed by an in-flight or crashed publish)")
-      readSnapshotManifest(fs, p, id)
-    }
-    val mTo = manifest(toId)
-    val mFrom = manifest(fromVersion)
+    val mTo = manifestAt(fs, root, toId, "snapshotChangelog",
+      checkCommitted = true)
+    val mFrom = manifestAt(fs, root, fromVersion, "snapshotChangelog",
+      checkCommitted = true)
     // only buckets whose version moved hold changes
     val changed = mTo.buckets.filter { case (bk, v) =>
       !mFrom.buckets.get(bk).contains(v) }.keySet
     val toPaths = changed.toSeq.sorted
       .flatMap(bk => mTo.buckets.get(bk).map(v => s"$root/b$bk/v$v"))
-    val sampleAll = mTo.buckets.toSeq.sortBy(_._1)
-      .map { case (bk, v) => s"$root/b$bk/v$v" }
-    require(sampleAll.nonEmpty,
-      s"snapshotChangelog: snapshot $toId of $root has no buckets")
     // the emission shape is the TO side's schema (schema evolution is
     // add-only, so it is a superset of the from side's; from-only
     // delete rows carry nulls for every payload column anyway)
-    val schema = mTo.schema.getOrElse(
-      spark.read.parquet(sampleAll.head).schema)
+    val schema = mTo.schema
     val idCol = schema.head.name
-    if (changed.isEmpty)
-      changelogShape(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
-        .limit(0)
+    if (changed.isEmpty) changelogShape(readBuckets(spark, mTo, Nil))
     else {
       val toRaw = readBuckets(spark, mTo, toPaths)
       val fromPaths = changed.toSeq.sorted
         .flatMap(bk => mFrom.buckets.get(bk).map(v => s"$root/b$bk/v$v"))
-      val fromSide =
-        if (fromPaths.isEmpty) spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(Seq(schema.head,
-              schema("__seq"), schema("__deleted"))))
-          .select(col(idCol), col("__seq").as("__from_seq"),
-            col("__deleted").as("__from_deleted"))
-        else readBuckets(spark, mFrom, fromPaths)
-          .select(col(idCol), col("__seq").as("__from_seq"),
-            col("__deleted").as("__from_deleted"))
+      val fromSide = readBuckets(spark, mFrom, fromPaths)
+        .select(col(idCol), col("__seq").as("__from_seq"),
+          col("__deleted").as("__from_deleted"))
       // FULL outer: a row present only on the FROM side was deleted in
       // the window AND its tombstone was already compacted away — it
       // must still emit a delete or the consumer diverges silently. Its
@@ -905,10 +833,10 @@ object StreamingOps {
       }
     if (cursor.contains(live)) return None
     // a cursor NEWER than live means the store was rebuilt under the
-    // consumer (migrateSnapshotLayout resets snapshot ids to 0; a
-    // deleted/recreated root starts over) — without this check every
-    // pull crashes deep in snapshotChangelog's fromVersion <= toId
-    // require with no hint that the CURSOR is the problem
+    // consumer (a deleted/recreated root starts over at 0) — without
+    // this check every pull crashes deep in snapshotChangelog's
+    // fromVersion <= toId require with no hint that the CURSOR is the
+    // problem
     cursor.filter(_ > live).foreach { c =>
       throw new IllegalStateException(
         s"nextChangelogBatch: cursor $cursorPath holds snapshot $c but " +
@@ -989,7 +917,7 @@ object StreamingOps {
     // each (see publishSnapshotVersion), not a job each.
     publishSnapshotVersion(spark, root, raw, idColOf(raw),
       (0 until newBuckets).toSet,
-      Some(SnapshotManifest(cur.id, newBuckets, cur.buckets)),
+      Some(SnapshotManifest(cur.id, newBuckets, cur.buckets, cur.schema)),
       newBuckets, keepVersions, raw.schema)
   }
 
@@ -1038,92 +966,9 @@ object StreamingOps {
     // carries the per-bucket version floors
     publishSnapshotVersion(spark, root, promoted, idCol,
       (0 until cur.numBuckets).toSet,
-      Some(SnapshotManifest(cur.id, cur.numBuckets, cur.buckets)),
+      Some(cur),
       cur.numBuckets, keepVersions, promoted.schema)
   }
-
-  /** One-off conversion of a legacy single-dir snapshot store
-    * (`root/v<N>` whole-snapshot dirs, the pre-bucketing layout) to the
-    * bucketed manifest layout: the LIVE legacy version (raw, tombstones
-    * and `__seq` preserved — stale-rejection memory survives the
-    * migration) is republished as bucketed snapshot 0 with the same
-    * atomic pointer swap every publish uses, then the legacy dirs are
-    * deleted. Legacy time-travel history does not carry over (the
-    * migrated store starts a fresh manifest history); migrate during a
-    * write pause, like any other layout change. Idempotent-safe: a
-    * crash before the pointer swap leaves the legacy store live and the
-    * migration re-runnable; after the swap the store is bucketed and a
-    * re-run raises (nothing legacy left to migrate). */
-  def migrateSnapshotLayout(spark: org.apache.spark.sql.SparkSession,
-                            root: String, numBuckets: Int = 16): Unit = {
-    require(numBuckets >= 1, s"numBuckets must be >= 1: $numBuckets")
-    val fs = snapshotFs(spark, root)
-    val cur = currentSnapshotId(fs, root).getOrElse(
-      throw new IllegalStateException(
-        s"migrateSnapshotLayout: no committed snapshot at $root"))
-    val mCurPath = new org.apache.hadoop.fs.Path(s"$root/_manifests/m$cur")
-    val legacy = new org.apache.hadoop.fs.Path(s"$root/v$cur")
-    if (fs.exists(mCurPath)) {
-      // a manifest at the pointer id is NOT proof of the bucketed
-      // layout: the publish guard claims the manifest slot FIRST, and
-      // migration publishes m0 while a live legacy store's pointer
-      // ALSO reads 0 — so m0 can be a crashed migration's uncommitted
-      // claim with the legacy dir still the only real data. Sweeping
-      // on bare fs.exists here destroyed that data. Disambiguate by
-      // the manifest's REFERENCED DIRS: a committed manifest's bucket
-      // versions all exist (renamed in before the swap); a pre-rename
-      // crash left none/some. Only a fully-intact manifest (or one
-      // with no legacy dir left to lose) takes the already-bucketed
-      // path; an incomplete claim over a live legacy dir falls
-      // through to the re-run, whose publish reclaims the claim.
-      // a hard kill between the claim's create and its body write
-      // leaves an EMPTY/truncated m$cur — unparseable, which is itself
-      // proof of an uncommitted claim: treat it as not-intact and fall
-      // through to the re-run (whose publish reclaims it), instead of
-      // dying on the parse error forever
-      val intact = scala.util.Try(readSnapshotManifest(fs, mCurPath, cur))
-        .toOption.exists(_.buckets.forall { case (bk, v) =>
-          fs.exists(new org.apache.hadoop.fs.Path(s"$root/b$bk/v$v")) })
-      if (intact || !fs.exists(legacy)) {
-        // already bucketed — but a PREVIOUS migration that crashed after
-        // its pointer swap and before its legacy sweep leaves v<N> dirs
-        // stranded forever (the re-run lands here and nothing else ever
-        // deletes them). Idempotent cleanup: the bucketed pointer is
-        // committed (every referenced bucket dir is in place — content-
-        // identical to the legacy source by construction even if the
-        // crash hit between the renames and the sweep), so every
-        // root/v<digits> dir is dead legacy — sweep them before
-        // raising, making "nothing legacy left" true.
-        sweepLegacyDirs(fs, root)
-        throw new IllegalStateException(
-          s"migrateSnapshotLayout: $root is already on the bucketed layout")
-      }
-    }
-    require(fs.exists(legacy),
-      s"migrateSnapshotLayout: live legacy dir v$cur missing at $root")
-    val raw = spark.read.parquet(legacy.toString)
-    val idCol = idColOf(raw)
-    val touched = raw
-      .select(snapshotBucket(col(idCol), numBuckets).as("__bucket"))
-      .distinct().collect().map(_.getInt(0)).toSet
-    publishSnapshotVersion(spark, root, raw, idCol, touched, None,
-      numBuckets, keepVersions = 1, raw.schema)
-    // the bucketed copy is committed (pointer swapped): drop the legacy
-    // whole-snapshot dirs
-    sweepLegacyDirs(fs, root)
-  }
-
-  /** Delete every legacy whole-snapshot dir (`root/v<digits>`) — only
-    * ever called once the bucketed layout's pointer is committed, so
-    * the dirs are dead by construction. Idempotent. */
-  private def sweepLegacyDirs(fs: org.apache.hadoop.fs.FileSystem,
-                              root: String): Unit =
-    fs.listStatus(new org.apache.hadoop.fs.Path(root)).foreach { st =>
-      val nm = st.getPath.getName
-      if (st.isDirectory && nm.startsWith("v") &&
-          nm.drop(1).nonEmpty && nm.drop(1).forall(_.isDigit))
-        fs.delete(st.getPath, true)
-    }
 
   /** Point lookup against a CDC snapshot: the serving read the bucketed
     * layout exists for — resolve the manifest, hash the requested keys
@@ -1141,32 +986,14 @@ object StreamingOps {
     require(keys.nonEmpty, "lookupSnapshot: empty key list")
     val fs = snapshotFs(spark, root)
     version.orElse(currentSnapshotId(fs, root)).map { n =>
-      val mPath = new org.apache.hadoop.fs.Path(s"$root/_manifests/m$n")
-      if (!fs.exists(mPath))
-        throw new IllegalStateException(
-          s"lookupSnapshot: version $n of $root is not retained " +
-            "(pruned by keepVersions retention, or never committed)")
-      // see readSnapshot: an existing manifest past the pointer is an
-      // uncommitted claim, not a servable version
-      if (version.isDefined &&
-          !committedManifestId(fs, root).exists(_ >= n))
-        throw new IllegalStateException(
-          s"lookupSnapshot: version $n of $root is not committed " +
-            "(claimed by an in-flight or crashed publish)")
-      val m = readSnapshotManifest(fs, mPath, n)
+      val m = manifestAt(fs, root, n, "lookupSnapshot", version.isDefined)
       // Spark's Murmur3 hash() is PHYSICAL-type-sensitive (hash(1: int)
       // != hash(1L: long)), so the keys must be cast to the STORED id
-      // type before bucketing — otherwise a caller passing Ints against
-      // a Long id column would probe the wrong buckets and silently
-      // conclude the keys are absent. The stored type comes from one
-      // bucket dir's parquet footer (metadata-only read).
-      val idField = m.schema.map(_.head).getOrElse {
-        val samplePath = m.buckets.toSeq.sortBy(_._1).headOption
-          .map { case (bk, v) => s"$root/b$bk/v$v" }
-          .getOrElse(throw new IllegalStateException(
-            s"lookupSnapshot: snapshot $n of $root has no buckets"))
-        spark.read.parquet(samplePath).schema.head
-      }
+      // type (the manifest schema's first field) before bucketing —
+      // otherwise a caller passing Ints against a Long id column would
+      // probe the wrong buckets and silently conclude the keys are
+      // absent.
+      val idField = m.schema.head
       // key → bucket via the layout's own expression; local 1-partition
       // frame, so the "job" is a driver-side collect of |keys| ints
       val keyDf = spark.createDataFrame(
@@ -1180,19 +1007,13 @@ object StreamingOps {
         .select(snapshotBucket(col("__k").cast(idField.dataType),
           m.numBuckets).as("__bucket"))
         .distinct().collect().map(_.getInt(0)).toSet
-      val paths = touched.toSeq.sorted
-        .flatMap(bk => m.buckets.get(bk).map(v => s"$root/b$bk/v$v"))
-      if (paths.isEmpty)
-        // keys hash to buckets the snapshot never populated: empty
-        // result with the snapshot's schema (via any one bucket dir)
-        readSnapshot(spark, root, version = Some(n)).get.limit(0)
-      else {
-        val raw = readBuckets(spark, m, paths)
-        val idCol = idColOf(raw)
-        raw.filter(col(idCol).isin(keys: _*))
-          .filter(!coalesce(col("__deleted"), lit(false)))
-          .drop("__seq", "__deleted")
-      }
+      // keys that hash only to buckets the snapshot never populated
+      // read no dir at all: an empty result with the snapshot's schema
+      val raw = readBuckets(spark, m, touched.toSeq.sorted
+        .flatMap(bk => m.buckets.get(bk).map(v => s"$root/b$bk/v$v")))
+      raw.filter(col(idField.name).isin(keys: _*))
+        .filter(!coalesce(col("__deleted"), lit(false)))
+        .drop("__seq", "__deleted")
     }
   }
 
@@ -1219,8 +1040,8 @@ object StreamingOps {
           retained,
           // the live layout schema as DDL (schema evolution is
           // add-only, so this is the superset every retained version
-          // reads under); null for pre-evolution stores
-          m.schema.map(_.toDDL).orNull))
+          // reads under)
+          m.schema.toDDL))
         .toDF("snapshot_id", "num_buckets", "populated_buckets",
           "min_bucket_version", "max_bucket_version", "retained_manifests",
           "schema_ddl")
@@ -1230,15 +1051,12 @@ object StreamingOps {
   /** One immutable snapshot manifest: bucket count (fixed at creation)
     * plus the bucket → bucket-version map of snapshot `id`. `schema` is
     * THIS snapshot's full layout schema (id, payload…, __seq,
-    * __deleted) — recorded since schema evolution landed, so readers
-    * resolve every bucket dir against the manifest's schema instead of
-    * file-footer inference (dirs written before a widening lack the
-    * added columns; inference over such a mix silently drops them).
-    * None for pre-evolution manifests → readers fall back to
-    * inference, correct because those stores are schema-uniform. */
+    * __deleted), so readers resolve every bucket dir against the
+    * manifest's schema instead of file-footer inference (dirs written
+    * before a widening lack the added columns; inference over such a
+    * mix silently drops them). */
   private[graft] final case class SnapshotManifest(id: Long, numBuckets: Int,
-      buckets: Map[Int, Long],
-      schema: Option[org.apache.spark.sql.types.StructType] = None)
+      buckets: Map[Int, Long], schema: org.apache.spark.sql.types.StructType)
 
   /** Murmur3 key-hash bucket — stable across runs/sessions, so the
     * same id always lands in the same bucket dir. */
@@ -1304,16 +1122,17 @@ object StreamingOps {
     }
   }
 
-  /** Read bucket dirs under a manifest's authority: with the recorded
-    * schema when present (dirs written before a widening lack the added
-    * columns — they read as nulls; footer inference over such a mix
-    * would silently drop them), by inference for pre-evolution
-    * manifests (schema-uniform by construction). */
+  /** Read bucket dirs under a manifest's authority: with its recorded
+    * schema (dirs written before a widening lack the added columns —
+    * they read as nulls; footer inference over such a mix would
+    * silently drop them). No paths read as an empty frame of that
+    * schema. */
   private def readBuckets(spark: org.apache.spark.sql.SparkSession,
                           m: SnapshotManifest,
                           paths: Seq[String]): DataFrame =
-    m.schema.map(s => spark.read.schema(s).parquet(paths: _*))
-      .getOrElse(spark.read.parquet(paths: _*))
+    if (paths.isEmpty) spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
+    else spark.read.schema(m.schema).parquet(paths: _*)
 
   /** The shared publish step of the sink and compaction: stage the
     * merged frame partitioned by bucket, move ONLY the touched
@@ -1367,22 +1186,9 @@ object StreamingOps {
     // already lost the race: another writer committed since prev was
     // read, and proceeding would clobber its bucket versions and then
     // silently discard a batch at the pointer swap) and re-checked
-    // before the bucket renames (guard (a) below). A prev-less publish
-    // tolerates a pointer naming a LEGACY (manifest-less) version:
-    // that is migrateSnapshotLayout committing bucketed m0 over the
-    // old layout, not a competitor. That tolerance must also ignore a
-    // manifest AT THE CLAIM SLOT (id == next): when the live legacy id
-    // is 0, next is ALSO 0, so after tryClaim the pointer's target
-    // "has" a manifest — this publish's own uncommitted claim (or a
-    // crashed predecessor's, which the claim path below reclaims or
-    // rejects by owner). Treating it as a committed competitor made
-    // the post-claim re-check throw on ITS OWN claim, and the migrate
-    // retry then swept the live legacy dir — the one data-destroying
-    // path this guard exists to prevent.
+    // before the bucket renames (guard (a) below).
     def assertPointerUnmoved(): Unit = {
-      val liveNow = currentSnapshotId(fs, root).filter(id =>
-        prev.isDefined || (id != next && fs.exists(
-          new org.apache.hadoop.fs.Path(s"$root/_manifests/m$id"))))
+      val liveNow = currentSnapshotId(fs, root)
       if (liveNow != prev.map(_.id)) throw new IllegalStateException(
         s"snapshot publish: concurrent writer detected at $root — " +
           s"_CURRENT moved from ${prev.map(_.id).getOrElse("<none>")} to " +
@@ -1397,20 +1203,19 @@ object StreamingOps {
     val newBuckets = touched.toSeq.sorted.map { bk =>
       bk -> prevBuckets.get(bk).map(_ + 1).getOrElse(0L)
     }.toMap
-    val manifest = SnapshotManifest(next, numBuckets,
-      prevBuckets ++ newBuckets)
-    val nonce = java.util.UUID.randomUUID().toString
-    // the schema line makes every reader resolution manifest-driven —
-    // required once widened publishes mix bucket dirs of different
-    // widths (StructType.json is single-line by construction).
     // asNullable: nullability is SOURCE metadata (a MemoryStream's
     // Seq[Float] infers containsNull=false, parquet/Kafka true) — the
     // store's contract is the value types, and carried/widened columns
     // hold nulls by design
+    val manifest = SnapshotManifest(next, numBuckets,
+      prevBuckets ++ newBuckets, nullableSchema(schema))
+    val nonce = java.util.UUID.randomUUID().toString
+    // the schema line makes every reader resolution manifest-driven —
+    // required once widened publishes mix bucket dirs of different
+    // widths (StructType.json is single-line by construction)
     val body = ((s"buckets ${manifest.numBuckets}" +:
       manifest.buckets.toSeq.sorted.map { case (bk, v) => s"b $bk $v" }) ++
-      Seq(s"writer $writerId $nonce",
-        s"schema ${nullableSchema(schema).json}"))
+      Seq(s"writer $writerId $nonce", s"schema ${manifest.schema.json}"))
       .mkString("", "\n", "\n")
     val mDir = new org.apache.hadoop.fs.Path(s"$root/_manifests")
     fs.mkdirs(mDir)
@@ -1642,9 +1447,8 @@ object StreamingOps {
     * window of an in-flight publish (and after a pre-swap crash), and
     * serving it would expose bucket dirs mid-rename. Every reader that
     * resolves an explicit version must gate on this, not on
-    * fs.exists(manifest). None when the pointer is absent or names a
-    * legacy (manifest-less) version — e.g. mid-migration, when the
-    * freshly claimed m0 is exactly an uncommitted manifest. */
+    * fs.exists(manifest). None when the pointer is absent or names no
+    * manifest. */
   private def committedManifestId(fs: org.apache.hadoop.fs.FileSystem,
                                   root: String): Option[Long] =
     currentSnapshotId(fs, root).filter(id => fs.exists(
@@ -1677,19 +1481,31 @@ object StreamingOps {
   private[graft] def currentSnapshotManifest(
       fs: org.apache.hadoop.fs.FileSystem,
       root: String): Option[SnapshotManifest] =
-    currentSnapshotId(fs, root).map { id =>
-      val mPath = new org.apache.hadoop.fs.Path(s"$root/_manifests/m$id")
-      if (!fs.exists(mPath) &&
-          fs.exists(new org.apache.hadoop.fs.Path(s"$root/v$id")))
-        // pre-bucketing stores (root/v<N> whole-snapshot dirs): writers
-        // must not silently mix layouts — reads stay compatible
-        // (readSnapshot falls back), writes need the one-off migration
-        throw new IllegalStateException(
-          s"$root holds a legacy single-dir snapshot (v$id): run " +
-            "StreamingOps.migrateSnapshotLayout(spark, root, numBuckets) " +
-            "before writing with the bucketed sink/compaction")
-      readSnapshotManifest(fs, mPath, id)
-    }
+    currentSnapshotId(fs, root).map(id =>
+      manifestAt(fs, root, id, "snapshot store", checkCommitted = false))
+
+  /** Manifest `id` of the store at `root`, behind the store's named
+    * refusals: "not retained" when no manifest file exists (pruned by
+    * retention, never committed, or a pointer naming a missing
+    * manifest); and, for a version-addressed read (`checkCommitted`),
+    * "not committed" when the manifest lies past the live pointer —
+    * claim-first publishing makes an existing manifest possibly an
+    * in-flight publish's claim, or a crashed pre-swap one whose bucket
+    * dirs the replay will rewrite. `op` names the caller. */
+  private def manifestAt(fs: org.apache.hadoop.fs.FileSystem, root: String,
+                         id: Long, op: String,
+                         checkCommitted: Boolean): SnapshotManifest = {
+    val mPath = new org.apache.hadoop.fs.Path(s"$root/_manifests/m$id")
+    if (!fs.exists(mPath)) throw new IllegalStateException(
+      s"$op: version $id of $root is not retained " +
+        "(pruned by keepVersions retention, or never committed)")
+    if (checkCommitted && !committedManifestId(fs, root).exists(_ >= id))
+      throw new IllegalStateException(
+        s"$op: version $id of $root is not committed (claimed by an " +
+          "in-flight or crashed publish; the live pointer has not " +
+          "reached it)")
+    readSnapshotManifest(fs, mPath, id)
+  }
 
   private def readSnapshotManifest(fs: org.apache.hadoop.fs.FileSystem,
       path: org.apache.hadoop.fs.Path, id: Long): SnapshotManifest = {
@@ -1702,11 +1518,13 @@ object StreamingOps {
       s"malformed snapshot manifest $path: missing 'buckets' header")
     val b = lines.head.stripPrefix("buckets ").trim.toInt
     // `writer <id> <nonce>` is publish-guard provenance, `schema <json>`
-    // the layout schema (both absent on older manifests)
+    // the layout schema every publish records
     val schema = lines.find(_.startsWith("schema "))
       .map(l => org.apache.spark.sql.types.DataType
         .fromJson(l.stripPrefix("schema "))
         .asInstanceOf[org.apache.spark.sql.types.StructType])
+      .getOrElse(throw new IllegalArgumentException(
+        s"malformed snapshot manifest $path: missing 'schema' line"))
     val m = lines.tail
       .filterNot(l => l.startsWith("writer ") || l.startsWith("schema "))
       .map { l =>
@@ -1718,6 +1536,23 @@ object StreamingOps {
     SnapshotManifest(id, b, m, schema)
   }
 
+  /** S4 at scale: continuous maintenance of the PERSISTED IVF-Flat
+    * index — each micro-batch of (document_id, chunks, embedding) rows
+    * is coarse-assigned with the index's own centroids sidecar and
+    * APPENDED to its cluster partitions as a distributed partitioned
+    * write: no driver collect of vectors, no in-memory bound, unlike
+    * [[upsertSink]]. The direct analog of the reference's
+    * continuously-running MongoDB sink connector upserting the Atlas
+    * vector collection (main.tf:594-635).
+    *
+    * The index must exist with a NON-EMPTY seed build
+    * (SimilaritySearch.writeIvfFlatIndex — its centroids fix the cell
+    * geometry, and parquet needs at least one payload file to carry
+    * the schema). Replays under at-least-once delivery re-append identical
+    * content-keyed rows: searches mask them with `dedupReplays=true`
+    * until SimilaritySearch.compactIvfFlatIndex removes them
+    * physically (StreamingSpec pins batch-vs-streamed hash identity
+    * and replay idempotence). */
   def indexUpsertSink(indexStream: DataFrame, indexPath: String,
                       idCol: String = "document_id",
                       chunkCol: String = "chunks",

@@ -229,7 +229,7 @@ class CoachE2ESpec extends SparkSpec {
       val messages = Seq(("pricing discounts for rollout", "prospect"))
         .toDF("message", "speaker")
       for (k <- Seq(2, 5)) {
-        val pipeline = new CoachingPipeline(embedder, new MockChat, store, k = k)
+        val pipeline = new CoachingPipeline(embedder, new EchoChat, store, k = k)
         val embedded = pipeline.embedMessages(messages)
         Seq(
           "retrieve" -> pipeline.retrieve(embedded),
@@ -244,6 +244,13 @@ class CoachE2ESpec extends SparkSpec {
             ids should have length k.toLong
             ids.distinct should have length k.toLong
             ids should not contain (null: String)
+            // a NULL prompt reaches the chat as ""
+            val prompt = pipeline.generate(df)
+              .select(col("coaching_response")).collect().head.getString(0)
+            prompt should not be empty
+            ids.zipWithIndex.foreach { case (id, i) =>
+              prompt should include(s"Document ${i + 1}: $id\n")
+            }
           }
         }
       }
@@ -294,4 +301,11 @@ class CoachE2ESpec extends SparkSpec {
       r.getAs[Int]("n_sources") shouldBe 3
     }
   }
+}
+
+/** A chat provider that answers with its prompt, so a test can read the
+  * prompt the pipeline built. */
+final class EchoChat extends graft.providers.ChatProvider {
+  override def completeBatch(prompts: Seq[String],
+                             systemPrompt: String): Seq[String] = prompts
 }

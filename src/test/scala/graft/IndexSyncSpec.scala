@@ -86,36 +86,135 @@ class IndexSyncSpec extends SparkSpec {
     topk(path, q).head shouldBe ((15L, "15", 1))
   }
 
-  test("upsert refuses a legacy (pre-version) payload and compaction upgrades it") {
-    val path = tmp("idx-legacy")
-    val corpus = emb.filter(col("vec_id") < 20)
-      .select(col("vec_id").cast("string").as("nid"), col("embedding"))
-    SimilaritySearch.writeIvfFlatIndex(corpus, centroidsFrom(emb, 2), path,
+  /** Every parquet file under `dir` (recursively) read on its own, so
+    * each file's own footer schema is checked, not a merged one. */
+  private def parquetFiles(dir: String): Seq[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) return Nil
+    val it = fs.listFiles(p, true)
+    val out = Seq.newBuilder[DataFrame]
+    while (it.hasNext) {
+      val f = it.next().getPath
+      if (f.getName.endsWith(".parquet")) out += spark.read.parquet(f.toString)
+    }
+    out.result()
+  }
+
+  /** The one on-disk format the index readers accept: every payload
+    * file carries a non-null `__useq`, every tombstone a non-null seq. */
+  private def assertIndexFormat(path: String): Unit = {
+    val payload = parquetFiles(s"$path/payload")
+    payload should not be empty
+    payload.foreach { f =>
+      f.columns should contain("__useq")
+      f.filter(col("__useq").isNull).count() shouldBe 0L
+    }
+    parquetFiles(s"$path/tombstones").foreach { f =>
+      f.columns should contain("seq")
+      f.filter(col("seq").isNull).count() shouldBe 0L
+    }
+  }
+
+  test("every index writer leaves versioned payload files and seq-carrying tombstones") {
+    val path = tmp("idx-format")
+    def rows(lo: Int, hi: Int) =
+      emb.filter(col("vec_id") >= lo && col("vec_id") < hi)
+        .select(col("vec_id").cast("string").as("nid"), col("embedding"))
+    val cents = centroidsFrom(emb, 4)
+    SimilaritySearch.writeIvfFlatIndex(rows(0, 30), cents, path,
       cId = "nid", cVec = "embedding")
-    // simulate a pre-r14 index: strip __useq by rewriting the payload
-    val legacy = spark.read.parquet(s"$path/payload").drop("__useq")
+    assertIndexFormat(path)
+    SimilaritySearch.appendIvfFlatBatch(rows(30, 40), path,
+      cId = "nid", cVec = "embedding")
+    assertIndexFormat(path)
+    SimilaritySearch.upsertIvfFlatBatch(
+      rows(5, 8).withColumn("seq", lit(3L)), path,
+      cId = "nid", cVec = "embedding", cSeq = "seq")
+    assertIndexFormat(path)
+    SimilaritySearch.tombstoneIvfFlat(spark, path,
+      Seq(("9", 4L)).toDF("nid", "seq"))
+    SimilaritySearch.deleteFromIvfFlatIndex(spark, path, Seq("1", "2"))
+    assertIndexFormat(path)
+    val merged = tmp("idx-format-merged")
+    SimilaritySearch.mergeIvfFlatIndexes(spark, Seq(path), merged)
+    assertIndexFormat(merged)
+    val migrated = tmp("idx-format-migrated")
+    SimilaritySearch.migrateIvfFlatIndex(spark, path,
+      centroidsFrom(emb.filter(col("vec_id") >= 50), 3), migrated)
+    assertIndexFormat(migrated)
+    SimilaritySearch.compactIvfFlatIndex(spark, path)
+    assertIndexFormat(path)
+    // all three rewrites serve the same live rows: 40 built/appended,
+    // less the 3 deleted (1, 2, 9); the upserts replace versions
+    Seq(path, merged, migrated).foreach { p =>
+      SimilaritySearch.ivfFlatIndexReport(spark, p).collect().head
+        .getAs[Long]("live_rows") shouldBe 37L
+    }
+  }
+
+  test("a payload without the __useq version column is refused by name") {
+    val path = tmp("idx-unversioned")
+    SimilaritySearch.writeIvfFlatIndex(
+      emb.filter(col("vec_id") < 20)
+        .select(col("vec_id").cast("string").as("nid"), col("embedding")),
+      centroidsFrom(emb, 2), path, cId = "nid", cVec = "embedding")
+    // strip the column by rewriting the payload
+    val stripped = spark.read.parquet(s"$path/payload").drop("__useq")
       .persist()
-    legacy.count()
-    legacy.write.mode("overwrite").partitionBy("cluster")
-      .parquet(s"$path/payload.legacy")
-    legacy.unpersist()
+    stripped.count()
+    stripped.write.mode("overwrite").partitionBy("cluster")
+      .parquet(s"$path/payload.stripped")
+    stripped.unpersist()
     val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(s"$path/payload"), true)
-    fs.rename(new org.apache.hadoop.fs.Path(s"$path/payload.legacy"),
+    fs.rename(new org.apache.hadoop.fs.Path(s"$path/payload.stripped"),
       new org.apache.hadoop.fs.Path(s"$path/payload"))
-    val upd = emb.filter(col("vec_id") === 100)
-      .select(lit("1").as("nid"), col("embedding"), lit(2L).as("seq"))
-    val err = intercept[IllegalArgumentException] {
-      SimilaritySearch.upsertIvfFlatBatch(upd, path,
-        cId = "nid", cVec = "embedding", cSeq = "seq")
+    intercept[IllegalStateException] {
+      topk(path, emb.filter(col("vec_id") === 1))
+    }.getMessage should include("unversioned IVF-Flat payload")
+    intercept[IllegalStateException] {
+      SimilaritySearch.compactIvfFlatIndex(spark, path)
+    }.getMessage should include("unversioned IVF-Flat payload")
+  }
+
+  test("merge and migrate of a fully-deleted index write zero-row cellstats and serve zero hits") {
+    val path = tmp("idx-alldeleted")
+    val corpus = emb.filter(col("vec_id") < 6)
+      .select(col("vec_id").cast("string").as("nid"), col("embedding"))
+    val cents = centroidsFrom(emb, 2)
+    SimilaritySearch.writeIvfFlatIndex(corpus, cents, path,
+      cId = "nid", cVec = "embedding")
+    SimilaritySearch.deleteFromIvfFlatIndex(spark, path,
+      (0 until 6).map(_.toString))
+    val merged = tmp("idx-alldeleted-merged")
+    SimilaritySearch.mergeIvfFlatIndexes(spark, Seq(path), merged)
+    val migrated = tmp("idx-alldeleted-migrated")
+    SimilaritySearch.migrateIvfFlatIndex(spark, path, cents, migrated)
+    Seq(merged, migrated).foreach { p =>
+      spark.read.parquet(s"$p/cellstats").count() shouldBe 0L
+      topk(p, emb.filter(col("vec_id") < 3)) shouldBe empty
     }
-    err.getMessage should include("compactIvfFlatIndex")
-    // the documented upgrade: compact rewrites versioned, upsert works
-    SimilaritySearch.compactIvfFlatIndex(spark, path)
-    SimilaritySearch.upsertIvfFlatBatch(upd, path,
-      cId = "nid", cVec = "embedding", cSeq = "seq")
-    topk(path, emb.filter(col("vec_id") === 100)).head._2 shouldBe "1"
+  }
+
+  test("the shared payload swap raises when a rename returns false") {
+    val root = new org.apache.hadoop.fs.Path(tmp("idx-swap"))
+    val local = org.apache.hadoop.fs.FileSystem.getLocal(
+      spark.sparkContext.hadoopConfiguration)
+    // an object-store-like filesystem: rename fails by returning false
+    val noRename = new org.apache.hadoop.fs.FilterFileSystem(local) {
+      override def rename(src: org.apache.hadoop.fs.Path,
+                          dst: org.apache.hadoop.fs.Path): Boolean = false
+    }
+    val live = new org.apache.hadoop.fs.Path(root, "payload")
+    val staged = new org.apache.hadoop.fs.Path(root, "payload.staged")
+    local.mkdirs(live); local.mkdirs(staged)
+    intercept[java.io.IOException] {
+      SimilaritySearch.swapDir(noRename, staged, live)
+    }.getMessage should include("rename")
+    // the failed swap left the live dir where it was
+    local.exists(live) shouldBe true
   }
 
   test("a null change seq raises instead of silently tombstoning the key forever") {

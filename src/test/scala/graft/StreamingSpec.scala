@@ -1063,6 +1063,12 @@ class StreamingSpec extends SparkSpec {
     // the claim.
     val live2 = StreamingOps.currentSnapshotManifest(fs, root).get
     val claim3 = new org.apache.hadoop.fs.Path(s"$root/_manifests/m3")
+    // the twin runs this code, so it claims m3 with a full manifest —
+    // the same bucket bumps and schema line, its own nonce
+    val stolenBody = ("buckets 4" +: (0 until 4).map(bk =>
+        s"b $bk ${live2.buckets.get(bk).map(_ + 1).getOrElse(0L)}") :+
+      "writer default stolen-nonce" :+ s"schema ${live2.schema.json}")
+      .mkString("", "\n", "\n")
     val stealUdf = udf { () =>
       val f = new java.io.File(claim3.toUri.getPath)
       // raw-java rewrite invalidates the local FS's checksum sidecar —
@@ -1070,7 +1076,7 @@ class StreamingSpec extends SparkSpec {
       val crc = new java.io.File(f.getParentFile, "." + f.getName + ".crc")
       if (crc.exists()) crc.delete()
       val w = new java.io.FileWriter(f, false) // idempotent overwrite
-      try w.write("buckets 4\nwriter default stolen-nonce\n")
+      try w.write(stolenBody)
       finally w.close()
       true
     }
@@ -1262,61 +1268,6 @@ class StreamingSpec extends SparkSpec {
     } finally query.stop()
   }
 
-  test("legacy single-dir snapshots: reads compatible, writes raise pointed, migration preserves seq memory") {
-    implicit val ctx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft-snap-legacy")
-      .toString + "/snap"
-    // craft the pre-bucketing layout: whole-snapshot dir + pointer
-    Seq((1L, Some("a"), 3L, false), (2L, Option.empty[String], 4L, true),
-        (3L, Some("c"), 2L, false))
-      .toDF("doc_id", "text", "__seq", "__deleted")
-      .write.parquet(s"$root/v7")
-    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new org.apache.hadoop.fs.Path(s"$root/_CURRENT"), true)
-    try out.write("7".getBytes("UTF-8")) finally out.close()
-    // reads are layout-compatible without migration
-    StreamingOps.readSnapshot(spark, root).get
-      .as[(Long, Option[String])].collect().sortBy(_._1).toSeq shouldBe
-      Seq((1L, Some("a")), (3L, Some("c")))
-    // writes refuse with a pointer to the migration
-    intercept[IllegalStateException] {
-      StreamingOps.compactSnapshot(spark, root, horizonSeq = 0L)
-    }.getMessage should include("migrateSnapshotLayout")
-    // migrate: bucketed m0, legacy dirs gone, rows + tombstones intact
-    StreamingOps.migrateSnapshotLayout(spark, root, numBuckets = 4)
-    fs.exists(new org.apache.hadoop.fs.Path(s"$root/v7")) shouldBe false
-    fs.exists(new org.apache.hadoop.fs.Path(s"$root/_manifests/m0")) shouldBe true
-    StreamingOps.readSnapshot(spark, root).get
-      .as[(Long, Option[String])].collect().sortBy(_._1).toSeq shouldBe
-      Seq((1L, Some("a")), (3L, Some("c")))
-    // the migrated store keeps per-key __seq: a STALE redelivery for the
-    // tombstoned key 2 (seq 1 < stored 4) must still be rejected
-    val input = MemoryStream[(Long, Long, String, String)]
-    val query = StreamingOps.snapshotUpsertSink(
-        input.toDF.toDF("doc_id", "seq", "op", "text"), root,
-        keepVersions = 2, numBuckets = 4)
-      .option("checkpointLocation", checkpoint()).start()
-    try {
-      input.addData((2L, 1L, "upsert", "resurrect?"), (4L, 5L, "upsert", "d"))
-      query.processAllAvailable()
-      StreamingOps.readSnapshot(spark, root).get
-        .as[(Long, Option[String])].collect().sortBy(_._1).toSeq shouldBe
-        Seq((1L, Some("a")), (3L, Some("c")), (4L, Some("d")))
-    } finally query.stop()
-    // a second migration attempt refuses: already bucketed — and it
-    // SWEEPS any legacy dir a prior migration stranded by crashing
-    // after its pointer swap but before its cleanup (nothing else ever
-    // deletes those)
-    Seq((9L, Some("stranded"), 1L, false))
-      .toDF("doc_id", "text", "__seq", "__deleted")
-      .write.parquet(s"$root/v6")
-    intercept[IllegalStateException] {
-      StreamingOps.migrateSnapshotLayout(spark, root)
-    }.getMessage should include("already")
-    fs.exists(new org.apache.hadoop.fs.Path(s"$root/v6")) shouldBe false
-  }
-
   test("snapshot type promotion: payload/seq widen int→long and float→double mid-stream; the id needs the full-republish op") {
     implicit val ctx = spark.sqlContext
     val root = java.nio.file.Files.createTempDirectory("graft-snap-promo")
@@ -1444,84 +1395,90 @@ class StreamingSpec extends SparkSpec {
     }.getMessage should include("rebuild")
   }
 
-  test("migrating a legacy store whose live id is 0: no claim self-collision, and a crashed claim never sweeps the live data") {
+  test("every snapshot writer records the layout schema in each manifest it commits") {
     implicit val ctx = spark.sqlContext
-    def legacyStore(tag: String): (String, org.apache.hadoop.fs.FileSystem) = {
-      val root = java.nio.file.Files.createTempDirectory(s"graft-$tag")
-        .toString + "/snap"
-      Seq((1L, Some("a"), 3L, false), (2L, Some("b"), 2L, false),
-          (3L, Some("c"), 5L, false))
-        .toDF("doc_id", "text", "__seq", "__deleted")
-        .write.parquet(s"$root/v0") // live legacy id 0 == the claim slot
-      val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      val out = fs.create(
-        new org.apache.hadoop.fs.Path(s"$root/_CURRENT"), true)
-      try out.write("0".getBytes("UTF-8")) finally out.close()
-      (root, fs)
+    val root = java.nio.file.Files.createTempDirectory("graft-snap-format")
+      .toString + "/snap"
+    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    // every manifest file of the store carries a parseable schema line
+    def assertSchemaLines(): Unit = {
+      val ms = fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/_manifests"))
+        .map(_.getPath).filter(_.getName.matches("m\\d+"))
+      ms should not be empty
+      ms.foreach { p =>
+        val in = fs.open(p)
+        val text = try new String(
+          org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
+          finally in.close()
+        withClue(s"$p: ") {
+          text.split('\n').count(_.startsWith("schema ")) shouldBe 1
+        }
+      }
     }
-    def liveRows(root: String): Seq[(Long, Option[String])] =
-      StreamingOps.readSnapshot(spark, root).get
-        .as[(Long, Option[String])].collect().sortBy(_._1).toSeq
-    val expect = Seq((1L, Some("a")), (2L, Some("b")), (3L, Some("c")))
+    val input = MemoryStream[(Int, Long, String, String)]
+    val query = StreamingOps.snapshotUpsertSink(
+        input.toDF.toDF("doc_id", "seq", "op", "text"), root,
+        keepVersions = 10, numBuckets = 2)
+      .option("checkpointLocation", checkpoint()).start()
+    try {
+      input.addData((1, 1L, "upsert", "a"), (2, 1L, "upsert", "b"))
+      query.processAllAvailable()
+      input.addData((2, 2L, "delete", null))
+      query.processAllAvailable()
+    } finally query.stop()
+    assertSchemaLines()
+    StreamingOps.compactSnapshot(spark, root, horizonSeq = 2L,
+      keepVersions = 10)
+    assertSchemaLines()
+    StreamingOps.rebucketSnapshot(spark, root, newBuckets = 4,
+      keepVersions = 10)
+    assertSchemaLines()
+    StreamingOps.promoteSnapshotIdType(spark, root,
+      org.apache.spark.sql.types.LongType, keepVersions = 10)
+    assertSchemaLines()
+    StreamingOps.readSnapshot(spark, root).get
+      .as[(Long, String)].collect().toSeq shouldBe Seq((1L, "a"))
+  }
 
-    // (1) the self-collision: migration publishes m0 while _CURRENT
-    // still reads 0, so the post-claim pointer re-check used to see its
-    // OWN claim and throw 'concurrent writer' — and the migrate retry's
-    // already-bucketed branch then swept the live v0 dir. The fresh
-    // migrate must simply succeed.
-    val (root1, fs1) = legacyStore("snap-legacy0")
-    StreamingOps.migrateSnapshotLayout(spark, root1, numBuckets = 4)
-    fs1.exists(new org.apache.hadoop.fs.Path(s"$root1/v0")) shouldBe false
-    liveRows(root1) shouldBe expect
-    // re-running on the now-bucketed store raises (and is data-safe: the
-    // committed m0's bucket dirs are all in place)
+  test("a manifest without a schema line, and a pointer naming no manifest, fail by name") {
+    implicit val ctx = spark.sqlContext
+    val root = java.nio.file.Files.createTempDirectory("graft-snap-refuse")
+      .toString + "/snap"
+    val input = MemoryStream[(Long, Long, String, String)]
+    val query = StreamingOps.snapshotUpsertSink(
+        input.toDF.toDF("doc_id", "seq", "op", "text"), root,
+        keepVersions = 3, numBuckets = 2)
+      .option("checkpointLocation", checkpoint()).start()
+    try {
+      input.addData((1L, 1L, "upsert", "a"))
+      query.processAllAvailable()
+    } finally query.stop()
+    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    val m0 = new org.apache.hadoop.fs.Path(s"$root/_manifests/m0")
+    val body = {
+      val in = fs.open(m0)
+      try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
+      finally in.close()
+    }
+    // the live manifest loses its schema line
+    locally {
+      val o = fs.create(m0, true)
+      try o.write(body.split('\n').filterNot(_.startsWith("schema "))
+        .mkString("", "\n", "\n").getBytes("UTF-8")) finally o.close()
+    }
+    intercept[IllegalArgumentException] {
+      StreamingOps.readSnapshot(spark, root)
+    }.getMessage should include("missing 'schema' line")
+    // the pointer names a manifest that does not exist
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$root/_CURRENT"),
+      "7".getBytes("UTF-8"))
     intercept[IllegalStateException] {
-      StreamingOps.migrateSnapshotLayout(spark, root1)
-    }.getMessage should include("already")
-    liveRows(root1) shouldBe expect
-
-    // (2) a CRASHED previous migration left an uncommitted claim m0
-    // (its bucket renames never ran) over the live legacy dir: the
-    // retry must NOT take the already-bucketed sweep (that deletes the
-    // store's only data) — it reclaims the claim and completes.
-    val (root2, fs2) = legacyStore("snap-legacy0crash")
-    fs2.mkdirs(new org.apache.hadoop.fs.Path(s"$root2/_manifests"))
-    locally {
-      val o = fs2.create(
-        new org.apache.hadoop.fs.Path(s"$root2/_manifests/m0"), false)
-      try o.write("buckets 4\nb 0 0\nb 1 0\nwriter default dead-nonce\n"
-        .getBytes("UTF-8")) finally o.close()
-    }
-    StreamingOps.migrateSnapshotLayout(spark, root2, numBuckets = 4)
-    fs2.exists(new org.apache.hadoop.fs.Path(s"$root2/v0")) shouldBe false
-    liveRows(root2) shouldBe expect
-
-    // (2b) a HARD KILL between the claim's create and its body write
-    // leaves an EMPTY m0 — unparseable, which must read as not-intact
-    // (fall through to the safe re-run), not crash the retry forever
-    val (root2b, fs2b) = legacyStore("snap-legacy0empty")
-    fs2b.mkdirs(new org.apache.hadoop.fs.Path(s"$root2b/_manifests"))
-    fs2b.create(
-      new org.apache.hadoop.fs.Path(s"$root2b/_manifests/m0"), false).close()
-    StreamingOps.migrateSnapshotLayout(spark, root2b, numBuckets = 4)
-    fs2b.exists(new org.apache.hadoop.fs.Path(s"$root2b/v0")) shouldBe false
-    liveRows(root2b) shouldBe expect
-
-    // (3) partially-renamed crash (some bucket dirs made it in): still
-    // not intact, still a safe re-run that overwrites the partial dirs
-    val (root3, fs3) = legacyStore("snap-legacy0partial")
-    fs3.mkdirs(new org.apache.hadoop.fs.Path(s"$root3/_manifests"))
-    locally {
-      val o = fs3.create(
-        new org.apache.hadoop.fs.Path(s"$root3/_manifests/m0"), false)
-      try o.write("buckets 4\nb 0 0\nb 1 0\nwriter default dead-nonce\n"
-        .getBytes("UTF-8")) finally o.close()
-    }
-    Seq((9L, Some("stale-partial"), 1L, false))
-      .toDF("doc_id", "text", "__seq", "__deleted")
-      .write.parquet(s"$root3/b0/v0") // the one bucket the crash renamed
-    StreamingOps.migrateSnapshotLayout(spark, root3, numBuckets = 4)
-    liveRows(root3) shouldBe expect // 9L's partial dir was overwritten
+      StreamingOps.readSnapshot(spark, root)
+    }.getMessage should include("not retained")
+    intercept[IllegalStateException] {
+      StreamingOps.compactSnapshot(spark, root, horizonSeq = 0L)
+    }.getMessage should include("not retained")
   }
 }
