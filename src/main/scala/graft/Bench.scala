@@ -620,21 +620,10 @@ object Bench {
       System.err.println(f"[bench] WARNING: pre-run load_avg $loadAvgPre%.1f " +
         f"exceeds $maxLoad%.1f — figures will be stamped contended")
 
-    // the bench list is kept beside the registry: a stale or renamed
-    // name must fail here, not silently shrink the book below 207 rows
-    val stale = SparkEntry.benchQueries.filterNot(SparkEntry.queries.contains)
-    require(stale.isEmpty,
-      s"SparkEntry.benchQueries names unknown queries: ${stale.mkString(",")}")
-    val only = envList("SPARK_GRAFT_BENCH_ONLY").map(_.toSet)
     // fail fast on typos: a silently empty selection would record a
     // bogus zero-cost figure instead of an error
-    only.foreach { o =>
-      val unknown = o -- SparkEntry.benchQueries.toSet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_BENCH_ONLY names unknown queries: ${unknown.mkString(",")}")
-      require(o.nonEmpty, "SPARK_GRAFT_BENCH_ONLY is set but empty")
-    }
-    val names = SparkEntry.benchQueries.filter(n => only.forall(_.contains(n)))
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+    val entries = SparkEntry.select(only, SparkEntry.benchQueries)
     // Warm EVERY bench plan shape on sf0.01 first: first execution of a
     // plan pays 10-25 s of classloading + JIT + codegen compile in this
     // JVM (measured: identical job 19.4 s cold / 1.1 s warm), and one
@@ -642,8 +631,8 @@ object Bench {
     // totals swung 2-4× between identical runs. Warming per shape is
     // sound because the codegen cache is keyed by generated source,
     // which is data-independent.
-    names.foreach { name =>
-      try SparkEntry.queries(name)(spark, "/root/testdata/sf0.01").count()
+    entries.foreach { e =>
+      try e.build(spark, "/root/testdata/sf0.01").count()
       catch { case _: Throwable => () }
     }
     // release every persisted frame the warm-up closures pinned
@@ -660,11 +649,11 @@ object Bench {
     // (machine contention during the driver run), and a figure that
     // carries its own noise evidence can be trusted or discounted
     // without a re-run (see BENCH_NOTES.md).
-    val results = names.map { name =>
+    val results = entries.map { case Entry(name, build, _, _) =>
       val times = (1 to 3).map { _ =>
         val t0 = System.nanoTime()
         val ok =
-          try { SparkEntry.queries(name)(spark, sfDir).count(); true }
+          try { build(spark, sfDir).count(); true }
           catch { case e: Throwable =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
         ((System.nanoTime() - t0) / 1e9, ok)

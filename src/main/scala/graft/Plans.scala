@@ -17,28 +17,20 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("plans/r19")
     val suffix = if (args.length > 1) args(1) else "before"
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(',').map(_.trim)
-        .filter(_.nonEmpty).toSet)
-      else None
-    only.foreach { o =>
-      val unknown = o -- SparkEntry.queries.keySet
-      require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
-    }
+    val entries = SparkEntry.select(args.lift(2), SparkEntry.all)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val spark = graft.core.Sessions.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), "graft-plans")
     Files.createDirectories(Paths.get(outDir))
-    val names = SparkEntry.all.map(_._1).filter(n => only.forall(_.contains(n)))
     // suffix "time" switches to a phase-timing probe (construct /
     // plan / first count / second count) instead of writing plan files
     val timeMode = suffix == "time"
-    names.foreach { name =>
+    entries.foreach { case Entry(name, build, _, _) =>
       try {
         if (timeMode) {
           def ms(t0: Long) = (System.nanoTime() - t0) / 1e6
           val t0 = System.nanoTime()
-          val df = SparkEntry.queries(name)(spark, sfDir)
+          val df = build(spark, sfDir)
           val tBuild = ms(t0)
           val t1 = System.nanoTime()
           df.queryExecution.executedPlan
@@ -47,12 +39,12 @@ object Plans {
           df.count()
           val tRun1 = ms(t2)
           val t3 = System.nanoTime()
-          SparkEntry.queries(name)(spark, sfDir).count()
+          build(spark, sfDir).count()
           val tRun2 = ms(t3)
           println(f"[plans] $name%s: build=$tBuild%.0fms plan=$tPlan%.0fms " +
             f"run1=$tRun1%.0fms rebuild+run2=$tRun2%.0fms")
         } else {
-          val df = SparkEntry.queries(name)(spark, sfDir)
+          val df = build(spark, sfDir)
           val txt = df.queryExecution.explainString(
             org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
           Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), txt)

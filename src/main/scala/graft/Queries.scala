@@ -14,10 +14,10 @@ import graft.store.BroadcastBruteForceStore
 
 /** The operator inventory (SURVEY.md §2) as driver-checkable queries.
   *
-  * Each entry is (name, query, Option(oracleSql)): the query runs on Spark
-  * over the /root/testdata scale-factor parquet; the oracle is ANSI SQL the
-  * driver runs in DuckDB over the same files. Column names and row order
-  * are made to match exactly; doubles are rounded; sums of integers are
+  * Each [[Entry]]'s build runs on Spark over the test data's
+  * scale-factor parquet; its oracle is ANSI SQL the correctness check
+  * runs in DuckDB over the same files. Column names and row order are
+  * made to match exactly; doubles are rounded; sums of integers are
   * CAST to BIGINT on the DuckDB side (it widens to HUGEINT); timestamps
   * are reduced to epoch seconds (test parquet is ns-precision, Spark is
   * µs) — see the per-query notes.
@@ -135,9 +135,9 @@ object Queries {
   // they are what BENCH exercises at sf0.1).
   // =====================================================================
 
-  val relational: Seq[(String, Q, Option[String])] = Seq(
+  val relational: Seq[Entry] = Seq(
 
-    ("q01_agg_summary", (s, dir) => {
+    Entry("q01_agg_summary", (s, dir) => {
       // TPC-H Q1 shape: map-side combinable groupBy, 2 shuffle-light aggs.
       T(s, dir, "lineitem")
         .groupBy(col("l_returnflag"), col("l_linestatus"))
@@ -156,7 +156,7 @@ object Queries {
       FROM lineitem GROUP BY l_returnflag, l_linestatus
       ORDER BY l_returnflag, l_linestatus""")),
 
-    ("q02_filter_project", (s, dir) => {
+    Entry("q02_filter_project", (s, dir) => {
       // F1/F2/F3: predicate + projection — both push into the parquet scan.
       T(s, dir, "events")
         .filter(col("event_type") === "purchase" && col("value") > 50.0)
@@ -165,9 +165,9 @@ object Queries {
     }, Some("""
       SELECT event_id, user_id, round(value, 4) AS value
       FROM events WHERE event_type = 'purchase' AND value > 50.0
-      ORDER BY event_id""")),
+      ORDER BY event_id"""), bench = false),
 
-    ("q03_join_broadcast", (s, dir) => {
+    Entry("q03_join_broadcast", (s, dir) => {
       // dim-table join: part is small → explicit broadcast, no shuffle of
       // the fact side.
       T(s, dir, "lineitem")
@@ -181,7 +181,7 @@ object Queries {
       FROM lineitem JOIN part ON l_partkey = p_partkey
       GROUP BY p_brand ORDER BY p_brand""")),
 
-    ("q04_join_multi", (s, dir) => {
+    Entry("q04_join_multi", (s, dir) => {
       // chained dim joins: orders⋈customer shuffles on custkey, nation is
       // broadcast — revenue per nation.
       T(s, dir, "orders")
@@ -197,7 +197,7 @@ object Queries {
                   JOIN nation ON c_nationkey = n_nationkey
       GROUP BY n_name ORDER BY n_name""")),
 
-    ("q05_semi_join", (s, dir) => {
+    Entry("q05_semi_join", (s, dir) => {
       // EXISTS as left_semi — no row multiplication, shuffle on the key.
       val big = T(s, dir, "orders").filter(col("o_totalprice") > 400000.0)
       T(s, dir, "customer")
@@ -210,7 +210,7 @@ object Queries {
                     WHERE o_custkey = c_custkey AND o_totalprice > 400000.0)
       ORDER BY c_custkey""")),
 
-    ("q06_anti_join", (s, dir) => {
+    Entry("q06_anti_join", (s, dir) => {
       // NOT EXISTS as left_anti.
       T(s, dir, "customer")
         .join(T(s, dir, "orders"), col("c_custkey") === col("o_custkey"), "left_anti")
@@ -219,9 +219,9 @@ object Queries {
     }, Some("""
       SELECT c_custkey, c_mktsegment FROM customer
       WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-      ORDER BY c_custkey""")),
+      ORDER BY c_custkey"""), bench = false),
 
-    ("q07_window_topk_group", (s, dir) => {
+    Entry("q07_window_topk_group", (s, dir) => {
       // per-group top-k: partitioned window (scales: hash-partition by
       // custkey, no global sort).
       val w = Window.partitionBy(col("o_custkey"))
@@ -241,7 +241,7 @@ object Queries {
             FROM orders) WHERE rnk <= 3
       ORDER BY o_custkey, rnk""")),
 
-    ("q08_rollup", (s, dir) => {
+    Entry("q08_rollup", (s, dir) => {
       // multi-level aggregates; NULL grouping keys coalesced for parity.
       T(s, dir, "lineitem")
         .rollup(col("l_returnflag"), col("l_linestatus"))
@@ -255,18 +255,18 @@ object Queries {
              coalesce(l_linestatus, 'ALL') AS ls,
              count(*) AS n, round(sum(l_quantity), 2) AS sum_qty
       FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-      ORDER BY rf, ls""")),
+      ORDER BY rf, ls"""), bench = false),
 
-    ("q09_union_distinct", (s, dir) => {
+    Entry("q09_union_distinct", (s, dir) => {
       T(s, dir, "customer").select(col("c_nationkey").as("nationkey"))
         .union(T(s, dir, "supplier").select(col("s_nationkey").as("nationkey")))
         .distinct()
         .orderBy(col("nationkey"))
     }, Some("""
       SELECT c_nationkey AS nationkey FROM customer
-      UNION SELECT s_nationkey FROM supplier ORDER BY nationkey""")),
+      UNION SELECT s_nationkey FROM supplier ORDER BY nationkey"""), bench = false),
 
-    ("q13_asof_join", (s, dir) => {
+    Entry("q13_asof_join", (s, dir) => {
       // as-of join (no Spark built-in; operators.AsOfJoin): each purchase
       // event matched to the user's most recent view at-or-before it.
       // Views deduped to one row per (user, second) so ties are
@@ -297,7 +297,7 @@ object Queries {
         ON p.user_id = v.user_id AND v.ts_sec <= p.ts_sec
       ORDER BY p.event_id""")),
 
-    ("q14_range_join", (s, dir) => {
+    Entry("q14_range_join", (s, dir) => {
       // interval join (operators.RangeJoin): purchase/view pairs by the
       // same user within 15 minutes — bucketed equi-join, not a per-key
       // cartesian. Oracle = the plain inequality join (exact semantics).
@@ -326,7 +326,7 @@ object Queries {
                    AND abs(p.ts_sec - v.ts_sec) <= 900
       ORDER BY purchase_id, view_id""")),
 
-    ("q12_shipping_priority", (s, dir) => {
+    Entry("q12_shipping_priority", (s, dir) => {
       // TPC-H Q3 shape: selective dim filter → two key joins → grouped
       // revenue → global top-10. Date + segment predicates push into the
       // scans; the final top-10 plans TakeOrderedAndProject.
@@ -356,7 +356,7 @@ object Queries {
       GROUP BY l_orderkey, o_orderdate, o_orderpriority
       ORDER BY revenue DESC, l_orderkey ASC LIMIT 10""")),
 
-    ("q11_skew_salted_agg", (s, dir) => {
+    Entry("q11_skew_salted_agg", (s, dir) => {
       // skew-resistant two-phase aggregation: events.event_type has a
       // handful of hot keys; salting spreads each over 16 reducers for
       // the partial phase. Result identical to the direct groupBy.
@@ -367,9 +367,9 @@ object Queries {
         .orderBy(col("event_type"))
     }, Some("""
       SELECT event_type, count(*) AS n, round(sum(value), 2) AS sum_val
-      FROM events GROUP BY event_type ORDER BY event_type""")),
+      FROM events GROUP BY event_type ORDER BY event_type"""), bench = false),
 
-    ("q15_cube", (s, dir) => {
+    Entry("q15_cube", (s, dir) => {
       // full grouping-sets lattice (CUBE) over two keys — the other half
       // of the multi-level aggregate family next to q08's ROLLUP.
       T(s, dir, "orders")
@@ -384,9 +384,9 @@ object Queries {
              coalesce(o_orderpriority, 'ALL') AS priority,
              count(*) AS n, round(sum(o_totalprice), 2) AS sum_price
       FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
-      ORDER BY status, priority""")),
+      ORDER BY status, priority"""), bench = false),
 
-    ("q16_percentiles", (s, dir) => {
+    Entry("q16_percentiles", (s, dir) => {
       // exact interpolated percentiles per group (median + p90) — the
       // sort-based exact form, not a sketch, so both engines agree
       // bit-for-bit after rounding.
@@ -402,9 +402,9 @@ object Queries {
              round(quantile_cont(o_totalprice, 0.5), 2) AS median_price,
              round(quantile_cont(o_totalprice, 0.9), 2) AS p90_price,
              count(*) AS n
-      FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
+      FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority"""), bench = false),
 
-    ("q16_percentiles_approx", (s, dir) => {
+    Entry("q16_percentiles_approx", (s, dir) => {
       // q16's production twin: approx_percentile keeps a bounded-size
       // sketch per group (map-side combinable) where exact `percentile`
       // is a TypedImperativeAggregate buffering EVERY value per group —
@@ -453,7 +453,7 @@ object Queries {
              TRUE AS median_in_band, TRUE AS p90_in_band
       FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
 
-    ("q17_set_ops", (s, dir) => {
+    Entry("q17_set_ops", (s, dir) => {
       // INTERSECT / EXCEPT complete the set-operation family next to
       // q09's UNION; both plan as aggregated joins over the key.
       val custNations = T(s, dir, "customer").select(col("c_nationkey").as("nationkey"))
@@ -470,9 +470,9 @@ object Queries {
       SELECT 'cust_only', nationkey FROM (
         SELECT c_nationkey AS nationkey FROM customer
         EXCEPT SELECT s_nationkey FROM supplier)
-      ORDER BY op, nationkey""")),
+      ORDER BY op, nationkey"""), bench = false),
 
-    ("q10_sessionize", (s, dir) => {
+    Entry("q10_sessionize", (s, dir) => {
       // gap-based sessionization (30 min) via lag + running sum — the
       // batch form of session windows; partitioned by user, no global
       // state. Timestamps reduced to epoch seconds for engine parity.
@@ -507,7 +507,7 @@ object Queries {
       ORDER BY user_id, session_id"""))
     ,
 
-    ("q17_rolling_anomaly", (s, dir) => {
+    Entry("q17_rolling_anomaly", (s, dir) => {
       // per-series rolling statistics + anomaly flag — the telemetry
       // monitoring face of the events stream: trailing-20-row mean and
       // sample stddev of `value` per user (PRECEDING-only frame, so the
@@ -549,7 +549,7 @@ object Queries {
       FROM z WHERE z >= 3.0
       ORDER BY user_id, event_id""")),
 
-    ("q18_resample_ffill", (s, dir) => {
+    Entry("q18_resample_ffill", (s, dir) => {
       // time-series RESAMPLING: each user's event stream downsampled to
       // one-HOUR bins (last value in the bin wins, ties to the larger
       // event_id), missing bins GENERATED (sequence explode bounded by
@@ -598,7 +598,7 @@ object Queries {
                ROWS UNBOUNDED PRECEDING) AS filled
       FROM j ORDER BY user_id, bin""")),
 
-    ("q19_rollup", (s, dir) => {
+    Entry("q19_rollup", (s, dir) => {
       // multi-level aggregation in ONE pass: ROLLUP over
       // (returnflag, linestatus) emits leaf rows, per-flag subtotals
       // and the grand total with a grouping_id disambiguator — the
@@ -628,7 +628,7 @@ object Queries {
       GROUP BY ROLLUP (l_returnflag, l_linestatus)
       ORDER BY gid, l_returnflag, l_linestatus""")),
 
-    ("q20_pivot", (s, dir) => {
+    Entry("q20_pivot", (s, dir) => {
       // PIVOT: order counts per customer-priority row, statuses spread
       // to columns — one groupBy with conditional aggregates after
       // Catalyst lowers the pivot (no join, no second scan); the
@@ -651,7 +651,7 @@ object Queries {
       FROM orders GROUP BY o_orderpriority
       ORDER BY o_orderpriority""")),
 
-    ("q22_grouping_sets", (s, dir) => {
+    Entry("q22_grouping_sets", (s, dir) => {
       // arbitrary GROUPING SETS — the margin combination ROLLUP cannot
       // express: per-flag totals, per-status totals, and the grand
       // total, WITHOUT the leaf rows (one Expand over one scan emits
@@ -678,7 +678,7 @@ object Queries {
       GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
       ORDER BY gid, l_returnflag, l_linestatus""")),
 
-    ("q21_unpivot", (s, dir) => {
+    Entry("q21_unpivot", (s, dir) => {
       // UNPIVOT (melt): the three lineitem measures spread into
       // (measure, value) rows — the wide→long reshape feeding any
       // per-metric aggregation; Catalyst lowers it to one Expand over a
@@ -710,7 +710,7 @@ object Queries {
         SELECT l_orderkey, l_linenumber, 'discount', d FROM base)
       ORDER BY l_orderkey, l_linenumber, measure""")),
 
-    ("q23_scd2_history", (s, dir) => {
+    Entry("q23_scd2_history", (s, dir) => {
       // SCD type-2 history (operators.Scd): per user, consecutive runs
       // of the same event_type collapse into [valid_from, valid_to)
       // validity intervals with a version number — the Kimball
@@ -749,7 +749,7 @@ object Queries {
              n_events, valid_to_us IS NULL AS is_current
       FROM v ORDER BY user_id, version""")),
 
-    ("q10_sessionize_native", (s, dir) => {
+    Entry("q10_sessionize_native", (s, dir) => {
       // the NATIVE merging session_window in batch mode — same operator
       // the streaming face (StreamingOps.sessionizeStream) runs, so its
       // semantics are oracle-pinned here once for both: windows
@@ -796,9 +796,9 @@ object Queries {
   // onto the driver test tables.
   // =====================================================================
 
-  val rag: Seq[(String, Q, Option[String])] = Seq(
+  val rag: Seq[Entry] = Seq(
 
-    ("rag_chunk_explode", (s, dir) => {
+    Entry("rag_chunk_explode", (s, dir) => {
       // J1+M1 oracle form: fixed-stride character chunking (size 200,
       // stride 180 = size - overlap 20), exploded one row per chunk.
       // Pure catalyst sequence/transform/substr → whole-stage codegen.
@@ -816,7 +816,7 @@ object Queries {
       SELECT doc_id, s AS start_pos, substring(text, CAST(s AS INT), 200) AS chunk
       FROM g ORDER BY doc_id, start_pos""")),
 
-    ("rag_splitter_udf", (s, dir) => {
+    Entry("rag_splitter_udf", (s, dir) => {
       // M1 full semantics (separator-aware splitter, reference
       // generate_personalized_commands.sh:322-326) as the native
       // SplitTextGenerator. '###' separators are injected at fixed cuts
@@ -880,7 +880,7 @@ object Queries {
              chunk
       FROM ck ORDER BY doc_id, chunk_idx""")),
 
-    ("rag_embed_mock", (s, dir) => {
+    Entry("rag_embed_mock", (s, dir) => {
       // M2: batched ml_predict embedding (mapPartitions, one provider call
       // per batch) with the deterministic mock. Vector VALUES are
       // engine-specific (seeded hash), so the hashable surface is a
@@ -898,9 +898,9 @@ object Queries {
         .orderBy(col("doc_id"))
     }, Some("""
       SELECT doc_id, TRUE AS dim_ok, TRUE AS norm_ok
-      FROM documents ORDER BY doc_id""")),
+      FROM documents ORDER BY doc_id"""), bench = false),
 
-    ("rag_vector_topk", (s, dir) => {
+    Entry("rag_vector_topk", (s, dir) => {
       // M4/J3: VECTOR_SEARCH k=3 as exact cosine top-k — queries stay
       // partitioned, corpus broadcast, rank via per-query window.
       val emb = T(s, dir, "embeddings")
@@ -923,7 +923,7 @@ object Queries {
       SELECT qid, nid, CAST(rank AS INT) AS rank FROM ranked
       WHERE rank <= 3 ORDER BY qid, rank""")),
 
-    ("rag_vector_topk_indexed", (s, dir) => {
+    Entry("rag_vector_topk_indexed", (s, dir) => {
       // M4/J3 through the PERSISTED index: same retrieval contract as
       // rag_vector_topk (same oracle — a divergence between the indexed
       // and broadcast paths hash-mismatches), but served by the
@@ -962,7 +962,7 @@ object Queries {
       SELECT qid, nid, CAST(rank AS INT) AS rank FROM ranked
       WHERE rank <= 3 ORDER BY qid, rank""")),
 
-    ("rag_vector_topk_sql", (s, dir) => {
+    Entry("rag_vector_topk_sql", (s, dir) => {
       // M4/J3 spelled ENTIRELY in SQL against the same oracle as
       // rag_vector_topk: CREATE VECTOR INDEX builds + registers the
       // persisted IVF-Flat index (GraftSqlParser DDL), then the lateral
@@ -999,9 +999,9 @@ object Queries {
                  ORDER BY sim DESC, nid ASC) AS rank
         FROM sims)
       SELECT qid, nid, CAST(rank AS INT) AS rank FROM ranked
-      WHERE rank <= 3 ORDER BY qid, rank""")),
+      WHERE rank <= 3 ORDER BY qid, rank"""), bench = false),
 
-    ("rag_prompt_assembly", (s, dir) => {
+    Entry("rag_prompt_assembly", (s, dir) => {
       // E1-E5: exactly-3 rag array of named structs (1-based element_at)
       // fed into the reference's CONCAT prompt; docs i, i+1, i+2 stand in
       // for retrieval so the oracle is pure SQL. Rows with <3 following
@@ -1044,9 +1044,9 @@ object Queries {
         substring(t1, 1, 60) || e'\n\n' ||
         'Document 3: ' || source || '/d' || CAST(doc_id + 2 AS VARCHAR) || '.md' || e'\n' ||
         substring(t2, 1, 60) AS prompt
-      FROM d ORDER BY doc_id""")),
+      FROM d ORDER BY doc_id"""), bench = false),
 
-    ("rag_recent_history", (s, dir) => {
+    Entry("rag_recent_history", (s, dir) => {
       // W1+W2+F4: last-6 view. orderBy(desc).limit plans
       // TakeOrderedAndProject (per-partition top-N + 6-row merge), not a
       // global single-partition window — the 100 TB-safe form.
@@ -1063,9 +1063,9 @@ object Queries {
                row_number() OVER (ORDER BY ts DESC, event_id DESC) AS r
         FROM events)
       SELECT event_id, event_type, ts_sec FROM ranked WHERE r <= 6
-      ORDER BY ts_sec ASC, event_id ASC""")),
+      ORDER BY ts_sec ASC, event_id ASC"""), bench = false),
 
-    ("rag_cache_lookup", (s, dir) => {
+    Entry("rag_cache_lookup", (s, dir) => {
       // F5: exact-match cache short-circuit — case-insensitive trimmed
       // equality against a broadcast cache table; misses keep NULL.
       val docs = T(s, dir, "documents")
@@ -1081,9 +1081,9 @@ object Queries {
         (SELECT doc_id AS cache_id, text AS cached_text FROM documents
          WHERE doc_id % 100 = 0) c
         ON lower(trim(d.text)) = lower(trim(c.cached_text))
-      ORDER BY d.doc_id""")),
+      ORDER BY d.doc_id"""), bench = false),
 
-    ("rag_keyword_trigger", (s, dir) => {
+    Entry("rag_keyword_trigger", (s, dir) => {
       // F6: 15-keyword trigger + 4-way rule cascade
       // (pricing > competitor > implementation > generic > NULL).
       // Trigger phrases injected deterministically by doc_id so every
@@ -1118,9 +1118,9 @@ object Queries {
           WHEN msg LIKE '%issue%' OR msg LIKE '%problem%' OR msg LIKE '%concern%'
             OR msg LIKE '%roi%' THEN 'generic'
           ELSE NULL END AS advice_type
-      FROM m ORDER BY doc_id""")),
+      FROM m ORDER BY doc_id"""), bench = false),
 
-    ("rag_json_repair", (s, dir) => {
+    Entry("rag_json_repair", (s, dir) => {
       // E12: LLM-JSON repair chain (strip ```json fences, trailing commas)
       // on synthesized malformed payloads.
       val raw = concat(lit("```json\n"),
@@ -1140,9 +1140,9 @@ object Queries {
                regexp_replace(regexp_replace(r, '```json', '', 'g'),
                               '```', '', 'g'),
                e',[ \n\r\t]*([}\\]])', '\1', 'g'), e' \n\r\t') AS repaired
-      FROM raw ORDER BY doc_id""")),
+      FROM raw ORDER BY doc_id"""), bench = false),
 
-    ("rag_doc_path", (s, dir) => {
+    Entry("rag_doc_path", (s, dir) => {
       // E11: deterministic doc-path split (title = filename, path = dir/)
       // that the reference delegates to the LLM prompt rules.
       val docId = concat(col("source"), lit("/d"), col("doc_id"), lit(".md"))
@@ -1157,9 +1157,9 @@ object Queries {
                  FROM documents)
       SELECT doc_id, regexp_extract(did, '([^/]*)$', 1) AS title,
              regexp_extract(did, '^(.*/)', 1) AS path
-      FROM d ORDER BY doc_id""")),
+      FROM d ORDER BY doc_id"""), bench = false),
 
-    ("rag_dedup_ttl_batch", (s, dir) => {
+    Entry("rag_dedup_ttl_batch", (s, dir) => {
       // T3 batch analog: at-least-once dedup — first delivery per
       // (user_id, event_type) wins; streaming form is
       // dropDuplicatesWithinWatermark (StreamingOps.dedupWithTtl).
@@ -1182,9 +1182,9 @@ object Queries {
                      ORDER BY ts_sec, event_id) AS rn
             FROM e)
       SELECT user_id, event_type, event_id FROM r WHERE rn = 1
-      ORDER BY user_id, event_type""")),
+      ORDER BY user_id, event_type"""), bench = false),
 
-    ("rag_avro_roundtrip", (s, dir) => {
+    Entry("rag_avro_roundtrip", (s, dir) => {
       // S7/S8: the Avro wire codec as a driver-checked query — every row
       // serialized to Schema-Registry-framed Avro bytes (magic + id +
       // binary, kafka_utils.py:283-301) and decoded back; the oracle is
@@ -1200,7 +1200,7 @@ object Queries {
     }, Some("""
       SELECT doc_id, text, lang, source FROM documents ORDER BY doc_id""")),
 
-    ("rag_null_scrub", (s, dir) => {
+    Entry("rag_null_scrub", (s, dir) => {
       // F7: null-scrub — NULL→'' per field, drop rows missing
       // Message/Response (reference api_routes.py:57-78,
       // cache_utils.py:68-75). Nulls synthesized deterministically.
@@ -1226,9 +1226,9 @@ object Queries {
              coalesce(rs, '') AS "Reasoning"
       FROM c
       WHERE trim(coalesce(m, '')) != '' AND trim(coalesce(r, '')) != ''
-      ORDER BY doc_id""")),
+      ORDER BY doc_id"""), bench = false),
 
-    ("rag_keygen", (s, dir) => {
+    Entry("rag_keygen", (s, dir) => {
       // E10: UUID-shaped record keys (kafka_utils.py:323). Production
       // producers use uuid() (random — see TopicParityPipeline); the
       // driver-checked form derives the key deterministically from row
@@ -1246,9 +1246,9 @@ object Queries {
                || '-' || substring(md5(text), 13, 4) || '-'
                || substring(md5(text), 17, 4) || '-'
                || substring(md5(text), 21, 12) AS record_key
-      FROM documents ORDER BY doc_id""")),
+      FROM documents ORDER BY doc_id"""), bench = false),
 
-    ("rag_time_format", (s, dir) => {
+    Entry("rag_time_format", (s, dir) => {
       // E14: HH:mm rendering of event times (script.js:1266-1269) — the
       // serving-layer timestamp format as an engine column (UTC session).
       val raw = T(s, dir, "events")
@@ -1257,9 +1257,9 @@ object Queries {
         .orderBy(col("event_id"))
     }, Some("""
       SELECT event_id, strftime(ts, '%H:%M') AS hhmm
-      FROM events ORDER BY event_id""")),
+      FROM events ORDER BY event_id"""), bench = false),
 
-    ("rag_used_excerpts", (s, dir) => {
+    Entry("rag_used_excerpts", (s, dir) => {
       // E13: join non-empty used_excerpts with blank lines
       // (script.js:970-971); empty and NULL entries synthesized.
       val sources = array(
@@ -1282,9 +1282,9 @@ object Queries {
              array_to_string(
                list_filter([e1, e2, e3], x -> x IS NOT NULL AND x != ''),
                e'\n\n') AS excerpts
-      FROM e ORDER BY doc_id""")),
+      FROM e ORDER BY doc_id"""), bench = false),
 
-    ("rag_grounding_score", (s, dir) => {
+    Entry("rag_grounding_score", (s, dir) => {
       // RAG answer grounding: fraction of the response's distinct
       // tokens attributable to the cited excerpts — the in-engine
       // hallucination gate (the eval-side complement of
@@ -1317,7 +1317,7 @@ object Queries {
                        CAST(len(r) AS DOUBLE) END AS grounding
       FROM tok ORDER BY doc_id""")),
 
-    ("rag_shuffle_pick3", (s, dir) => {
+    Entry("rag_shuffle_pick3", (s, dir) => {
       // W5: suggested-question shuffle + take 3 (script.js:426-428).
       // The PICKED SET is engine-specific (seeded rand), but its
       // properties are not: exactly 3 picks, each a genuine corpus row.
@@ -1338,9 +1338,9 @@ object Queries {
         .orderBy(col("pick_rank"))
     }, Some("""
       SELECT CAST(generate_series AS INT) AS pick_rank, TRUE AS from_corpus
-      FROM generate_series(1, 3) ORDER BY pick_rank""")),
+      FROM generate_series(1, 3) ORDER BY pick_rank"""), bench = false),
 
-    ("rag_cache_crud", (s, dir) => {
+    Entry("rag_cache_crud", (s, dir) => {
       // S10: the full CSV-cache CRUD cycle against a real csv directory —
       // seed rows, append a second batch, delete one by message key,
       // read back sanitized (cache_utils.py:32-191).
@@ -1373,9 +1373,9 @@ object Queries {
         FROM documents WHERE doc_id % 70 = 0)
       SELECT m AS "Message", r AS "Response", rs AS "Reasoning",
              ue AS "Used Excerpts", src AS "RAG sources"
-      FROM base ORDER BY m""")),
+      FROM base ORDER BY m"""), bench = false),
 
-    ("rag_coach_e2e", (s, dir) => {
+    Entry("rag_coach_e2e", (s, dir) => {
       // §3.1 flagship path end-to-end with deterministic mocks: knowledge
       // (from documents + the reference's own smoke fixture) → chunk →
       // embed → index → filter prospect → embed → top-3 search → reshape
@@ -1399,7 +1399,7 @@ object Queries {
         ('I am interested in your product but I am concerned about the pricing.',
          TRUE, TRUE, TRUE, TRUE))
         AS t(message, has_response, sources_ok, reasoning_ok, contract_json)
-      ORDER BY message"""))
+      ORDER BY message"""), bench = false)
   )
 
   /** Shared by entry() and the rag_coach_e2e query. */

@@ -23,7 +23,6 @@ import graft.operators.CrawlFrontier.Revisit
   * oracle-proven in text_url_normalize/crawl_frontier_seed.
   */
 object QueriesCrawl {
-  import Queries.Q
 
   private def T(s: SparkSession, dir: String, n: String): DataFrame =
     Tables.load(s, dir, n)
@@ -49,9 +48,9 @@ object QueriesCrawl {
        |     ELSE host END""".stripMargin
   }
 
-  val crawl: Seq[(String, Q, Option[String])] = Seq(
+  val crawl: Seq[Entry] = Seq(
 
-    ("crawl_sitemap_parse", (s, dir) => {
+    Entry("crawl_sitemap_parse", (s, dir) => {
       // sitemaps.org urlset parsing — the crawl-seed channel: per-doc
       // XML with entity-escaped locs, mixed-case changefreq, absent
       // optional tags, out-of-range priorities, and a loc-less entry
@@ -150,7 +149,7 @@ object QueriesCrawl {
              CAST(interval_s AS BIGINT) AS interval_s, priority_val
       FROM kept ORDER BY doc_id, entry_idx""")),
 
-    ("crawl_sitemap_gz", (s, dir) => {
+    Entry("crawl_sitemap_gz", (s, dir) => {
       // REAL-WIRE sitemap feeds: namespace-prefixed tags (`<sm:url>`,
       // the common generator output) and gzip payloads (`.xml.gz`,
       // the protocol-blessed wire format) — even docs are prefixed
@@ -239,7 +238,7 @@ object QueriesCrawl {
                   ELSE CAST(NULL AS DOUBLE) END AS priority_val
       FROM e ORDER BY doc_id, entry_idx""")),
 
-    ("crawl_frontier_seed", (s, dir) => {
+    Entry("crawl_frontier_seed", (s, dir) => {
       // frontier seeding — canonicalize, drop non-fetchable schemes,
       // collapse spelling variants of one page BEFORE the crawl ever
       // fetches it twice: consecutive doc pairs spell the same URL two
@@ -342,7 +341,7 @@ object QueriesCrawl {
              CAST(last_modified AS BIGINT) AS last_modified
       FROM g ORDER BY url""")),
 
-    ("crawl_select_batch", (s, dir) => {
+    Entry("crawl_select_batch", (s, dir) => {
       // politeness-bounded batch selection — due active rows, at most
       // 2 per host (one slow origin must not monopolize a cycle), then
       // the global best 25 by priority. Plan: ONE host-keyed window
@@ -407,7 +406,7 @@ object QueriesCrawl {
       FROM ranked WHERE hr <= 2
       ORDER BY priority DESC, url LIMIT 25""")),
 
-    ("crawl_recrawl", (s, dir) => {
+    Entry("crawl_recrawl", (s, dir) => {
       // adaptive revisit (Cho & Garcia-Molina-style multiplicative
       // adaptation, clamped): a changed page halves its interval, an
       // unchanged one doubles, transient failures back off and three
@@ -549,7 +548,7 @@ object QueriesCrawl {
              ELSE last_modified END AS last_modified
       FROM iv ORDER BY url""")),
 
-    ("crawl_admit", (s, dir) => {
+    Entry("crawl_admit", (s, dir) => {
       // discovery admission — canonicalize, min-depth collapse, depth
       // bound, drop everything already known (anti join), and enforce
       // the per-registered-domain budget COUNTING existing rows: the
@@ -637,7 +636,7 @@ object QueriesCrawl {
              CAST(NULL AS BIGINT) AS last_modified
       FROM kept ORDER BY url""")),
 
-    ("crawl_admit_robots", (s, dir) => {
+    Entry("crawl_admit_robots", (s, dir) => {
       // the RFC 9309 compliance gate at ADMISSION (gateRobots →
       // admit): a disallowed URL is never admitted, never consumes
       // the per-domain budget, and is never scheduled or fetched —
@@ -757,7 +756,7 @@ object QueriesCrawl {
              CAST(NULL AS BIGINT) AS last_modified
       FROM kept ORDER BY url""")),
 
-    ("crawl_fetch_requests", (s, dir) => {
+    Entry("crawl_fetch_requests", (s, dir) => {
       // the conditional-request face: a due wave rendered as what the
       // fetcher SENDS — If-None-Match echoes the stored ETag verbatim
       // (RFC 9110 §13.1.2), If-Modified-Since renders last_modified
@@ -813,7 +812,7 @@ object QueriesCrawl {
                   ELSE NULL END AS if_modified_since
       FROM batch ORDER BY url""")),
 
-    ("crawl_retry_after", (s, dir) => {
+    Entry("crawl_retry_after", (s, dir) => {
       // Retry-After politeness (RFC 9110 §10.2.3): a 429/503 host
       // DECLARING its backoff is believed when it asks for MORE than
       // the law's own doubled interval — the declaration only ever
@@ -954,7 +953,7 @@ object QueriesCrawl {
         CAST(NULL AS BIGINT) AS last_modified
       FROM w ORDER BY url""")),
 
-    ("crawl_reseed", (s, dir) => {
+    Entry("crawl_reseed", (s, dir) => {
       // re-announced seed waves (a nightly sitemap re-read) merge
       // changed-rows-only: a known ACTIVE row pulls due-now ONLY when
       // the seed's <lastmod> claims a change SINCE our last fetch and
@@ -1047,7 +1046,7 @@ object QueriesCrawl {
                   ELSE seed_lm END AS last_modified
       FROM j ORDER BY url""")),
 
-    ("crawl_robots_lifecycle", (s, dir) => {
+    Entry("crawl_robots_lifecycle", (s, dir) => {
       // the robots.txt LIFECYCLE's status law (RFC 9309 §2.3.1):
       // robots fetch results → per-host rules via rulesFromFetch —
       // 200 with rules parses ('rules'), 200 with only an empty
@@ -1114,7 +1113,7 @@ object QueriesCrawl {
              CAST(1754000000 AS BIGINT) AS fetched_at
       FROM v WHERE allowed ORDER BY url""")),
 
-    ("crawl_sitemap_fold", (s, dir) => {
+    Entry("crawl_sitemap_fold", (s, dir) => {
       // the sitemap lifecycle's BODY half: one cycle's parsed feed
       // entries fold into the frontier — a known row pulls due ONLY
       // when the announced <lastmod> claims a change since our last
@@ -1195,7 +1194,7 @@ object QueriesCrawl {
       FROM new_rows
       ORDER BY url""")),
 
-    ("crawl_sitemap_index", (s, dir) => {
+    Entry("crawl_sitemap_index", (s, dir) => {
       // the sitemap BODY dispatch at the top of a real feed tree: big
       // publishers serve a <sitemapindex>, not a urlset — index
       // bodies seed their CHILD feeds as new sitemap rows (priority
@@ -1255,7 +1254,7 @@ object QueriesCrawl {
       FROM base WHERE doc_id % 2 = 0
       ORDER BY url""")),
 
-    ("crawl_polite_waves", (s, dir) => {
+    Entry("crawl_polite_waves", (s, dir) => {
       // per-host politeness ACROSS waves: a 60-second cycle against a
       // 600-second budget window must not re-grant the declared
       // budget every wave. Wave 1 spends against the full caps; the
@@ -1346,7 +1345,7 @@ object QueriesCrawl {
       SELECT CAST(2 AS INT) AS wave, url, host, priority FROM w2
       ORDER BY wave, url""")),
 
-    ("crawl_compact", (s, dir) => {
+    Entry("crawl_compact", (s, dir) => {
       // frontier GC: dead rows past the retention horizon retire
       // (admit re-learns a re-linked URL with a fresh budget — one
       // re-probe per horizon beats carrying the corpse in every
@@ -1403,7 +1402,7 @@ object QueriesCrawl {
         FROM f)
       SELECT url, state, verdict FROM v ORDER BY url""")),
 
-    ("crawl_archive_plan", (s, dir) => {
+    Entry("crawl_archive_plan", (s, dir) => {
       // the archive write decision off one cycle's results: 2xx with
       // a NEW hash (or a first capture) → store the body
       // ('response'); a 2xx whose hash matches the held capture →
@@ -1467,7 +1466,7 @@ object QueriesCrawl {
       FROM base WHERE m IN (0, 1, 2, 6)
       ORDER BY url""")),
 
-    ("crawl_redirects", (s, dir) => {
+    Entry("crawl_redirects", (s, dir) => {
       // the 3xx regime of the revisit law (RFC 9110 §15.4): a
       // permanent redirect (301/308 with Location) RETIRES the source
       // row as 'redirected' — a healthy answer, never a failure, so
@@ -1623,7 +1622,7 @@ object QueriesCrawl {
       UNION ALL SELECT * FROM admitted
       ORDER BY url""")),
 
-    ("crawl_redirect_e2e", (s, dir) => {
+    Entry("crawl_redirect_e2e", (s, dir) => {
       // the 301 law COMPOSED across two waves: wave 1's permanent
       // redirect retires the source and mints the target's row due
       // immediately; wave 2's scheduling pass picks EXACTLY those
@@ -1710,7 +1709,7 @@ object QueriesCrawl {
       UNION ALL SELECT * FROM redirected
       ORDER BY url""")),
 
-    ("crawl_e2e", (s, dir) => {
+    Entry("crawl_e2e", (s, dir) => {
       // the composed cycle: seed → politeness-bounded selection →
       // (deterministic fake fetch: trailing digit picks the outcome) →
       // revisit updates (inner face: exactly the upsert batch) →
@@ -1851,7 +1850,7 @@ object QueriesCrawl {
       SELECT * FROM admitted
       ORDER BY url""")),
 
-    ("crawl_conditional_e2e", (s, dir) => {
+    Entry("crawl_conditional_e2e", (s, dir) => {
       // the conditional-revisit loop COMPOSED across two fetch waves:
       // wave 1 is unconditional (every page 200s with a body hash,
       // an ETag and a Last-Modified — the validators land in the
@@ -1969,7 +1968,7 @@ object QueriesCrawl {
           AS last_modified
       FROM iv ORDER BY url""")),
 
-    ("crawl_polite_batch", (s, dir) => {
+    Entry("crawl_polite_batch", (s, dir) => {
       // Crawl-delay politeness — robots' de-facto rate directive
       // becomes per-host batch budgets: parse per-host Crawl-delay
       // with the RFC group-selection law (exact agent group wins even
@@ -2111,7 +2110,7 @@ object QueriesCrawl {
         WHERE r.hr <= least(8, coalesce(b.cap, 8)))
       SELECT * FROM capped ORDER BY priority DESC, url LIMIT 30""")),
 
-    ("crawl_discovery_e2e", (s, dir) => {
+    Entry("crawl_discovery_e2e", (s, dir) => {
       // the full DISCOVERY chain in one row: robots.txt → Sitemap:
       // directives (group-independent, even before the first UA
       // group, case-insensitive) → fetch the sitemaps (synthesized

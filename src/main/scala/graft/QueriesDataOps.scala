@@ -13,7 +13,6 @@ import graft.operators.{Dedup, HeavyHitters, Multimodal, Pca, SimilaritySearch}
   * queries with DuckDB oracles. See Queries.scala for conventions.
   */
 object QueriesDataOps {
-  import Queries.Q
 
   private def T(s: SparkSession, dir: String, n: String): DataFrame =
     Tables.load(s, dir, n)
@@ -212,9 +211,9 @@ object QueriesDataOps {
                 JOIN counts ca ON ca.doc_id = id_a
                 JOIN counts cb ON cb.doc_id = id_b)"""
 
-  val dedup: Seq[(String, Q, Option[String])] = Seq(
+  val dedup: Seq[Entry] = Seq(
 
-    ("dedup_clusters", (s, dir) => {
+    Entry("dedup_clusters", (s, dir) => {
       // pairs → CLUSTERS: connected components over the minhash LSH
       // candidate pairs via iterative min-label propagation; component
       // label = min member id, so keep-one-per-cluster is id == comp.
@@ -224,7 +223,7 @@ object QueriesDataOps {
         .orderBy(col("id"))
     }, Some(clustersOracleSql)),
 
-    ("dedup_clusters_altstar", (s, dir) => {
+    Entry("dedup_clusters_altstar", (s, dir) => {
       // same pairs → clusters contract on the ALTERNATING LARGE-STAR/
       // SMALL-STAR algorithm (SoCC'14): O(log n) rounds instead of
       // O(diameter) — the scale path when duplicate chains are long.
@@ -236,7 +235,7 @@ object QueriesDataOps {
         .orderBy(col("id"))
     }, Some(clustersOracleSql)),
 
-    ("dedup_cluster_best", (s, dir) => {
+    Entry("dedup_cluster_best", (s, dir) => {
       // clusters → the production KEEP decision: highest-quality member
       // of each duplicate cluster survives (not min-id, which can keep a
       // mangled variant over the clean original); singletons keep
@@ -269,7 +268,7 @@ object QueriesDataOps {
       FROM ranked WHERE rn = 1 ORDER BY comp"""
     }),
 
-    ("dedup_cluster_best_capped", (s, dir) => {
+    Entry("dedup_cluster_best_capped", (s, dir) => {
       // the cluster-best KEEP decision over CAPPED pairs — the pair
       // stage runs with the hot-bucket guard (buckets > 3 docs drop
       // before expansion), so the 100 TB entry point composes the same
@@ -300,7 +299,7 @@ object QueriesDataOps {
       FROM ranked WHERE rn = 1 ORDER BY comp"""
     }),
 
-    ("dedup_exact", (s, dir) => {
+    Entry("dedup_exact", (s, dir) => {
       // hash-groupBy exact dedup: one shuffle on md5 (unskewed by
       // construction), map-side combinable.
       Dedup.exactGroups(docsWithDups(s, dir), "text", "doc_id")
@@ -311,7 +310,7 @@ object QueriesDataOps {
              min(doc_id) AS keep_id
       FROM dwd GROUP BY md5(text) ORDER BY content_hash""")),
 
-    ("dedup_fingerprint", (s, dir) => {
+    Entry("dedup_fingerprint", (s, dir) => {
       // canonicalized (lower, strip punct, collapse ws) md5 — catches the
       // formatting-mangled variants exact md5 misses.
       Dedup.fingerprintGroups(docsWithDups(s, dir), "text", "doc_id")
@@ -323,7 +322,7 @@ object QueriesDataOps {
              count(*) AS n_dups, min(doc_id) AS keep_id
       FROM dwd GROUP BY 1 ORDER BY fingerprint""")),
 
-    ("dedup_minhash_lsh", (s, dir) => {
+    Entry("dedup_minhash_lsh", (s, dir) => {
       // MinHash+LSH candidate pairs: 3-gram word shingles, 4 bands × 3
       // rows. Sub-quadratic: explode band keys, equi-join on band key.
       // MinHash = lexicographic min of md5(seed:shingle) — md5 hex is
@@ -335,7 +334,7 @@ object QueriesDataOps {
       WITH $minhashCandSql
       SELECT id_a, id_b FROM cand ORDER BY id_a, id_b""")),
 
-    ("dedup_lsh_verified", (s, dir) => {
+    Entry("dedup_lsh_verified", (s, dir) => {
       // the composed production plan: LSH candidates → exact Jaccard on
       // candidates only (never all pairs) — Dedup.minhashLshVerified.
       Dedup.minhashLshVerified(docsWithDups(s, dir), "text", "doc_id",
@@ -348,7 +347,7 @@ object QueriesDataOps {
       FROM jac WHERE jaccard >= 0.6
       ORDER BY id_a, id_b""")),
 
-    ("dedup_lsh_verified_capped", (s, dir) => {
+    Entry("dedup_lsh_verified_capped", (s, dir) => {
       // the CAPPED production shape of the within-frame composed plan:
       // band buckets hotter than 3 docs drop before pair expansion
       // (the r13 cross-frame probe measured exponent 1.38 uncapped on
@@ -366,7 +365,7 @@ object QueriesDataOps {
       FROM jac WHERE jaccard >= 0.6
       ORDER BY id_a, id_b""")),
 
-    ("dedup_incremental", (s, dir) => {
+    Entry("dedup_incremental", (s, dir) => {
       // incremental ingestion dedup: a new batch is cleaned against the
       // ALREADY-INDEXED corpus (docs < 250 stand in for the historical
       // hash index) — in-batch exact dedup (min id wins) then an ANTI
@@ -381,7 +380,7 @@ object QueriesDataOps {
         .orderBy(col("doc_id"))
     }, Some(incrementalOracleSql)),
 
-    ("dedup_incremental_fuzzy", (s, dir) => {
+    Entry("dedup_incremental_fuzzy", (s, dir) => {
       // NEAR-dup incremental gate: batch (>= 250) cleaned against the
       // indexed corpus (< 250) by LSH band join + exact-Jaccard verify
       // on candidates only — catches the truncated/reformatted copies
@@ -406,7 +405,7 @@ object QueriesDataOps {
       WHERE doc_id >= 250 AND doc_id NOT IN (SELECT id_a FROM dup)
       ORDER BY doc_id""")),
 
-    ("dedup_incremental_fuzzy_capped", (s, dir) => {
+    Entry("dedup_incremental_fuzzy_capped", (s, dir) => {
       // the CAPPED production shape of the incremental fuzzy gate: band
       // keys hot on either side (> 3 members here) drop before the
       // cross-frame join — the hot-bucket skew guard the r13 scale
@@ -440,7 +439,7 @@ object QueriesDataOps {
       WHERE doc_id >= 250 AND doc_id NOT IN (SELECT id_a FROM dup)
       ORDER BY doc_id""")),
 
-    ("dedup_incremental_bloom", (s, dir) => {
+    Entry("dedup_incremental_bloom", (s, dir) => {
       // the 100 TB form of the same contract: the index hashes are
       // SHARDED by hash prefix into 8 Bloom filters (a single filter at
       // SURVEY §2.11's 10¹¹-hash sizing is ~120 GB — unbroadcastable);
@@ -460,7 +459,7 @@ object QueriesDataOps {
         .orderBy(col("doc_id"))
     }, Some(incrementalOracleSql)),
 
-    ("dedup_simhash", (s, dir) => {
+    Entry("dedup_simhash", (s, dir) => {
       // SimHash bucket dedup: 12-bit signature from per-token md5 nibble
       // votes; near-dups collide on the signature. Per-row map + one
       // groupBy — linear, no pair explosion.
@@ -484,7 +483,7 @@ object QueriesDataOps {
       SELECT simhash, count(*) AS n_docs, min(doc_id) AS keep_id
       FROM sig GROUP BY simhash ORDER BY simhash""")),
 
-    ("dedup_simhash_hamming", (s, dir) => {
+    Entry("dedup_simhash_hamming", (s, dir) => {
       // Hamming-≤1 simhash pairs via masked-signature bucketing — a
       // masked-key collision proves the distance bound, no verify pass.
       Dedup.simhashNearDupPairs(docsWithDups(s, dir), "text", "doc_id",
@@ -516,7 +515,7 @@ object QueriesDataOps {
       FROM keys a JOIN keys b ON a.mkey = b.mkey AND a.doc_id < b.doc_id
       ORDER BY id_a, id_b""")),
 
-    ("dedup_ngram_jaccard", (s, dir) => {
+    Entry("dedup_ngram_jaccard", (s, dir) => {
       // exact 3-gram Jaccard >= 0.6 within source blocks: shingle
       // equi-join for |A∩B|, per-doc counts for |A∪B|. Blocking bounds
       // the pair space; at scale this verifies LSH candidates instead of
@@ -546,7 +545,7 @@ object QueriesDataOps {
       WHERE n_inter * 1.0 / (ca.n_sh + cb.n_sh - n_inter) >= 0.6
       ORDER BY id_a, id_b""")),
 
-    ("dedup_fuzzy_linkage", (s, dir) => {
+    Entry("dedup_fuzzy_linkage", (s, dir) => {
       // fuzzy record linkage (Dedup.fuzzyLinkage): prefix-blocked
       // candidate pairs gated by EXACT Levenshtein distance over a
       // 48-char window — the order-sensitive edit-distance family
@@ -572,7 +571,7 @@ object QueriesDataOps {
       SELECT id_a, id_b, CAST(dist AS INT) AS dist FROM p
       WHERE dist <= 12 ORDER BY id_a, id_b""")),
 
-    ("dedup_segments", (s, dir) => {
+    Entry("dedup_segments", (s, dir) => {
       // sub-document dedup (the CCNet/Common Crawl duplicated-lines
       // pass): 8-token grid segments appearing in >= 2 DISTINCT docs —
       // whole-doc dedup misses boilerplate blocks shared across
@@ -596,7 +595,7 @@ object QueriesDataOps {
       FROM segs s JOIN hot h USING (seg_hash)
       ORDER BY doc_id, seg_idx, seg_hash""")),
 
-    ("dedup_embedding_lsh", (s, dir) => {
+    Entry("dedup_embedding_lsh", (s, dir) => {
       // the scale path for embedding near-dup: SRP signature bucketing
       // (one equi-join) + exact cosine verification, no label blocking.
       val emb = T(s, dir, "embeddings")
@@ -623,7 +622,7 @@ object QueriesDataOps {
       SELECT id_a, id_b FROM cand WHERE sim >= 0.35
       ORDER BY id_a, id_b""")),
 
-    ("dedup_embedding", (s, dir) => {
+    Entry("dedup_embedding", (s, dir) => {
       // embedding near-dup pairs: cosine >= 0.35 within label blocks.
       Dedup.embeddingNearDupPairs(T(s, dir, "embeddings"), "vec_id",
           "embedding", "label", threshold = 0.35)
@@ -634,9 +633,9 @@ object QueriesDataOps {
         ON a.label = b.label AND a.vec_id < b.vec_id
       WHERE list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[])
               >= 0.35
-      ORDER BY id_a, id_b""")),
+      ORDER BY id_a, id_b"""), bench = false),
 
-    ("dedup_semantic", (s, dir) => {
+    Entry("dedup_semantic", (s, dir) => {
       // SemDeDup: k-means cells (the seeded-centroid convention of the
       // IVF rows — vec_id < 4) bound the pair space, within-cell cosine
       // >= 0.35 prunes to the lowest-id representative. One row per
@@ -670,7 +669,7 @@ object QueriesDataOps {
       FROM assigned a LEFT JOIN dups d ON d.vec_id = a.vec_id
       ORDER BY id""")),
 
-    ("dedup_span_detect", (s, dir) => {
+    Entry("dedup_span_detect", (s, dir) => {
       // exact-substring duplicate SPANS (Lee et al. 2022,
       // arXiv:2107.06499 — suffix-array substring dedup re-expressed as
       // the shuffle-friendly k-gram equivalent): maximal per-doc token
@@ -706,7 +705,7 @@ object QueriesDataOps {
       FROM isl GROUP BY doc_id, island
       ORDER BY id, span_start""")),
 
-    ("dedup_span_removal", (s, dir) => {
+    Entry("dedup_span_removal", (s, dir) => {
       // the removal half of Lee et al. 2022: every token covered by a
       // NON-canonical duplicated-8-gram occurrence is dropped (canonical
       // = global min (id, pos) per gram — a skew-safe aggregate, so one
@@ -849,9 +848,9 @@ object QueriesDataOps {
         FROM feats)"""
   }
 
-  val curation: Seq[(String, Q, Option[String])] = Seq(
+  val curation: Seq[Entry] = Seq(
 
-    ("curate_web_e2e", (s, dir) => {
+    Entry("curate_web_e2e", (s, dir) => {
       // the COMPOSED crawl-ingest front half, hash-checked end to end:
       // pages (deterministic url + HTML around each document's text)
       // → WARC gzip shards → parse back (the real ingest hop: one gzip
@@ -961,7 +960,7 @@ object QueriesDataOps {
              md5(clean) AS clean_md5
       FROM r WHERE rn <= 30 ORDER BY target_uri""")),
 
-    ("web_robots", (s, dir) => {
+    Entry("web_robots", (s, dir) => {
       // robots.txt compliance — the crawl-ethics gate (RFC 9309):
       // parse per-domain robots text into rule groups (consecutive
       // User-agent lines share a group, comments/blank/empty-value
@@ -1113,7 +1112,7 @@ object QueriesDataOps {
              (rule IS NULL OR rule = 'allow') AS allowed
       FROM win WHERE rn = 1 ORDER BY doc_id""")),
 
-    ("web_outlinks", (s, dir) => {
+    Entry("web_outlinks", (s, dir) => {
       // outlink extraction + resolution — the link-graph builder: href
       // targets of <a> anchors resolved against the page's own URL
       // (absolute pass through, protocol-relative take the scheme,
@@ -1191,7 +1190,7 @@ object QueriesDataOps {
       SELECT doc_id, CAST(link_idx AS INT) AS link_idx, link
       FROM k ORDER BY doc_id, link_idx""")),
 
-    ("web_anchor_text", (s, dir) => {
+    Entry("web_anchor_text", (s, dir) => {
       // inlink anchor-text aggregation — anchor text describes the
       // TARGET page better than the target's own boilerplate (the
       // classic ranking feature, and a retrieval-training pair
@@ -1248,7 +1247,7 @@ object QueriesDataOps {
                AS anchors
       FROM pairs GROUP BY target ORDER BY target""")),
 
-    ("web_pagerank", (s, dir) => {
+    Entry("web_pagerank", (s, dir) => {
       // PageRank over a deterministic synthetic link graph (3 pseudo-
       // random outlinks per node, every 7th node dangling): 3 power
       // iterations at d = 0.85 with the standard uniform dangling-mass
@@ -1295,7 +1294,7 @@ object QueriesDataOps {
       FROM nodes JOIN r3 ON r3.id = nodes.id
       ORDER BY nodes.id""")),
 
-    ("web_hits", (s, dir) => {
+    Entry("web_hits", (s, dir) => {
       // HITS hubs & authorities (Kleinberg 1999) over the same
       // synthetic graph as web_pagerank: 2 iterations of a ← Aᵀh,
       // h ← Aa with L2 normalization per half-step (one driver scalar
@@ -1335,7 +1334,7 @@ object QueriesDataOps {
       FROM h2 JOIN a2 ON a2.id = h2.id
       ORDER BY h2.id""")),
 
-    ("curate_prep_e2e", (s, dir) => {
+    Entry("curate_prep_e2e", (s, dir) => {
       // the COMPOSED ingest-prep path, hash-checked end to end:
       // Unicode-hygiene normalize (NFC + control strip + whitespace
       // collapse; combining marks/controls injected by the
@@ -1397,7 +1396,7 @@ object QueriesDataOps {
                AS n_chunks
       FROM kept ORDER BY doc_id""")),
 
-    ("curate_corpus", (s, dir) => {
+    Entry("curate_corpus", (s, dir) => {
       // the composed training-data flow: exact dedup → language
       // allowlist → quality floor → token band, every surviving row
       // annotated with its verdict (pipeline.CurationPipeline).
@@ -1408,7 +1407,7 @@ object QueriesDataOps {
       $curationVerdictSql
       SELECT doc_id, verdict FROM v ORDER BY doc_id""")),
 
-    ("curate_decontaminate", (s, dir) => {
+    Entry("curate_decontaminate", (s, dir) => {
       // train/eval-overlap gate: docs < 20 stand in for the benchmark
       // set; candidates sharing any 5-gram word shingle are flagged.
       val docs = T(s, dir, "documents")
@@ -1428,7 +1427,7 @@ object QueriesDataOps {
       SELECT DISTINCT s.doc_id FROM sh s JOIN bench USING (sh)
       WHERE s.doc_id >= 20 ORDER BY doc_id""")),
 
-    ("curate_decontaminate_fuzzy", (s, dir) => {
+    Entry("curate_decontaminate_fuzzy", (s, dir) => {
       // fuzzy train/eval-overlap gate: winnowing-fingerprint CONTAINMENT
       // against the benchmark set (docs < 20, as curate_decontaminate)
       // catches lightly edited eval copies the exact-shingle gate misses.
@@ -1453,7 +1452,7 @@ object QueriesDataOps {
              round(n_hits * 1.0 / n_fps, 6) >= 0.8 AS flagged
       FROM sc ORDER BY doc_id""")),
 
-    ("curate_contamination_report", (s, dir) => {
+    Entry("curate_contamination_report", (s, dir) => {
       // provenance for the fuzzy gate: per overlapping candidate, the
       // benchmark doc explaining most of the shared fingerprints
       // (ties to the smaller bench id) — "which eval set leaked here".
@@ -1478,7 +1477,7 @@ object QueriesDataOps {
       SELECT doc_id, bench_id, n_shared FROM r WHERE rn = 1
       ORDER BY doc_id""")),
 
-    ("curate_boilerplate", (s, dir) => {
+    Entry("curate_boilerplate", (s, dir) => {
       // site-boilerplate removal: the corpus has no line structure, so
       // wrap every 8 words into a line (deterministic, mirrored in the
       // oracle), then strip lines whose normalized form appears in >= 3
@@ -1511,7 +1510,7 @@ object QueriesDataOps {
       FROM ln LEFT JOIN hot h ON h.source = ln.source AND h.nrm = ln.nrm
       GROUP BY ln.doc_id ORDER BY ln.doc_id""")),
 
-    ("curate_sample", (s, dir) => {
+    Entry("curate_sample", (s, dir) => {
       // deterministic stratified sampling (data mixing): per-source keep
       // fractions decided by md5(id) against a hex threshold — same rows
       // kept on every run/engine/partitioning, so the oracle is exact.
@@ -1532,7 +1531,7 @@ object QueriesDataOps {
           ELSE '00000000000000000000000000000000' END
       ORDER BY doc_id""")),
 
-    ("curate_sample_k", (s, dir) => {
+    Entry("curate_sample_k", (s, dir) => {
       // EXACT-k per-stratum sample: the fixed-size eval-subset draw a
       // fraction sampler cannot give — exactly min(k, |stratum|) rows
       // per source, chosen by md5(id) order (deterministic across
@@ -1549,7 +1548,7 @@ object QueriesDataOps {
         FROM documents)
       WHERE rn <= 5 ORDER BY doc_id""")),
 
-    ("curate_best_per_source", (s, dir) => {
+    Entry("curate_best_per_source", (s, dir) => {
       // per-domain selection: top-5 documents by quality within each
       // source — hash-partitioned window on the group key (the q07
       // shape applied to curation); quality rounded before ranking so
@@ -1575,9 +1574,9 @@ object QueriesDataOps {
         FROM sc)
       SELECT source, CAST(rank AS INT) AS rank, doc_id, q AS quality
       FROM ranked WHERE rank <= 5 ORDER BY source, rank"""
-    }),
+    }, bench = false),
 
-    ("curate_weighted_sample", (s, dir) => {
+    Entry("curate_weighted_sample", (s, dir) => {
       // weight-proportional subset draw (Efraimidis–Spirakis A-ES):
       // k=100 docs with inclusion probability ∝ length(text)+1 — the
       // length-weighted draw a uniform sampler cannot give (token-
@@ -1608,7 +1607,7 @@ object QueriesDataOps {
              doc_id, CAST(w AS BIGINT) AS w
       FROM s ORDER BY rank""")),
 
-    ("curate_quality_deciles", (s, dir) => {
+    Entry("curate_quality_deciles", (s, dir) => {
       // curriculum/difficulty bucketing: per-SOURCE quality deciles via
       // ntile(10) — the "train on easy first / mix by difficulty band"
       // assignment, WITHOUT a global sort (the window partitions on
@@ -1634,7 +1633,7 @@ object QueriesDataOps {
       FROM sc ORDER BY doc_id"""
     }),
 
-    ("curate_pack", (s, dir) => {
+    Entry("curate_pack", (s, dir) => {
       // sequence packing into 512-token bins, per source — running-sum
       // window in (source, doc_id) order; docs bin where they start.
       graft.pipeline.CurationPipeline.packSequences(
@@ -1657,7 +1656,7 @@ object QueriesDataOps {
              cum_before // 512 AS bin, cum_before % 512 AS offset
       FROM c ORDER BY source, doc_id""")),
 
-    ("curate_length_buckets", (s, dir) => {
+    Entry("curate_length_buckets", (s, dir) => {
       // fixed-shape batch planning: docs binned to the smallest
       // power-of-two capacity ≥ token count, with per-bucket padding
       // waste — the report a bucketed-batching strategy minimizes. The
@@ -1687,7 +1686,7 @@ object QueriesDataOps {
                CAST(count(*) * bucket AS DOUBLE) AS waste_frac
       FROM b GROUP BY bucket ORDER BY bucket""")),
 
-    ("curate_epoch_mix", (s, dir) => {
+    Entry("curate_epoch_mix", (s, dir) => {
       // domain reweighting with UPSAMPLING: weight 2.5 = ~2.5 epochs of
       // that stratum (floor copies for all + md5-selected extra for the
       // fraction), the standard recipe for boosting small high-quality
@@ -1715,7 +1714,7 @@ object QueriesDataOps {
       FROM c WHERE n > 0
       ORDER BY doc_id, copy""")),
 
-    ("curate_temperature_mix", (s, dir) => {
+    Entry("curate_temperature_mix", (s, dir) => {
       // temperature-scaled language rebalancing, the multilingual-
       // pretraining mix: weights DERIVED from corpus counts
       // (w_i = N·√n_i / (Σ√n_j · n_i), α = 0.5), capped at 10 epochs,
@@ -1758,7 +1757,7 @@ object QueriesDataOps {
       FROM c WHERE n > 0
       ORDER BY doc_id, copy""")),
 
-    ("curate_token_budget", (s, dir) => {
+    Entry("curate_token_budget", (s, dir) => {
       // data selection under a fixed token budget: highest-quality docs
       // first, in global (quality desc, id asc) order, until half the
       // corpus' tokens are spent. The oracle states the semantics as ONE
@@ -1789,7 +1788,7 @@ object QueriesDataOps {
       FROM c, tot WHERE cum_before < budget ORDER BY doc_id"""
     }),
 
-    ("curate_snapshot_diff", (s, dir) => {
+    Entry("curate_snapshot_diff", (s, dir) => {
       // incremental-corpus reconciliation: added/removed/changed between
       // two snapshots (old drops ids ≡3 mod 11 and carries a stale
       // revision for ≡5; new drops ≡7) via ONE co-partitioned
@@ -1827,7 +1826,7 @@ object QueriesDataOps {
       SELECT doc_id, status FROM d WHERE status <> 'unchanged'
       ORDER BY doc_id""")),
 
-    ("curate_apply_changelog", (s, dir) => {
+    Entry("curate_apply_changelog", (s, dir) => {
       // CDC/MERGE apply (CurationPipeline.applyChangelog): fold an
       // ordered upsert/delete changelog into the documents snapshot —
       // highest seq per key wins. The fixture exercises every path:
@@ -1886,7 +1885,7 @@ object QueriesDataOps {
       WHERE op IS NULL OR op <> 'delete'
       ORDER BY doc_id""")),
 
-    ("curate_cardinality_sketch", (s, dir) => {
+    Entry("curate_cardinality_sketch", (s, dir) => {
       // corpus cardinality report: distinct-content count per source.
       // The production plan is the HLL sketch (approx_count_distinct:
       // fixed ~KB buffer per group, map-side combinable) — exact
@@ -1920,7 +1919,7 @@ object QueriesDataOps {
              TRUE AS est_in_band
       FROM dwd GROUP BY source ORDER BY source""")),
 
-    ("curate_split", (s, dir) => {
+    Entry("curate_split", (s, dir) => {
       // deterministic train/val/test split: every doc in exactly one
       // named band of md5('v1:'||id) — disjoint, exhaustive, stable
       // under corpus growth, zero shuffle (pure per-row map; the orderBy
@@ -1940,7 +1939,7 @@ object QueriesDataOps {
                   ELSE 'test' END AS split
       FROM documents ORDER BY doc_id""")),
 
-    ("curate_split_leakage_safe", (s, dir) => {
+    Entry("curate_split_leakage_safe", (s, dir) => {
       // LEAKAGE-SAFE train/val/test split: the well-known eval hazard
       // is a near-duplicate pair straddling train and test (Lee et al.
       // 2022 §6 measure it inflating benchmark scores) — a per-doc hash
@@ -1970,7 +1969,7 @@ object QueriesDataOps {
                   ELSE 'test' END AS split
       FROM lab ORDER BY doc_id""")),
 
-    ("curate_split_leakage_safe_capped", (s, dir) => {
+    Entry("curate_split_leakage_safe_capped", (s, dir) => {
       // the CAPPED leakage-safe split — the 100 TB-facing entry point
       // runs with the hot-bucket guard threaded all the way through
       // (CurationPipeline.leakageSafeSplit → minhashLshPairs
@@ -1999,7 +1998,7 @@ object QueriesDataOps {
                   ELSE 'test' END AS split
       FROM lab ORDER BY doc_id""")),
 
-    ("curate_incremental", (s, dir) => {
+    Entry("curate_incremental", (s, dir) => {
       // incremental curation: annotate the OLD snapshot once, then
       // process only the delta of the NEW one (added/changed groups
       // recomputed, removals resurrect their surviving duplicates,
@@ -2023,7 +2022,7 @@ object QueriesDataOps {
       ${verdictChainSql("nwfix")}
       SELECT doc_id, verdict FROM v ORDER BY doc_id""")),
 
-    ("curate_quality_lr", (s, dir) => {
+    Entry("curate_quality_lr", (s, dir) => {
       // learned quality gate: hashed-feature logistic regression
       // trained IN the engine (3 full-batch GD steps from w=0, 256
       // DSIR buckets, tf values, target = lang='en'), then per-doc
@@ -2056,7 +2055,7 @@ object QueriesDataOps {
       FROM documents d LEFT JOIN q ON q.doc_id = d.doc_id
       ORDER BY d.doc_id""")),
 
-    ("curate_dsir_score", (s, dir) => {
+    Entry("curate_dsir_score", (s, dir) => {
       // DSIR importance scoring toward the lang='en' target domain:
       // hashed-unigram log-likelihood ratio per doc (256 md5-prefix
       // buckets, add-one smoothing). Two 256-row aggregates + one
@@ -2086,7 +2085,7 @@ object QueriesDataOps {
       FROM documents d LEFT JOIN sc ON sc.doc_id = d.doc_id
       ORDER BY d.doc_id""")),
 
-    ("curate_shuffle_shard", (s, dir) => {
+    Entry("curate_shuffle_shard", (s, dir) => {
       // seeded global shuffle + fixed-64-row output shards: the oracle
       // states the semantics as ONE global row_number window over
       // md5('42:'||id); the engine computes it in the two-phase
@@ -2105,7 +2104,7 @@ object QueriesDataOps {
             FROM k)
       SELECT doc_id, pos, pos // 64 AS shard FROM r ORDER BY doc_id""")),
 
-    ("curate_profile", (s, dir) => {
+    Entry("curate_profile", (s, dir) => {
       // single-pass column profile of the orders drop — nulls,
       // distincts, min/max per column from ONE aggregate (exact
       // multi-distinct = the oracle/audit form; approx_count_distinct
@@ -2166,7 +2165,7 @@ object QueriesDataOps {
                min(o_orderpriority), max(o_orderpriority) FROM p)
       SELECT * FROM u ORDER BY "column" """)),
 
-    ("curate_shard_manifest", (s, dir) => {
+    Entry("curate_shard_manifest", (s, dir) => {
       // reproducibility audit: per-shard doc count, token total and
       // position-ordered content digest over the seeded-shuffle shards
       // — equal manifests ⇒ byte-equal training input. Groups bounded
@@ -2188,7 +2187,7 @@ object QueriesDataOps {
              md5(string_agg(md5(text), '' ORDER BY pos)) AS content_md5
       FROM r GROUP BY pos // 64 ORDER BY shard""")),
 
-    ("curate_jsonl_roundtrip", (s, dir) => {
+    Entry("curate_jsonl_roundtrip", (s, dir) => {
       // JSONL export/import — the training-data interchange format: docs
       // serialized one JSON object per line (to_json over a struct),
       // written GZIP-COMPRESSED (how 100 TB corpora actually ship; the
@@ -2208,7 +2207,7 @@ object QueriesDataOps {
     }, Some("""
       SELECT doc_id, lang, source, text FROM documents ORDER BY doc_id""")),
 
-    ("avro_ocf_roundtrip", (s, dir) => {
+    Entry("avro_ocf_roundtrip", (s, dir) => {
       // Avro Object Container Files — the at-rest half of the Avro
       // surface (wire half: rag_avro_roundtrip): one deflate-compressed
       // container per partition out, one decode task per file back.
@@ -2223,7 +2222,7 @@ object QueriesDataOps {
     }, Some("""
       SELECT doc_id, lang, source, text FROM documents ORDER BY doc_id""")),
 
-    ("curate_report", (s, dir) => {
+    Entry("curate_report", (s, dir) => {
       // the corpus-level audit a curation run publishes: per-verdict doc
       // counts, token mass, mean quality — one map-side-combinable
       // rollup over the annotated rows (5 output rows regardless of
@@ -2241,7 +2240,7 @@ object QueriesDataOps {
       SELECT verdict, count(*) AS n_docs,
              CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
              round(avg(quality), 4) AS mean_quality
-      FROM v GROUP BY verdict ORDER BY verdict"""))
+      FROM v GROUP BY verdict ORDER BY verdict"""), bench = false)
   )
 
   /** Shared oracle CTE chain replaying [[SimilaritySearch.sliceNormalize]]
@@ -2264,9 +2263,9 @@ object QueriesDataOps {
                            CAST(CAST(x AS DOUBLE) / n AS REAL)) END AS nsub
              FROM nr)"""
 
-  val similarity: Seq[(String, Q, Option[String])] = Seq(
+  val similarity: Seq[Entry] = Seq(
 
-    ("ann_topk_bruteforce", (s, dir) => {
+    Entry("ann_topk_bruteforce", (s, dir) => {
       // exact top-5 over a disjoint corpus — the ANN baseline/oracle.
       val emb = T(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id") < 20)
@@ -2289,7 +2288,7 @@ object QueriesDataOps {
       SELECT qid, nid, CAST(rank AS INT) AS rank FROM ranked
       WHERE rank <= 5 ORDER BY qid, rank""")),
 
-    ("ann_lsh_bucketed", (s, dir) => {
+    Entry("ann_lsh_bucketed", (s, dir) => {
       // sign-random-projection LSH: 8 data-derived hyperplanes (vec_id<8)
       // → bit signature; candidates = same bucket; exact re-rank inside.
       // One equi-join on the signature instead of a cross join.
@@ -2326,7 +2325,7 @@ object QueriesDataOps {
       SELECT qid, nid, CAST(rank AS INT) AS rank FROM ranked
       WHERE rank <= 3 ORDER BY qid, rank""")),
 
-    ("ann_lsh_multitable", (s, dir) => {
+    Entry("ann_lsh_multitable", (s, dir) => {
       // banded multi-table SRP-LSH (2 tables × 4 bits): candidates from
       // ANY colliding table, dedup, ONE exact re-rank — the recall
       // amplifier (1-(1-p^b)^L) production stores run; AnnRecallSpec
@@ -2368,7 +2367,7 @@ object QueriesDataOps {
       SELECT qid, nid, CAST(rank AS INT) AS rank FROM ranked
       WHERE rank <= 3 ORDER BY qid, rank""")),
 
-    ("ann_ivf_topk", (s, dir) => {
+    Entry("ann_ivf_topk", (s, dir) => {
       // full IVF search: corpus bucketed by nearest centroid, queries
       // probe their 2 nearest clusters, exact cosine top-3 within.
       val emb = T(s, dir, "embeddings")
@@ -2407,7 +2406,7 @@ object QueriesDataOps {
       SELECT qid, nid, CAST(rank AS INT) AS rank FROM ranked
       WHERE rank <= 3 ORDER BY qid, rank""")),
 
-    ("ann_recall_report", (s, dir) => {
+    Entry("ann_recall_report", (s, dir) => {
       // retrieval evaluation as a query: recall@3 of the IVF(nProbe=2)
       // path vs exact brute force, per query — the in-engine grading
       // loop an ANN deployment tunes nProbe against. Queries the ANN
@@ -2467,7 +2466,7 @@ object QueriesDataOps {
       LEFT JOIN hits ON q.qid = hits.qid
       ORDER BY q.qid""")),
 
-    ("ann_radius", (s, dir) => {
+    Entry("ann_radius", (s, dir) => {
       // threshold (radius) search: ALL neighbors with cosine ≥ τ — the
       // all-near-duplicates retrieval form. Broadcast corpus, queries
       // never shuffle, no window (nothing is ranked); similarity rounded
@@ -2489,7 +2488,7 @@ object QueriesDataOps {
       SELECT qid, nid, sim FROM sims
       WHERE sim >= 0.25 ORDER BY qid, nid""")),
 
-    ("ann_hard_negatives", (s, dir) => {
+    Entry("ann_hard_negatives", (s, dir) => {
       // contrastive-training mining: per query the top-5 most-similar
       // OTHER-label vectors (the near-miss negatives a triplet loss
       // needs). Label inequality fused into the broadcast join, exact
@@ -2518,7 +2517,7 @@ object QueriesDataOps {
       SELECT qid, nid, CAST(rank AS INT) AS rank FROM ranked
       WHERE rank <= 5 ORDER BY qid, rank""")),
 
-    ("ann_mmr_topk", (s, dir) => {
+    Entry("ann_mmr_topk", (s, dir) => {
       // MMR-diversified retrieval (Carbonell & Goldstein '98): cosine
       // top-8 candidates per query, then a greedy λ=0.7 re-rank that
       // penalizes similarity to already-picked results — the
@@ -2577,7 +2576,7 @@ object QueriesDataOps {
       UNION ALL SELECT qid, nid, CAST(3 AS INT) FROM p3
       ORDER BY qid, rank""")),
 
-    ("ann_quantized_topk", (s, dir) => {
+    Entry("ann_quantized_topk", (s, dir) => {
       // exact top-3 over the int8-QUANTIZED corpus (quantize → dequant →
       // codegen'd cosine): the 4×-compressed storage path; quantization
       // error vs the float32 ranks is pinned in VectorSearchSpec.
@@ -2615,7 +2614,7 @@ object QueriesDataOps {
       SELECT qid, nid, CAST(rank AS INT) AS rank FROM ranked
       WHERE rank <= 3 ORDER BY qid, rank""")),
 
-    ("ann_ivf_train", (s, dir) => {
+    Entry("ann_ivf_train", (s, dir) => {
       // one Lloyd iteration (the IVF training step): assign to nearest of
       // 4 seed centroids, recompute element-wise means — emitted flat
       // (cluster, dim, mu, n_members) for engine-portable comparison.
@@ -2652,7 +2651,7 @@ object QueriesDataOps {
       FROM m JOIN counts c ON c.cluster = m.cluster
       ORDER BY cluster, dim""")),
 
-    ("ann_pq_adc", (s, dir) => {
+    Entry("ann_pq_adc", (s, dir) => {
       // product quantization + asymmetric-distance search: 16 subspaces
       // x 32 centroids (codebooks = sub-vectors of a deterministic
       // corpus sample, the ivf_sampled seeding recipe; recall@5 = 0.42
@@ -2703,7 +2702,7 @@ object QueriesDataOps {
       SELECT qid, nid, CAST(rank AS INT) AS rank FROM ranked
       WHERE rank <= 5 ORDER BY qid, rank""")),
 
-    ("ann_pq_train", (s, dir) => {
+    Entry("ann_pq_train", (s, dir) => {
       // one per-subspace Lloyd step (PQ codebook training): sub-vectors
       // assign by squared L2 within their subspace (4 subspaces x 4
       // seed centroids), cells recompute element-wise means — the
@@ -2744,7 +2743,7 @@ object QueriesDataOps {
              CAST(dim AS INT) AS dim, mu, n_members
       FROM mres ORDER BY j, cluster, dim""")),
 
-    ("ann_adaptive_topk", (s, dir) => {
+    Entry("ann_adaptive_topk", (s, dir) => {
       // the planner seam as a checked query: adaptiveTopK reads
       // Catalyst's own size estimate of the corpus plan (the broadcast-
       // join statistic) and picks exact broadcast brute force under the
@@ -2775,9 +2774,9 @@ object QueriesDataOps {
                           ORDER BY sim DESC, nid ASC) AS rank
                  FROM sims)
       SELECT qid, nid, CAST(rank AS INT) AS rank FROM ranked
-      WHERE rank <= 5 ORDER BY qid, rank""")),
+      WHERE rank <= 5 ORDER BY qid, rank"""), bench = false),
 
-    ("ann_ivf_sampled", (s, dir) => {
+    Entry("ann_ivf_sampled", (s, dir) => {
       // SURVEY's documented 100 TB training recipe, end-to-end: Lloyd
       // never scans the full corpus — it trains on a deterministic
       // sample (vec_id % 3 = 0 here; ≤10⁸ vectors at scale), then the
@@ -2843,7 +2842,7 @@ object QueriesDataOps {
       SELECT qid, nid, CAST(rank AS INT) AS rank FROM ranked
       WHERE rank <= 3 ORDER BY qid, rank""")),
 
-    ("ann_ivf_assign", (s, dir) => {
+    Entry("ann_ivf_assign", (s, dir) => {
       // IVF coarse quantization: nearest of 4 data-derived centroids →
       // cluster column for partition pruning at search time.
       val emb = T(s, dir, "embeddings")
@@ -2865,9 +2864,9 @@ object QueriesDataOps {
                           ORDER BY sim DESC, cid DESC) AS r
                  FROM sims)
       SELECT vec_id, CAST(cid AS INT) AS cluster FROM ranked WHERE r = 1
-      ORDER BY vec_id""")),
+      ORDER BY vec_id"""), bench = false),
 
-    ("ann_ivf_imbalance", (s, dir) => {
+    Entry("ann_ivf_imbalance", (s, dir) => {
       // IVF cell-balance health report: per-cluster population, corpus
       // fraction, and balance factor (n·cells/total; 1.0 = perfectly
       // even). THE maintenance metric for a partitioned vector index —
@@ -2911,7 +2910,7 @@ object QueriesDataOps {
                CAST((SELECT count(*) FROM assigned) AS DOUBLE) AS balance
       FROM rep ORDER BY cluster""")),
 
-    ("ann_opq_adc", (s, dir) => {
+    Entry("ann_opq_adc", (s, dir) => {
       // OPQ-lite ADC (Ge et al. CVPR'13 parametric solution): PCA +
       // eigenvalue-balanced allocation rotation trained in one
       // moment-partials pass, then the UNCHANGED PQ sample-codebook
@@ -3001,7 +3000,7 @@ object QueriesDataOps {
       SELECT qid, nid, CAST(rank AS INT) AS rank FROM ranked
       WHERE rank <= 5 ORDER BY qid, rank""")),
 
-    ("ann_ivfpq_adc", (s, dir) => {
+    Entry("ann_ivfpq_adc", (s, dir) => {
       // IVFADC (Jégou TPAMI'11 §IV): IVF probe pruning composed with
       // residual-PQ compressed scan — the canonical 10¹¹-vector index
       // shape. 4 coarse centroids (first rows, the ivf convention);
@@ -3079,7 +3078,7 @@ object QueriesDataOps {
       SELECT qid, nid, CAST(rank AS INT) AS rank FROM ranked
       WHERE rank <= 5 ORDER BY qid, rank""")),
 
-    ("ann_ivfpq_index", (s, dir) => {
+    Entry("ann_ivfpq_index", (s, dir) => {
       // the PERSISTED index path: build (cluster-partitioned parquet
       // codes + sidecar artifacts), then search through the stored
       // index — probe pruning runs as on-disk partition pruning
@@ -3161,7 +3160,7 @@ object QueriesDataOps {
       SELECT qid, nid, CAST(rank AS INT) AS rank FROM ranked
       WHERE rank <= 5 ORDER BY qid, rank""")),
 
-    ("ann_index_sync", (s, dir) => {
+    Entry("ann_index_sync", (s, dir) => {
       // the reference's OUTER LOOP end to end as one oracle-checked
       // row (the continuously-running sink connector upserting
       // embedded docs into Atlas while the coach queries the index,
@@ -3262,7 +3261,7 @@ object QueriesDataOps {
       SELECT qid, nid, CAST(rank AS INT) AS rank FROM ranked
       WHERE rank <= 3 ORDER BY qid, rank""")),
 
-    ("ann_ivfpq_rerank", (s, dir) => {
+    Entry("ann_ivfpq_rerank", (s, dir) => {
       // IVFADC + exact refine ("IVFADC+R"): the same index recipe as
       // ann_ivfpq_adc, but the ADC stage emits a 10-deep shortlist that
       // is re-ranked by exact L2 against the raw vectors — the refine
@@ -3349,7 +3348,7 @@ object QueriesDataOps {
       SELECT qid, nid, CAST(rank AS INT) AS rank FROM rr
       WHERE rank <= 5 ORDER BY qid, rank""")),
 
-    ("ann_ivfpq_train", (s, dir) => {
+    Entry("ann_ivfpq_train", (s, dir) => {
       // end-to-end TRAINED IVFADC — the composition of the
       // ann_ivf_sampled and ann_pq_train recipes: Lloyd-train coarse
       // centroids on a 1-in-3 deterministic sample (never the full
@@ -3472,7 +3471,7 @@ object QueriesDataOps {
       SELECT qid, nid, CAST(rank AS INT) AS rank FROM ranked
       WHERE rank <= 5 ORDER BY qid, rank""")),
 
-    ("ann_bm25_topk", (s, dir) => {
+    Entry("ann_bm25_topk", (s, dir) => {
       // Okapi BM25 top-5 (Lucene-default idf form) — the SPARSE half of
       // a hybrid RAG stack as an inverted-index equi-join: postings
       // groupBy, vocabulary-keyed idf join, query-term match on `term`,
@@ -3521,7 +3520,7 @@ object QueriesDataOps {
       SELECT qid, nid, CAST(rank AS INT) AS rank, score FROM ranked
       WHERE rank <= 5 ORDER BY qid, rank""")),
 
-    ("ann_hybrid_rrf", (s, dir) => {
+    Entry("ann_hybrid_rrf", (s, dir) => {
       // hybrid dense+sparse retrieval fused by reciprocal-rank fusion
       // (Cormack SIGIR'09, the production-default fusion): cosine
       // top-10 over embeddings ∪ BM25 top-10 over documents, fused by
@@ -3597,7 +3596,7 @@ object QueriesDataOps {
       SELECT qid, nid, CAST(rank AS INT) AS rank, rrf FROM ranked
       WHERE rank <= 5 ORDER BY qid, rank""")),
 
-    ("ann_hamming_topk", (s, dir) => {
+    Entry("ann_hamming_topk", (s, dir) => {
       // two-stage binary-sign search (Charikar'02 1-bit quantization):
       // Hamming distance over sign bits prunes to 32 candidates per
       // query, exact cosine re-ranks to top-5 — the 32×-compression
@@ -3631,7 +3630,7 @@ object QueriesDataOps {
              CAST(hamming AS INT) AS hamming
       FROM ranked WHERE rank <= 5 ORDER BY qid, rank""")),
 
-    ("ann_jl_topk", (s, dir) => {
+    Entry("ann_jl_topk", (s, dir) => {
       // random-projection (JL) dimensionality reduction: 64 → 16 dims
       // via dot products against 16 data-derived planes (first rows,
       // the lsh-planes convention), then exact cosine top-5 in the
@@ -3678,7 +3677,7 @@ object QueriesDataOps {
       SELECT qid, nid, CAST(rank AS INT) AS rank FROM ranked
       WHERE rank <= 5 ORDER BY qid, rank""")),
 
-    ("ann_matryoshka_topk", (s, dir) => {
+    Entry("ann_matryoshka_topk", (s, dir) => {
       // two-stage matryoshka search (Kusupati NeurIPS'22 MRL serving):
       // cosine over the FIRST 16 dims prunes to 32 candidates (no
       // projection arithmetic — the prefix is a slice, so stage 1 reads
@@ -3708,7 +3707,7 @@ object QueriesDataOps {
       SELECT qid, nid, CAST(rank AS INT) AS rank FROM ranked
       WHERE rank <= 5 ORDER BY qid, rank""")),
 
-    ("ann_maxsim_topk", (s, dir) => {
+    Entry("ann_maxsim_topk", (s, dir) => {
       // ColBERT-style late interaction (Khattab & Zaharia SIGIR'20):
       // the 64-dim embedding as 8 token slices of 8 dims, each
       // unit-normalized once per row; relevance = Σ_t max_j dot — the
@@ -3738,7 +3737,7 @@ object QueriesDataOps {
       SELECT qid, nid, CAST(rank AS INT) AS rank, score FROM ranked
       WHERE rank <= 5 ORDER BY qid, rank""")),
 
-    ("emb_safetensors_roundtrip", (s, dir) => {
+    Entry("emb_safetensors_roundtrip", (s, dir) => {
       // safetensors sharding round-trip — the HF tensor-interchange
       // format an embedding corpus ships to training in: per shard one
       // F32 [n,64] matrix + I64 ids, u64-LE header length + JSON
@@ -3756,7 +3755,7 @@ object QueriesDataOps {
       FROM embeddings, unnest(generate_series(1, len(embedding))) AS u(s)
       ORDER BY vec_id, dim""")),
 
-    ("emb_mean_pool", (s, dir) => {
+    Entry("emb_mean_pool", (s, dir) => {
       // chunk→doc embedding pooling: per-label mean of member vectors,
       // L2-renormalized, flat (parent, dim, value) — one (parent,dim)
       // aggregate + a ≤dim-rows-per-parent window; round(6) for
@@ -3779,7 +3778,7 @@ object QueriesDataOps {
       FROM m JOIN n USING (parent)
       ORDER BY parent, dim""")),
 
-    ("emb_pca_project", (s, dir) => {
+    Entry("emb_pca_project", (s, dir) => {
       // PCA dimensionality reduction (operators.Pca): rank-8 model
       // trained in ONE moment-partials pass (d + d(d+1)/2 doubles per
       // partition to the driver, d×d Jacobi eigensolve driver-side),
@@ -3821,7 +3820,7 @@ object QueriesDataOps {
       FROM embeddings e CROSS JOIN comp CROSS JOIN mu
       ORDER BY vec_id, c""")),
 
-    ("emb_dim_profile", (s, dir) => {
+    Entry("emb_dim_profile", (s, dir) => {
       // per-DIMENSION embedding profile (mean/std/min/max): the
       // drift-detection surface for an embedding pipeline — a provider
       // model swap or a normalization bug shows up as per-dim moment
@@ -3849,7 +3848,7 @@ object QueriesDataOps {
              round(max(x), 6) AS mx
       FROM v GROUP BY dim ORDER BY dim""")),
 
-    ("ann_maxsim_rerank", (s, dir) => {
+    Entry("ann_maxsim_rerank", (s, dir) => {
       // the ColBERT SERVING shape: pooled-vector cosine prunes to 24
       // candidates, MaxSim re-ranks the shortlist only — the late-
       // interaction pair cost paid for candN rows per query, not the
@@ -3885,7 +3884,7 @@ object QueriesDataOps {
       SELECT qid, nid, CAST(rank AS INT) AS rank, score FROM ranked
       WHERE rank <= 5 ORDER BY qid, rank""")),
 
-    ("ann_filtered_topk", (s, dir) => {
+    Entry("ann_filtered_topk", (s, dir) => {
       // metadata-FILTERED search: each query retrieves top-5 among
       // corpus rows sharing its label — pre-filtering semantics, planned
       // as a label equi-join (never a cross join + filter), so pair
@@ -3911,7 +3910,7 @@ object QueriesDataOps {
       SELECT qid, nid, CAST(rank AS INT) AS rank, sim FROM ranked
       WHERE rank <= 5 ORDER BY qid, rank""")),
 
-    ("ann_ivfpq_opq_index", (s, dir) => {
+    Entry("ann_ivfpq_opq_index", (s, dir) => {
       // the FULL scale stack in one hash-checked row: OPQ rotation
       // (trained on the residual distribution — the IvfPqIndexSpec
       // lesson) + persisted IVFADC index (rotation sidecar, corpus
@@ -4178,9 +4177,9 @@ object QueriesDataOps {
       ORDER BY h.doc_id"""
   }
 
-  val text: Seq[(String, Q, Option[String])] = Seq(
+  val text: Seq[Entry] = Seq(
 
-    ("text_langid_nb", (s, dir) => {
+    Entry("text_langid_nb", (s, dir) => {
       // TRAINED language ID: hashed char-trigram multinomial Naive
       // Bayes, trained IN the engine (256 md5-prefix buckets — the
       // DSIR bucket law — add-one smoothing, doc-count priors) on the
@@ -4203,7 +4202,7 @@ object QueriesDataOps {
         .orderBy("doc_id")
     }, Some(nbOracleSql)),
 
-    ("text_langid_nb_inc", (s, dir) => {
+    Entry("text_langid_nb_inc", (s, dir) => {
       // INCREMENTAL NB-langid training: wave 1 (doc_id%5 ∈ {1,2})
       // trains, wave 2 (%5 ∈ {3,4}) folds in via langIdNbUpdate — the
       // old corpus is never rescanned — and the holdout classifies
@@ -4228,7 +4227,7 @@ object QueriesDataOps {
         .orderBy("doc_id")
     }, Some(nbOracleSql)),
 
-    ("text_langid", (s, dir) => {
+    Entry("text_langid", (s, dir) => {
       // n-gram-heuristic language ID: per-language function-word marker
       // scores, argmax with fixed priority. Pure per-row map.
       T(s, dir, "documents")
@@ -4252,7 +4251,7 @@ object QueriesDataOps {
       FROM mx ORDER BY doc_id"""
     }),
 
-    ("text_quality", (s, dir) => {
+    Entry("text_quality", (s, dir) => {
       // quality features + composite score: the cheap pre-training
       // filters (length / punctuation / stopword density).
       T(s, dir, "documents")
@@ -4288,7 +4287,7 @@ object QueriesDataOps {
       FROM feats ORDER BY doc_id"""
     }),
 
-    ("text_mojibake", (s, dir) => {
+    Entry("text_mojibake", (s, dir) => {
       // encoding-damage gate: U+FFFD replacement chars, CP1252-mojibake
       // lead pairs ("é" decoded as "Ã©"), and C0 control spill. The
       // synthetic corpus is validly decoded, so deterministic damage is
@@ -4328,7 +4327,7 @@ object QueriesDataOps {
              (n_replacement + n_mojibake + n_ctrl) = 0 AS is_clean
       FROM m ORDER BY doc_id""")),
 
-    ("text_gopher_rules", (s, dir) => {
+    Entry("text_gopher_rules", (s, dir) => {
       // the Gopher per-document rule card (word-count band, mean word
       // length band, symbol-to-word ratio, alpha-word fraction, minimum
       // stopword evidence) with per-rule booleans and the conjunction —
@@ -4381,7 +4380,7 @@ object QueriesDataOps {
                AS keep
       FROM m ORDER BY doc_id""")),
 
-    ("text_ngram_repetition", (s, dir) => {
+    Entry("text_ngram_repetition", (s, dir) => {
       // Gopher 2-gram repetition card: top-gram and duplicated-gram
       // occurrence fractions. Per-row sort+scan (zero shuffle, pinned);
       // the oracle computes the same statistic relationally — the
@@ -4415,7 +4414,7 @@ object QueriesDataOps {
              round(dup_occ * 1.0 / n_grams, 6) AS dup_frac
       FROM agg ORDER BY doc_id""")),
 
-    ("text_token_count", (s, dir) => {
+    Entry("text_token_count", (s, dir) => {
       // token counting two ways: whitespace tokens and a BPE-ish regex
       // (letter runs / digit runs / punctuation runs, optionally
       // space-prefixed like byte-pair vocabularies) — the cheap length
@@ -4435,7 +4434,7 @@ object QueriesDataOps {
                AS n_bpe_tokens
       FROM documents ORDER BY doc_id""")),
 
-    ("text_bpe_pairs", (s, dir) => {
+    Entry("text_bpe_pairs", (s, dir) => {
       // distributed BPE training, round-1 evidence: adjacent symbol
       // pair frequencies over the (word, freq) table in the
       // marker-prefix representation, top-10 deterministic. One corpus
@@ -4454,7 +4453,7 @@ object QueriesDataOps {
       SELECT l, r, CAST(cnt AS BIGINT) AS cnt FROM pc
       ORDER BY cnt DESC, l, r LIMIT 10""")),
 
-    ("text_bpe_train", (s, dir) => {
+    Entry("text_bpe_train", (s, dir) => {
       // the actual BPE trainer (Sennrich'16): 5 rounds of count-argmax-
       // merge over the corpus, each round one pair shuffle + a ONE-ROW
       // driver collect; the oracle replays all 5 rounds mechanically in
@@ -4474,7 +4473,7 @@ object QueriesDataOps {
         .mkString("", " UNION ALL ", "")}
       ORDER BY step""")),
 
-    ("text_bpe_tokenize", (s, dir) => {
+    Entry("text_bpe_tokenize", (s, dir) => {
       // the trained vocabulary APPLIED: per-doc token counts under the
       // 5 learned merges — explode words, chain 5 codegen'd replaces,
       // one doc-keyed sum; wordless docs keep a 0 row. The oracle
@@ -4503,7 +4502,7 @@ object QueriesDataOps {
       FROM documents d LEFT JOIN cnt ON cnt.doc_id = d.doc_id
       ORDER BY d.doc_id""")),
 
-    ("text_repetition", (s, dir) => {
+    Entry("text_repetition", (s, dir) => {
       // Gopher-style repetition gates: duplicate-token fraction and
       // top-token dominance per doc — two chained map-side-combinable
       // aggregations, no joins.
@@ -4536,7 +4535,7 @@ object QueriesDataOps {
              round(max_c * 1.0 / n_tokens, 4) AS top_frac
       FROM agg ORDER BY doc_id""")),
 
-    ("text_vocab_top", (s, dir) => {
+    Entry("text_vocab_top", (s, dir) => {
       // corpus vocabulary report: top-50 terms by document frequency.
       // distinct (doc, term) → map-side-combinable df count → top-50 as
       // TakeOrderedAndProject (per-partition top-N + 50-row merge), with
@@ -4555,9 +4554,9 @@ object QueriesDataOps {
                unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS term
         FROM documents)
       SELECT term, count(*) AS df FROM toks
-      GROUP BY term ORDER BY df DESC, term ASC LIMIT 50""")),
+      GROUP BY term ORDER BY df DESC, term ASC LIMIT 50"""), bench = false),
 
-    ("text_heavy_hitters", (s, dir) => {
+    Entry("text_heavy_hitters", (s, dir) => {
       // exact ≥0.1%-frequency tokens via the two-phase Misra–Gries
       // pattern: bounded per-partition summaries (one pass, no token
       // shuffle) yield a guaranteed-superset candidate set + the global
@@ -4579,7 +4578,7 @@ object QueriesDataOps {
       HAVING count(*) * 1000 >= (SELECT count(*) FROM toks)
       ORDER BY cnt DESC, tok ASC""")),
 
-    ("text_length_hist", (s, dir) => {
+    Entry("text_length_hist", (s, dir) => {
       // doc-length histogram (50-char buckets): the size-distribution
       // report a curation run publishes; one map-side-combinable rollup.
       T(s, dir, "documents")
@@ -4593,9 +4592,9 @@ object QueriesDataOps {
              count(*) AS n_docs,
              CAST(min(length(text)) AS BIGINT) AS min_len,
              CAST(max(length(text)) AS BIGINT) AS max_len
-      FROM documents GROUP BY 1 ORDER BY bucket""")),
+      FROM documents GROUP BY 1 ORDER BY bucket"""), bench = false),
 
-    ("text_pii_redact", (s, dir) => {
+    Entry("text_pii_redact", (s, dir) => {
       // PII scrub over messages with injected emails/URLs/phones/IPs
       // (deterministic by doc_id so every redaction class exercises);
       // fixed replace order: email → url → ip → phone.
@@ -4639,7 +4638,7 @@ object QueriesDataOps {
           '\+?[0-9][0-9() -]{7,}[0-9]', '<PHONE>', 'g') AS redacted
       FROM m ORDER BY doc_id""")),
 
-    ("text_tfidf", (s, dir) => {
+    Entry("text_tfidf", (s, dir) => {
       // per-doc top-3 salient terms by tf·ln(N/df) — rank-only output so
       // the float score never crosses the engine boundary.
       TextAnalysis.tfidfTopTerms(spread(s, T(s, dir, "documents")),
@@ -4665,7 +4664,7 @@ object QueriesDataOps {
       SELECT doc_id, CAST(rank AS INT) AS rank, term FROM ranked
       WHERE rank <= 3 ORDER BY doc_id, rank""")),
 
-    ("text_winnowing", (s, dir) => {
+    Entry("text_winnowing", (s, dir) => {
       // winnowing (rolling k-gram hash, window-min selection, SIGMOD'03):
       // the partial-overlap fingerprint — any shared substring of
       // w+k-1 = 11 canonical chars guarantees a shared fingerprint.
@@ -4680,7 +4679,7 @@ object QueriesDataOps {
       FROM s WHERE pos <= n_pos - 3
       ORDER BY doc_id, fp_pos, fp_hash""")),
 
-    ("text_unigram_surprisal", (s, dir) => {
+    Entry("text_unigram_surprisal", (s, dir) => {
       // corpus-LM quality score: mean −ln p̂(token) per doc under the
       // corpus unigram MLE (the CCNet filter statistic). Same 3-shuffle
       // shape as tf-idf; the 1-row total rides a broadcast.
@@ -4698,7 +4697,7 @@ object QueriesDataOps {
       FROM toks JOIN tc USING (term) CROSS JOIN n
       GROUP BY doc_id ORDER BY doc_id""")),
 
-    ("text_bigram_surprisal", (s, dir) => {
+    Entry("text_bigram_surprisal", (s, dir) => {
       // conditional-LM quality score one order above the unigram: mean
       // −ln p̂(r|l) under the corpus MLE bigram model. Adjacent pairs come
       // from a per-row zip (no window/positional shuffle); the rest is
@@ -4722,7 +4721,7 @@ object QueriesDataOps {
       FROM pairs JOIN bg USING (l, r) JOIN lc USING (l)
       GROUP BY doc_id ORDER BY doc_id""")),
 
-    ("text_char_entropy", (s, dir) => {
+    Entry("text_char_entropy", (s, dir) => {
       // character-distribution gibberish filter: per-doc Shannon entropy
       // over [a-z0-9] in nats; a codegen'd per-row expression — zero
       // shuffles before the presentation sort (PlanSpec pins this).
@@ -4743,7 +4742,7 @@ object QueriesDataOps {
       //   round preserves the sign bit — without the guard a correct
       //   answer would hash-mismatch
 
-    ("text_fingerprint", (s, dir) => {
+    Entry("text_fingerprint", (s, dir) => {
       // canonical-form document fingerprint (rolling formatting-invariant
       // hash) — the per-doc primitive under dedup_fingerprint.
       T(s, dir, "documents")
@@ -4753,9 +4752,9 @@ object QueriesDataOps {
       SELECT doc_id,
              md5(trim(regexp_replace(regexp_replace(lower(text),
                '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'), ' ')) AS fingerprint
-      FROM documents ORDER BY doc_id""")),
+      FROM documents ORDER BY doc_id"""), bench = false),
 
-    ("text_normalize", (s, dir) => {
+    Entry("text_normalize", (s, dir) => {
       // Unicode-hygiene normalization (NFC + control strip + whitespace
       // collapse) — the web-corpus first pass. The ASCII test corpus
       // would make NFC a no-op, so decomposed combining marks, a BEL
@@ -4790,7 +4789,7 @@ object QueriesDataOps {
       SELECT doc_id, md5(n) AS norm_md5, CAST(length(n) AS INT) AS n_chars
       FROM norm ORDER BY doc_id""")),
 
-    ("text_token_chunks", (s, dir) => {
+    Entry("text_token_chunks", (s, dir) => {
       // token-window chunking with overlap (size 40, stride 30) — the
       // token-budgeted alternative to the reference's character splitter
       // (TextSplit M1): embedding models bound INPUT TOKENS, so chunk
@@ -4829,7 +4828,7 @@ object QueriesDataOps {
                AS n_tokens
       FROM ch ORDER BY doc_id, chunk_idx""")),
 
-    ("text_readability", (s, dir) => {
+    Entry("text_readability", (s, dir) => {
       // Flesch reading ease — the classic fluency gate (very low =
       // word salad/legalese, implausibly high = fragment spam):
       // 206.835 − 1.015·(words/sentences) − 84.6·(syllables/words)
@@ -4874,7 +4873,7 @@ object QueriesDataOps {
                84.6 * (CAST(n_syllables AS DOUBLE) / w), 4) END AS flesch
       FROM c ORDER BY doc_id""")),
 
-    ("text_url_normalize", (s, dir) => {
+    Entry("text_url_normalize", (s, dir) => {
       // URL canonicalization + registered-domain extraction — the key
       // preparation for every URL-keyed stage of a crawl corpus (exact
       // url dedup, per-domain caps): two spellings of one page must
@@ -4956,7 +4955,7 @@ object QueriesDataOps {
                   ELSE host END AS domain
       FROM d ORDER BY doc_id""")),
 
-    ("text_domain_cap", (s, dir) => {
+    Entry("text_domain_cap", (s, dir) => {
       // per-domain cap — the crawl-mixing guard against one hot site
       // dominating the corpus: canonicalize, key by registered domain,
       // keep exactly min(k, |domain|) docs per domain by md5(id) order
@@ -5005,7 +5004,7 @@ object QueriesDataOps {
             FROM dom)
       SELECT doc_id, domain FROM r WHERE rn <= 3 ORDER BY doc_id""")),
 
-    ("text_domain_psl", (s, dir) => {
+    Entry("text_domain_psl", (s, dir) => {
       // registered domain via the FULL Public Suffix List algorithm
       // (publicsuffix.org), as a joinable rule table instead of the
       // bounded second-level heuristic: among matching rules any
@@ -5085,7 +5084,7 @@ object QueriesDataOps {
                   ELSE array_to_string(ls[L-ps:L], '.') END AS domain
       FROM ps ORDER BY doc_id""")),
 
-    ("text_html_extract", (s, dir) => {
+    Entry("text_html_extract", (s, dir) => {
       // HTML → visible text (the step between the WARC fetch and every
       // text gate): script/style/comments dropped, block tags become
       // newlines (paragraph structure survives), remaining tags vanish,
@@ -5144,7 +5143,7 @@ object QueriesDataOps {
              CAST(len(string_split(t, chr(10))) AS INT) AS n_lines
       FROM c ORDER BY doc_id""")),
 
-    ("text_html_blocks", (s, dir) => {
+    Entry("text_html_blocks", (s, dir) => {
       // jusText-style block classification: split the (machinery-free)
       // HTML into block-element segments, and per non-empty block
       // compute word count + LINK DENSITY (visible chars inside
@@ -5241,7 +5240,7 @@ object QueriesDataOps {
                   THEN 'content' ELSE 'boilerplate' END AS verdict
       FROM f ORDER BY doc_id, block_idx""")),
 
-    ("text_warc_roundtrip", (s, dir) => {
+    Entry("text_warc_roundtrip", (s, dir) => {
       // WARC (ISO 28500) shard round-trip — CommonCrawl's container,
       // i.e. the INGEST format of a web-scale corpus: documents become
       // HTTP response records inside multi-member-gzip shards (one
@@ -5271,9 +5270,9 @@ object QueriesDataOps {
       FROM documents ORDER BY target_uri"""))
   )
 
-  val multimodal: Seq[(String, Q, Option[String])] = Seq(
+  val multimodal: Seq[Entry] = Seq(
 
-    ("mm_metadata", (s, dir) => {
+    Entry("mm_metadata", (s, dir) => {
       // multimodal plumbing: opaque binary payload + typed metadata;
       // metadata-only queries never touch the binary column (columnar
       // pruning). Flattened for the oracle.
@@ -5290,7 +5289,7 @@ object QueriesDataOps {
              md5(text) AS content_hash, source
       FROM documents ORDER BY media_id""")),
 
-    ("mm_webdataset_roundtrip", (s, dir) => {
+    Entry("mm_webdataset_roundtrip", (s, dir) => {
       // WebDataset tar sharding round-trip: media rows → one ustar
       // shard per partition (keyed .bin + .json members, the
       // multimodal-training container) → parsed back; every payload
@@ -5312,7 +5311,7 @@ object QueriesDataOps {
              md5(text) AS content_hash, source
       FROM documents ORDER BY media_id""")),
 
-    ("mm_tfrecord_roundtrip", (s, dir) => {
+    Entry("mm_tfrecord_roundtrip", (s, dir) => {
       // TFRecord sharding round-trip: media rows → one CRC32C-framed
       // shard of hand-encoded tf.Example records per partition (the
       // TF/JAX training container) → parsed back. Every payload byte,
@@ -5333,7 +5332,7 @@ object QueriesDataOps {
              md5(text) AS content_hash, source
       FROM documents ORDER BY media_id""")),
 
-    ("mm_arrow_roundtrip", (s, dir) => {
+    Entry("mm_arrow_roundtrip", (s, dir) => {
       // Arrow IPC (Feather v2) sharding round-trip: media rows → one
       // columnar ARROW1 file per partition (the HuggingFace-datasets /
       // pyarrow interchange container) → decoded back batch by batch.
@@ -5354,7 +5353,7 @@ object QueriesDataOps {
              md5(text) AS content_hash, source
       FROM documents ORDER BY media_id""")),
 
-    ("mm_frame_sample", (s, dir) => {
+    Entry("mm_frame_sample", (s, dir) => {
       // frame-sampling stub: 3 deterministic frame rows per video.
       val media = Multimodal.asMedia(T(s, dir, "documents").filter(col("doc_id") < 50),
         "doc_id", "text", "video", "source")
@@ -5368,7 +5367,7 @@ object QueriesDataOps {
       FROM documents, generate_series(0, 2, 1) AS g(i)
       WHERE doc_id < 50 ORDER BY media_id, frame_idx""")),
 
-    ("mm_resize", (s, dir) => {
+    Entry("mm_resize", (s, dir) => {
       // resize stage: fixed target dims + deterministic resized-content
       // hash, metadata-only (binary column pruned from the scan).
       val media = Multimodal.asMedia(T(s, dir, "documents"),
@@ -5380,9 +5379,9 @@ object QueriesDataOps {
     }, Some("""
       SELECT doc_id AS media_id, 224 AS resized_width, 224 AS resized_height,
              md5(md5(text) || ':224x224') AS resized_hash
-      FROM documents ORDER BY media_id""")),
+      FROM documents ORDER BY media_id"""), bench = false),
 
-    ("mm_decode_features", (s, dir) => {
+    Entry("mm_decode_features", (s, dir) => {
       // REAL decode: synthesize PNGs whose dims derive arithmetically from
       // doc_id, then javax.imageio-decode them in the batched map. The
       // oracle recomputes the dims without decoding — a broken decode
@@ -5401,7 +5400,7 @@ object QueriesDataOps {
              8 AS feature_dim
       FROM documents WHERE doc_id < 100 ORDER BY media_id""")),
 
-    ("mm_resize_real", (s, dir) => {
+    Entry("mm_resize_real", (s, dir) => {
       // REAL resize: synthetic PNGs (dims arithmetic in doc_id) pushed
       // through decode → Graphics2D bilinear scale → PNG re-encode in the
       // batched partition map; the emitted dims are RE-DECODED from the
@@ -5419,7 +5418,7 @@ object QueriesDataOps {
              CAST(12 AS INT) AS resized_height, TRUE AS has_payload
       FROM documents WHERE doc_id < 100 ORDER BY media_id""")),
 
-    ("mm_image_dhash", (s, dir) => {
+    Entry("mm_image_dhash", (s, dir) => {
       // perceptual near-dup hash through the REAL decode+resize path:
       // gradient harness images have analytically-known dHashes (all-1s
       // ascending, all-0s descending), so the oracle states the expected
@@ -5436,7 +5435,7 @@ object QueriesDataOps {
                   ELSE '0000000000000000' END AS dhash
       FROM documents WHERE doc_id < 100 ORDER BY media_id""")),
 
-    ("mm_image_neardup_clusters", (s, dir) => {
+    Entry("mm_image_neardup_clusters", (s, dir) => {
       // cross-modality composition: the REAL decode+resize dHash feeds
       // the dedup family's clustering — visually-identical images
       // (equal perceptual hash) become duplicate pairs, connected
@@ -5458,9 +5457,9 @@ object QueriesDataOps {
     }, Some("""
       SELECT doc_id AS id,
              CAST(doc_id % 2 AS BIGINT) AS comp
-      FROM documents WHERE doc_id < 100 ORDER BY id""")),
+      FROM documents WHERE doc_id < 100 ORDER BY id"""), bench = false),
 
-    ("mm_frame_decode", (s, dir) => {
+    Entry("mm_frame_decode", (s, dir) => {
       // REAL video demux: multi-frame GIFs built from arithmetic laws
       // (dims = f(doc_id), frame count = 2 + doc_id % 3, frame k a
       // constant gray (doc_id·31 + k·53) mod 256), demuxed with
@@ -5487,7 +5486,7 @@ object QueriesDataOps {
              round(CAST((doc_id * 31 + i * 53) % 256 AS DOUBLE), 6) AS mean_lum
       FROM f ORDER BY media_id, frame_idx""")),
 
-    ("mm_audio_dominant_freq", (s, dir) => {
+    Entry("mm_audio_dominant_freq", (s, dir) => {
       // REAL spectral analysis: WAV decode + radix-2 FFT, dominant
       // non-DC bin per payload. The synthetic tones sit at EXACT FFT
       // bins (zero spectral leakage), so the oracle is the bin law as
@@ -5505,7 +5504,7 @@ object QueriesDataOps {
              CAST((3 + doc_id % 40) * 8000 AS DOUBLE) / 1024 AS peak_hz
       FROM documents WHERE doc_id < 200 ORDER BY media_id""")),
 
-    ("mm_audio_fingerprint", (s, dir) => {
+    Entry("mm_audio_fingerprint", (s, dir) => {
       // acoustic-fingerprint dedup over REAL decode + per-window FFT:
       // the ordered dominant-bin sequence is the landmark signature;
       // audios sharing it group with one equi-shuffle, no waveform
@@ -5539,7 +5538,7 @@ object QueriesDataOps {
              count(*) OVER (PARTITION BY sig) AS n_members
       FROM sigs ORDER BY media_id""")),
 
-    ("mm_avi_frame_decode", (s, dir) => {
+    Entry("mm_avi_frame_decode", (s, dir) => {
       // REAL MJPEG-AVI demux end-to-end: RIFF chunk walk + per-frame
       // JPEG decode through the magic-byte AutoVideoDemux dispatch.
       // Frame k of video id is (videoWidth(id)+k) × videoHeight(id) —
@@ -5562,7 +5561,7 @@ object QueriesDataOps {
              CAST(8 + (doc_id // 5) % 5 AS INT) AS frame_height
       FROM f ORDER BY media_id, frame_idx""")),
 
-    ("mm_mp4_frame_decode", (s, dir) => {
+    Entry("mm_mp4_frame_decode", (s, dir) => {
       // REAL MP4 (ISO-BMFF) demux end-to-end: box walk + sample-table
       // reconstruction (stsz sizes × stsc runs × stco chunk offsets)
       // + per-sample JPEG decode, through the magic-byte AutoVideoDemux
@@ -5585,7 +5584,7 @@ object QueriesDataOps {
              CAST(8 + (doc_id // 5) % 5 AS INT) AS frame_height
       FROM f ORDER BY media_id, frame_idx""")),
 
-    ("mm_mkv_frame_decode", (s, dir) => {
+    Entry("mm_mkv_frame_decode", (s, dir) => {
       // REAL Matroska/WebM demux end-to-end: EBML walk + Xiph-lace
       // reconstruction + per-frame JPEG decode, through the magic-byte
       // AutoVideoDemux dispatch. Same frame laws as mm_avi_frame_decode
@@ -5608,7 +5607,7 @@ object QueriesDataOps {
              CAST(8 + (doc_id // 5) % 5 AS INT) AS frame_height
       FROM f ORDER BY media_id, frame_idx""")),
 
-    ("mm_exif_metadata", (s, dir) => {
+    Entry("mm_exif_metadata", (s, dir) => {
       // REAL EXIF extraction: JPEG marker scan → APP1 → TIFF IFD walk
       // (both byte orders — even ids II, odd ids MM), Make/Model/
       // Orientation from IFD0, DateTimeOriginal through the Exif-IFD
@@ -5631,7 +5630,7 @@ object QueriesDataOps {
                AS exif_datetime
       FROM documents WHERE doc_id < 200 ORDER BY media_id""")),
 
-    ("mm_exif_orient_norm", (s, dir) => {
+    Entry("mm_exif_orient_norm", (s, dir) => {
       // EXIF-driven orientation normalization end-to-end: metadata walk
       // → decode → exact pixel remap (8 EXIF cases) → re-encode, dims
       // RE-DECODED from the output payload. Orientations 5-8 transpose
@@ -5654,7 +5653,7 @@ object QueriesDataOps {
                        ELSE 8 + (doc_id // 9) % 9 END AS INT) AS norm_height
       FROM documents WHERE doc_id < 200 ORDER BY media_id""")),
 
-    ("mm_video_neardup", (s, dir) => {
+    Entry("mm_video_neardup", (s, dir) => {
       // video NEAR-dup via per-frame perceptual hashes: demux (real GIF),
       // dHash each frame, build a per-video signature over the ORDERED
       // frame-hash sequence, bucket videos on it — one equi-shuffle, no
@@ -5689,7 +5688,7 @@ object QueriesDataOps {
              count(*) OVER (PARTITION BY sig) AS n_members
       FROM sigs ORDER BY media_id""")),
 
-    ("mm_scene_cut", (s, dir) => {
+    Entry("mm_scene_cut", (s, dir) => {
       // shot-boundary detection over REAL GIF decode: consecutive-frame
       // dHash Hamming distance (codegen'd conv/xor/bit_count halves),
       // cut at ≥16 bits. Shot videos hold the ramp direction for
@@ -5708,7 +5707,7 @@ object QueriesDataOps {
              (k % 3 = 0) AS is_cut
       FROM f ORDER BY media_id, frame_idx""")),
 
-    ("mm_audio_features", (s, dir) => {
+    Entry("mm_audio_features", (s, dir) => {
       // REAL audio: WAVs built from the amplitude law (window k of doc id
       // holds constant sample (id·7919 + k·104729) mod 32768), decoded
       // with javax.sound.sampled in the batched map; per-window RMS of a

@@ -15,7 +15,6 @@ import graft.operators.{CrawlFrontier, WebGraph}
   * IDENTICAL law — the redirect walk as a bounded recursive CTE, the
   * regex chains verbatim — in DuckDB SQL. */
 object QueriesWeb {
-  import Queries.Q
 
   private def T(s: SparkSession, dir: String, n: String): DataFrame =
     Tables.load(s, dir, n)
@@ -160,9 +159,9 @@ object QueriesWeb {
            LEFT JOIN c$k ON c$k.dst = nodes.id)"""
   }
 
-  val web: Seq[(String, Q, Option[String])] = Seq(
+  val web: Seq[Entry] = Seq(
 
-    ("web_redirects", (s, dir) => {
+    Entry("web_redirects", (s, dir) => {
       // redirect-chain resolution by pointer doubling — 2-hop chains,
       // 1-hop redirects, self-loops, mutual 2-cycles and a dup-src
       // min(dst) collapse, resolved in 3 doubling rounds (hop budget
@@ -180,7 +179,7 @@ object QueriesWeb {
       FROM m LEFT JOIN term ON term.u = m.u
       ORDER BY url""")),
 
-    ("web_canonical", (s, dir) => {
+    Entry("web_canonical", (s, dir) => {
       // rel=canonical extraction (RFC 6596): absolute / root-relative
       // / page-relative / protocol-relative hrefs in all three quote
       // styles and both attribute orders, mixed-case tag and rel
@@ -299,7 +298,7 @@ object QueriesWeb {
                   ELSE '' END AS canonical
       FROM ctx ORDER BY doc_id""")),
 
-    ("web_contract", (s, dir) => {
+    Entry("web_contract", (s, dir) => {
       // link-graph contraction through the resolved redirect mapping:
       // the synthetic 2-outlink graph rewritten so every endpoint is
       // its chain's terminal, parallel contracted edges summed into
@@ -342,7 +341,7 @@ object QueriesWeb {
       FROM rw WHERE src <> dst
       GROUP BY src, dst ORDER BY src, dst""")),
 
-    ("web_host_graph", (s, dir) => {
+    Entry("web_host_graph", (s, dir) => {
       // page graph → registered-domain graph: cross-domain page edges
       // collapse onto (domain, domain) with weights, intra-domain
       // edges (site navigation) drop, unparseable endpoints drop, and
@@ -393,7 +392,7 @@ object QueriesWeb {
       WHERE length(src) > 0 AND length(dst) > 0 AND src <> dst
       GROUP BY src, dst ORDER BY src, dst""")),
 
-    ("web_host_weights", (s, dir) => {
+    Entry("web_host_weights", (s, dir) => {
       // weight propagation through COMPOSED graph collapses: pages
       // with '-alt' spellings contract onto their base page (parallel
       // edges summing into weight), then the host graph SUMS those
@@ -440,7 +439,7 @@ object QueriesWeb {
       WHERE length(sh) > 0 AND length(dh) > 0 AND sh <> dh
       GROUP BY sh, dh ORDER BY src, dst""")),
 
-    ("web_trustrank", (s, dir) => {
+    Entry("web_trustrank", (s, dir) => {
       // TrustRank (Gyöngyi et al. 2004) over the web_pagerank graph
       // with every 11th node a trusted seed: 3 iterations of
       // t = (1-d)·v + d·(Aᵀt + mass·v) where v is uniform over seeds
@@ -492,7 +491,7 @@ object QueriesWeb {
       FROM nodes JOIN t3 ON t3.id = nodes.id
       ORDER BY nodes.id""")),
 
-    ("crawl_traps", (s, dir) => {
+    Entry("crawl_traps", (s, dir) => {
       // crawler-trap detection: a calendar family (84 distinct URLs,
       // one template), a hex-object family and a session-style query
       // family blow past the per-template fanout cap while 40 small
@@ -538,7 +537,7 @@ object QueriesWeb {
       HAVING count(DISTINCT url) > 50
       ORDER BY host, template""")),
 
-    ("crawl_trap_gate", (s, dir) => {
+    Entry("crawl_trap_gate", (s, dir) => {
       // the admission gate: templates flagged over the SEEN URL set
       // drop matching DISCOVERED URLs (a different calendar year
       // still matches the trap's template — that is the point), while
@@ -610,7 +609,7 @@ object QueriesWeb {
       WHERE f.template IS NULL
       ORDER BY dt.url""")),
 
-    ("web_mirrors", (s, dir) => {
+    Entry("web_mirrors", (s, dir) => {
       // mirror-site detection — two mirror pairs at 80% and 70%
       // fingerprint overlap (both flag), a 10%-overlap pair and a
       // no-overlap solo host (both stay silent), and a boilerplate
@@ -701,7 +700,7 @@ object QueriesWeb {
       FROM j WHERE shared >= 2 AND jac >= 0.5
       ORDER BY host_a, host_b""")),
 
-    ("text_dot_segments", (s, dir) => {
+    Entry("text_dot_segments", (s, dir) => {
       // RFC 3986 remove_dot_segments — the canonicalization stage
       // normalizeUrl documents away: ./ and nested ../ collapse,
       // above-root ../ absorbs at the origin, a trailing /.. keeps
@@ -741,7 +740,7 @@ object QueriesWeb {
       SELECT doc_id, url, ${dotSegSql("url")} AS normalized
       FROM x ORDER BY doc_id""")),
 
-    ("text_soft404", (s, dir) => {
+    Entry("text_soft404", (s, dir) => {
       // soft-404 detection over stripped page text: short error shells
       // in the standard phrase family flag, a LONG page quoting '404'
       // does not (content, not an error), a short page with no error
@@ -829,7 +828,7 @@ object QueriesWeb {
              CAST(length(text) AS INT) AS n_chars
       FROM t ORDER BY doc_id""")),
 
-    ("web_redirect_ingest", (s, dir) => {
+    Entry("web_redirect_ingest", (s, dir) => {
       // the fetch→redirect glue END TO END from real shards: 301s
       // (chains, some landing on a 302 self-loop — unresolvable) and
       // 200s written with status + Location through toShardsRaw, read
@@ -887,7 +886,7 @@ object QueriesWeb {
       FROM m LEFT JOIN term ON term.u = m.u
       ORDER BY url""")),
 
-    ("web_nofollow", (s, dir) => {
+    Entry("web_nofollow", (s, dir) => {
       // the Robots Exclusion Protocol's page- and link-level layers:
       // <meta name=robots> in both attribute orders and quote styles
       // plus 'none' shorthand, an X-Robots-Tag header value, a DECOY
@@ -937,7 +936,7 @@ object QueriesWeb {
              CAST(2 AS INT) AS n_followed
       FROM documents ORDER BY doc_id""")),
 
-    ("web_anchor_bm25", (s, dir) => {
+    Entry("web_anchor_bm25", (s, dir) => {
       // anchor text as a RETRIEVAL field (the classic ranking signal:
       // inlink anchors describe the target better than its own
       // boilerplate): extract (target, anchor) pairs from every page,
@@ -1027,7 +1026,7 @@ object QueriesWeb {
       SELECT qid, nid, CAST(rank AS INT) AS rank, score FROM ranked
       WHERE rank <= 5 ORDER BY qid, rank""")),
 
-    ("web_mirror_dedup", (s, dir) => {
+    Entry("web_mirror_dedup", (s, dir) => {
       // the composed mirror gate: detect pairs over the web_mirrors
       // corpus, then drop the dominated hosts' documents — m2, m6 (the
       // flagged pairs' host_b) lose their pages, everything else
@@ -1098,7 +1097,7 @@ object QueriesWeb {
       SELECT host, count(*) AS n_docs
       FROM kept GROUP BY host ORDER BY host""")),
 
-    ("text_wet_roundtrip", (s, dir) => {
+    Entry("text_wet_roundtrip", (s, dir) => {
       // WET (the extracted-text derived format CommonCrawl ships next
       // to its WARCs): documents as `conversion` records in multi-
       // member gzip shards — warcinfo head, one member per record,
@@ -1123,7 +1122,7 @@ object QueriesWeb {
              CAST(strlen(text) AS BIGINT) AS n_bytes
       FROM documents ORDER BY target_uri""")),
 
-    ("crawl_archive_revisit", (s, dir) => {
+    Entry("crawl_archive_revisit", (s, dir) => {
       // WARC 1.1 revisit records (§6.7.2, identical-payload-digest):
       // the archive face of the recrawl law's "unchanged" verdict — a
       // second wave stores ~300 bytes of linkage per unchanged page
@@ -1187,7 +1186,7 @@ object QueriesWeb {
       FROM documents WHERE doc_id % 2 = 1
       ORDER BY url""")),
 
-    ("text_wat_extract", (s, dir) => {
+    Entry("text_wat_extract", (s, dir) => {
       // WAT (the metadata derived format): per-fetch JSON envelopes as
       // `metadata` records — the envelope built with to_json upstream
       // (the codec stays byte-level), shipped through the gzip shard
@@ -1234,7 +1233,7 @@ object QueriesWeb {
              CAST(status AS INT) AS status
       FROM m ORDER BY target_uri""")),
 
-    ("crawl_rescore", (s, dir) => {
+    Entry("crawl_rescore", (s, dir) => {
       // the loop closure: link-graph quality re-prioritizes the
       // frontier. A 7-host frontier with the usual priority spread
       // gets host scores for k ∈ {0,2,4} (k=6 scored zero, odd hosts
@@ -1292,7 +1291,7 @@ object QueriesWeb {
       FROM f LEFT JOIN hx ON hx.host = f.host
       ORDER BY f.url""")),
 
-    ("web_graph_e2e", (s, dir) => {
+    Entry("web_graph_e2e", (s, dir) => {
       // the crawl back half COMPOSED and hash-checked end to end:
       // redirect map (chains/cycles/dup srcs over 20 hosts) → pointer-
       // doubling resolution → link-graph contraction through the
@@ -1403,7 +1402,7 @@ object QueriesWeb {
       FROM nodes JOIN t2 ON t2.id = nodes.id
       ORDER BY host""")),
 
-    ("crawl_trap_stats", (s, dir) => {
+    Entry("crawl_trap_stats", (s, dir) => {
       // incrementally maintained trap stats: wave 1 (2026 calendar +
       // per-host /about/ pages) seeds the stats frame, wave 2 (2027
       // calendar — SAME template, so the counts SUM — plus a brand-new
@@ -1473,7 +1472,7 @@ object QueriesWeb {
       SELECT host, template, n_urls, n_urls > 100 AS is_trap
       FROM mg ORDER BY host, template""")),
 
-    ("text_charset_sniff", (s, dir) => {
+    Entry("text_charset_sniff", (s, dir) => {
       // charset sniffing + decode through the FULL byte path: bodies
       // ENCODED in utf-8 (BOM'd, with a LYING latin1 header the BOM
       // must outrank), windows-1252 (via the WHATWG iso-8859-1 alias
@@ -1555,7 +1554,7 @@ object QueriesWeb {
                        ELSE length(text) END AS BIGINT) AS n_bytes
       FROM t ORDER BY target_uri""")),
 
-    ("crawl_ingest_validators", (s, dir) => {
+    Entry("crawl_ingest_validators", (s, dir) => {
       // the capture→frontier VALIDATOR loop closed at ingest: a
       // fetcher records ETag/Last-Modified, the raw writer rides them
       // into the HTTP head, the decoded reader exposes both raw, and
@@ -1608,7 +1607,7 @@ object QueriesWeb {
                   ELSE NULL END AS last_modified_ts
       FROM x ORDER BY target_uri""")),
 
-    ("text_content_encoding", (s, dir) => {
+    Entry("text_content_encoding", (s, dir) => {
       // Content-Encoding decode through the FULL raw-capture path —
       // the content-coding analog of de-chunking (r16): raw captures
       // keep the wire bytes, and a gzip/deflate body left compressed

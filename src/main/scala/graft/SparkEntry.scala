@@ -2,23 +2,37 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** One registered query: `build` runs it on Spark over a scale-factor
+  * directory; `oracleSql` is the equivalent DuckDB SQL over the same
+  * parquet tables, None for a non-SQL-expressible op (mock inference,
+  * UDF splitter, stub decode) → rows-only check; `bench` puts it in
+  * Bench's timed book. */
+final case class Entry(name: String, build: Queries.Q,
+                       oracleSql: Option[String], bench: Boolean = true)
+
+/** The query registry — see SURVEY.md §7.
   *
-  * `queries` is the operator inventory of SURVEY.md §2 (+ the
-  * training-data-pipeline operators from BASELINE.json's north star), one
-  * driver-checkable query per operator; `oracleSql` holds the equivalent
-  * DuckDB SQL for every SQL-expressible one. Definitions live in
-  * Queries.scala (relational + RAG surface) and QueriesDataOps.scala
-  * (dedup / similarity / text / multimodal).
+  * `all` is the operator inventory of SURVEY.md §2 (+ the
+  * training-data-pipeline operators from BASELINE.json's north star) as
+  * one [[Entry]] per oracle-checkable query, each name registered once.
+  * `queries`, `oracleSql` and `benchQueries` derive from it, and Verify,
+  * Bench and Plans pick names through [[select]].
+  * Definitions live in Queries.scala (relational + RAG surface),
+  * QueriesDataOps.scala (dedup / curation / similarity / text /
+  * multimodal), QueriesCrawl.scala and QueriesWeb.scala.
   */
 object SparkEntry {
 
-  val all: Seq[(String, Queries.Q, Option[String])] =
-    Queries.relational ++ Queries.rag ++
+  val all: Seq[Entry] = {
+    val es = Queries.relational ++ Queries.rag ++
       QueriesDataOps.dedup ++ QueriesDataOps.curation ++
       QueriesDataOps.similarity ++
       QueriesDataOps.text ++ QueriesDataOps.multimodal ++
       QueriesCrawl.crawl ++ QueriesWeb.web
+    val dup = es.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(dup.isEmpty, s"query names registered twice: ${dup.mkString(",")}")
+    es
+  }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * Runs the reference's §3.1 coaching path end-to-end on deterministic
@@ -27,106 +41,28 @@ object SparkEntry {
     Queries.coachE2E(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    all.map(q => q._1 -> q._2).toMap
+  val queries: Map[String, Queries.Q] = all.map(e => e.name -> e.build).toMap
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops
-    * (mock inference, UDF splitter, stub decode) → rows-only check. */
-  def oracleSql: Map[String, String] =
-    all.collect { case (n, _, Some(sql)) => n -> sql.trim }.toMap
+  /** For each SQL-expressible key in queries, the DuckDB oracle SQL. */
+  val oracleSql: Map[String, String] =
+    all.flatMap(e => e.oracleSql.map(e.name -> _.trim)).toMap
 
-  /** Headline queries for Bench (sf0.1): the scale-sensitive operators —
+  /** Bench's book, in registry order: the scale-sensitive operators —
     * aggregation, joins, windows, chunking, Avro wire codec, hashing
     * dedup families, vector search paths, text/multimodal maps. */
-  val benchQueries: Seq[String] = Seq(
-    "q01_agg_summary", "q03_join_broadcast", "q04_join_multi",
-    "q05_semi_join", "q07_window_topk_group", "q10_sessionize",
-    "q10_sessionize_native", "q17_rolling_anomaly", "q18_resample_ffill",
-    "q19_rollup", "q20_pivot", "q21_unpivot", "q22_grouping_sets",
-    "q12_shipping_priority", "q13_asof_join", "q14_range_join",
-    "q16_percentiles_approx", "q23_scd2_history",
-    "rag_chunk_explode", "rag_splitter_udf", "rag_avro_roundtrip",
-    "avro_ocf_roundtrip",
-    "rag_vector_topk", "rag_vector_topk_indexed", "rag_grounding_score",
-    "dedup_exact", "dedup_fingerprint",
-    "dedup_minhash_lsh", "dedup_lsh_verified", "dedup_lsh_verified_capped",
-    "dedup_clusters",
-    "dedup_incremental", "dedup_incremental_bloom", "dedup_incremental_fuzzy",
-    "dedup_incremental_fuzzy_capped",
-    "dedup_simhash",
-    "dedup_simhash_hamming", "dedup_ngram_jaccard", "dedup_fuzzy_linkage",
-    "dedup_segments",
-    "dedup_span_detect", "dedup_span_removal",
-    "dedup_embedding_lsh", "dedup_semantic", "dedup_cluster_best",
-    "dedup_cluster_best_capped",
-    "curate_corpus",
-    "ann_topk_bruteforce", "ann_lsh_bucketed", "ann_lsh_multitable",
-    "ann_ivf_topk", "ann_ivf_train", "ann_ivf_sampled", "ann_ivf_imbalance",
-    "ann_quantized_topk", "ann_radius", "ann_hard_negatives", "ann_mmr_topk",
-    "ann_recall_report", "ann_pq_adc", "ann_pq_train",
-    "ann_opq_adc", "ann_ivfpq_adc", "ann_ivfpq_train", "ann_ivfpq_rerank",
-    "ann_ivfpq_index", "ann_index_sync",
-    "ann_bm25_topk", "ann_hybrid_rrf", "ann_hamming_topk", "ann_jl_topk",
-    "ann_matryoshka_topk", "ann_maxsim_topk", "ann_maxsim_rerank",
-    "ann_filtered_topk", "emb_mean_pool", "emb_safetensors_roundtrip",
-    "emb_pca_project", "emb_dim_profile", "ann_ivfpq_opq_index",
-    "text_quality", "text_langid", "text_langid_nb", "text_langid_nb_inc",
-    "text_token_count", "text_winnowing",
-    "text_tfidf", "text_pii_redact", "text_repetition",
-    "text_unigram_surprisal", "text_bigram_surprisal", "text_char_entropy",
-    "text_mojibake", "text_gopher_rules", "text_ngram_repetition",
-    "text_bpe_pairs", "text_bpe_train", "text_bpe_tokenize",
-    "text_heavy_hitters", "text_normalize", "text_token_chunks",
-    "text_url_normalize", "text_domain_cap", "text_domain_psl",
-    "text_html_extract",
-    "text_html_blocks", "text_warc_roundtrip",
-    "web_outlinks", "web_pagerank", "web_robots", "web_anchor_text",
-    "web_hits",
-    "crawl_sitemap_parse", "crawl_sitemap_gz", "crawl_frontier_seed",
-    "crawl_select_batch",
-    "crawl_recrawl", "crawl_retry_after", "crawl_fetch_requests",
-    "crawl_reseed", "crawl_admit",
-    "crawl_admit_robots",
-    "crawl_robots_lifecycle", "crawl_e2e", "crawl_conditional_e2e",
-    "crawl_polite_batch", "crawl_redirects", "crawl_redirect_e2e",
-    "crawl_sitemap_fold", "crawl_sitemap_index", "crawl_polite_waves",
-    "crawl_discovery_e2e",
-    "web_redirects", "web_canonical", "web_contract", "web_host_graph",
-    "web_host_weights",
-    "web_trustrank", "crawl_traps", "crawl_trap_gate", "web_mirrors",
-    "text_charset_sniff", "text_content_encoding",
-    "crawl_ingest_validators", "crawl_rescore",
-    "web_graph_e2e",
-    "text_wet_roundtrip", "text_wat_extract", "crawl_archive_revisit",
-    "web_mirror_dedup",
-    "crawl_trap_stats", "crawl_compact", "crawl_archive_plan",
-    "web_anchor_bm25", "web_nofollow",
-    "web_redirect_ingest", "text_soft404", "text_dot_segments",
-    "text_readability",
-    "dedup_clusters_altstar",
-    "curate_sample", "curate_sample_k", "curate_weighted_sample",
-    "curate_decontaminate", "curate_decontaminate_fuzzy",
-    "curate_contamination_report", "curate_boilerplate", "curate_pack",
-    "curate_jsonl_roundtrip", "curate_epoch_mix", "curate_temperature_mix",
-    "curate_token_budget", "curate_snapshot_diff", "curate_apply_changelog",
-    "curate_cardinality_sketch",
-    "curate_split", "curate_shuffle_shard", "curate_shard_manifest", "curate_profile", "curate_length_buckets",
-    "curate_dsir_score",
-    "curate_quality_lr", "curate_incremental", "curate_prep_e2e",
-    "curate_web_e2e",
-    "curate_split_leakage_safe", "curate_split_leakage_safe_capped",
-    "curate_quality_deciles",
-    "mm_metadata", "mm_webdataset_roundtrip", "mm_tfrecord_roundtrip",
-    "mm_arrow_roundtrip",
-    "mm_frame_sample", "mm_frame_decode", "mm_avi_frame_decode",
-    "mm_mp4_frame_decode", "mm_mkv_frame_decode", "mm_video_neardup",
-    "mm_scene_cut",
-    // the real codecs (imageio decode, bilinear resize, WAV RMS, dHash)
-    // are exactly the per-row costs that dominate a multimodal scan at
-    // scale — benched so a codec regression shows in the book
-    "mm_decode_features", "mm_resize_real", "mm_audio_features",
-    "mm_audio_dominant_freq", "mm_audio_fingerprint", "mm_image_dhash",
-    "mm_exif_metadata",
-    "mm_exif_orient_norm")
+  val benchQueries: Seq[Entry] = all.filter(_.bench)
+
+  /** The entries of `pool` named by a comma list, in registry order; the
+    * whole pool when the list is absent. Refuses an empty list, and any
+    * name `pool` lacks by naming it, so a typo fails before any Spark
+    * job instead of silently selecting less. */
+  def select(only: Option[String], pool: Seq[Entry]): Seq[Entry] =
+    only.fold(pool) { list =>
+      val names = list.split(',').map(_.trim).filter(_.nonEmpty).toSet
+      require(names.nonEmpty, "the query list is set but empty")
+      val unknown = names -- pool.map(_.name)
+      require(unknown.isEmpty,
+        s"unknown queries: ${unknown.toSeq.sorted.mkString(",")}")
+      pool.filter(e => names(e.name))
+    }
 }

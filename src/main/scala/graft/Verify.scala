@@ -4,8 +4,17 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+
+  /** The entries a run dumps, by name: SPARK_GRAFT_VERIFY_ONLY=a,b
+    * restricts the dump to local iteration on a few operators (unset,
+    * the dump covers every registered query); an unknown name is
+    * refused before any Spark job. */
+  def selected(only: Option[String]): Seq[Entry] =
+    SparkEntry.select(only, SparkEntry.all).sortBy(_.name)
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    val entries = selected(sys.env.get("SPARK_GRAFT_VERIFY_ONLY"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = graft.core.Sessions.local(cpus, "graft-verify")
     new java.io.File(outDir).mkdirs()
@@ -22,16 +31,9 @@ object Verify {
     // A failed query must be LOUD: queries without an oracle are simply
     // absent from the driver's correctness report when they crash, so a
     // swallowed exception reads as "not checked" instead of "broken".
-    // SPARK_GRAFT_VERIFY_ONLY=a,b restricts the dump — local iteration
-    // on one operator without the 100+-query full pass (the driver
-    // leaves it unset, so the gate still covers everything)
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val failed = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .flatMap { case (name, fn) =>
+    val failed = entries.flatMap { case Entry(name, build, _, _) =>
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        build(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         None
       } catch { case e: Throwable =>
@@ -47,18 +49,7 @@ object Verify {
     if (failed.nonEmpty)
       System.err.println(s"[verify] ${failed.size} queries failed: " +
         failed.mkString(", "))
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    def q(s: String) = "\"" + graft.io.JsonText.escape(s) + "\""
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -161,7 +161,8 @@ object Hashing {
   // tokens; the mask is a pure function of the token (deterministic
   // across rows/tasks/retries), so memoizing it per executor thread is
   // semantics-free (guide §4.5 per-task state). Bounded: cleared when
-  // it reaches 64k entries.
+  // it reaches 64k entries, never otherwise — so each executor thread
+  // keeps up to 64k tokens (and their masks) for its whole lifetime.
   private val TokenMask = new ThreadLocal[java.util.HashMap[String, Integer]] {
     override def initialValue(): java.util.HashMap[String, Integer] =
       new java.util.HashMap[String, Integer](1 << 14)

@@ -677,7 +677,12 @@ object Dedup {
     * Plan: explode distinct shingles, self-equi-join on (block, shingle)
     * → |A∩B| per pair via groupBy, then |A∪B| = |A|+|B|-|A∩B| from
     * per-doc shingle counts (broadcastable side agg). Shuffles: shingle
-    * join + pair groupBy — both on high-cardinality keys. */
+    * join + pair groupBy — both on high-cardinality keys.
+    *
+    * Contract: `idCol` is unique per row (one row per document); it is
+    * not checked. An id on r rows fans out: each pair it is in is
+    * emitted r times, each against one row's shingle count, while the
+    * intersection sums the shingles of all r rows. */
   def ngramJaccardPairs(df: DataFrame, textCol: String, idCol: String,
                         blockCol: String, shingleN: Int = 3,
                         threshold: Double = 0.8): DataFrame = {

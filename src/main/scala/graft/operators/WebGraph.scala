@@ -515,7 +515,9 @@ object WebGraph {
     * Same distributed shape as [[pageRank]] (the shared
     * [[iterateRank]] loop). Seeds not in `nodes` are ignored; empty
     * effective seed set refuses loudly (the teleport vector would be
-    * all-zero). Returns (id, trustrank). */
+    * all-zero). The refusal reads the seed count the init job computes,
+    * so it fires only after that job — two joins and a checkpoint over
+    * every node — has run. Returns (id, trustrank). */
   def trustRank(nodes: DataFrame, edges: DataFrame, seeds: DataFrame,
                 iters: Int = 3, d: Double = 0.85,
                 idCol: String = "id", srcCol: String = "src",

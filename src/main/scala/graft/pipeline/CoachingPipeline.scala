@@ -126,24 +126,12 @@ final class CoachingPipeline(embedder: EmbeddingProvider, chat: ChatProvider,
     * Same output contract as [[retrieve]]: exactly-k ARRAY<STRUCT<
     * document_id, chunks>> with NULL tail entries for <k hits. */
   def retrieveJoin(embedded: DataFrame, index: DataFrame): DataFrame = {
-    val q = embedded.withColumn("__qid",
-      md5(concat_ws("\u0000", col("message"), col("speaker"))))
-    val queries = q.select(col("__qid"), col("embedding").as("__qvec")).distinct()
-    // chunk-unique neighbor id: document_id alone repeats across chunks;
-    // vector columns renamed apart — the cross join would otherwise see
-    // two ambiguous `embedding` attributes
-    val corpus = index.select(
-      md5(concat_ws("\u0000", col("document_id"), col("chunks"))).as("__nid"),
-      col("document_id"), col("chunks"), col("embedding").as("__nvec"))
-    val topk = graft.functions.VectorOps.bruteForceTopK(
-        queries, corpus.select("__nid", "__nvec"), k,
-        "__qid", "__qvec", "__nid", "__nvec")
-      .join(corpus.select("__nid", "document_id", "chunks"), "__nid")
-    val entries = topk.groupBy(col("__qid"))
-      .agg(array_sort(collect_list(struct(
-        col("rank"), col("document_id"), col("chunks")))).as("hits"))
-    q.join(entries, Seq("__qid"), "left")
-      .select(col("message"), col("speaker"), ragSlots(col("hits")))
+    val corpus = chunkCorpus(index)
+    joinHits(embedded)(queries =>
+      graft.functions.VectorOps.bruteForceTopK(
+          queries, corpus.select("__nid", "__nvec"), k,
+          "qid", "qvec", "__nid", "__nvec")
+        .join(corpus.select("__nid", "document_id", "chunks"), "__nid"))
   }
 
   /** Diversified retrieval: [[retrieveJoin]]'s contract with the top-k
@@ -157,21 +145,41 @@ final class CoachingPipeline(embedder: EmbeddingProvider, chat: ChatProvider,
     * the diversified order in the prompt. */
   def retrieveJoinDiverse(embedded: DataFrame, index: DataFrame,
                           lambda: Double = 0.7, candN: Int = 8): DataFrame = {
+    val corpus = chunkCorpus(index)
+    joinHits(embedded)(queries =>
+      graft.operators.SimilaritySearch.mmrTopK(
+          queries, corpus.select("__nid", "__nvec"), k, lambda, candN,
+          "qid", "qvec", "__nid", "__nvec")
+        .withColumnRenamed("nid", "__nid")
+        .join(corpus.select("__nid", "document_id", "chunks"), "__nid"))
+  }
+
+  /** The index as (chunk-unique `__nid`, document_id, chunks, `__nvec`):
+    * document_id alone repeats across chunks, and the vector column is
+    * renamed apart — the cross join would otherwise see two ambiguous
+    * `embedding` attributes. */
+  private def chunkCorpus(index: DataFrame): DataFrame = index.select(
+    md5(concat_ws("\u0000", col("document_id"), col("chunks"))).as("__nid"),
+    col("document_id"), col("chunks"), col("embedding").as("__nvec"))
+
+  /** The join-retrieval paths' shared assembly: `search` maps the
+    * distinct (qid, qvec) queries to (qid, rank, document_id, chunks) hit
+    * rows; each message row then left-joins its hits, in rank order, as
+    * exactly-k rag_results. The hits side is ≤ one row per distinct
+    * message — always the broadcast side. Without the hint the
+    * per-micro-batch planner has no stats for this derived frame
+    * (topic-decoded batch → aggregate) and can fall back to a sort-merge
+    * join, paying two shuffles per TRIGGER in streaming serving. */
+  private def joinHits(embedded: DataFrame)(
+      search: DataFrame => DataFrame): DataFrame = {
     val q = embedded.withColumn("__qid",
       md5(concat_ws("\u0000", col("message"), col("speaker"))))
-    val queries = q.select(col("__qid"), col("embedding").as("__qvec")).distinct()
-    val corpus = index.select(
-      md5(concat_ws("\u0000", col("document_id"), col("chunks"))).as("__nid"),
-      col("document_id"), col("chunks"), col("embedding").as("__nvec"))
-    val topk = graft.operators.SimilaritySearch.mmrTopK(
-        queries, corpus.select("__nid", "__nvec"), k, lambda, candN,
-        "__qid", "__qvec", "__nid", "__nvec")
-      .withColumnRenamed("qid", "__qid").withColumnRenamed("nid", "__nid")
-      .join(corpus.select("__nid", "document_id", "chunks"), "__nid")
-    val entries = topk.groupBy(col("__qid"))
+    val queries = q.select(col("__qid").as("qid"),
+      col("embedding").as("qvec")).distinct()
+    val entries = search(queries).groupBy(col("qid"))
       .agg(array_sort(collect_list(struct(
         col("rank"), col("document_id"), col("chunks")))).as("hits"))
-    q.join(entries, Seq("__qid"), "left")
+    q.join(broadcast(entries), q("__qid") === entries("qid"), "left")
       .select(col("message"), col("speaker"), ragSlots(col("hits")))
   }
 
@@ -191,23 +199,8 @@ final class CoachingPipeline(embedder: EmbeddingProvider, chat: ChatProvider,
     * is the coach querying the external Atlas index rather than
     * anything in-process (main.tf:649-669). */
   def retrieveIndexed(embedded: DataFrame,
-                      index: graft.store.IvfFlatIndexStore): DataFrame = {
-    val q = embedded.withColumn("__qid",
-      md5(concat_ws("\u0000", col("message"), col("speaker"))))
-    val queries = q.select(col("__qid").as("qid"),
-      col("embedding").as("qvec")).distinct()
-    val topk = index.searchBatch(queries, k, numCandidates)
-    val entries = topk.groupBy(col("qid"))
-      .agg(array_sort(collect_list(struct(
-        col("rank"), col("document_id"), col("chunks")))).as("hits"))
-    // entries is ≤ one row per distinct message in the batch — always
-    // the broadcast side. Without the hint the per-micro-batch planner
-    // has no stats for this derived frame (topic-decoded batch →
-    // aggregate) and can fall back to a sort-merge join, paying two
-    // shuffles per TRIGGER in streaming serving.
-    q.join(broadcast(entries), q("__qid") === entries("qid"), "left")
-      .select(col("message"), col("speaker"), ragSlots(col("hits")))
-  }
+                      index: graft.store.IvfFlatIndexStore): DataFrame =
+    joinHits(embedded)(index.searchBatch(_, k, numCandidates))
 
   /** Full chain served by the persisted index — the over-budget regime
     * of VectorStores.adaptive. */

@@ -100,18 +100,16 @@ final class MockEmbedder(override val dim: Int = 1536) extends EmbeddingProvider
 }
 
 /** Deterministic mock chat: emits the coaching-response contract JSON
-  * (FIXTURES.md §2), echoing the 3 retrieved doc ids/chunks parsed back
+  * (FIXTURES.md §2), echoing the k retrieved doc ids/chunks parsed back
   * out of the prompt — so an end-to-end run asserts prompt assembly. */
 final class MockChat extends ChatProvider {
+  import MockChat._
   private def esc(s: String): String = graft.io.JsonText.escape(s)
 
   override def completeBatch(prompts: Seq[String], systemPrompt: String): Seq[String] =
     prompts.map { p =>
-      // prompt shape is buildCoachingPrompt's: "Document N: <id>\n<chunks>"
-      val docRe = "(?s)Document (\\d): ([^\n]*)\n(.*?)(?=\n\nDocument |$)".r
-      val docs = docRe.findAllMatchIn(p).toSeq.take(3)
-      val msg = "## PROSPECT MESSAGE: ([^\n]*)".r.findFirstMatchIn(p)
-        .map(_.group(1)).getOrElse("")
+      val docs = DocRe.findAllMatchIn(p).toSeq
+      val msg = MsgRe.findFirstMatchIn(p).map(_.group(1)).getOrElse("")
       val sources = docs.map { m =>
         val id = m.group(2)
         val title = id.split('/').lastOption.getOrElse(id)
@@ -129,6 +127,12 @@ final class MockChat extends ChatProvider {
 }
 ```"""
     }
+}
+
+private object MockChat {
+  // prompt shape is buildCoachingPrompt's: "Document N: <id>\n<chunks>"
+  private val DocRe = "(?s)Document (\\d+): ([^\n]*)\n(.*?)(?=\n\nDocument |$)".r
+  private val MsgRe = "## PROSPECT MESSAGE: ([^\n]*)".r
 }
 
 /** Azure OpenAI providers (public REST API shape). Not exercised in this

@@ -46,17 +46,30 @@ class MockChatSpec extends SparkSpec {
       "Document 2: cases/case.md\nchunk two\n\n" +
       "Document 3: specs/spec.md\nchunk three"
 
+  /** buildCoachingPrompt's prompt at `k` slots: document i is
+    * `dir<i>/doc<i>.md` with chunk `chunk <i>`. */
+  private def coachingPrompt(k: Int): String =
+    Seq(("pricing concern",
+      (1 to k).map(i => (s"dir$i/doc$i.md", s"chunk $i"))))
+      .toDF("message", "rag")
+      .select(Coaching.buildCoachingPrompt(col("message"),
+        col("rag").cast("array<struct<document_id:string,chunks:string>>"),
+        slots = k))
+      .as[String].head()
+
   test("mock chat output satisfies the coaching JSON contract after repair") {
-    val raw = new MockChat().completeBatch(Seq(prompt), "sys").head
-    val parsed = Seq(raw).toDF("raw")
+    val parse = (raw: String) => Seq(raw).toDF("raw")
       .select(Coaching.parseCoaching(col("raw")).as("p"))
       .select(col("p.suggested_response"), col("p.reasoning"),
         org.apache.spark.sql.functions.size(col("p.sources")).as("n"),
         element_at(col("p.sources"), 1)("document_id"),
         element_at(col("p.sources"), 1)("title"),
         element_at(col("p.sources"), 1)("path"),
-        element_at(col("p.sources"), 3)("document_id"))
+        element_at(col("p.sources"), -1)("document_id"),
+        element_at(col("p.sources"), -1)("document_index"),
+        element_at(col("p.sources"), -1)("full_text"))
       .collect().head
+    val parsed = parse(new MockChat().completeBatch(Seq(prompt), "sys").head)
     parsed.getString(0) should include("pricing concern")
     parsed.getString(1) should not be empty
     parsed.getInt(2) shouldBe 3
@@ -66,6 +79,17 @@ class MockChatSpec extends SparkSpec {
     parsed.getString(4) shouldBe "pricing.md"
     parsed.getString(5) shouldBe "playbooks/"
     parsed.getString(6) shouldBe "specs/spec.md"
+    // every one of the k documents the prompt carries, two-digit
+    // indices included
+    for (k <- Seq(5, 12)) withClue(s"k = $k: ") {
+      val p = parse(new MockChat().completeBatch(Seq(coachingPrompt(k)), "s").head)
+      p.getString(0) should include("pricing concern")
+      p.getInt(2) shouldBe k
+      p.getString(3) shouldBe "dir1/doc1.md"
+      p.getString(6) shouldBe s"dir$k/doc$k.md"
+      p.getInt(7) shouldBe k
+      p.getString(8) shouldBe s"chunk $k"
+    }
   }
 
   test("mock chat is deterministic") {
