@@ -10,8 +10,11 @@ import org.apache.spark.sql.functions.struct
   * same job computes the round's driver scalars (a norm, a leaked mass,
   * a changed-label or edge count) as `observe` metrics, so none costs a
   * job of its own. Loops [[release]] round k−1 once round k is
-  * materialized. On a cluster, executor loss fails a local checkpoint
-  * instead of recomputing it. */
+  * materialized. The knowledge-base freshness path uses the same step
+  * for its one materialization per stage: the snapshot sink's batch
+  * (with its touched buckets), the sync pull's changelog (with its
+  * delete/upsert counts) and the upsert's embedded batch. On a cluster,
+  * executor loss fails a local checkpoint instead of recomputing it. */
 private[graft] object Checkpoint {
 
   /** Materialize `df` in ONE eager local-checkpoint job that also

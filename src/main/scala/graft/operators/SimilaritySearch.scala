@@ -1672,7 +1672,17 @@ object SimilaritySearch {
     * survives. Sequence numbers must be >= 0 and monotone per key
     * across calls (the CDC changelog contract); a DELETE is a
     * tombstone at the delete's own seq — see
-    * [[graft.streaming.IndexSync]] for the composed consumer. */
+    * [[graft.streaming.IndexSync]] for the composed consumer.
+    *
+    * Cost per call: the embedded, cell-assigned batch is materialized
+    * ONCE ([[Checkpoint]]) and feeds the old-version tombstones, the
+    * payload append and the cellstats bump — so an embedding stage
+    * inside `batch` (a model call per row) runs once per row, not once
+    * per consumer, and the seq refusal fires before anything is
+    * written. Jobs: that checkpoint, the tombstone append (when
+    * `tombstoneOld`), the payload append, and the bump's count and
+    * rewrite. On a cluster, executor loss fails the call instead of
+    * recomputing the batch; the CDC apply is replayed at-least-once. */
   def upsertIvfFlatBatch(batch: DataFrame, path: String,
                          cId: String = "vec_id", cVec: String = "embedding",
                          cSeq: String = "seq",
@@ -1680,32 +1690,34 @@ object SimilaritySearch {
                          tombstoneOld: Boolean = true): Unit = {
     val spark = batch.sparkSession
     val cents = centroidsOf(spark, path)
-    // the seq contract (>= 0, never null) is enforced per row: a NULL
-    // seq would write a null-seq tombstone and a null-version row,
-    // which the mask rule never orders — the key would serve or vanish
-    // by accident. Loud beats that.
-    val vSeq = {
-      val s = col(cSeq).cast("long")
-      when(s.isNotNull && s >= 0L, s).otherwise(raise_error(lit(
-        "upsertIvfFlatBatch: change seq must be a non-negative long " +
-          "(a null seq masks the key's own new version forever)")))
-    }
-    // tombstones first (see ordering note above); skipped for batches
-    // the caller KNOWS are new keys (bootstrap): an empty index has no
-    // older versions to mask, and a corpus-sized bootstrap would
-    // otherwise leave one tombstone per document for every later
-    // search to aggregate and broadcast
-    if (tombstoneOld)
-      batch.select(col(cId).cast("string").as("nid"),
-          (vSeq - 1L).as("seq"))
-        .write.mode("append").parquet(s"$path/tombstones")
-    val assigned = ivfAssign(batch, cents, cVec)
+    val (assigned, _) = Checkpoint(ivfAssign(batch, cents, cVec)
       .select(Seq(col(cId).cast("string").as("nid"), col(cVec).as("nvec"),
-        col("cluster"), vSeq.as("__useq")) ++
-        payloadCols.map(col): _*)
-    payloadWriter(assigned).mode("append").partitionBy("cluster")
-      .parquet(s"$path/payload")
-    bumpCellstats(spark, path, assigned)
+        col("cluster"), changeSeq(col(cSeq)).as("__useq")) ++
+        payloadCols.map(col): _*))
+    try {
+      // tombstones first (see ordering note above); skipped for batches
+      // the caller KNOWS are new keys (bootstrap): an empty index has no
+      // older versions to mask, and a corpus-sized bootstrap would
+      // otherwise leave one tombstone per document for every later
+      // search to aggregate and broadcast
+      if (tombstoneOld)
+        assigned.select(col("nid"), (col("__useq") - 1L).as("seq"))
+          .write.mode("append").parquet(s"$path/tombstones")
+      payloadWriter(assigned).mode("append").partitionBy("cluster")
+        .parquet(s"$path/payload")
+      bumpCellstats(spark, path, assigned)
+    } finally Checkpoint.release(assigned)
+  }
+
+  /** A change seq as the index versions it: a long, refused by name
+    * when null or negative. A NULL seq would write a null-seq tombstone
+    * and a null-version row, which the mask rule never orders — the key
+    * would serve or vanish by accident. Loud beats that. */
+  private[graft] def changeSeq(seq: Column): Column = {
+    val s = seq.cast("long")
+    when(s.isNotNull && s >= 0L, s).otherwise(raise_error(lit(
+      "upsertIvfFlatBatch: change seq must be a non-negative long " +
+        "(a null seq masks the key's own new version forever)")))
   }
 
   /** Append VERSIONED tombstones (nid, seq) — the delete half of the

@@ -218,13 +218,13 @@ final class IvfFlatIndexStore(spark: SparkSession, path: String,
     spark.read.parquet(s"$path/centroids")
       .orderBy(col("cid")).select(col("vec")).collect()
       .map(_.getSeq[Float](0).toSeq).toSeq
+  // (re)loaded through the index's shared stat-guarded cellstats cache,
+  // which a same-process writer's cellstats bump re-stamps: on
+  // local/HDFS the reload after a pull's refreshStats runs no job
   @volatile private var statsCache: Seq[Long] = null
   private def cellSizes: Seq[Long] = {
-    if (statsCache == null) {
-      import spark.implicits._
-      statsCache = spark.read.parquet(s"$path/cellstats")
-        .select(col("count")).as[Long].collect().toSeq
-    }
+    if (statsCache == null) statsCache = graft.operators.SimilaritySearch
+      .cellCountsOf(spark, path).toSeq.sortBy(_._1).map(_._2)
     statsCache
   }
   // OPT-IN payload-frame pin: building a parquet DataFrame lists files

@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.{Checkpoint, SimilaritySearch}
+
 /** Keep a persisted IVF-Flat vector index FRESH from a CDC snapshot
   * store — the reference pipeline's outer loop re-expressed over this
   * library's own stores: the reference upserts embedded knowledge into
@@ -18,11 +20,22 @@ import org.apache.spark.sql.functions._
   * rebuild): one sync reads ONLY the snapshot buckets whose manifest
   * version moved ([[StreamingOps.snapshotChangelog]]), embeds ONLY the
   * changed documents, and appends ONLY those rows + their version
-  * tombstones to the index ([[graft.operators.SimilaritySearch.upsertIvfFlatBatch]]) —
+  * tombstones to the index ([[SimilaritySearch.upsertIvfFlatBatch]]) —
   * a day of edits touching 0.1% of a 100 TB corpus costs 0.1% of an
   * embed pass and zero index rewrites. The index's weekly
   * `compactIvfFlatIndex` collapses the accumulated versions exactly
   * like the snapshot store's own compaction collapses tombstones.
+  *
+  * Cost per pull: the changelog is materialized ONCE (one checkpoint
+  * job that also counts its deletes and upserts, plus the changelog
+  * join's shuffle stages), all of its tombstones land in ONE append,
+  * and the upserts go through `upsertIvfFlatBatch`, which embeds each
+  * changed document exactly once. A 15-edit incremental pull over a
+  * 16-bucket store into an 8-cell index runs 9 Spark jobs and embeds
+  * its upserted docs once each; the bootstrap pull embeds each live
+  * doc once (IndexSyncSpec pins both). A window with nothing to write
+  * (deletes only, upserts only, or an empty changelog such as a
+  * rebucket's) skips the appends it does not need.
   */
 object IndexSync {
 
@@ -112,29 +125,40 @@ object IndexSync {
           spark, snapshotRoot, cursorPath).map {
         case (live, frame, commit) =>
           val idCol = frame.columns.head // changelogShape: id leads
-          // one pull feeds two consumers (upserts, deletes): persist,
-          // and release before returning (the antiJoinFuzzy lifecycle
-          // rule — this runs once per sync on a standing schedule)
-          val f = frame.persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          val isDelete = col("op") === "delete"
+          val isUpsert = col("op") === "upsert"
+          // ONE materialization of the pull: the changelog join runs once
+          // and its two counts ride the same job, so no probe job decides
+          // which writes run. Released before returning (the
+          // antiJoinFuzzy lifecycle rule — this runs once per sync on a
+          // standing schedule). On a cluster, executor loss fails the
+          // pull instead of recomputing it; the uncommitted window is
+          // replayed by the next pull.
+          val (f, counts) = Checkpoint(frame, count_if(isDelete),
+            count_if(isUpsert))
+          val (nDeletes, nUpserts) = (counts.getLong(0), counts.getLong(1))
           try {
             if (bootstrap) assertBootstrapSafe(spark, indexPath, f, idCol)
-            val deletes = f.filter(col("op") === "delete")
+            // ONE tombstone append, before the payload: deletes at their
+            // own seq and — incremental pulls only — each upserted key's
+            // older versions at seq-1 (a bad upsert seq is refused by
+            // name, before anything lands)
+            val tombs = (if (bootstrap) f.filter(isDelete) else f)
               .select(col(idCol).cast("string").as("nid"),
-                col("seq").cast("long").as("seq"))
-            if (deletes.limit(1).count() > 0)
-              graft.operators.SimilaritySearch.tombstoneIvfFlat(
-                spark, indexPath, deletes)
-            val upserts = f.filter(col("op") === "upsert")
-            if (upserts.limit(1).count() > 0)
-              graft.operators.SimilaritySearch.upsertIvfFlatBatch(
-                embed(upserts), indexPath, cId = idCol, cVec = vecCol,
-                cSeq = "seq", payloadCols = payloadCols,
-                tombstoneOld = !bootstrap)
+                when(isDelete, col("seq").cast("long"))
+                  .otherwise(SimilaritySearch.changeSeq(col("seq")) - 1L)
+                  .as("seq"))
+            if (nDeletes > 0 || (!bootstrap && nUpserts > 0))
+              SimilaritySearch.tombstoneIvfFlat(spark, indexPath, tombs)
+            if (nUpserts > 0)
+              SimilaritySearch.upsertIvfFlatBatch(
+                embed(f.filter(isUpsert)), indexPath, cId = idCol,
+                cVec = vecCol, cSeq = "seq", payloadCols = payloadCols,
+                tombstoneOld = false)
             commit()
             committed = true
             live
-          } finally f.unpersist()
+          } finally Checkpoint.release(f)
       }
       if (out.isEmpty) committed = true // nothing pulled, nothing torn
       out
@@ -299,21 +323,21 @@ object IndexSync {
     // files); a payload dir not created yet at all is the emptiest
     // shell of all
     val idx =
-      try graft.operators.SimilaritySearch.readPayload(spark, indexPath)
+      try SimilaritySearch.readPayload(spark, indexPath)
       catch { case _: org.apache.spark.sql.AnalysisException => return }
-    val served = graft.operators.SimilaritySearch.maskTombstones(
+    val served = SimilaritySearch.maskTombstones(
       spark, indexPath, idx)
     val cov = pull.select(col(idCol).cast("string").as("nid"),
       col("seq").cast("long").as("__pseq"))
-    // one 2-column scan feeds both the refusal probe and the backfill:
-    // persist, release before returning (bootstrap-only lifecycle)
-    val joined = served.select(col("nid"), col("__useq"))
-      .join(cov, Seq("nid"), "left")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val stale = col("__pseq").isNull || col("__useq") > col("__pseq")
+    val older = col("__useq") < col("__pseq")
+    // one 2-column scan, materialized once: the same job counts the
+    // refusal and the backfill, and the backfill reads the checkpoint
+    val (joined, counts) = Checkpoint(
+      served.select(col("nid"), col("__useq")).join(cov, Seq("nid"), "left"),
+      count_if(stale), count_if(older))
     try {
-      val stale = joined.filter(col("__pseq").isNull ||
-        col("__useq") > col("__pseq"))
-      if (stale.limit(1).count() > 0) throw new IllegalStateException(
+      if (counts.getLong(0) > 0) throw new IllegalStateException(
         s"syncIndexFromSnapshot: bootstrap pull (no cursor yet) into the " +
           s"NON-empty index at $indexPath found rows this store's live " +
           "state does not cover (keys absent from the store, or index " +
@@ -323,12 +347,11 @@ object IndexSync {
           "served STALE forever. Reset the index together with the " +
           "cursor: recreate the index shell (or tombstone+compact it " +
           "empty), then re-run the bootstrap.")
-      val backfill = joined.filter(col("__useq") < col("__pseq"))
-        .select(col("nid"), (col("__pseq") - 1L).as("seq")).distinct()
-      if (backfill.limit(1).count() > 0)
-        graft.operators.SimilaritySearch.tombstoneIvfFlat(
-          spark, indexPath, backfill)
-    } finally joined.unpersist()
+      if (counts.getLong(1) > 0)
+        SimilaritySearch.tombstoneIvfFlat(spark, indexPath,
+          joined.filter(older)
+            .select(col("nid"), (col("__pseq") - 1L).as("seq")).distinct())
+    } finally Checkpoint.release(joined)
   }
 
   /** Drain the store to its live snapshot: loop single pulls until

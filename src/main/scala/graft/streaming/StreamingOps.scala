@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 
+import graft.operators.Checkpoint
 import graft.pipeline.CoachingPipeline
 
 /** A conversation message with its event time — the typed record for the
@@ -426,6 +427,13 @@ object StreamingOps {
     * is the versioned window+join; the driver only lists touched
     * buckets (bounded by B) and swaps the pointer.
     *
+    * Cost per trigger: the batch is read ONCE — one checkpoint job
+    * yields its touched-bucket set (empty = nothing to do) and feeds the
+    * merge — then the publish runs its staging write. A 15-edit trigger
+    * into a 16-bucket store runs 4 Spark jobs (IndexSyncSpec pins it).
+    * The schema-evolution check runs on every batch, before that job,
+    * so a refused change raises even on an empty batch.
+    *
     * `numBuckets` sizes bucket dirs (target ≈ base/B per bucket; at
     * 100 TB pick B so a bucket is a few GB). It is FIXED at snapshot
     * creation — the stored value wins on every later batch, so a
@@ -444,116 +452,114 @@ object StreamingOps {
     changeStream.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch0: DataFrame, _: Long) =>
-        // persist FIRST, then test emptiness against the persisted
-        // blocks — an isEmpty probe before the persist is itself a scan,
-        // so a non-replayable source would be read twice (empty-test +
-        // merge), defeating the comment below
-        val batch = batch0.persist()
+        val spark = batch0.sparkSession
+        val fs = snapshotFs(spark, root)
+        val cur = currentSnapshotManifest(fs, root)
+        val b = cur.map(_.numBuckets).getOrElse(numBuckets)
+        // the batch's own layout shape (id, payload…, __seq,
+        // __deleted)
+        val batchSchema = org.apache.spark.sql.types.StructType(
+          (idCol +: payloadCols).map(c => batch0.schema(c)) ++ Seq(
+            org.apache.spark.sql.types.StructField("__seq",
+              batch0.schema(seqCol).dataType),
+            org.apache.spark.sql.types.StructField("__deleted",
+              org.apache.spark.sql.types.BooleanType)))
+        // SCHEMA EVOLUTION (add-only + safe promotions): the stored
+        // schema comes from the live manifest. Payload columns this
+        // sink streams that the store has never seen WIDEN the layout
+        // (existing rows read as null there); stored columns this
+        // sink does not stream are CARRIED, with upserted rows
+        // taking null (an upsert is a full-row replace — the
+        // applyChangelogVersioned explicit-null contract).
+        // Same-name columns resolve to the WIDER of the two types
+        // when one losslessly promotes to the other (integral
+        // byte→short→int→long, float→double, recursively through
+        // array elements): the manifest records the promoted type
+        // and every reader resolves old dirs under it — the
+        // parquet readers (vectorized and row-based) perform these
+        // widenings natively, so no dir rewrite happens. A batch
+        // NARROWER than the store just casts up. Any other type
+        // change is a rebuild, not evolution, and raises before
+        // anything is staged — including a promotion of the ID
+        // column: the bucket layout is keyed by hash(id), which is
+        // physical-type-sensitive (hash(1:int) ≠ hash(1L:long)),
+        // so an id-type change re-keys every bucket — a full
+        // republish by nature, offered as the one-call
+        // [[promoteSnapshotIdType]] maintenance op.
+        val widened = cur.map(_.schema) match {
+          case None => batchSchema
+          case Some(st) =>
+            require(st.head.name == idCol,
+              s"snapshotUpsertSink: the store at $root is keyed by " +
+                s"'${st.head.name}' but this sink is configured " +
+                s"with idCol '$idCol'")
+            val resolved: Map[String, org.apache.spark.sql.types.DataType] =
+              batchSchema.flatMap { f =>
+                st.find(_.name == f.name).map { old =>
+                  // nullableForm inside promotedType: containsNull/
+                  // nullability metadata varies by SOURCE (a
+                  // MemoryStream's Seq[Float] is containsNull=false,
+                  // the same column off parquet/Kafka is true) and
+                  // is not a type change
+                  val res = promotedType(old.dataType, f.dataType)
+                    .getOrElse(throw new IllegalArgumentException(
+                      s"snapshotUpsertSink: schema evolution is " +
+                        s"add-only — column '${f.name}' is " +
+                        s"${old.dataType.sql} in the store at $root " +
+                        s"but ${f.dataType.sql} in this sink's " +
+                        "stream, and neither losslessly promotes " +
+                        "to the other; a type change requires a " +
+                        "rebuild"))
+                  if (f.name == idCol &&
+                      res != nullableForm(old.dataType))
+                    throw new IllegalArgumentException(
+                      s"snapshotUpsertSink: the id column '$idCol' " +
+                        s"cannot promote in place " +
+                        s"(${old.dataType.sql} → ${f.dataType.sql}): " +
+                        "the bucket layout is keyed by hash(id), " +
+                        "which is physical-type-sensitive, so the " +
+                        "promotion re-keys every bucket. Run " +
+                        "StreamingOps.promoteSnapshotIdType(spark, " +
+                        s"root, ${f.dataType.sql}) once (a full " +
+                        "republish, like rebucketing), then restart " +
+                        "this sink.")
+                  f.name -> res
+                }
+              }.toMap
+            val newCols = batchSchema
+              .filterNot(f => st.fieldNames.contains(f.name))
+            org.apache.spark.sql.types.StructType(
+              st.filterNot(f => f.name == "__seq" ||
+                  f.name == "__deleted")
+                .map(f => f.copy(dataType =
+                  resolved.getOrElse(f.name, f.dataType))) ++
+              newCols ++ Seq(
+                st("__seq").copy(dataType =
+                  resolved.getOrElse("__seq", st("__seq").dataType)),
+                st("__deleted")))
+        }
+        val widenedPayload = widened.fieldNames.toSeq
+          .filterNot(n => n == idCol || n == "__seq" ||
+            n == "__deleted")
+        // touched buckets hash the batch ids CAST TO THE LAYOUT'S id
+        // type (after evolution resolution, which also raises on a
+        // refused change before the batch is read or anything staged):
+        // Murmur3 hash is physical-type-sensitive, so a batch whose id is
+        // narrower than the store's (int stream into a long-keyed store)
+        // would otherwise probe int-hash buckets while the merged rows
+        // partition by the long hash — staged buckets outside `touched`
+        // are never renamed in, silent loss. ONE materialization of the
+        // batch carries the touched set (bounded by B; empty = an empty
+        // batch) and feeds the merge, so a non-replayable source is read
+        // once. On a cluster, executor loss fails the trigger instead of
+        // recomputing the batch; the restarted query replays it
+        // (at-least-once, max-seq idempotent).
+        val (batch, buckets) = Checkpoint(batch0,
+          collect_set(snapshotBucket(
+            col(idCol).cast(widened.head.dataType), b)))
         try {
-          if (batch.limit(1).count() > 0) {
-            val spark = batch0.sparkSession
-            val fs = snapshotFs(spark, root)
-            val cur = currentSnapshotManifest(fs, root)
-            val b = cur.map(_.numBuckets).getOrElse(numBuckets)
-            // the batch's own layout shape (id, payload…, __seq,
-            // __deleted)
-            val batchSchema = org.apache.spark.sql.types.StructType(
-              (idCol +: payloadCols).map(c => batch.schema(c)) ++ Seq(
-                org.apache.spark.sql.types.StructField("__seq",
-                  batch.schema(seqCol).dataType),
-                org.apache.spark.sql.types.StructField("__deleted",
-                  org.apache.spark.sql.types.BooleanType)))
-            // SCHEMA EVOLUTION (add-only + safe promotions): the stored
-            // schema comes from the live manifest. Payload columns this
-            // sink streams that the store has never seen WIDEN the layout
-            // (existing rows read as null there); stored columns this
-            // sink does not stream are CARRIED, with upserted rows
-            // taking null (an upsert is a full-row replace — the
-            // applyChangelogVersioned explicit-null contract).
-            // Same-name columns resolve to the WIDER of the two types
-            // when one losslessly promotes to the other (integral
-            // byte→short→int→long, float→double, recursively through
-            // array elements): the manifest records the promoted type
-            // and every reader resolves old dirs under it — the
-            // parquet readers (vectorized and row-based) perform these
-            // widenings natively, so no dir rewrite happens. A batch
-            // NARROWER than the store just casts up. Any other type
-            // change is a rebuild, not evolution, and raises before
-            // anything is staged — including a promotion of the ID
-            // column: the bucket layout is keyed by hash(id), which is
-            // physical-type-sensitive (hash(1:int) ≠ hash(1L:long)),
-            // so an id-type change re-keys every bucket — a full
-            // republish by nature, offered as the one-call
-            // [[promoteSnapshotIdType]] maintenance op.
-            val widened = cur.map(_.schema) match {
-              case None => batchSchema
-              case Some(st) =>
-                require(st.head.name == idCol,
-                  s"snapshotUpsertSink: the store at $root is keyed by " +
-                    s"'${st.head.name}' but this sink is configured " +
-                    s"with idCol '$idCol'")
-                val resolved: Map[String, org.apache.spark.sql.types.DataType] =
-                  batchSchema.flatMap { f =>
-                    st.find(_.name == f.name).map { old =>
-                      // nullableForm inside promotedType: containsNull/
-                      // nullability metadata varies by SOURCE (a
-                      // MemoryStream's Seq[Float] is containsNull=false,
-                      // the same column off parquet/Kafka is true) and
-                      // is not a type change
-                      val res = promotedType(old.dataType, f.dataType)
-                        .getOrElse(throw new IllegalArgumentException(
-                          s"snapshotUpsertSink: schema evolution is " +
-                            s"add-only — column '${f.name}' is " +
-                            s"${old.dataType.sql} in the store at $root " +
-                            s"but ${f.dataType.sql} in this sink's " +
-                            "stream, and neither losslessly promotes " +
-                            "to the other; a type change requires a " +
-                            "rebuild"))
-                      if (f.name == idCol &&
-                          res != nullableForm(old.dataType))
-                        throw new IllegalArgumentException(
-                          s"snapshotUpsertSink: the id column '$idCol' " +
-                            s"cannot promote in place " +
-                            s"(${old.dataType.sql} → ${f.dataType.sql}): " +
-                            "the bucket layout is keyed by hash(id), " +
-                            "which is physical-type-sensitive, so the " +
-                            "promotion re-keys every bucket. Run " +
-                            "StreamingOps.promoteSnapshotIdType(spark, " +
-                            s"root, ${f.dataType.sql}) once (a full " +
-                            "republish, like rebucketing), then restart " +
-                            "this sink.")
-                      f.name -> res
-                    }
-                  }.toMap
-                val newCols = batchSchema
-                  .filterNot(f => st.fieldNames.contains(f.name))
-                org.apache.spark.sql.types.StructType(
-                  st.filterNot(f => f.name == "__seq" ||
-                      f.name == "__deleted")
-                    .map(f => f.copy(dataType =
-                      resolved.getOrElse(f.name, f.dataType))) ++
-                  newCols ++ Seq(
-                    st("__seq").copy(dataType =
-                      resolved.getOrElse("__seq", st("__seq").dataType)),
-                    st("__deleted")))
-            }
-            val widenedPayload = widened.fieldNames.toSeq
-              .filterNot(n => n == idCol || n == "__seq" ||
-                n == "__deleted")
-            // touched buckets hash the batch ids CAST TO THE LAYOUT'S
-            // id type (after evolution resolution, which also raises
-            // before this first action on a refused change): Murmur3
-            // hash is physical-type-sensitive, so a batch whose id is
-            // narrower than the store's (int stream into a long-keyed
-            // store) would otherwise probe int-hash buckets while the
-            // merged rows partition by the long hash — staged buckets
-            // outside `touched` are never renamed in, silent loss.
-            // The batch feeds three jobs (empty probe above + this
-            // probe + merge), all off the persisted blocks.
-            val touched = batch
-              .select(snapshotBucket(
-                col(idCol).cast(widened.head.dataType), b).as("__bucket"))
-              .distinct().collect().map(_.getInt(0)).toSet // bounded by B
+          val touched = buckets.getSeq[Int](0).toSet
+          if (touched.nonEmpty) {
             val basePaths = cur.toSeq.flatMap(m => touched.toSeq.sorted
               .flatMap(bk => m.buckets.get(bk).map(v => s"$root/b$bk/v$v")))
             // base aligned to the widened layout (new columns → typed
@@ -601,7 +607,7 @@ object StreamingOps {
             publishSnapshotVersion(spark, root, merged, idCol, touched,
               cur, b, keepVersions, widened, writerId)
           }
-        } finally batch.unpersist()
+        } finally Checkpoint.release(batch)
       }
   }
 

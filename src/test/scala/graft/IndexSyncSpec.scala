@@ -4,7 +4,11 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-import graft.operators.SimilaritySearch
+import scala.jdk.CollectionConverters._
+
+import graft.operators.{MlPredict, SimilaritySearch}
+import graft.providers.MockEmbedder
+import graft.store.IvfFlatIndexStore
 import graft.streaming.{IndexSync, StreamingOps}
 
 /** Versioned vector-index upsert (seq rows + seq tombstones) and the
@@ -710,4 +714,183 @@ class IndexSyncSpec extends SparkSpec {
     plan should include regex "PartitionFilters: \\[[^\\]]*cluster"
     (plan should not).include("BroadcastNestedLoop")
   }
+
+  // ——— the freshness path's cost: text documents through the sink, the
+  // pump and an embedding stage that counts what it is handed ———
+
+  /** A text knowledge base on the freshness path: a 16-bucket snapshot
+    * store fed by `snapshotUpsertSink`, an 8-cell IVF-Flat index shell,
+    * and a pump whose embed stage is a [[TextCountingEmbedder]]. */
+  private final class Kb(val base: String) {
+    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val root = s"$base/snap"; val cursor = s"$base/cursor"
+    val index = s"$base/index"
+    val payload = Seq("document_id", "chunks")
+    private val input = MemoryStream[(Long, Long, String, String, String)]
+    val sink = StreamingOps.snapshotUpsertSink(
+        input.toDF().toDF("doc_id", "seq", "op", "document_id", "chunks"),
+        root, payloadCols = payload, numBuckets = 16)
+      .option("checkpointLocation", s"$base/ckpt").start()
+    val cents: Seq[Seq[Float]] = (0 until 8).map(c =>
+      new MockEmbedder(Kb.dim).embed(s"centroid $c").toSeq)
+    SimilaritySearch.writeIvfFlatIndex(
+      Seq.empty[(String, Seq[Float], String, String)]
+        .toDF("nid", "embedding", "document_id", "chunks"),
+      cents, index, cId = "nid", cVec = "embedding", payloadCols = payload)
+    private var seq = 0L
+
+    /** One sink trigger over `edits` (doc, op, text; a delete's text is
+      * ignored). */
+    def publish(edits: Seq[(Long, String, String)]): Unit = {
+      input.addData(edits.map { case (d, op, text) =>
+        seq += 1
+        (d, seq, op, s"kb/doc-$d", if (op == "delete") null else text)
+      })
+      sink.processAllAvailable()
+    }
+    def pull(): Option[Long] = IndexSync.syncIndexFromSnapshot(spark, root,
+      cursor, index, df => MlPredict.withEmbedding(df,
+        new TextCountingEmbedder(Kb.dim), "chunks", "embedding"),
+      payloadCols = payload)
+    def cursorAt: Long = spark.read.textFile(cursor).collect().head.trim.toLong
+
+    /** The index serves what an index rebuilt from the store's live
+      * snapshot serves (exact regime, every live doc's own text queried). */
+    def assertParity(): Unit = {
+      val live = StreamingOps.readSnapshot(spark, root).get
+        .select(col("doc_id").cast("string").as("nid"), col("document_id"),
+          col("chunks"))
+      val rebuilt = s"$base/rebuilt-${java.util.UUID.randomUUID()}"
+      SimilaritySearch.writeIvfFlatIndex(MlPredict.withEmbedding(live,
+          new MockEmbedder(Kb.dim), "chunks", "embedding"),
+        cents, rebuilt, cId = "nid", cVec = "embedding", payloadCols = payload)
+      val q = MlPredict.withEmbedding(
+          live.select(col("nid").cast("long").as("vec_id"), col("chunks")),
+          new MockEmbedder(Kb.dim), "chunks", "embedding")
+        .select("vec_id", "embedding")
+      topk(index, q, k = 5) shouldBe topk(rebuilt, q, k = 5)
+    }
+
+    /** The parquet files under the index's tombstones/ and payload/ dirs. */
+    def files(): Set[String] = Seq("tombstones", "payload").flatMap { d =>
+      val dir = java.nio.file.Paths.get(index, d)
+      if (!java.nio.file.Files.exists(dir)) Nil
+      else {
+        val walk = java.nio.file.Files.walk(dir)
+        try walk.iterator().asScala.map(_.toString)
+          .filter(_.endsWith(".parquet")).toList
+        finally walk.close()
+      }
+    }.toSet
+  }
+  private object Kb {
+    val dim = 32
+    def text(d: Long, v: Int): String =
+      s"knowledge doc $d, revision $v: how to open a pricing call"
+  }
+  private def withKb(tag: String)(body: Kb => Unit): Unit = {
+    val kb = new Kb(tmp(tag))
+    try body(kb) finally kb.sink.stop()
+  }
+
+  test("the freshness path embeds each changed doc once; jobs per sink trigger and per pull are pinned") {
+    withKb("kb-cost") { kb =>
+      kb.publish((0L until 100L).map(d => (d, "upsert", Kb.text(d, 0))))
+      TextCountingEmbedder.texts.set(0)
+      val bootJobs = jobsDuring(kb.pull() shouldBe Some(0L))
+      // the bootstrap embeds every live doc once: the payload write and
+      // the cellstats bump read one materialized batch
+      TextCountingEmbedder.texts.get shouldBe 100L
+      // a 15-edit window: 12 updates, 2 deletes, 1 insert
+      val window = (0L until 12L).map(d => (d, "upsert", Kb.text(d, 1))) ++
+        Seq((50L, "delete", ""), (51L, "delete", ""),
+          (100L, "upsert", Kb.text(100L, 0)))
+      val sinkJobs = jobsDuring(kb.publish(window))
+      TextCountingEmbedder.texts.set(0)
+      val pullJobs = jobsDuring(kb.pull() shouldBe Some(1L))
+      // one embed per upserted doc, however many writes consume it
+      TextCountingEmbedder.texts.get shouldBe 13L
+      // shared 4-core test session. Sink trigger: one checkpoint job
+      // carries the emptiness test and the touched buckets, then the
+      // publish; pull: the changelog checkpoint, one tombstone append,
+      // then the upsert's own checkpoint, payload and cellstats. A probe
+      // job or a re-evaluated embed creeping back shows up here first.
+      (sinkJobs, pullJobs, bootJobs) shouldBe ((4, 9, 14))
+      kb.assertParity()
+    }
+  }
+
+  test("degenerate pull windows (deletes only, upserts only, empty) append no empty file and commit the cursor") {
+    withKb("kb-degenerate") { kb =>
+      kb.publish((0L until 40L).map(d => (d, "upsert", Kb.text(d, 0))))
+      kb.pull() shouldBe Some(0L)
+      /** Pull one window; the files it added, each with at least one row. */
+      def pullAdding(live: Long): Set[String] = {
+        val before = kb.files()
+        TextCountingEmbedder.texts.set(0)
+        kb.pull() shouldBe Some(live)
+        kb.cursorAt shouldBe live
+        val added = kb.files() -- before
+        added.foreach(f => withClue(f)(spark.read.parquet(f).count() should be > 0L))
+        kb.assertParity()
+        added
+      }
+      // deletes only: tombstones, no payload file, nothing embedded
+      kb.publish(Seq((3L, "delete", ""), (4L, "delete", "")))
+      val dels = pullAdding(1L)
+      dels should not be empty
+      all(dels) should include("/tombstones/")
+      TextCountingEmbedder.texts.get shouldBe 0L
+      // upserts only: old-version tombstones and payload rows
+      kb.publish((10L until 14L).map(d => (d, "upsert", Kb.text(d, 1))))
+      val ups = pullAdding(2L)
+      ups.exists(_.contains("/tombstones/")) shouldBe true
+      ups.exists(_.contains("/payload/")) shouldBe true
+      TextCountingEmbedder.texts.get shouldBe 4L
+      // an empty window: a rebucket publishes a snapshot whose changelog
+      // is empty — the pull commits it and writes nothing
+      StreamingOps.rebucketSnapshot(spark, kb.root, 32)
+      pullAdding(3L) shouldBe empty
+      TextCountingEmbedder.texts.get shouldBe 0L
+      kb.pull() shouldBe None
+    }
+  }
+
+  test("IvfFlatIndexStore reloads cellstats through the shared cache: no cellstats job after a pull") {
+    withKb("kb-cellstats") { kb =>
+      kb.publish((0L until 40L).map(d => (d, "upsert", Kb.text(d, 0))))
+      kb.pull() shouldBe Some(0L)
+      val store = new IvfFlatIndexStore(spark, kb.index)
+      val q = (0L until 5L).map(d =>
+          (d, new MockEmbedder(Kb.dim).embed(Kb.text(d, 1)).toSeq))
+        .toDF("qid", "qvec")
+      store.searchBatch(q, 3).collect()
+      kb.publish((0L until 5L).map(d => (d, "upsert", Kb.text(d, 1))))
+      kb.pull() shouldBe Some(1L)
+      // the pull's cellstats bump re-stamped the shared cache, so the
+      // reload after refreshStats reads it instead of running a job: the
+      // first search after the pull costs what a warm one does
+      store.refreshStats()
+      val first = jobsDuring(store.searchBatch(q, 3).collect())
+      jobsDuring(store.searchBatch(q, 3).collect()) shouldBe first
+      val hits = store.searchBatch(q, 3)
+      hits.filter(col("rank") === 1).select(col("qid"), col("nid"))
+        .as[(Long, String)].collect().sorted shouldBe
+        (0L until 5L).map(d => (d, d.toString))
+    }
+  }
+}
+
+/** A [[MockEmbedder]] that counts the texts it embeds, process-wide
+  * (local-mode tasks run in the test JVM, so a static counter sees every
+  * task's calls). */
+final class TextCountingEmbedder(override val dim: Int)
+    extends graft.providers.EmbeddingProvider {
+  override def embedBatch(texts: Seq[String]): Seq[Array[Float]] = {
+    TextCountingEmbedder.texts.addAndGet(texts.size.toLong)
+    new MockEmbedder(dim).embedBatch(texts)
+  }
+}
+object TextCountingEmbedder {
+  val texts = new java.util.concurrent.atomic.AtomicLong()
 }
