@@ -909,18 +909,16 @@ case class CreateVectorIndexCommand(name: String, table: String,
 /** `COMPACT VECTOR INDEX idx` — the SQL spelling of
   * [[graft.operators.SimilaritySearch.compactIvfFlatIndex]] on a
   * registered index: collapse each cell to one file, physically drop
-  * replayed duplicates and tombstoned rows, then re-register the store
-  * so its cached cellstats reflect the compacted truth (the refresh
-  * the maintenance docs prescribe). */
+  * replayed duplicates and tombstoned rows, then refresh the store
+  * (re-pins a pinned payload listing — the refresh the maintenance
+  * docs prescribe). */
 case class CompactVectorIndexCommand(name: String) extends LeafRunnableCommand {
   override def run(session: SparkSession): Seq[Row] = {
     graft.store.VectorStoreRegistry.lookup(name) match {
       case Some(s: graft.store.IvfFlatIndexStore) =>
         graft.operators.SimilaritySearch
           .compactIvfFlatIndex(session, s.indexPath)
-        graft.store.VectorStoreRegistry.register(name,
-          new graft.store.IvfFlatIndexStore(session, s.indexPath,
-            s.defaultNumCandidates))
+        s.refreshStats()
       case Some(_) => sys.error(
         s"COMPACT VECTOR INDEX $name: '$name' is not a persisted index")
       case None => sys.error(
@@ -995,8 +993,8 @@ case class DropVectorIndexCommand(name: String) extends LeafRunnableCommand {
   * serving contract; nid = the doc id, so pair this with indexes whose
   * rows the sync itself bootstraps), deletes as versioned tombstones.
   * Returns one row: the snapshot id synced to, -1 when already caught
-  * up. The store registration refreshes afterwards (cellstats moved),
-  * the COMPACT VECTOR INDEX convention. */
+  * up. The store refreshes afterwards (payload files moved), the
+  * COMPACT VECTOR INDEX convention. */
 case class SyncVectorIndexCommand(name: String, root: String,
                                   cursor: String, model: String,
                                   textCol: String)
@@ -1030,9 +1028,7 @@ case class SyncVectorIndexCommand(name: String, root: String,
     val synced = graft.streaming.IndexSync.drainIndexFromSnapshot(
       session, root, cursor, store.indexPath, embed,
       vecCol = "embedding", payloadCols = Seq("document_id", "chunks"))
-    graft.store.VectorStoreRegistry.register(name,
-      new graft.store.IvfFlatIndexStore(session, store.indexPath,
-        store.defaultNumCandidates))
+    store.refreshStats()
     Seq(Row(synced.getOrElse(-1L)))
   }
 }

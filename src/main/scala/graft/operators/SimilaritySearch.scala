@@ -1201,17 +1201,125 @@ object SimilaritySearch {
       .select(col("qid"), col("nid"), col("rank").cast("int").as("rank"))
   }
 
+  // ——— driver-sized sidecars ————————————————————————————————————————
+  /** An element type a sidecar stores, as its raw big-endian bits, so
+    * floats and doubles round-trip bit-exactly (-0.0 and subnormals
+    * included). */
+  private[graft] sealed abstract class SidecarElem[T](val tag: Char) {
+    def put(out: java.io.DataOutputStream, v: T): Unit
+    def get(in: java.io.DataInputStream): T
+  }
+  private[graft] object SidecarElem {
+    implicit object F32 extends SidecarElem[Float]('F') {
+      def put(out: java.io.DataOutputStream, v: Float): Unit =
+        out.writeInt(java.lang.Float.floatToRawIntBits(v))
+      def get(in: java.io.DataInputStream): Float =
+        java.lang.Float.intBitsToFloat(in.readInt())
+    }
+    implicit object F64 extends SidecarElem[Double]('D') {
+      def put(out: java.io.DataOutputStream, v: Double): Unit =
+        out.writeLong(java.lang.Double.doubleToRawLongBits(v))
+      def get(in: java.io.DataInputStream): Double =
+        java.lang.Double.longBitsToDouble(in.readLong())
+    }
+    implicit object I64 extends SidecarElem[Long]('J') {
+      def put(out: java.io.DataOutputStream, v: Long): Unit = out.writeLong(v)
+      def get(in: java.io.DataInputStream): Long = in.readLong()
+    }
+  }
+
+  private val SidecarMagic = 0x47534331 // "GSC1"
+
+  private def sidecarFile(spark: org.apache.spark.sql.SparkSession,
+                          path: String, name: String)
+      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
+    val p = new org.apache.hadoop.fs.Path(s"$path/$name")
+    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+  }
+
+  /** THE sidecar writer: `<path>/<name>` becomes one small file — the
+    * magic "GSC1", the element tag, then blocks of rows of values, each
+    * level prefixed by its length — replaced atomically
+    * ([[graft.io.SmallFiles.replace]]), without a Spark job. Sidecars
+    * are driver-sized: `centroids` (one cells × d block of floats),
+    * `codebooks` (one ksub × dsub block per subspace), `rotation` (one
+    * d × d block of doubles) and `cellstats` (one row of per-cell
+    * counts). */
+  private[graft] def writeSidecar[T](spark: org.apache.spark.sql.SparkSession,
+                                     path: String, name: String,
+                                     blocks: Seq[Seq[Seq[T]]])
+                                    (implicit e: SidecarElem[T]): Unit = {
+    val bytes = new java.io.ByteArrayOutputStream()
+    val out = new java.io.DataOutputStream(bytes)
+    out.writeInt(SidecarMagic)
+    out.writeChar(e.tag)
+    out.writeInt(blocks.size)
+    blocks.foreach { b =>
+      out.writeInt(b.size)
+      b.foreach { row => out.writeInt(row.size); row.foreach(e.put(out, _)) }
+    }
+    out.flush()
+    val (fs, p) = sidecarFile(spark, path, name)
+    graft.io.SmallFiles.replace(fs, p, bytes.toByteArray)
+  }
+
+  /** THE sidecar reader, [[writeSidecar]]'s inverse. A missing sidecar
+    * raises FileNotFoundException; one that is a directory — the
+    * parquet table an older graft wrote — is refused by name, so an
+    * index built before sidecars were files asks for its rebuild. */
+  private[graft] def readSidecar[T](spark: org.apache.spark.sql.SparkSession,
+                                    path: String, name: String)
+                                   (implicit e: SidecarElem[T])
+      : Seq[Seq[Seq[T]]] = {
+    val (fs, p) = sidecarFile(spark, path, name)
+    val bytes =
+      try graft.io.SmallFiles.read(fs, p)
+      catch {
+        case _: java.io.IOException
+            if scala.util.Try(fs.getFileStatus(p).isDirectory).getOrElse(false) =>
+          throw new IllegalStateException(
+            s"IVF index sidecar '$name' at $path is a parquet directory, " +
+              "the layout of an older graft; sidecars are now single " +
+              "files. Rebuild the index with writeIvfFlatIndex (or " +
+              "writeIvfPqIndex).")
+      }
+    val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
+    if (bytes.length < 6 || in.readInt() != SidecarMagic || in.readChar() != e.tag)
+      throw new IllegalStateException(
+        s"$p is not a graft index sidecar of '${e.tag}' values")
+    val blocks = Vector.fill(in.readInt())(
+      Vector.fill(in.readInt())(Vector.fill(in.readInt())(e.get(in))))
+    if (in.available() != 0) throw new IllegalStateException(
+      s"$p: ${in.available()} trailing bytes after the sidecar's values")
+    blocks
+  }
+
+  /** The index's centroid matrix (cells × d floats). */
+  private[graft] def centroidsOf(spark: org.apache.spark.sql.SparkSession,
+                                 path: String): Seq[Seq[Float]] =
+    readSidecar[Float](spark, path, "centroids").head
+
+  /** The index's row count per cell, over every cell (zeros included). */
+  private[graft] def cellCountsOf(spark: org.apache.spark.sql.SparkSession,
+                                  path: String): Seq[Long] =
+    readSidecar[Long](spark, path, "cellstats").head.head
+
+  private def writeCellstats(spark: org.apache.spark.sql.SparkSession,
+                             path: String, counts: Seq[Long]): Unit =
+    writeSidecar(spark, path, "cellstats", Seq(Seq(counts)))
+
   /** Persist an IVFADC index: the (nid, cluster, codes) frame written as
     * parquet PARTITIONED BY the coarse cell — probe pruning becomes
     * on-disk partition pruning, so a search touches only its probed
     * cells' files (at 10¹¹ vectors the codes ARE the index and this is
     * the difference between reading m·n bytes and m·n·nProbe/k_cells).
-    * Centroids and codebooks ride as small parquet sidecars
-    * (`centroids`: (cid, vec); `codebooks`: (j, c, vec)) — Spark-native
-    * IO, exact float round-trip, no JSON fragility. The reference
-    * analog is the Atlas vector index the coach pipeline searches
-    * (terraform main.tf:594-635). */
-  /** @param rotation optional OPQ rotation ([[opqTrainRotation]]): when
+    * Centroids and codebooks ride as small sidecar files
+    * ([[writeSidecar]]: `centroids` one cells × d block, `codebooks` one
+    * ksub × dsub block per subspace) — read and written without a Spark
+    * job, floats bit-exact. The reference analog is the Atlas vector
+    * index the coach pipeline searches (terraform main.tf:594-635).
+    *
+    * @param rotation optional OPQ rotation ([[opqTrainRotation]]): when
     *   set, corpus vectors are ROTATED before coarse assignment and PQ
     *   encoding, and `centroids`/`codebooks` must already live in the
     *   ROTATED space (train them on a [[rotateVectors]]-projected frame).
@@ -1232,7 +1340,6 @@ object SimilaritySearch {
                       cVec: String = "embedding",
                       rotation: Option[Seq[Seq[Double]]] = None): Unit = {
     val spark = corpus.sparkSession
-    import spark.implicits._
     val prepared = rotation match {
       case Some(r) =>
         rotateVectors(corpus, cVec, r, "__rvec")
@@ -1243,60 +1350,27 @@ object SimilaritySearch {
       .select(col("nid"), col("cluster"), col("codes")))
       .mode("overwrite").partitionBy("cluster")
       .parquet(s"$path/codes")
-    centroids.zipWithIndex.map { case (v, i) => (i, v) }
-      .toDF("cid", "vec")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    codebooks.zipWithIndex.flatMap { case (book, j) =>
-      book.zipWithIndex.map { case (v, c) => (j, c, v) }
-    }.toDF("j", "c", "vec")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
-    rotation match {
-      case Some(r) =>
-        // column-major rows (c, w[d]): R(i)(c) = w(i) — the same layout
-        // the oracle sidecar uses; doubles round-trip parquet exactly
-        r.head.indices.map(c => (c, r.indices.map(i => r(i)(c))))
-          .toDF("c", "w")
-          .coalesce(1).write.mode("overwrite").parquet(s"$path/rotation")
-      case None =>
-        // a rotation-free rebuild must DELETE a previous build's sidecar
-        // (the same overwrite semantics codes/centroids/codebooks get):
-        // a stale one would make searchIvfPqIndex silently rotate
-        // queries against un-rotated codes — wrong results, no error
-        val rotDir = new org.apache.hadoop.fs.Path(s"$path/rotation")
-        val fs = rotDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(rotDir)) fs.delete(rotDir, true)
-    }
+    // a rotation-free rebuild must DELETE a previous build's rotation:
+    // a stale one would make searchIvfPqIndex silently rotate queries
+    // against un-rotated codes — wrong results, no error
+    clearIndexPaths(spark, path, "centroids", "codebooks", "rotation")
+    writeSidecar(spark, path, "centroids", Seq(centroids))
+    writeSidecar(spark, path, "codebooks", codebooks)
+    rotation.foreach(r => writeSidecar(spark, path, "rotation", Seq(r)))
   }
 
-  /** The OPQ rotation sidecar of a persisted index, if one was written
-    * (bounded driver collect: d×d doubles). */
+  /** The OPQ rotation sidecar of a persisted index (d×d doubles,
+    * `R(i)(c)` row-major), if one was written. */
   def readIvfPqRotation(spark: org.apache.spark.sql.SparkSession,
-                        path: String): Option[Seq[Seq[Double]]] = {
-    val rotDir = new org.apache.hadoop.fs.Path(s"$path/rotation")
-    if (!rotDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(rotDir)) None
-    else {
-      val cols = spark.read.parquet(s"$path/rotation")
-        .orderBy(col("c")).select(col("w")).collect()
-        .map(_.getSeq[Double](0))
-      val d = cols.length
-      Some(Seq.tabulate(d)(i => Seq.tabulate(d)(c => cols(c)(i))))
-    }
-  }
+                        path: String): Option[Seq[Seq[Double]]] =
+    try Some(readSidecar[Double](spark, path, "rotation").head)
+    catch { case _: java.io.FileNotFoundException => None }
 
-  /** Load the sidecar artifacts of a persisted index (bounded driver
-    * collects: k×dim centroids + m×ksub×dsub codebook floats). */
+  /** The centroid and codebook sidecars of a persisted index (k×dim
+    * centroid + m×ksub×dsub codebook floats; no Spark job). */
   def readIvfPqIndexMeta(spark: org.apache.spark.sql.SparkSession,
-                         path: String): (Seq[Seq[Float]], Seq[Seq[Seq[Float]]]) = {
-    val cents = spark.read.parquet(s"$path/centroids")
-      .orderBy(col("cid")).select(col("vec")).collect()
-      .map(_.getSeq[Float](0).toSeq).toSeq
-    val books = spark.read.parquet(s"$path/codebooks")
-      .orderBy(col("j"), col("c")).select(col("j"), col("vec")).collect()
-      .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-      .map(_._2.map(_.getSeq[Float](1).toSeq).toSeq)
-    (cents, books)
-  }
+                         path: String): (Seq[Seq[Float]], Seq[Seq[Seq[Float]]]) =
+    (centroidsOf(spark, path), readSidecar[Float](spark, path, "codebooks"))
 
   /** Search a persisted IVFADC index: the probed cells of the query
     * batch are collected (bounded: ≤ #cells ints) and pushed as a
@@ -1328,9 +1402,29 @@ object SimilaritySearch {
       cId = "nid", preEncoded = true, broadcastBytes = broadcastBytes)
   }
 
+  /** Parquet tuning every payload write shares: rows sorted by `nid`
+    * within each cell file (tight min/max page stats → row-group skip
+    * on point lookups) plus a bloom filter on `nid` (the tombstone
+    * anti-join and replay dedup probe by nid; at 10⁹ rows per cell a
+    * negative probe should cost a filter check, not a column scan). */
+  private def payloadWriter(df: DataFrame) =
+    df.sortWithinPartitions(col("cluster"), col("nid"))
+      .write.option("parquet.bloom.filter.enabled#nid", "true")
+
   /** Write the IVF-FLAT side of a persisted index: raw vectors (plus
     * caller payload columns — document ids, chunk text) partitioned by
     * their coarse cell, with a `cellstats` sidecar of per-cell counts.
+    * On-disk layout under `path`:
+    *  - `payload/cluster=<c>/` parquet rows (nid, nvec, __useq, payload
+    *    columns…), sorted by nid, with a bloom filter on nid;
+    *  - `tombstones/` parquet (nid, seq), appended by deletes and
+    *    upserts, cleared by compaction (a build starts without one);
+    *  - `centroids` one small file, the cells × d float matrix;
+    *  - `cellstats` one small file, one row count per cell (zeros
+    *    included), bumped by every append/upsert.
+    * The two sidecars are [[writeSidecar]] files: read and replaced
+    * atomically without a Spark job. A sidecar that is a parquet
+    * directory (an index built by an older graft) is refused by name.
     * This is the classic IndexIVFFlat layout: probe pruning runs as
     * on-disk partition pruning and scoring inside probed cells is EXACT
     * (no quantization error), so `numCandidates ≥ corpus` degenerates to
@@ -1341,21 +1435,11 @@ object SimilaritySearch {
     * [[writeIvfPqIndex]] at the same `path` (shared `centroids`
     * sidecar): codes are the compressed ADC scan, payload the exact
     * serving/rerank side. */
-  /** Parquet tuning every payload write shares: rows sorted by `nid`
-    * within each cell file (tight min/max page stats → row-group skip
-    * on point lookups) plus a bloom filter on `nid` (the tombstone
-    * anti-join and replay dedup probe by nid; at 10⁹ rows per cell a
-    * negative probe should cost a filter check, not a column scan). */
-  private def payloadWriter(df: DataFrame) =
-    df.sortWithinPartitions(col("cluster"), col("nid"))
-      .write.option("parquet.bloom.filter.enabled#nid", "true")
-
   def writeIvfFlatIndex(corpus: DataFrame, centroids: Seq[Seq[Float]],
                         path: String, cId: String = "vec_id",
                         cVec: String = "embedding",
                         payloadCols: Seq[String] = Nil): Unit = {
     val spark = corpus.sparkSession
-    import spark.implicits._
     // batch-built rows carry version -1: any upsert's tombstone
     // (at seq-1 >= -1 for seq >= 0) supersedes them — see
     // [[upsertIvfFlatBatch]]. Writing the column here keeps every
@@ -1371,37 +1455,51 @@ object SimilaritySearch {
     // (every old tombstone's seq ≥ 0 hides the rebuilt rows' version
     // -1) — the exact silent-loss a "recreate the index shell" reset
     // is told to rely on. Overwrite semantics must cover it too.
-    locally {
-      val tomb = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-      val fs = tomb.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(tomb)) fs.delete(tomb, true)
-    }
-    centroids.zipWithIndex.map { case (v, i) => (i, v) }
-      .toDF("cid", "vec")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    // per-cell counts (≤ #cells rows): drives the numCandidates→nProbe
-    // mapping without touching the data at search time. Zero-row
-    // tolerant: an EMPTY shell (centroids only, rows arriving later via
-    // the sync pump / streamed appends) is a legitimate bootstrap
-    writeCellstats(spark, s"$path/payload", s"$path/cellstats")
+    clearIndexPaths(spark, path, "tombstones", "centroids", "cellstats")
+    writeSidecar(spark, path, "centroids", Seq(centroids))
+    // per-cell counts: drive the numCandidates→nProbe mapping without
+    // touching the data at search time. An EMPTY shell (centroids
+    // only, rows arriving later via the sync pump / streamed appends)
+    // is a legitimate bootstrap: all zeros
+    writeCellstats(spark, path,
+      cellCountsIn(spark, s"$path/payload", centroids.size))
   }
 
-  /** Per-cell row counts of a payload dir, written as a cellstats
-    * sidecar (≤ #cells rows). A payload dir with no parquet files (an
-    * empty shell, a fully-deleted index after a rewrite) yields
-    * zero-row cellstats. */
-  private def writeCellstats(spark: org.apache.spark.sql.SparkSession,
-                             payloadDir: String, statsDir: String): Unit =
-    readParquetOrEmpty(spark, payloadDir, rawPayloadSchema(Nil))
-      .groupBy(col("cluster")).count()
-      .coalesce(1).write.mode("overwrite").parquet(statsDir)
+  /** Delete `names` under an index root, whatever they are: a full
+    * (re)build or rewrite replaces them, and a sidecar an older graft
+    * wrote as a parquet directory must not block the new file. */
+  private def clearIndexPaths(spark: org.apache.spark.sql.SparkSession,
+                              path: String, names: String*): Unit = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    names.foreach(n => fs.delete(new org.apache.hadoop.fs.Path(root, n), true))
+  }
+
+  /** One row count per cell, zeros included, as aggregate columns over a
+    * frame with a `cluster` column — the metrics an append's checkpoint
+    * job carries, and the one aggregate a rewrite counts with. */
+  private def cellCountCols(cells: Int): Seq[Column] =
+    (0 until cells).map(c => count_if(col("cluster") === c))
+
+  /** Per-cell row counts of a payload dir (one job). A dir with no
+    * parquet files (an empty shell, a fully-deleted index after a
+    * rewrite) counts all zeros. */
+  private def cellCountsIn(spark: org.apache.spark.sql.SparkSession,
+                           payloadDir: String, cells: Int): Seq[Long] = {
+    val counts = cellCountCols(cells)
+    val row = readParquetOrEmpty(spark, payloadDir, rawPayloadSchema(Nil))
+      .agg(counts.head, counts.tail: _*).head()
+    (0 until cells).map(row.getLong)
+  }
 
   /** numCandidates → probe depth: the smallest P such that the P
     * SMALLEST cells already cover `numCandidates` rows — conservative
     * (any actual probe set of P cells is at least as large), so the
     * candidate-count contract holds for every query in the batch with
-    * one uniform P. numCandidates ≥ corpus ⇒ every cell is probed ⇒
-    * exact search. */
+    * one uniform P. `cellSizes` must list EVERY cell, empty ones as 0:
+    * a query's nearest cells may be the empty ones, and only counting
+    * them makes numCandidates ≥ corpus probe every cell ⇒ exact
+    * search. */
   def nProbeFor(cellSizes: Seq[Long], numCandidates: Int): Int = {
     if (cellSizes.isEmpty) return 1
     val sorted = cellSizes.sorted
@@ -1412,7 +1510,8 @@ object SimilaritySearch {
   }
 
   /** IVF-Flat search over a persisted index: map `numCandidates` to a
-    * probe depth from the cellstats sidecar, push the batch's probed
+    * probe depth from the cellstats sidecar (read with the centroids,
+    * no Spark job), push the batch's probed
     * cells as a partition filter on the payload scan (`.explain` shows
     * PartitionFilters on `cluster` — unprobed cells' files are never
     * read), then EXACT cosine top-k inside the probed cells. Identical
@@ -1433,7 +1532,13 @@ object SimilaritySearch {
     * run dry. The predicate lands in the parquet scan's PushedFilters
     * (row-group stats skip non-matching groups on disk), stacking on
     * the cluster PartitionFilters — both prunings visible in
-    * `.explain` and pinned by FilteredSearchSpec. */
+    * `.explain` and pinned by FilteredSearchSpec.
+    *
+    * Building the returned frame is not free: when the probe depth is
+    * below the cell count, the batch's probed cells are collected
+    * ([[probedCells]]) by one eager Spark job before this returns. At
+    * full depth every cell is probed and no job runs until the frame is
+    * evaluated. */
   def searchIvfFlatIndex(spark: org.apache.spark.sql.SparkSession,
                          path: String, queries: DataFrame, k: Int,
                          numCandidates: Int = 150,
@@ -1441,22 +1546,11 @@ object SimilaritySearch {
                          payloadCols: Seq[String] = Nil,
                          broadcastBytes: Long = 64L * 1024 * 1024,
                          dedupReplays: Boolean = false,
-                         sidecars: Option[(Seq[Seq[Float]], Seq[Long])] = None,
                          payloadFrame: Option[DataFrame] = None,
                          payloadFilter: Option[Column] = None)
       : DataFrame = {
-    import spark.implicits._
-    // `sidecars`: a serving caller (IvfFlatIndexStore) can preload the
-    // centroid matrix + cell sizes ONCE and reuse them across searches.
-    // Without them the process-wide stat-guarded caches apply — an
-    // un-wrapped per-micro-batch caller (the sync pump's own serving,
-    // the SQL face) pays two metadata RPCs instead of two sidecar-read
-    // jobs per batch for artifacts that are immutable (centroids) or
-    // only drift conservatively (cellstats) between maintenance passes
-    val (cents, sizes) = sidecars.getOrElse((
-      centroidsOf(spark, path),
-      cellCountsOf(spark, path).values.toSeq))
-    val nProbe = nProbeFor(sizes, numCandidates)
+    val cents = centroidsOf(spark, path)
+    val nProbe = nProbeFor(cellCountsOf(spark, path), numCandidates)
     // full probe depth reaches every cell no matter the query batch —
     // the probed set is statically all of them, so skip the per-batch
     // Spark job that derives it (one fewer fixed job per micro-batch
@@ -1467,8 +1561,8 @@ object SimilaritySearch {
       else probedCells(queries, cents, nProbe, qVec)
     // `payloadFrame`: a serving caller can hand in the payload frame
     // built ONCE (file listing + schema resolution amortized across
-    // searches, the sidecars pattern); partition pruning still applies
-    // per call through the filter below
+    // searches); partition pruning still applies per call through the
+    // filter below
     val raw0 = payloadFrame.getOrElse(readPayload(spark, path, payloadCols))
       .filter(col("cluster").isin(probed: _*))
     // metadata pre-filter BEFORE dedup/tombstones/scoring: Catalyst
@@ -1505,7 +1599,8 @@ object SimilaritySearch {
     * assign each row to its coarse cell with the INDEX's own centroids
     * sidecar, append the rows to their cluster partitions — a pure
     * partitioned write, no driver collect of vectors — and bump the
-    * cellstats counts incrementally (≤ #cells rows collected).
+    * cellstats counts, which ride the batch's one checkpoint job
+    * ([[writeBatch]]).
     *
     * At-least-once semantics: a replayed batch re-appends IDENTICAL
     * rows (the nid is a content hash, so same text ⇒ same nid, vector,
@@ -1515,141 +1610,10 @@ object SimilaritySearch {
     * LSM split of write-path vs read-path vs maintenance cost. */
   def appendIvfFlatBatch(batch: DataFrame, path: String,
                          cId: String = "vec_id", cVec: String = "embedding",
-                         payloadCols: Seq[String] = Nil): Unit = {
-    val spark = batch.sparkSession
-    val cents = centroidsOf(spark, path)
+                         payloadCols: Seq[String] = Nil): Unit =
     // version -1, as a batch build writes: any upsert supersedes it
-    val assigned = ivfAssign(batch, cents, cVec)
-      .select(Seq(col(cId).as("nid"), col(cVec).as("nvec"),
-        col("cluster"), lit(-1L).as("__useq")) ++ payloadCols.map(col): _*)
-    payloadWriter(assigned).mode("append").partitionBy("cluster")
-      .parquet(s"$path/payload")
-    bumpCellstats(spark, path, assigned)
-  }
-
-  // ——— per-index invariants cache ———————————————————————————————————
-  // A standing chain (the sync pump's upserts, per-micro-batch indexed
-  // retrieval) pays the same fixed driver jobs EVERY batch for state
-  // that changes rarely or only under this writer's own hand: the
-  // centroid matrix (immutable between rebuilds) and the cellstats
-  // counts (rewritten only by this single writer or a
-  // maintenance pass). Each is cached process-wide, keyed by the
-  // QUALIFIED sidecar path, and invalidated by a filesystem stat
-  // stamp instead of a Spark read+collect job: ~3 fixed jobs per batch
-  // become 1–2 metadata RPCs. The stamp is the sidecar dir's mtime
-  // PLUS its entry listing (name:len:mtime per file): coarse mtime
-  // granularity (1 s on some local filesystems and FileSystem
-  // bridges) could let a foreign rewrite land in the same tick as the
-  // cached read, and the part-file names are unique per Spark job, so
-  // the listing catches what the dir mtime alone can miss. Sidecar
-  // dirs hold a handful of files — the listing is one RPC. Foreign
-  // rewrites (compaction, merge, a rebuild in place) change the stamp
-  // and force a re-read; correctness never rides the cache.
-  private case class Stamped[A](stamp: String, value: A)
-
-  /** The invalidation stamp: dir mtime + sorted entry signature. */
-  private def dirStamp(fs: org.apache.hadoop.fs.FileSystem,
-                       dir: org.apache.hadoop.fs.Path): String = {
-    val entries = fs.listStatus(dir).map(s =>
-        s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      .sorted.mkString("|")
-    s"${fs.getFileStatus(dir).getModificationTime}#$entries"
-  }
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Stamped[Seq[Seq[Float]]]]()
-  private val cellstatsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Stamped[Map[Int, Long]]]()
-
-  private def qualifiedDir(spark: org.apache.spark.sql.SparkSession,
-                           dir: String)
-      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    (fs, fs.makeQualified(p))
-  }
-
-  /** The stat-guard only works where a directory's modification time
-    * actually moves when its entries are rewritten — real filesystems
-    * (local, HDFS and its compatibles). Object stores (s3a/gcs/abfs…)
-    * report fixed or synthetic mtimes for directory prefixes, so a
-    * foreign rewrite would never invalidate — there the caches are
-    * BYPASSED entirely (every call reads, the pre-r15 behavior) rather
-    * than trusted: correctness never rides the cache. */
-  private def statInvalidationWorks(
-      fs: org.apache.hadoop.fs.FileSystem): Boolean =
-    fs.getScheme == "file" || fs.getScheme == "hdfs" ||
-      fs.getScheme == "viewfs"
-
-  /** The index's centroid matrix, cached across calls (stat-guarded —
-    * see the cache note above). Bounded: k×dim floats, the Lloyd-matrix
-    * class of driver state. */
-  private[graft] def centroidsOf(spark: org.apache.spark.sql.SparkSession,
-                                 path: String): Seq[Seq[Float]] = {
-    def read(): Seq[Seq[Float]] =
-      spark.read.parquet(s"$path/centroids")
-        .orderBy(col("cid")).select(col("vec")).collect()
-        .map(_.getSeq[Float](0).toSeq).toSeq
-    val (fs, dir) = qualifiedDir(spark, s"$path/centroids")
-    if (!statInvalidationWorks(fs)) return read()
-    val stamp = dirStamp(fs, dir)
-    val key = dir.toString
-    val hit = centroidCache.get(key)
-    if (hit != null && hit.stamp == stamp) hit.value
-    else {
-      val cents = read()
-      centroidCache.put(key, Stamped(stamp, cents))
-      cents
-    }
-  }
-
-  /** The index's per-cell counts, cached across calls (stat-guarded;
-    * [[bumpCellstats]] refreshes the entry after its own rewrite, so a
-    * single-writer upsert chain never re-reads what it just wrote). */
-  private[graft] def cellCountsOf(spark: org.apache.spark.sql.SparkSession,
-                                  path: String): Map[Int, Long] = {
-    import spark.implicits._
-    def read(): Map[Int, Long] =
-      spark.read.parquet(s"$path/cellstats")
-        .select(col("cluster"), col("count")).as[(Int, Long)]
-        .collect().toMap
-    val (fs, dir) = qualifiedDir(spark, s"$path/cellstats")
-    if (!statInvalidationWorks(fs)) return read()
-    val stamp = dirStamp(fs, dir)
-    val key = dir.toString
-    val hit = cellstatsCache.get(key)
-    if (hit != null && hit.stamp == stamp) hit.value
-    else {
-      val counts = read()
-      cellstatsCache.put(key, Stamped(stamp, counts))
-      counts
-    }
-  }
-
-  /** Incremental cellstats bump shared by append and upsert: old
-    * counts (cached across the single-writer chain's batches — a
-    * foreign rewrite bumps the dir stamp and forces a re-read) + this
-    * batch's (one bounded collect), rewritten whole. Upserted counts
-    * OVERCOUNT rows their own tombstones mask; cellstats only drives
-    * the numCandidates→nProbe mapping, where overcounting is
-    * conservative (probes at least as many cells), and compaction
-    * refreshes the exact counts. */
-  private def bumpCellstats(spark: org.apache.spark.sql.SparkSession,
-                            path: String, assigned: DataFrame): Unit = {
-    import spark.implicits._
-    val old = cellCountsOf(spark, path)
-    val add = assigned.groupBy(col("cluster")).count()
-      .as[(Int, Long)].collect().toMap
-    val mergedMap = (old.keySet ++ add.keySet).toSeq.sorted
-      .map(c => (c, old.getOrElse(c, 0L) + add.getOrElse(c, 0L)))
-    mergedMap.toDF("cluster", "count")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/cellstats")
-    // re-stamp AFTER the write (single-writer: nothing moves between):
-    // the next batch's cellCountsOf hits the cache instead of re-reading
-    val (fs, dir) = qualifiedDir(spark, s"$path/cellstats")
-    if (statInvalidationWorks(fs))
-      cellstatsCache.put(dir.toString,
-        Stamped(dirStamp(fs, dir), mergedMap.toMap))
-  }
+    writeBatch(batch, path, col(cId), cVec, lit(-1L), payloadCols,
+      tombstoneOld = false)
 
   /** VERSIONED upsert into a persisted IVF-Flat index — the
     * change-data apply the reference's continuously-running MongoDB
@@ -1674,38 +1638,58 @@ object SimilaritySearch {
     * tombstone at the delete's own seq — see
     * [[graft.streaming.IndexSync]] for the composed consumer.
     *
-    * Cost per call: the embedded, cell-assigned batch is materialized
-    * ONCE ([[Checkpoint]]) and feeds the old-version tombstones, the
-    * payload append and the cellstats bump — so an embedding stage
-    * inside `batch` (a model call per row) runs once per row, not once
-    * per consumer, and the seq refusal fires before anything is
-    * written. Jobs: that checkpoint, the tombstone append (when
-    * `tombstoneOld`), the payload append, and the bump's count and
-    * rewrite. On a cluster, executor loss fails the call instead of
-    * recomputing the batch; the CDC apply is replayed at-least-once. */
+    * Cost per call ([[writeBatch]]): the embedded, cell-assigned batch
+    * is materialized ONCE ([[Checkpoint]]) and feeds the old-version
+    * tombstones and the payload append, so an embedding stage inside
+    * `batch` (a model call per row) runs once per row, not once per
+    * consumer, and the seq refusal fires before anything is written.
+    * Jobs: that checkpoint, the tombstone append (when `tombstoneOld`)
+    * and the payload append. On a cluster, executor loss fails the
+    * call instead of recomputing the batch; the CDC apply is replayed
+    * at-least-once. */
   def upsertIvfFlatBatch(batch: DataFrame, path: String,
                          cId: String = "vec_id", cVec: String = "embedding",
                          cSeq: String = "seq",
                          payloadCols: Seq[String] = Nil,
-                         tombstoneOld: Boolean = true): Unit = {
+                         tombstoneOld: Boolean = true): Unit =
+    writeBatch(batch, path, col(cId).cast("string"), cVec,
+      changeSeq(col(cSeq)), payloadCols, tombstoneOld)
+
+  /** The one write body of [[appendIvfFlatBatch]] and
+    * [[upsertIvfFlatBatch]]: assign the batch to the index's cells and
+    * materialize it in one [[Checkpoint]] job that also counts its rows
+    * per cell (one `count_if` per cell); append the old-version
+    * tombstones (when `tombstoneOld`, tombstones first — see the upsert
+    * ordering note) and the payload rows from that checkpoint; then
+    * add the counts to the `cellstats` sidecar (a small-file rewrite,
+    * no job). The counts keep the superseded versions an upsert's
+    * tombstones mask until compaction restores the exact counts; while
+    * they do, a numCandidates between the live and the counted total
+    * maps to fewer cells than the live rows need (not exact). */
+  private def writeBatch(batch: DataFrame, path: String, nid: Column,
+                         cVec: String, version: Column,
+                         payloadCols: Seq[String],
+                         tombstoneOld: Boolean): Unit = {
     val spark = batch.sparkSession
     val cents = centroidsOf(spark, path)
-    val (assigned, _) = Checkpoint(ivfAssign(batch, cents, cVec)
-      .select(Seq(col(cId).cast("string").as("nid"), col(cVec).as("nvec"),
-        col("cluster"), changeSeq(col(cSeq)).as("__useq")) ++
-        payloadCols.map(col): _*))
+    val old = cellCountsOf(spark, path)
+    require(old.size == cents.size, s"IVF-Flat index at $path: " +
+      s"cellstats lists ${old.size} cells, centroids ${cents.size}")
+    val (assigned, added) = Checkpoint(ivfAssign(batch, cents, cVec)
+      .select(Seq(nid.as("nid"), col(cVec).as("nvec"), col("cluster"),
+        version.as("__useq")) ++ payloadCols.map(col): _*),
+      cellCountCols(cents.size): _*)
     try {
-      // tombstones first (see ordering note above); skipped for batches
-      // the caller KNOWS are new keys (bootstrap): an empty index has no
-      // older versions to mask, and a corpus-sized bootstrap would
-      // otherwise leave one tombstone per document for every later
-      // search to aggregate and broadcast
+      // skipped for batches the caller KNOWS are new keys (bootstrap):
+      // an empty index has no older versions to mask, and a
+      // corpus-sized bootstrap would otherwise leave one tombstone per
+      // document for every later search to aggregate and broadcast
       if (tombstoneOld)
         assigned.select(col("nid"), (col("__useq") - 1L).as("seq"))
           .write.mode("append").parquet(s"$path/tombstones")
       payloadWriter(assigned).mode("append").partitionBy("cluster")
         .parquet(s"$path/payload")
-      bumpCellstats(spark, path, assigned)
+      writeCellstats(spark, path, old.indices.map(c => old(c) + added.getLong(c)))
     } finally Checkpoint.release(assigned)
   }
 
@@ -1757,7 +1741,8 @@ object SimilaritySearch {
   def compactIvfFlatIndex(spark: org.apache.spark.sql.SparkSession,
                           path: String): Unit =
     writeCompacted(spark, path,
-      liveRows(spark, Seq(path -> readPayload(spark, path))))
+      liveRows(spark, Seq(path -> readPayload(spark, path))),
+      centroidsOf(spark, path))
 
   /** THE live-rows rule of the index, shared by the dedupReplays
     * search, compaction, merge and migration: each index's own
@@ -1782,22 +1767,26 @@ object SimilaritySearch {
     * `payload` one file per cell at `payload.staged`, count its cells
     * from the STAGED dir (after the swap a lazy frame over the old
     * payload would re-read deleted files; a fully-deleted index stages
-    * no parquet file and still gets zero-row cellstats), swap both in
-    * with [[swapDir]], and clear the tombstones the rewrite applied. */
+    * no parquet file and counts all zeros), swap it in with
+    * [[swapDir]], clear the tombstones the rewrite applied, and write
+    * the `cellstats` and `centroids` sidecars. */
   private def writeCompacted(spark: org.apache.spark.sql.SparkSession,
-                             root: String, payload: DataFrame): Unit = {
+                             root: String, payload: DataFrame,
+                             centroids: Seq[Seq[Float]]): Unit = {
     // repartition on the partition column: every cell's rows land in
     // one task, so each cluster directory collapses to ONE file (the
     // small-file fix micro-batch appends make necessary)
     payloadWriter(payload.repartition(col("cluster")))
       .mode("overwrite").partitionBy("cluster")
       .parquet(s"$root/payload.staged")
-    writeCellstats(spark, s"$root/payload.staged", s"$root/cellstats.staged")
-    val (fs, dir) = qualifiedDir(spark, root)
+    val counts = cellCountsIn(spark, s"$root/payload.staged", centroids.size)
+    val dir = new org.apache.hadoop.fs.Path(root)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def at(name: String) = new org.apache.hadoop.fs.Path(dir, name)
     swapDir(fs, at("payload.staged"), at("payload"))
-    if (fs.exists(at("tombstones"))) fs.delete(at("tombstones"), true)
-    swapDir(fs, at("cellstats.staged"), at("cellstats"))
+    clearIndexPaths(spark, root, "tombstones")
+    writeCellstats(spark, root, counts)
+    writeSidecar(spark, root, "centroids", Seq(centroids))
   }
 
   /** Replace `live` (if present) with `staged`: retire the live dir to
@@ -1979,10 +1968,7 @@ object SimilaritySearch {
   def mergeIvfFlatIndexes(spark: org.apache.spark.sql.SparkSession,
                           sources: Seq[String], target: String): Unit = {
     require(sources.nonEmpty, "mergeIvfFlatIndexes: no sources")
-    val centSets = sources.map { s =>
-      spark.read.parquet(s"$s/centroids").orderBy(col("cid"))
-        .select(col("vec")).collect().map(_.getSeq[Float](0).toSeq).toSeq
-    }
+    val centSets = sources.map(centroidsOf(spark, _))
     require(centSets.forall(_ == centSets.head),
       "mergeIvfFlatIndexes: sources have different centroid sets — " +
         "merging across cell geometries requires a re-encode " +
@@ -1999,11 +1985,7 @@ object SimilaritySearch {
             s"$s: ${c.toSeq.sorted.mkString("[", ",", "]")}"
           }.mkString("; "))
     }
-    writeCompacted(spark, target, liveRows(spark, payloads))
-    import spark.implicits._
-    centSets.head.zipWithIndex.map { case (v, i) => (i, v) }
-      .toDF("cid", "vec")
-      .coalesce(1).write.mode("overwrite").parquet(s"$target/centroids")
+    writeCompacted(spark, target, liveRows(spark, payloads), centSets.head)
   }
 
   /** Re-encode an IVF-Flat index onto NEW centroids — the migration
@@ -2036,11 +2018,8 @@ object SimilaritySearch {
         "(re-encode lands beside it; swap by pointer after validation)")
     val live = liveRows(spark,
       Seq(path -> readPayload(spark, path).drop("cluster")))
-    writeCompacted(spark, newPath, ivfAssign(live, newCentroids, "nvec"))
-    import spark.implicits._
-    newCentroids.zipWithIndex.map { case (v, i) => (i, v) }
-      .toDF("cid", "vec")
-      .coalesce(1).write.mode("overwrite").parquet(s"$newPath/centroids")
+    writeCompacted(spark, newPath, ivfAssign(live, newCentroids, "nvec"),
+      newCentroids)
   }
 
   /** The distinct coarse cells a query batch probes at depth `nProbe` —

@@ -204,29 +204,12 @@ final class IvfFlatIndexStore(spark: SparkSession, path: String,
     * resolves the registered store back to its on-disk layout. */
   def indexPath: String = path
 
-  override lazy val size: Int = cellSizes.sum.toInt
+  /** The index's current row count (its cellstats sidecar, read on
+    * each call without a Spark job): upserted rows count until
+    * compaction drops the versions they superseded. */
+  override def size: Int =
+    graft.operators.SimilaritySearch.cellCountsOf(spark, path).sum.toInt
 
-  // serving-path sidecar cache: the centroid matrix is immutable for an
-  // index's lifetime (a re-center is a re-encode = a new index), so load
-  // it once; cellstats drift as upserts land, but a stale size only
-  // makes the numCandidates→probe-depth mapping conservative in the
-  // wrong direction SLOWLY — refresh after maintenance via
-  // [[refreshStats]]. Saves two Spark jobs per search, which is the
-  // difference between a fixed cost per QUERY BATCH and one per INDEX
-  // in per-micro-batch streaming serving.
-  private lazy val centroids: Seq[Seq[Float]] =
-    spark.read.parquet(s"$path/centroids")
-      .orderBy(col("cid")).select(col("vec")).collect()
-      .map(_.getSeq[Float](0).toSeq).toSeq
-  // (re)loaded through the index's shared stat-guarded cellstats cache,
-  // which a same-process writer's cellstats bump re-stamps: on
-  // local/HDFS the reload after a pull's refreshStats runs no job
-  @volatile private var statsCache: Seq[Long] = null
-  private def cellSizes: Seq[Long] = {
-    if (statsCache == null) statsCache = graft.operators.SimilaritySearch
-      .cellCountsOf(spark, path).toSeq.sortBy(_._1).map(_._2)
-    statsCache
-  }
   // OPT-IN payload-frame pin: building a parquet DataFrame lists files
   // and resolves the schema — a fixed cost worth paying once per INDEX
   // when serving a STATIC index per micro-batch. Pinning is explicit
@@ -239,7 +222,9 @@ final class IvfFlatIndexStore(spark: SparkSession, path: String,
   /** Freeze the payload file listing for static-index serving (saves a
     * listing + schema resolution per micro-batch). After ANY index
     * maintenance (append/delete/compact/merge) call [[refreshStats]] —
-    * it re-pins against the new state — or never pin at all. */
+    * it re-pins against the new state — or never pin at all. The
+    * sidecars (centroids, cellstats) are never pinned: every search
+    * reads them, so a rebuild in place or a bump shows up at once. */
   def pinPayload(): this.type = {
     // the search path's own payload read, so the two cannot drift: a
     // fully-emptied compacted index pins a zero-row frame, an
@@ -248,23 +233,23 @@ final class IvfFlatIndexStore(spark: SparkSession, path: String,
       spark, path, Seq("document_id", "chunks"))
     this
   }
-  /** Drop the cached cellstats (call after upserts/compaction/merge so
-    * the probe-depth mapping sees the new counts); a pinned payload
-    * listing is re-pinned against the index's new state (with the
-    * same emptied-index tolerance as the original pin). */
-  def refreshStats(): Unit = {
-    statsCache = null
+  /** Re-pin a pinned payload listing against the index's new state
+    * (with the same emptied-index tolerance as the original pin); call
+    * after upserts/compaction/merge. A no-op for an unpinned store:
+    * the sidecars are read per search, so nothing else is cached. */
+  def refreshStats(): Unit =
     if (payloadCache != null) pinPayload()
-  }
 
   /** Batch retrieval: (qid, qvec) frame → (qid, nid, rank, score,
-    * document_id, chunks) with only probed cells' files read. */
+    * document_id, chunks) with only probed cells' files read. Building
+    * the frame reads the centroid and cellstats sidecars (no job) and,
+    * when the probe depth is below the cell count, runs the probed-cells
+    * Spark job eagerly ([[graft.operators.SimilaritySearch.searchIvfFlatIndex]]). */
   def searchBatch(queries: DataFrame, k: Int, numCandidates: Int = 150,
                   qId: String = "qid", qVec: String = "qvec"): DataFrame =
     graft.operators.SimilaritySearch.searchIvfFlatIndex(
       spark, path, queries, k, numCandidates, qId, qVec,
       payloadCols = Seq("document_id", "chunks"),
-      sidecars = Some((centroids, cellSizes)),
       payloadFrame = Option(payloadCache))
 
   override def search(query: Array[Float], k: Int,
@@ -297,7 +282,6 @@ final class IvfFlatIndexStore(spark: SparkSession, path: String,
     val cand = graft.operators.SimilaritySearch.searchIvfFlatIndex(
       spark, path, queries, math.max(2 * k, 8), numCandidates, qId, qVec,
       payloadCols = Seq("document_id", "chunks", "nvec"),
-      sidecars = Some((centroids, cellSizes)),
       payloadFrame = Option(payloadCache))
     graft.operators.SimilaritySearch.mmrRerankHits(cand, k, lambda)
   }

@@ -31,11 +31,13 @@ import graft.operators.{Checkpoint, SimilaritySearch}
   * join's shuffle stages), all of its tombstones land in ONE append,
   * and the upserts go through `upsertIvfFlatBatch`, which embeds each
   * changed document exactly once. A 15-edit incremental pull over a
-  * 16-bucket store into an 8-cell index runs 9 Spark jobs and embeds
-  * its upserted docs once each; the bootstrap pull embeds each live
-  * doc once (IndexSyncSpec pins both). A window with nothing to write
-  * (deletes only, upserts only, or an empty changelog such as a
-  * rebucket's) skips the appends it does not need.
+  * 16-bucket store into an 8-cell index runs 6 Spark jobs and embeds
+  * its upserted docs once each; the bootstrap pull runs 5 and embeds
+  * each live doc once (IndexSyncSpec pins both). The index's sidecars
+  * (centroids, cellstats) are small-file reads and writes, no job. A
+  * window with nothing to write (deletes only, upserts only, or an
+  * empty changelog such as a rebucket's) skips the appends it does not
+  * need.
   */
 object IndexSync {
 
@@ -190,12 +192,8 @@ object IndexSync {
     def tryLock(): Boolean =
       StreamingOps.atomicClaimFile(fs, lockPath, body)
     def readText(p: org.apache.hadoop.fs.Path): Option[String] =
-      try {
-        val in = fs.open(p)
-        try Some(new String(
-          org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8"))
-        finally in.close()
-      } catch {
+      try Some(graft.io.SmallFiles.readText(fs, p))
+      catch {
         // vanished = the holder released (claimOwner's contract). Any
         // OTHER IO error must PROPAGATE: an unreadable LIVE claim must
         // not be stolen — a transient read failure on a FOREIGN lock
@@ -276,13 +274,9 @@ object IndexSync {
     // pull that is the same steal evidence as a foreign nonce (someone
     // cleared a LIVE pump's lock); on a failed pull it must not throw
     // from this finally and mask the pull's own error
-    val mine = scala.util.Try {
-      val in = fs.open(lockPath)
-      val text = try new String(
-        org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-        finally in.close()
-      text.contains(nonce)
-    }.getOrElse(false)
+    val mine = scala.util.Try(
+      graft.io.SmallFiles.readText(fs, lockPath).contains(nonce))
+      .getOrElse(false)
     if (mine) fs.delete(lockPath, false)
     if (!mine && committed) throw new IllegalStateException(
       s"syncIndexFromSnapshot: the cursor lock $lockPath was rewritten " +

@@ -411,9 +411,9 @@ object StreamingOps {
     * Untouched buckets keep their version dirs byte-identical —
     * manifest N simply re-references them. Readers ([[readSnapshot]])
     * resolve `_CURRENT` → one immutable manifest → immutable bucket
-    * dirs, so the pointer swap (write-temp-then-FileContext-rename
-    * (OVERWRITE) — atomic on HDFS and POSIX) can never hand them a
-    * half-written snapshot or a torn mix of bucket versions, and past
+    * dirs, so the pointer swap (write-temp-then-rename in
+    * `SmallFiles.replace`, atomic on HDFS and POSIX) can never hand
+    * them a half-written snapshot or a torn mix of bucket versions, and past
     * snapshots stay readable (`readSnapshot(version = Some(n))` time
     * travel) until `keepVersions` retention prunes their manifests
     * and any bucket versions no retained manifest references.
@@ -821,22 +821,15 @@ object StreamingOps {
     val live = currentSnapshotId(fs, root).getOrElse(return None)
     // the cursor may live on a DIFFERENT filesystem than the store
     // (local state dir vs an object-store root): resolve it against its
-    // OWN fs and qualify the path, so the create and the rename below
+    // OWN fs and qualify the path, so the read and the commit below
     // agree on one filesystem
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val cfs = new org.apache.hadoop.fs.Path(cursorPath).getFileSystem(hconf)
+    val cfs = new org.apache.hadoop.fs.Path(cursorPath)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val cPath = cfs.makeQualified(
       new org.apache.hadoop.fs.Path(cursorPath))
     val cursor: Option[Long] =
       if (!cfs.exists(cPath)) None
-      else {
-        val in = cfs.open(cPath)
-        val s =
-          try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-            "UTF-8").trim
-          finally in.close()
-        Some(s.toLong)
-      }
+      else Some(graft.io.SmallFiles.readText(cfs, cPath).trim.toLong)
     if (cursor.contains(live)) return None
     // a cursor NEWER than live means the store was rebuilt under the
     // consumer (a deleted/recreated root starts over at 0) — without
@@ -863,16 +856,8 @@ object StreamingOps {
         changelogShape(readSnapshot(spark, root, includeTombstones = true,
           version = Some(live)).get)
     }
-    val commit = () => {
-      val tmp = cfs.makeQualified(
-        new org.apache.hadoop.fs.Path(s"$cursorPath.tmp"))
-      val out = cfs.create(tmp, true)
-      try out.write(live.toString.getBytes("UTF-8")) finally out.close()
-      org.apache.hadoop.fs.FileContext
-        .getFileContext(cPath.toUri, hconf)
-        .rename(tmp, cPath, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      ()
-    }
+    val commit = () =>
+      graft.io.SmallFiles.replaceText(cfs, cPath, live.toString)
     Some((live, frame, commit))
   }
 
@@ -1312,36 +1297,17 @@ object StreamingOps {
       }
     }
     fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-    // atomic pointer swap: temp file + rename(OVERWRITE). The manifest
-    // itself was committed as the claim, before staging.
-    val tmp = new org.apache.hadoop.fs.Path(s"$root/_CURRENT.tmp")
-    val cur = new org.apache.hadoop.fs.Path(s"$root/_CURRENT")
-    val pfs = pointerFs(fs)
-    val out = pfs.create(tmp, true)
-    try out.write(next.toString.getBytes("UTF-8")) finally out.close()
-    if (pfs.isInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem]) {
-      // rename(2) replaces the pointer in one atomic step. The pointer
-      // has no .crc (a checksummed rename moves data and .crc as two
-      // steps, and a reader between them fails its checksum); drop the
-      // stale one a checksummed writer may have left.
-      pfs.delete(new org.apache.hadoop.fs.Path(s"$root/._CURRENT.crc"), false)
-      require(pfs.rename(tmp, cur), s"snapshot publish: rename $tmp → $cur failed")
-    } else
-      org.apache.hadoop.fs.FileContext
-        .getFileContext(new org.apache.hadoop.fs.Path(root).toUri,
-          spark.sparkContext.hadoopConfiguration)
-        .rename(tmp, cur, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    // atomic pointer swap. The manifest itself was committed as the
+    // claim, before staging.
+    graft.io.SmallFiles.replaceText(fs,
+      new org.apache.hadoop.fs.Path(s"$root/_CURRENT"), next.toString)
     // post-swap readback: the claim must still carry THIS publish's
     // nonce. Two writers sharing a writerId can interleave a
     // reclaim-steal (B mistakes live A's claim for A's crash); the
     // readback turns that last silent-loss window into a loud
     // post-commit error instead of a vanished batch.
-    locally {
-      val in = fs.open(mNextPath)
-      val after = try new String(
-        org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-        finally in.close()
-      if (!after.contains(nonce)) throw new IllegalStateException(
+    if (!graft.io.SmallFiles.readText(fs, mNextPath).contains(nonce))
+      throw new IllegalStateException(
         s"snapshot publish: concurrent writer detected at $root — " +
           s"manifest m$next was rewritten by another '$writerId' writer " +
           "during this publish (claim nonce mismatch after the pointer " +
@@ -1349,7 +1315,6 @@ object StreamingOps {
           "may not contain this batch. Verify the live snapshot and " +
           "re-drive one writer only (distinct writerIds make this race " +
           "fail before commit).")
-    }
     // retention — manifest-DIFF pruning: a bucket version is
     // unreferenced exactly when every manifest naming it has been
     // pruned, so for each manifest m_k dropping below the floor, delete
@@ -1436,12 +1401,9 @@ object StreamingOps {
   private[graft] def claimOwner(fs: org.apache.hadoop.fs.FileSystem,
                                 path: org.apache.hadoop.fs.Path)
       : Option[String] = {
-    val in =
-      try fs.open(path)
+    val text =
+      try graft.io.SmallFiles.readText(fs, path)
       catch { case _: java.io.FileNotFoundException => return None }
-    val text = try new String(
-      org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-      finally in.close()
     text.split('\n').map(_.trim).find(_.startsWith("writer "))
       .flatMap(_.split("\\s+").lift(1))
   }
@@ -1460,28 +1422,11 @@ object StreamingOps {
     currentSnapshotId(fs, root).filter(id => fs.exists(
       new org.apache.hadoop.fs.Path(s"$root/_manifests/m$id")))
 
-  /** The filesystem the `_CURRENT` pointer is read and written through:
-    * the raw one under a checksummed wrapper (the local filesystem), so
-    * the pointer has no `.crc` sidecar that could lag its data file. */
-  private def pointerFs(fs: org.apache.hadoop.fs.FileSystem)
-      : org.apache.hadoop.fs.FileSystem = fs match {
-    case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
-    case other => other
-  }
-
   private def currentSnapshotId(fs: org.apache.hadoop.fs.FileSystem,
                                 root: String): Option[Long] = {
     val p = new org.apache.hadoop.fs.Path(s"$root/_CURRENT")
-    val pfs = pointerFs(fs)
-    if (!pfs.exists(p)) None
-    else {
-      val in = pfs.open(p)
-      try {
-        val s = new String(
-          org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim
-        Some(s.toLong)
-      } finally in.close()
-    }
+    if (!fs.exists(p)) None
+    else Some(graft.io.SmallFiles.readText(fs, p).trim.toLong)
   }
 
   private[graft] def currentSnapshotManifest(
@@ -1515,11 +1460,7 @@ object StreamingOps {
 
   private def readSnapshotManifest(fs: org.apache.hadoop.fs.FileSystem,
       path: org.apache.hadoop.fs.Path, id: Long): SnapshotManifest = {
-    val in = fs.open(path)
-    val text =
-      try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-      finally in.close()
-    val lines = text.split('\n').map(_.trim).filter(_.nonEmpty)
+    val lines = graft.io.SmallFiles.readText(fs, path).split('\n').map(_.trim).filter(_.nonEmpty)
     require(lines.nonEmpty && lines.head.startsWith("buckets "),
       s"malformed snapshot manifest $path: missing 'buckets' header")
     val b = lines.head.stripPrefix("buckets ").trim.toInt

@@ -197,7 +197,7 @@ class IndexSyncSpec extends SparkSpec {
     val migrated = tmp("idx-alldeleted-migrated")
     SimilaritySearch.migrateIvfFlatIndex(spark, path, cents, migrated)
     Seq(merged, migrated).foreach { p =>
-      spark.read.parquet(s"$p/cellstats").count() shouldBe 0L
+      SimilaritySearch.cellCountsOf(spark, p).count(_ > 0L) shouldBe 0
       topk(p, emb.filter(col("vec_id") < 3)) shouldBe empty
     }
   }
@@ -798,8 +798,8 @@ class IndexSyncSpec extends SparkSpec {
       kb.publish((0L until 100L).map(d => (d, "upsert", Kb.text(d, 0))))
       TextCountingEmbedder.texts.set(0)
       val bootJobs = jobsDuring(kb.pull() shouldBe Some(0L))
-      // the bootstrap embeds every live doc once: the payload write and
-      // the cellstats bump read one materialized batch
+      // the bootstrap embeds every live doc once: the payload write
+      // reads one materialized batch, whose job also counts the cells
       TextCountingEmbedder.texts.get shouldBe 100L
       // a 15-edit window: 12 updates, 2 deletes, 1 insert
       val window = (0L until 12L).map(d => (d, "upsert", Kb.text(d, 1))) ++
@@ -813,9 +813,11 @@ class IndexSyncSpec extends SparkSpec {
       // shared 4-core test session. Sink trigger: one checkpoint job
       // carries the emptiness test and the touched buckets, then the
       // publish; pull: the changelog checkpoint, one tombstone append,
-      // then the upsert's own checkpoint, payload and cellstats. A probe
-      // job or a re-evaluated embed creeping back shows up here first.
-      (sinkJobs, pullJobs, bootJobs) shouldBe ((4, 9, 14))
+      // then the upsert's own checkpoint (which also counts its rows
+      // per cell) and payload append; the sidecars are file reads and
+      // writes, no job. A probe job or a re-evaluated embed creeping
+      // back shows up here first.
+      (sinkJobs, pullJobs, bootJobs) shouldBe ((4, 6, 5))
       kb.assertParity()
     }
   }
@@ -856,20 +858,24 @@ class IndexSyncSpec extends SparkSpec {
     }
   }
 
-  test("IvfFlatIndexStore reloads cellstats through the shared cache: no cellstats job after a pull") {
+  test("IvfFlatIndexStore after a pull: size grows, a search costs warm-search jobs") {
     withKb("kb-cellstats") { kb =>
       kb.publish((0L until 40L).map(d => (d, "upsert", Kb.text(d, 0))))
       kb.pull() shouldBe Some(0L)
       val store = new IvfFlatIndexStore(spark, kb.index)
+      store.size shouldBe 40
       val q = (0L until 5L).map(d =>
           (d, new MockEmbedder(Kb.dim).embed(Kb.text(d, 1)).toSeq))
         .toDF("qid", "qvec")
       store.searchBatch(q, 3).collect()
-      kb.publish((0L until 5L).map(d => (d, "upsert", Kb.text(d, 1))))
+      kb.publish((0L until 5L).map(d => (d, "upsert", Kb.text(d, 1))) ++
+        (40L until 43L).map(d => (d, "upsert", Kb.text(d, 0))))
       kb.pull() shouldBe Some(1L)
-      // the pull's cellstats bump re-stamped the shared cache, so the
-      // reload after refreshStats reads it instead of running a job: the
-      // first search after the pull costs what a warm one does
+      // the size counts every appended row: the 5 new versions and the
+      // 3 inserts (compaction drops the 5 superseded rows)
+      store.size shouldBe 48
+      // the store caches no sidecar, so nothing is reloaded: the first
+      // search after the pull costs what a warm one does
       store.refreshStats()
       val first = jobsDuring(store.searchBatch(q, 3).collect())
       jobsDuring(store.searchBatch(q, 3).collect()) shouldBe first
@@ -877,6 +883,8 @@ class IndexSyncSpec extends SparkSpec {
       hits.filter(col("rank") === 1).select(col("qid"), col("nid"))
         .as[(Long, String)].collect().sorted shouldBe
         (0L until 5L).map(d => (d, d.toString))
+      SimilaritySearch.compactIvfFlatIndex(spark, kb.index)
+      store.size shouldBe 43
     }
   }
 }

@@ -194,8 +194,7 @@ class IvfPqIndexSpec extends SparkSpec {
     migrated.map(_._2) should not contain "n3"
     new java.io.File(s"$newPath/tombstones").exists() shouldBe false
     // cellstats reflect the re-encoded truth (5 cells, live row total)
-    spark.read.parquet(s"$newPath/cellstats")
-      .agg(sum(col("count"))).as[Long].head() shouldBe (emb.count() - 2)
+    SimilaritySearch.cellCountsOf(spark, newPath).sum shouldBe (emb.count() - 2)
     // in-place re-encode is refused: the live index must stay intact
     an[IllegalArgumentException] should be thrownBy
       SimilaritySearch.migrateIvfFlatIndex(spark, path, c2, path)
@@ -410,8 +409,7 @@ class IvfPqIndexSpec extends SparkSpec {
     pay.count() shouldBe pay.dropDuplicates("nid").count()
     new java.io.File(s"$target/tombstones").exists() shouldBe false
     // cellstats reflect the merged truth
-    spark.read.parquet(s"$target/cellstats")
-      .select(col("count")).as[Long].collect().sum shouldBe pay.count()
+    SimilaritySearch.cellCountsOf(spark, target).sum shouldBe pay.count()
     // the parquet footer really carries the nid bloom filter (the
     // tombstone anti-join / replay-dedup point-probe structure) and
     // nid-sorted row groups (tight min/max page stats): offsets ≥ 0

@@ -436,8 +436,7 @@ class StreamingSpec extends SparkSpec {
       new java.io.File(s"$streamPath/tombstones").exists() shouldBe false
       results(streamPath, dedup = false) shouldBe afterDelete
       // cellstats refreshed to physical truth
-      spark.read.parquet(s"$streamPath/cellstats")
-        .select(col("count")).as[Long].collect().sum shouldBe 39
+      SimilaritySearch.cellCountsOf(spark, streamPath).sum shouldBe 39
     } finally query.stop()
   }
 
