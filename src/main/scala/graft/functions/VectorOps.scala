@@ -79,10 +79,9 @@ object VectorOps {
     * (bucketed ANN) — this method is the exact oracle baseline.
     */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-                     qId: String, qVec: String, cId: String, cVec: String,
-                     broadcastCorpus: Boolean = true): DataFrame = {
-    val c = if (broadcastCorpus) broadcast(corpus) else corpus
-    val joined = queries.crossJoin(c)
+                     qId: String, qVec: String, cId: String,
+                     cVec: String): DataFrame = {
+    val joined = queries.crossJoin(broadcast(corpus))
       .withColumn("sim", cosine(col(qVec), col(cVec)))
     // rank: best similarity first; deterministic tiebreak on neighbor id
     val w = Window.partitionBy(col(qId)).orderBy(col("sim").desc, col(cId).asc)
@@ -102,14 +101,12 @@ object VectorOps {
     * decision is identical across engines (a raw >= on doubles can flip
     * a boundary row on last-ulp libm drift). */
   def radiusSearch(queries: DataFrame, corpus: DataFrame, tau: Double,
-                   qId: String, qVec: String, cId: String, cVec: String,
-                   broadcastCorpus: Boolean = true): DataFrame = {
-    val c = if (broadcastCorpus) broadcast(corpus) else corpus
-    queries.crossJoin(c)
+                   qId: String, qVec: String, cId: String,
+                   cVec: String): DataFrame =
+    queries.crossJoin(broadcast(corpus))
       .withColumn("sim", round(cosine(col(qVec), col(cVec)), 6))
       .filter(col("sim") >= tau)
       .select(col(qId), col(cId), col("sim"))
-  }
 
   /** Mean-pool child embeddings into one parent embedding,
     * L2-renormalized — the standard doc-from-chunks recipe (chunk

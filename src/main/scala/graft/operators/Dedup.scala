@@ -189,16 +189,10 @@ object Dedup {
     * and [[antiJoinFuzzy]] (cross-frame). `aSh`/`bSh` are (id_a|id_b,
     * sh) DISTINCT-shingle frames. Emits (id_a, id_b, jaccard) for pairs
     * meeting `threshold`, jaccard unrounded (callers round for oracles).
-    *
-    * `restrictToCandidates` pre-filters both shingle frames to the
-    * candidate id sets (broadcast semi-joins; cand is then persisted as
-    * it feeds three subtrees). Turn it ON only when candidates are a
-    * SLIVER of the frames — an incremental gate against a huge index
-    * where few batch docs collide. Default OFF: for within-corpus dedup
-    * most documents with any duplicate ARE candidates, and the measured
-    * full-book cost of the extra broadcast/semi stages was 2.5x
-    * (dedup_lsh_verified 1.02-1.32 band → 3.28 restricted) with no
-    * shuffle saved — the equi-join already touches only matching ids.
+    * The shingle frames are NOT pre-filtered to the candidate ids: the
+    * equi-join already touches only matching ids, and the measured
+    * full-book cost of broadcast semi-join pre-filters was 2.5x
+    * (dedup_lsh_verified 1.02-1.32 band → 3.28) with no shuffle saved.
     *
     * `aCounts0`/`bCounts0` optionally supply the per-doc shingle
     * counts as (id_a, n_a) / (id_b, n_b) frames: the shingle UDF
@@ -206,32 +200,17 @@ object Dedup {
     * equals the exploded frame's per-id count — callers that still
     * hold the doc frame pass the per-row form and the two shuffled
     * count aggregates here disappear (two exchanges less per run). */
-  private def verifyJaccard(cand0: DataFrame, aSh: DataFrame, bSh: DataFrame,
+  private def verifyJaccard(cand: DataFrame, aSh: DataFrame, bSh: DataFrame,
                             threshold: Double,
-                            restrictToCandidates: Boolean = false,
                             aCounts0: Option[DataFrame] = None,
                             bCounts0: Option[DataFrame] = None): DataFrame = {
-    val cand =
-      if (restrictToCandidates)
-        cand0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else cand0
-    val aS =
-      if (restrictToCandidates)
-        aSh.join(broadcast(cand.select(col("id_a")).distinct()),
-          Seq("id_a"), "left_semi")
-      else aSh
-    val bS =
-      if (restrictToCandidates)
-        bSh.join(broadcast(cand.select(col("id_b")).distinct()),
-          Seq("id_b"), "left_semi")
-      else bSh
     val aCounts = aCounts0.getOrElse(
-      aS.groupBy(col("id_a")).agg(count(lit(1)).as("n_a")))
+      aSh.groupBy(col("id_a")).agg(count(lit(1)).as("n_a")))
     val bCounts = bCounts0.getOrElse(
-      bS.groupBy(col("id_b")).agg(count(lit(1)).as("n_b")))
-    val bS2 = bS.select(col("id_b").as("b_id"), col("sh").as("b_sh"))
+      bSh.groupBy(col("id_b")).agg(count(lit(1)).as("n_b")))
+    val bS2 = bSh.select(col("id_b").as("b_id"), col("sh").as("b_sh"))
     val inter = cand
-      .join(aS, "id_a")
+      .join(aSh, "id_a")
       .join(bS2, col("id_b") === col("b_id") && col("sh") === col("b_sh"))
       .groupBy(col("id_a"), col("id_b"))
       .agg(count(lit(1)).as("n_inter"))
@@ -414,9 +393,8 @@ object Dedup {
     * 1e9 index entries and 1% fpp that is ~1.2 GB — size `fpp` to the
     * executor memory budget. NULL batch hashes route to the exact path
     * (mightContain cannot answer for them; the anti-join keeps them,
-    * matching NOT EXISTS semantics). */
-  /** `expectedSeenCount` skips the sizing count job when the caller
-    * already knows the index cardinality (a maintained index does).
+    * matching NOT EXISTS semantics).
+    *
     * The flagged batch is localCheckpoint'ed before the union split:
     * both branches would otherwise re-plan the batch lineage, and a
     * nondeterministic upstream (sample, unordered row_number) could emit
@@ -425,9 +403,8 @@ object Dedup {
     * SHUFFLE, which dominates at the target scale. */
   def antiJoinWithBloomPrefilter(batch: DataFrame, seen: DataFrame,
                                  batchHashCol: String, seenHashCol: String,
-                                 fpp: Double = 0.01,
-                                 expectedSeenCount: Option[Long] = None): DataFrame = {
-    val n = math.max(expectedSeenCount.getOrElse(seen.count()), 1L)
+                                 fpp: Double = 0.01): DataFrame = {
+    val n = math.max(seen.count(), 1L)
     val bloom = seen.stat.bloomFilter(seenHashCol, n, fpp)
     val bc = batch.sparkSession.sparkContext.broadcast(bloom)
     val might = udf((h: String) =>
@@ -478,13 +455,12 @@ object Dedup {
   def antiJoinWithShardedBloomPrefilter(batch: DataFrame, seen: DataFrame,
                                         batchHashCol: String, seenHashCol: String,
                                         shards: Int = 8, fpp: Double = 0.01,
-                                        expectedSeenCount: Option[Long] = None,
                                         materializeSeen: Boolean = true): DataFrame = {
     require(shards >= 1, s"shards must be >= 1, got $shards")
     val seenH =
       if (materializeSeen) seen.select(col(seenHashCol)).localCheckpoint()
       else seen.select(col(seenHashCol))
-    val n = math.max(expectedSeenCount.getOrElse(seenH.count()), 1L)
+    val n = math.max(seenH.count(), 1L)
     val perShardN = math.max(n / shards, 1L)
     val shardOfSeen = pmod(hash(col(seenHashCol)), lit(shards))
     val filters =
@@ -828,11 +804,9 @@ object Dedup {
   def antiJoinFuzzy(batch: DataFrame, index: DataFrame, textCol: String,
                     idCol: String, shingleN: Int = 3, bands: Int = 4,
                     rowsPerBand: Int = 3, threshold: Double = 0.5,
-                    restrictToCandidates: Boolean = false,
                     maxBucketSize: Int = 0): DataFrame = {
     val (dup0, caches) = antiJoinFuzzyDup(batch, index, textCol, idCol,
-      shingleN, bands, rowsPerBand, threshold, restrictToCandidates,
-      maxBucketSize)
+      shingleN, bands, rowsPerBand, threshold, maxBucketSize)
     val dup =
       if (caches.isEmpty) dup0
       else {
@@ -857,7 +831,6 @@ object Dedup {
       batch: DataFrame, index: DataFrame, textCol: String,
       idCol: String, shingleN: Int, bands: Int,
       rowsPerBand: Int, threshold: Double,
-      restrictToCandidates: Boolean,
       maxBucketSize: Int): (DataFrame, Seq[DataFrame]) = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0,1], got $threshold")
@@ -914,16 +887,11 @@ object Dedup {
       }
     val cand = bKeys.join(iKeys, "band_key")
       .select(col("id_a"), col("id_b")).distinct()
-    // verifyJaccard persists cand when restrictToCandidates (it feeds
-    // three subtrees there); CacheManager keys on the logical plan, so
-    // unpersisting OUR reference releases that entry too
-    if (restrictToCandidates) caches += cand
     val dup0 = verifyJaccard(cand,
         batch.select(col(idCol).as("id_a"),
           explode(shUdf(col(textCol))).as("sh")),
         index.select(col(idCol).as("id_b"),
           explode(shUdf(col(textCol))).as("sh")), threshold,
-        restrictToCandidates,
         // per-row counts (distinct-shingle UDF ⇒ size == exploded
         // count): the verify stage skips both shuffled count aggregates
         aCounts0 = Some(batch.select(col(idCol).as("id_a"),

@@ -798,14 +798,12 @@ object SimilaritySearch {
   def maxSimTopK(queries: DataFrame, corpus: DataFrame, k: Int,
                  tokens: Int, dim: Int,
                  qId: String = "vec_id", qVec: String = "embedding",
-                 cId: String = "vec_id", cVec: String = "embedding",
-                 broadcastCorpus: Boolean = true): DataFrame = {
+                 cId: String = "vec_id", cVec: String = "embedding"): DataFrame = {
     require(k >= 1, s"invalid k=$k")
     val q = queries.select(col(qId).as("qid"),
       sliceNormalize(col(qVec), tokens, dim).as("qtoks"))
-    val c0 = corpus.select(col(cId).as("nid"),
-      sliceNormalize(col(cVec), tokens, dim).as("ntoks"))
-    val c = if (broadcastCorpus) broadcast(c0) else c0
+    val c = broadcast(corpus.select(col(cId).as("nid"),
+      sliceNormalize(col(cVec), tokens, dim).as("ntoks")))
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("score").desc, col("nid").asc)
     q.crossJoin(c)

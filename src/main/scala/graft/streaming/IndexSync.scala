@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.SmallFiles
 import graft.operators.{Checkpoint, SimilaritySearch}
 
 /** Keep a persisted IVF-Flat vector index FRESH from a CDC snapshot
@@ -61,26 +62,27 @@ object IndexSync {
     * higher seq resurrects it, exactly like the store.
     *
     * Single-consumer per cursor file, like every cursor in this
-    * library — and since r15, ENFORCED, not just documented: each pull
-    * holds an atomic claim on `<cursorPath>.lock` for its whole
-    * apply+commit window. Two pumps sharing a cursor are not merely
-    * wasteful replays: their index appends are concurrent Spark write
-    * jobs into ONE parquet directory, which share the committer's
-    * `_temporary` staging — one job's cleanup can delete the other's
-    * in-flight task files, a SILENT torn append no `dedupReplays`
-    * masking can heal (the rows never landed). The claim makes the
-    * loser fail LOUDLY having written nothing. Semantics mirror the
-    * snapshot store's publish guard: a foreign `writerId`'s lock
-    * raises, naming the owner; a lock carrying THIS pump's writerId is
-    * a crashed predecessor (the standing pump serializes its own
-    * ticks) and is reclaimed, so checkpointed restarts self-heal; and
-    * after the cursor commit the lock is read back — a same-writerId
-    * twin that stole the claim mid-drain turns into a loud post-commit
-    * error telling the operator to compact and verify (compaction
-    * rebuilds cellstats and collapses versions; a torn append shows as
-    * missing rows against the store — re-drain after clearing one
-    * pump). Pumps that must coexist-crash-safely use distinct
-    * writerIds, exactly like the store's sinks.
+    * library — and ENFORCED, not just documented: each pull holds the
+    * single-writer claim ([[graft.io.SmallFiles.claim]]) on
+    * `<cursorPath>.lock` for its whole apply+commit window. Two pumps
+    * sharing a cursor are not merely wasteful replays: their index
+    * appends are concurrent Spark write jobs into ONE parquet
+    * directory, which share the committer's `_temporary` staging — one
+    * job's cleanup can delete the other's in-flight task files, a
+    * SILENT torn append no `dedupReplays` masking can heal. The claim
+    * makes the loser fail LOUDLY having written nothing, with the
+    * snapshot publish's semantics: a foreign `writerId`'s lock raises,
+    * naming the owner; a lock carrying THIS pump's writerId (or none) is
+    * a crashed predecessor (the standing pump serializes its own ticks)
+    * and is reclaimed by quarantine, so checkpointed restarts
+    * self-heal, while a live same-writerId twin caught in the reclaim
+    * window keeps its lock and this pull refuses before any write; and
+    * after the cursor commit the lock is read back
+    * ([[graft.io.SmallFiles.holds]]) — a twin that stole the claim
+    * mid-drain turns into a loud post-commit error telling the operator
+    * to compact and verify (a torn append shows as missing rows against
+    * the store — re-drain after clearing one pump). Pumps that must
+    * coexist use distinct writerIds, exactly like the store's sinks.
     *
     * The first pull bootstraps: the changelog emits the full
     * live state, so pointing a fresh cursor + empty index at a mature
@@ -111,7 +113,20 @@ object IndexSync {
     val nonce = java.util.UUID.randomUUID().toString
     val lockPath = cfs.makeQualified(
       new org.apache.hadoop.fs.Path(s"$cursorPath.lock"))
-    acquirePumpLock(cfs, lockPath, writerId, nonce)
+    SmallFiles.claim(cfs, lockPath, writerId, nonce).foreach { r =>
+      throw new IllegalStateException(s"syncIndexFromSnapshot: the cursor " +
+        s"lock $lockPath " + (r match {
+          case SmallFiles.HeldBy(owner) =>
+            s"is held by pump '$owner' (this pump is '$writerId'). Two " +
+              "pumps draining one cursor append into one index " +
+              "CONCURRENTLY, which can tear an in-flight write (shared " +
+              "committer staging). "
+          case SmallFiles.Raced(how) => s"$how. "
+        }) + "The cursor is single-consumer; this pull wrote nothing — " +
+        "run one pump per cursor (distinct writerIds make a race fail " +
+        s"before any write), or if the owner crashed, delete $lockPath " +
+        "and retry.")
+    }
     // bootstrap = no cursor yet: the pull is the FULL live state, all
     // of it new to the index, so upserting it must not write one
     // old-version tombstone per document (a corpus-sized sidecar every
@@ -164,130 +179,23 @@ object IndexSync {
       }
       if (out.isEmpty) committed = true // nothing pulled, nothing torn
       out
-    } finally releasePumpLock(cfs, lockPath, writerId, nonce, committed)
-  }
-
-  /** Claim `<cursor>.lock` atomically (create overwrite=false) before a
-    * pull touches the index — see [[syncIndexFromSnapshot]]. A present
-    * lock from a FOREIGN writerId raises; this pump's own writerId is a
-    * crashed predecessor's leftover and is reclaimed — by QUARANTINE
-    * (atomic rename to a nonce-suffixed name), never a blind delete:
-    * the delete form had a TOCTOU where a same-writerId twin claiming
-    * between the owner read and the delete had its LIVE lock removed,
-    * both pumps drained, and the tear surfaced only post-commit. The
-    * rename is verified against the bytes read before it — a fresh
-    * twin lock that slipped into the window renames back and the
-    * acquire fails BEFORE anything is written. (Coexisting pumps are
-    * still directed to distinct writerIds; this narrows the
-    * same-writerId misconfiguration from post-commit damage to a
-    * pre-write error.) */
-  private def acquirePumpLock(fs: org.apache.hadoop.fs.FileSystem,
-                              lockPath: org.apache.hadoop.fs.Path,
-                              writerId: String, nonce: String): Unit = {
-    val body = s"writer $writerId $nonce\n"
-    // the claim primitive and owner parse are the snapshot publish
-    // guard's own (StreamingOps.atomicClaimFile/claimOwner) — one
-    // implementation of the lost-race/IO-error/vanished-file
-    // disambiguation, two policies on top of it
-    def tryLock(): Boolean =
-      StreamingOps.atomicClaimFile(fs, lockPath, body)
-    def readText(p: org.apache.hadoop.fs.Path): Option[String] =
-      try Some(graft.io.SmallFiles.readText(fs, p))
-      catch {
-        // vanished = the holder released (claimOwner's contract). Any
-        // OTHER IO error must PROPAGATE: an unreadable LIVE claim must
-        // not be stolen — a transient read failure on a FOREIGN lock
-        // would otherwise parse as ownerless, pass the same-writer
-        // gate, and quarantine a live twin's lock (and a matching
-        // failure on the verification read would None==None its way
-        // past the restore check and delete it).
-        case _: java.io.FileNotFoundException => None
-      }
-    if (!tryLock()) {
-      val staleText = readText(lockPath)
-      if (staleText.isEmpty) {
-        // the holder released between the failed claim and the read:
-        // take the freed slot, or lose the re-claim race loudly
-        if (!tryLock()) throw new IllegalStateException(
-          s"syncIndexFromSnapshot: the cursor lock $lockPath was " +
-            "released and immediately re-claimed by another pump. The " +
-            "cursor is single-consumer; this pull wrote nothing — run " +
-            "one pump per cursor.")
-        return
-      }
-      val owner = staleText.flatMap(
-        _.split('\n').map(_.trim).find(_.startsWith("writer "))
-          .flatMap(_.split("\\s+").lift(1))) // claimOwner's parse
-      if (!owner.forall(_ == writerId)) throw new IllegalStateException(
-        s"syncIndexFromSnapshot: the cursor lock $lockPath is held by " +
-          s"pump '${owner.getOrElse("<unknown>")}' (this pump is " +
-          s"'$writerId'). The cursor is single-consumer — two pumps " +
-          "draining one cursor append into one index CONCURRENTLY, " +
-          "which can tear an in-flight write (shared committer " +
-          "staging). This pull wrote nothing; stop one pump, or if " +
-          s"the owner crashed, delete $lockPath and retry.")
-      // our own crashed predecessor (the standing pump serializes its
-      // ticks, so a live self cannot hold it): quarantine-reclaim
-      val stealPath = new org.apache.hadoop.fs.Path(
-        lockPath.getParent, s"${lockPath.getName}.steal.$nonce")
-      val renamed =
-        scala.util.Try(fs.rename(lockPath, stealPath)).getOrElse(false)
-      if (!renamed) throw new IllegalStateException(
-        s"syncIndexFromSnapshot: the cursor lock $lockPath changed " +
-          "during this pump's crash-leftover reclaim (rename failed — " +
-          "another pump released or re-claimed it). The cursor is " +
-          "single-consumer; this pull wrote nothing — run one pump per " +
-          "cursor (distinct writerIds make the race fail before any " +
-          "write).")
-      if (readText(stealPath) != staleText) {
-        // the window caught a LIVE twin's fresh lock: put it back and
-        // fail pre-write (if the rename-back loses yet another race,
-        // the twin's post-commit nonce check remains the backstop)
-        scala.util.Try(fs.rename(stealPath, lockPath)): Unit
-        throw new IllegalStateException(
-          s"syncIndexFromSnapshot: the cursor lock $lockPath was " +
-            s"re-claimed by a live '$writerId' twin during this pump's " +
-            "crash-leftover reclaim (quarantined bytes differ from the " +
-            "owner read; the twin's lock was restored). The cursor is " +
-            "single-consumer; this pull wrote nothing — run one pump " +
-            "per cursor with distinct writerIds.")
-      }
-      fs.delete(stealPath, false)
-      if (!tryLock()) throw new IllegalStateException(
-        s"syncIndexFromSnapshot: the cursor lock $lockPath was " +
-          "re-claimed by another pump during this pump's crash-leftover " +
-          "reclaim. The cursor is single-consumer; this pull wrote " +
-          "nothing — run one pump per cursor (distinct writerIds make " +
-          "the race fail before any write).")
+    } finally {
+      // a missing or unreadable lock reads as "not ours": on a committed
+      // pull that is steal evidence (someone cleared a LIVE pump's lock);
+      // on a failed pull it must not throw from here and mask the pull's
+      // own error
+      if (scala.util.Try(SmallFiles.holds(cfs, lockPath, nonce))
+          .getOrElse(false)) cfs.delete(lockPath, false)
+      else if (committed) throw new IllegalStateException(
+        s"syncIndexFromSnapshot: the cursor lock $lockPath was rewritten " +
+          s"by another '$writerId' pump DURING this pull (nonce mismatch " +
+          "after the cursor commit). Two pumps applied concurrently — " +
+          "the index may hold a torn append. Stop one pump, compact the " +
+          "index, and verify it against the store (re-drain heals missing " +
+          "rows); distinct writerIds make this race fail before any " +
+          "write.")
     }
   }
-
-  /** Release the pump lock; on a COMMITTED pull first read it back —
-    * a same-writerId twin that stole the claim mid-drain (it cannot
-    * tell a live twin from a crash) surfaces here as a loud
-    * post-commit error instead of a silently torn index. */
-  private def releasePumpLock(fs: org.apache.hadoop.fs.FileSystem,
-                              lockPath: org.apache.hadoop.fs.Path,
-                              writerId: String, nonce: String,
-                              committed: Boolean): Unit = {
-    // a missing/unreadable lock reads as "not ours": on a committed
-    // pull that is the same steal evidence as a foreign nonce (someone
-    // cleared a LIVE pump's lock); on a failed pull it must not throw
-    // from this finally and mask the pull's own error
-    val mine = scala.util.Try(
-      graft.io.SmallFiles.readText(fs, lockPath).contains(nonce))
-      .getOrElse(false)
-    if (mine) fs.delete(lockPath, false)
-    if (!mine && committed) throw new IllegalStateException(
-      s"syncIndexFromSnapshot: the cursor lock $lockPath was rewritten " +
-        s"by another '$writerId' pump DURING this pull (nonce mismatch " +
-        "after the cursor commit). Two pumps applied concurrently — " +
-        "the index may hold a torn append. Stop one pump, compact the " +
-        "index, and verify it against the store (re-drain heals missing " +
-        "rows); distinct writerIds make this race fail before any " +
-        "write.")
-  }
-
 
   /** The bootstrap-over-non-empty-index guard of
     * [[syncIndexFromSnapshot]] (see its Scaladoc). Operates on the

@@ -560,8 +560,6 @@ object StreamingOps {
         try {
           val touched = buckets.getSeq[Int](0).toSet
           if (touched.nonEmpty) {
-            val basePaths = cur.toSeq.flatMap(m => touched.toSeq.sorted
-              .flatMap(bk => m.buckets.get(bk).map(v => s"$root/b$bk/v$v")))
             // base aligned to the widened layout (new columns → typed
             // nulls, promoted columns → lossless up-cast); read under
             // the manifest's schema so pre-widening dirs resolve
@@ -569,11 +567,9 @@ object StreamingOps {
             // reads resolve old dirs under the promoted manifest type
             // via the parquet readers' native widening
             val base = {
-              val raw =
-                if (basePaths.isEmpty) spark.createDataFrame(
-                  spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                  widened)
-                else readBuckets(spark, cur.get, basePaths)
+              val raw = cur.fold(spark.createDataFrame(
+                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+                widened))(readBuckets(spark, root, _, touched))
               raw.select(widened.map(f =>
                 if (!raw.columns.contains(f.name))
                   lit(null).cast(f.dataType).as(f.name)
@@ -633,16 +629,7 @@ object StreamingOps {
   def compactSnapshot(spark: org.apache.spark.sql.SparkSession,
                       root: String, horizonSeq: Long,
                       keepVersions: Int = 3): Unit = {
-    // same guard as the sink: keepVersions=0 would make the retention
-    // sweep prune the JUST-COMMITTED manifest and brick the store
-    require(keepVersions >= 1, s"keepVersions must be >= 1: $keepVersions")
-    val fs = snapshotFs(spark, root)
-    val cur = currentSnapshotManifest(fs, root).getOrElse(
-      throw new IllegalStateException(
-        s"compactSnapshot: no committed snapshot at $root"))
-    val paths = cur.buckets.toSeq.sortBy(_._1)
-      .map { case (bk, v) => s"$root/b$bk/v$v" }
-    val raw = readBuckets(spark, cur, paths)
+    val (cur, raw) = liveStore(spark, root, keepVersions, "compactSnapshot")
     val compacted = raw.filter(!(coalesce(col("__deleted"), lit(false)) &&
       col("__seq") <= horizonSeq))
     publishSnapshotVersion(spark, root, compacted, idColOf(raw),
@@ -671,8 +658,7 @@ object StreamingOps {
     val id = version.orElse(currentSnapshotId(fs, root))
     id.map { n =>
       val m = manifestAt(fs, root, n, "readSnapshot", version.isDefined)
-      val raw = readBuckets(spark, m, m.buckets.toSeq.sortBy(_._1)
-        .map { case (bk, v) => s"$root/b$bk/v$v" })
+      val raw = readBuckets(spark, root, m, m.buckets.keys)
       if (includeTombstones) raw
       else raw.filter(!coalesce(col("__deleted"), lit(false)))
         .drop("__seq", "__deleted")
@@ -722,19 +708,15 @@ object StreamingOps {
     // only buckets whose version moved hold changes
     val changed = mTo.buckets.filter { case (bk, v) =>
       !mFrom.buckets.get(bk).contains(v) }.keySet
-    val toPaths = changed.toSeq.sorted
-      .flatMap(bk => mTo.buckets.get(bk).map(v => s"$root/b$bk/v$v"))
     // the emission shape is the TO side's schema (schema evolution is
     // add-only, so it is a superset of the from side's; from-only
     // delete rows carry nulls for every payload column anyway)
     val schema = mTo.schema
     val idCol = schema.head.name
-    if (changed.isEmpty) changelogShape(readBuckets(spark, mTo, Nil))
+    val toRaw = readBuckets(spark, root, mTo, changed)
+    if (changed.isEmpty) changelogShape(toRaw)
     else {
-      val toRaw = readBuckets(spark, mTo, toPaths)
-      val fromPaths = changed.toSeq.sorted
-        .flatMap(bk => mFrom.buckets.get(bk).map(v => s"$root/b$bk/v$v"))
-      val fromSide = readBuckets(spark, mFrom, fromPaths)
+      val fromSide = readBuckets(spark, root, mFrom, changed)
         .select(col(idCol), col("__seq").as("__from_seq"),
           col("__deleted").as("__from_deleted"))
       // FULL outer: a row present only on the FROM side was deleted in
@@ -881,21 +863,14 @@ object StreamingOps {
   def rebucketSnapshot(spark: org.apache.spark.sql.SparkSession,
                        root: String, newBuckets: Int,
                        keepVersions: Int = 3): Unit = {
-    require(keepVersions >= 1, s"keepVersions must be >= 1: $keepVersions")
-    val fs = snapshotFs(spark, root)
-    val cur = currentSnapshotManifest(fs, root).getOrElse(
-      throw new IllegalStateException(
-        s"rebucketSnapshot: no committed snapshot at $root"))
+    // NOT persisted: publish runs exactly ONE action over the read
+    // (the staged write; schema/idColOf are metadata-only), so a cache
+    // would be a second full copy of the store for zero reuse
+    val (cur, raw) = liveStore(spark, root, keepVersions, "rebucketSnapshot")
     require(newBuckets > cur.numBuckets,
       s"rebucketSnapshot: newBuckets $newBuckets must EXCEED the " +
         s"current ${cur.numBuckets} (grow-only; shrinking would break " +
         "the monotone bucket-map retention invariant)")
-    val paths = cur.buckets.toSeq.sortBy(_._1)
-      .map { case (bk, v) => s"$root/b$bk/v$v" }
-    // NOT persisted: publish runs exactly ONE action over this frame
-    // (the staged write; schema/idColOf are metadata-only), so a cache
-    // would be a second full copy of the store for zero reuse
-    val raw = readBuckets(spark, cur, paths)
     // synthetic prev: same id (so the manifest counter continues) and
     // the old bucket map as per-bucket VERSION FLOORS (monotonicity
     // across the boundary — grow-only means every old id < newB).
@@ -935,14 +910,8 @@ object StreamingOps {
                             root: String,
                             newType: org.apache.spark.sql.types.DataType,
                             keepVersions: Int = 3): Unit = {
-    require(keepVersions >= 1, s"keepVersions must be >= 1: $keepVersions")
-    val fs = snapshotFs(spark, root)
-    val cur = currentSnapshotManifest(fs, root).getOrElse(
-      throw new IllegalStateException(
-        s"promoteSnapshotIdType: no committed snapshot at $root"))
-    val paths = cur.buckets.toSeq.sortBy(_._1)
-      .map { case (bk, v) => s"$root/b$bk/v$v" }
-    val raw = readBuckets(spark, cur, paths)
+    val (cur, raw) =
+      liveStore(spark, root, keepVersions, "promoteSnapshotIdType")
     val idCol = idColOf(raw)
     val oldType = raw.schema(idCol).dataType
     val res = promotedType(oldType, newType)
@@ -1000,8 +969,7 @@ object StreamingOps {
         .distinct().collect().map(_.getInt(0)).toSet
       // keys that hash only to buckets the snapshot never populated
       // read no dir at all: an empty result with the snapshot's schema
-      val raw = readBuckets(spark, m, touched.toSeq.sorted
-        .flatMap(bk => m.buckets.get(bk).map(v => s"$root/b$bk/v$v")))
+      val raw = readBuckets(spark, root, m, touched)
       raw.filter(col(idField.name).isin(keys: _*))
         .filter(!coalesce(col("__deleted"), lit(false)))
         .drop("__seq", "__deleted")
@@ -1018,12 +986,9 @@ object StreamingOps {
                        root: String): Option[DataFrame] = {
     val fs = snapshotFs(spark, root)
     currentSnapshotManifest(fs, root).map { m =>
-      val mDir = new org.apache.hadoop.fs.Path(s"$root/_manifests")
       // ids past the live pointer are in-flight publish claims, not
       // retained time-travel targets (claim-first publishing)
-      val retained = fs.listStatus(mDir).toSeq.map(_.getPath.getName)
-        .filter(nm => nm.startsWith("m") && nm.drop(1).forall(_.isDigit))
-        .map(_.drop(1).toLong).filter(_ <= m.id).sorted
+      val retained = manifestIds(fs, root).filter(_ <= m.id)
       import spark.implicits._
       Seq((m.id, m.numBuckets, m.buckets.size,
           if (m.buckets.isEmpty) -1L else m.buckets.values.min,
@@ -1113,17 +1078,48 @@ object StreamingOps {
     }
   }
 
-  /** Read bucket dirs under a manifest's authority: with its recorded
-    * schema (dirs written before a widening lack the added columns —
-    * they read as nulls; footer inference over such a mix would
-    * silently drop them). No paths read as an empty frame of that
-    * schema. */
+  /** Read the dirs manifest `m` maps buckets `bks` to (ascending;
+    * buckets it does not map are skipped) under the manifest's
+    * authority: with its recorded schema (dirs written before a widening
+    * lack the added columns — they read as nulls; footer inference over
+    * such a mix would silently drop them). No dirs read as an empty
+    * frame of that schema. */
   private def readBuckets(spark: org.apache.spark.sql.SparkSession,
-                          m: SnapshotManifest,
-                          paths: Seq[String]): DataFrame =
+                          root: String, m: SnapshotManifest,
+                          bks: Iterable[Int]): DataFrame = {
+    val paths = bks.toSeq.sorted
+      .flatMap(bk => m.buckets.get(bk).map(v => s"$root/b$bk/v$v"))
     if (paths.isEmpty) spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
     else spark.read.schema(m.schema).parquet(paths: _*)
+  }
+
+  /** The live store a full-pass maintenance op republishes: its manifest
+    * and every bucket of it, read under the manifest's schema — behind
+    * the sink's `keepVersions` guard (0 would make the retention sweep
+    * prune the JUST-COMMITTED manifest and brick the store) and the
+    * no-snapshot refusal, both naming `op`. */
+  private def liveStore(spark: org.apache.spark.sql.SparkSession,
+                        root: String, keepVersions: Int,
+                        op: String): (SnapshotManifest, DataFrame) = {
+    require(keepVersions >= 1,
+      s"$op: keepVersions must be >= 1: $keepVersions")
+    val cur = currentSnapshotManifest(snapshotFs(spark, root), root)
+      .getOrElse(throw new IllegalStateException(
+        s"$op: no committed snapshot at $root"))
+    (cur, readBuckets(spark, root, cur, cur.buckets.keys))
+  }
+
+  /** The ids of the manifest files in `root/_manifests`, ascending —
+    * `m<N>` names only (a claim's quarantine file `m<N>.steal.<nonce>`
+    * and checksum sidecars are not manifests). */
+  private def manifestIds(fs: org.apache.hadoop.fs.FileSystem,
+                          root: String): Seq[Long] =
+    fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/_manifests")).toSeq
+      .map(_.getPath.getName).collect { case ManifestName(n) => n.toLong }
+      .sorted
+
+  private val ManifestName = "m(\\d+)".r
 
   /** The shared publish step of the sink and compaction: stage the
     * merged frame partitioned by bucket, move ONLY the touched
@@ -1137,27 +1133,25 @@ object StreamingOps {
     * (every caller documents it), but two sinks accidentally pointed
     * at one root would both read manifest N and both publish N+1 —
     * last pointer swap wins and the loser's batch silently vanishes.
-    * The guard CLAIMS the manifest slot FIRST — m$next is created
-    * atomically (overwrite=false; HDFS create is atomic) with the
-    * full manifest body plus a `writer <id> <nonce>` trailer, BEFORE
-    * any staging, bucket rename, or shared-dir delete — so a loser
-    * raises loudly having mutated NOTHING shared, and the winner's
-    * dirs can never be clobbered by a competitor running this code
-    * (every shared mutation happens only while holding the claim).
-    * A claim already present is either a CRASHED attempt of this
-    * same writer (its trailer carries our `writerId`; the pointer
-    * provably still names `prev`, so it is uncommitted — reclaimed,
-    * which keeps at-least-once batch replay self-healing) or a
-    * FOREIGN writer's (live mid-publish, or crashed under a
-    * different id) — a pointed error naming the claim file and its
-    * owner, never a delete: deleting a live competitor's claim would
-    * strand its pointer swap on a missing manifest. After the swap
-    * the claim is read BACK and must still carry this publish's
-    * nonce — two writers that share a `writerId` (the default) and
-    * interleave a reclaim-steal are detected here, turning the one
-    * remaining silent-loss window into a loud post-commit error.
-    * Writers that must coexist-crash-safely use distinct writerIds;
-    * the guard's job is making an accidental multi-writer
+    * The guard takes the single-writer claim
+    * ([[graft.io.SmallFiles.claim]]) on the manifest slot FIRST — m$next
+    * is created exclusively with the full manifest body under a
+    * `writer <id> <nonce>` line, BEFORE any staging, bucket rename, or
+    * shared-dir delete — so a loser raises loudly having mutated
+    * NOTHING shared, and every shared mutation happens only while
+    * holding the claim. A claim already present is either a CRASHED
+    * attempt of this same writer (it names our `writerId`, or no
+    * writer at all after a truncated create; the pointer provably
+    * still names `prev`, so it is uncommitted) — reclaimed by
+    * quarantine, which keeps at-least-once batch replay self-healing
+    * while a live same-writerId twin caught in the reclaim window keeps
+    * its claim and this publish refuses before any write — or a
+    * FOREIGN writer's, which raises naming the claim file and its owner
+    * and is never deleted. After the swap the claim is read BACK
+    * ([[graft.io.SmallFiles.holds]]) and must still carry this
+    * publish's nonce — a twin that stole it mid-publish turns into a
+    * loud post-commit error. Writers that must coexist use distinct
+    * writerIds; the guard's job is making an accidental multi-writer
     * misconfiguration visible on first collision, not licensing it. */
   private[graft] def publishSnapshotVersion(
       spark: org.apache.spark.sql.SparkSession,
@@ -1205,38 +1199,22 @@ object StreamingOps {
     // required once widened publishes mix bucket dirs of different
     // widths (StructType.json is single-line by construction)
     val body = ((s"buckets ${manifest.numBuckets}" +:
-      manifest.buckets.toSeq.sorted.map { case (bk, v) => s"b $bk $v" }) ++
-      Seq(s"writer $writerId $nonce", s"schema ${manifest.schema.json}"))
-      .mkString("", "\n", "\n")
-    val mDir = new org.apache.hadoop.fs.Path(s"$root/_manifests")
-    fs.mkdirs(mDir)
-    // guard: atomic claim of the manifest slot, BEFORE any shared
-    // mutation — of two racing writers exactly one create succeeds
-    // (manifests are immutable; see atomicClaimFile for the lost-race
-    // vs real-IO-error disambiguation)
-    def tryClaim(): Boolean = atomicClaimFile(fs, mNextPath, body)
-    if (!tryClaim()) {
-      // a claim present while the pointer names prev is UNCOMMITTED by
-      // construction: either our own crashed attempt (reclaim — batch
-      // replay must self-heal) or a foreign writer's (loud, no delete)
-      val owner = claimOwner(fs, mNextPath)
-      // trailer-less claims predate the writer line (or were truncated
-      // by a crash mid-create) — uncommitted either way, reclaimable
-      if (!owner.forall(_ == writerId)) throw new IllegalStateException(
+      manifest.buckets.toSeq.sorted.map { case (bk, v) => s"b $bk $v" }) :+
+      s"schema ${manifest.schema.json}").mkString("", "\n", "\n")
+    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/_manifests"))
+    // guard: the manifest slot's claim, BEFORE any shared mutation — of
+    // two racing writers exactly one create succeeds
+    graft.io.SmallFiles.claim(fs, mNextPath, writerId, nonce, body).foreach {
+      r => throw new IllegalStateException(
         s"snapshot publish: concurrent writer detected at $root — " +
-          s"manifest slot m$next is claimed by writer " +
-          s"'${owner.getOrElse("<unknown>")}' (this publish is " +
-          s"'$writerId'). The store is single-writer; this publish's " +
-          "batch was NOT committed. If the other writer is live, " +
-          "re-drive one writer only; if it crashed, delete " +
-          s"$mNextPath and retry.")
-      fs.delete(mNextPath, false)
-      if (!tryClaim()) throw new IllegalStateException(
-        s"snapshot publish: concurrent writer detected at $root — " +
-          s"manifest slot m$next was re-claimed by another writer " +
-          "during this publish's crash-leftover reclaim. The store is " +
-          "single-writer; this publish's batch was NOT committed — " +
-          "re-drive one writer only.")
+          s"manifest slot m$next " + (r match {
+            case graft.io.SmallFiles.HeldBy(owner) =>
+              s"is claimed by writer '$owner' (this publish is " +
+                s"'$writerId'). If the other writer crashed, delete " +
+                s"$mNextPath and retry. "
+            case graft.io.SmallFiles.Raced(how) => s"$how. "
+          }) + "The store is single-writer; this publish's batch was " +
+          "NOT committed — re-drive one writer only.")
     }
     // everything below runs under the claim: competitors running this
     // code cannot rename into our bucket versions or sweep our staging
@@ -1306,7 +1284,7 @@ object StreamingOps {
     // reclaim-steal (B mistakes live A's claim for A's crash); the
     // readback turns that last silent-loss window into a loud
     // post-commit error instead of a vanished batch.
-    if (!graft.io.SmallFiles.readText(fs, mNextPath).contains(nonce))
+    if (!graft.io.SmallFiles.holds(fs, mNextPath, nonce))
       throw new IllegalStateException(
         s"snapshot publish: concurrent writer detected at $root — " +
           s"manifest m$next was rewritten by another '$writerId' writer " +
@@ -1331,11 +1309,9 @@ object StreamingOps {
     // compactSnapshot called with a larger value than the sink's)
     // widens the window instead of crashing on a long-pruned id.
     val floorId = math.max(0L, next - keepVersions + 1)
-    if (floorId > 0 && fs.exists(mDir)) {
+    if (floorId > 0) {
       // ≤ keepVersions+1 entries by induction — bounded listing
-      val present = fs.listStatus(mDir).toSeq.map(_.getPath.getName)
-        .filter(nm => nm.startsWith("m") && nm.drop(1).forall(_.isDigit))
-        .map(_.drop(1).toLong).sorted
+      val present = manifestIds(fs, root)
       val pruneIds = present.filter(_ < floorId)
       if (pruneIds.nonEmpty) {
         val floorActual = present.filter(_ >= floorId)
@@ -1358,54 +1334,6 @@ object StreamingOps {
         }
       }
     }
-  }
-
-  /** Create `path` atomically (overwrite=false) with `body` — the
-    * shared claim primitive of the snapshot publish guard and the
-    * index-sync pump's cursor lock. Returns false exactly when the
-    * slot is already taken: HDFS raises FileAlreadyExistsException,
-    * LocalFileSystem (and other bridged FSes) a bare IOException,
-    * disambiguated via fs.exists. Any OTHER IO failure (disk full,
-    * transport) propagates as itself, never masquerading as a
-    * concurrent writer; a body-write failure after a winning create
-    * removes its own partial file first, so a retry isn't misdiagnosed
-    * as a foreign claim either. */
-  private[graft] def atomicClaimFile(fs: org.apache.hadoop.fs.FileSystem,
-                                     path: org.apache.hadoop.fs.Path,
-                                     body: String): Boolean = {
-    val o =
-      try fs.create(path, false)
-      catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-          return false
-        case e: java.io.IOException =>
-          if (fs.exists(path)) return false else throw e
-      }
-    try {
-      try o.write(body.getBytes("UTF-8")) finally o.close()
-    } catch {
-      case e: java.io.IOException =>
-        fs.delete(path, false)
-        throw e
-    }
-    true
-  }
-
-  /** The `writer <id> …` owner of a claim/lock file, shared by both
-    * claim sites. None when the file vanished (the holder released
-    * between the failed create and this read — the caller's reclaim
-    * delete is a no-op and its retry wins the freed slot), when a
-    * crash truncated the trailer before the id token, or when the file
-    * predates owner trailers — all reclaimable states. Other IO errors
-    * propagate: an unreadable LIVE claim must not be stolen. */
-  private[graft] def claimOwner(fs: org.apache.hadoop.fs.FileSystem,
-                                path: org.apache.hadoop.fs.Path)
-      : Option[String] = {
-    val text =
-      try graft.io.SmallFiles.readText(fs, path)
-      catch { case _: java.io.FileNotFoundException => return None }
-    text.split('\n').map(_.trim).find(_.startsWith("writer "))
-      .flatMap(_.split("\\s+").lift(1))
   }
 
   /** The id a VERSION-ADDRESSED reader may trust: the pointer's target
@@ -1460,26 +1388,25 @@ object StreamingOps {
 
   private def readSnapshotManifest(fs: org.apache.hadoop.fs.FileSystem,
       path: org.apache.hadoop.fs.Path, id: Long): SnapshotManifest = {
-    val lines = graft.io.SmallFiles.readText(fs, path).split('\n').map(_.trim).filter(_.nonEmpty)
+    // `writer <id> <nonce>` is the publish claim's line, `schema <json>`
+    // the layout schema every publish records
+    val lines = graft.io.SmallFiles.readText(fs, path).split('\n')
+      .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("writer "))
     require(lines.nonEmpty && lines.head.startsWith("buckets "),
       s"malformed snapshot manifest $path: missing 'buckets' header")
     val b = lines.head.stripPrefix("buckets ").trim.toInt
-    // `writer <id> <nonce>` is publish-guard provenance, `schema <json>`
-    // the layout schema every publish records
     val schema = lines.find(_.startsWith("schema "))
       .map(l => org.apache.spark.sql.types.DataType
         .fromJson(l.stripPrefix("schema "))
         .asInstanceOf[org.apache.spark.sql.types.StructType])
       .getOrElse(throw new IllegalArgumentException(
         s"malformed snapshot manifest $path: missing 'schema' line"))
-    val m = lines.tail
-      .filterNot(l => l.startsWith("writer ") || l.startsWith("schema "))
-      .map { l =>
-        val parts = l.split("\\s+")
-        require(parts.length == 3 && parts(0) == "b",
-          s"malformed snapshot manifest $path: line '$l'")
-        parts(1).toInt -> parts(2).toLong
-      }.toMap
+    val m = lines.tail.filterNot(_.startsWith("schema ")).map { l =>
+      val parts = l.split("\\s+")
+      require(parts.length == 3 && parts(0) == "b",
+        s"malformed snapshot manifest $path: line '$l'")
+      parts(1).toInt -> parts(2).toLong
+    }.toMap
     SnapshotManifest(id, b, m, schema)
   }
 

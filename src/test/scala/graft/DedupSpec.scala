@@ -330,7 +330,7 @@ class DedupSpec extends SparkSpec {
     // (the string form re-prints each cached relation's stored plan,
     // inflating token counts).
     val (dup0, caches) = Dedup.antiJoinFuzzyDup(batch, index, "text",
-      "doc_id", 3, 4, 3, 0.5, false, 3)
+      "doc_id", 3, 4, 3, 0.5, 3)
     val opt = dup0.queryExecution.optimizedPlan
     opt.collect { case m: org.apache.spark.sql.execution.columnar
       .InMemoryRelation => m }.size shouldBe 4

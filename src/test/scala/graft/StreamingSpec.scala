@@ -1147,6 +1147,34 @@ class StreamingSpec extends SparkSpec {
     StreamingOps.readSnapshot(spark, root).get.count() shouldBe 1L
   }
 
+  test("a claim's quarantine file in _manifests is not a manifest") {
+    val root = java.nio.file.Files.createTempDirectory("graft-snap-steal")
+      .toString + "/snap"
+    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    def publish(prev: Option[StreamingOps.SnapshotManifest], tag: String)
+        : Unit = {
+      val merged = Seq((1L, tag, 1L, false))
+        .toDF("doc_id", "text", "__seq", "__deleted")
+      StreamingOps.publishSnapshotVersion(spark, root, merged, "doc_id",
+        touched = Set(0, 1), prev = prev, numBuckets = 2, keepVersions = 1,
+        merged.schema)
+    }
+    publish(None, "a")
+    // what a crash mid-reclaim leaves: the renamed-aside leftover
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(s"$root/_manifests/m0.steal.some-nonce"),
+      "writer default dead-nonce\n".getBytes("UTF-8"))
+    StreamingOps.describeSnapshot(spark, root).get.collect().head
+      .getAs[Seq[Long]]("retained_manifests") shouldBe Seq(0L)
+    // the retention sweep lists the same directory
+    publish(StreamingOps.currentSnapshotManifest(fs, root), "b")
+    StreamingOps.describeSnapshot(spark, root).get.collect().head
+      .getAs[Seq[Long]]("retained_manifests") shouldBe Seq(1L)
+    StreamingOps.readSnapshot(spark, root).get.as[(Long, String)]
+      .collect().toSeq shouldBe Seq((1L, "b"))
+  }
+
   test("rebucketSnapshot grows the bucket count: state identical, empty changelog, sink continues on the new layout") {
     implicit val ctx = spark.sqlContext
     val nul = null.asInstanceOf[String]
