@@ -3227,7 +3227,7 @@ object QueriesDataOps {
       SimilaritySearch.searchIvfFlatIndex(s, s"$root/index",
           emb.filter(col("vec_id") >= 480 && col("vec_id") < 488),
           k = 3, numCandidates = Int.MaxValue,
-          qId = "vec_id", qVec = "embedding", dedupReplays = true)
+          qId = "vec_id", qVec = "embedding")
         .select(col("qid").cast("long").as("qid"),
           col("nid").cast("long").as("nid"),
           col("rank").cast("int").as("rank"))

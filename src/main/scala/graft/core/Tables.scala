@@ -11,16 +11,8 @@ import org.apache.spark.sql.types._
   * predicates/projections declaratively and never pre-collect.
   */
 object Tables {
-  val testTables: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
-
-  /** Register every test table as a temp view named after itself. */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    testTables.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
 
   // --- Reference pipeline schemas (SURVEY.md §1.2, FIXTURES.md §1) ---
   // knowledge — reference generate_personalized_commands.sh:269-277

@@ -261,10 +261,10 @@ object SimilaritySearch {
   def recallAtK(exact: DataFrame, approx: DataFrame, k: Int,
                 qId: String = "qid", nId: String = "nid"): DataFrame = {
     require(k > 0, s"invalid k=$k")
-    // distinct both sides: an approximate result MAY carry replayed
-    // duplicates (e.g. a streaming-appended index searched with
-    // dedupReplays off) — a duplicated true hit must count once, never
-    // push recall past 1.0
+    // distinct both sides: an approximate result MAY carry duplicate
+    // (qid, nid) pairs (e.g. two versions of one key in an index no
+    // tombstone separates) — a duplicated true hit must count once,
+    // never push recall past 1.0
     val exDist = exact.select(col(qId), col(nId)).distinct()
     val hits = exDist
       .join(approx.select(col(qId), col(nId)).distinct(), Seq(qId, nId))
@@ -1507,20 +1507,44 @@ object SimilaritySearch {
     math.max(1, p)
   }
 
+  /** The probe-side broadcast guard of [[searchIvfFlatIndex]]: the
+    * probe-expanded query side (|Q| × nProbe skinny rows) broadcasts
+    * when its estimate fits. */
+  private val ProbeBroadcastBytes = 64L * 1024 * 1024
+
   /** IVF-Flat search over a persisted index: map `numCandidates` to a
     * probe depth from the cellstats sidecar (read with the centroids,
-    * no Spark job), push the batch's probed
-    * cells as a partition filter on the payload scan (`.explain` shows
-    * PartitionFilters on `cluster` — unprobed cells' files are never
-    * read), then EXACT cosine top-k inside the probed cells. Identical
-    * arithmetic and tie-break to [[bruteForceTopK]], so with
+    * no Spark job), join the payload to the probe-expanded query side
+    * on the cell id, then EXACT cosine top-k inside the probed cells.
+    * Identical arithmetic and tie-break to [[bruteForceTopK]], so with
     * numCandidates ≥ corpus the result is bit-identical to the exact
     * scan — the rag_vector_topk_indexed correctness gate.
     *
-    * Plan shape: payload streams partition-pruned; the probe-expanded
-    * query side (|Q| × nProbe skinny rows) broadcasts into ONE
-    * equi-join on the cell id + a per-query window top-k. No corpus
-    * broadcast, no cartesian.
+    * Plan shape: ONE lazy plan — building the frame runs no Spark job
+    * beyond the payload's parquet footer read (none when the caller
+    * hands in a built `payloadFrame`). The probe-expanded query side
+    * broadcasts into ONE equi-join on the cell id + a per-query window
+    * top-k. No corpus broadcast, no cartesian.
+    *
+    * Probe pruning is the optimizer's: dynamic partition pruning puts
+    * the probed cells on the payload scan (`dynamicpruningexpression`
+    * in the PartitionFilters, reusing the join's broadcast), so
+    * unprobed cells' files are never read. DPP fires only when the
+    * build side carries a filter Catalyst deems selective
+    * (`PartitionPruning.hasSelectivePredicate`); the cell-id bound on
+    * the probe list, true of every probe, is that filter. A query side
+    * over the broadcast budget joins by shuffle, DPP does not fire and
+    * the scan reads every cell; the join still scores only the probed
+    * cells, so the result is the same.
+    *
+    * Live rows: tombstones hide masked rows ([[maskTombstones]]), and
+    * the ranking drops at-least-once replays — `dense_rank` over
+    * (sim desc, nid asc) gives byte-identical copies one rank, and one
+    * row per (qid, nid, rank) is kept. A key's superseded versions are
+    * tombstoned by every writer (and backfilled by IndexSync's
+    * bootstrap guard), so no version pick is needed here; the window
+    * already hash-partitions by qid, so the deduplication adds no
+    * Exchange.
     *
     * `payloadFilter`: metadata PRE-filtering on the index's payload
     * columns (the vector-store `filter` clause, served from the
@@ -1529,63 +1553,41 @@ object SimilaritySearch {
     * within probed cells — never a post-filtered shortlist that can
     * run dry. The predicate lands in the parquet scan's PushedFilters
     * (row-group stats skip non-matching groups on disk), stacking on
-    * the cluster PartitionFilters — both prunings visible in
-    * `.explain` and pinned by FilteredSearchSpec.
-    *
-    * Building the returned frame is not free: when the probe depth is
-    * below the cell count, the batch's probed cells are collected
-    * ([[probedCells]]) by one eager Spark job before this returns. At
-    * full depth every cell is probed and no job runs until the frame is
-    * evaluated. */
+    * the cluster pruning — pinned by FilteredSearchSpec. */
   def searchIvfFlatIndex(spark: org.apache.spark.sql.SparkSession,
                          path: String, queries: DataFrame, k: Int,
                          numCandidates: Int = 150,
                          qId: String = "vec_id", qVec: String = "embedding",
                          payloadCols: Seq[String] = Nil,
-                         broadcastBytes: Long = 64L * 1024 * 1024,
-                         dedupReplays: Boolean = false,
                          payloadFrame: Option[DataFrame] = None,
                          payloadFilter: Option[Column] = None)
       : DataFrame = {
     val cents = centroidsOf(spark, path)
     val nProbe = nProbeFor(cellCountsOf(spark, path), numCandidates)
-    // full probe depth reaches every cell no matter the query batch —
-    // the probed set is statically all of them, so skip the per-batch
-    // Spark job that derives it (one fewer fixed job per micro-batch
-    // in exact-regime serving); the partition filter stays in the plan
-    // either way, so the pruned-scan shape is unchanged
-    val probed: Seq[Int] =
-      if (nProbe >= cents.length) cents.indices
-      else probedCells(queries, cents, nProbe, qVec)
     // `payloadFrame`: a serving caller can hand in the payload frame
     // built ONCE (file listing + schema resolution amortized across
-    // searches); partition pruning still applies per call through the
-    // filter below
-    val raw0 = payloadFrame.getOrElse(readPayload(spark, path, payloadCols))
-      .filter(col("cluster").isin(probed: _*))
-    // metadata pre-filter BEFORE dedup/tombstones/scoring: Catalyst
-    // pushes it into the parquet scan next to the partition filter
-    val raw = payloadFilter.map(raw0.filter).getOrElse(raw0)
-    // dedupReplays: an index fed by at-least-once micro-batch appends
-    // may hold replayed duplicates (identical rows, same content nid)
-    // until the next compaction — serve [[liveRows]] at the cost of one
-    // extra shuffle. Batch-built / freshly-compacted indexes are
-    // duplicate-free, so the DEFAULT search plan only masks tombstones.
-    val payload =
-      if (dedupReplays) liveRows(spark, Seq(path -> raw))
-      else maskTombstones(spark, path, raw)
+    // searches); pruning still applies per call through the join
+    val raw = payloadFrame.getOrElse(readPayload(spark, path, payloadCols))
+    // metadata pre-filter BEFORE tombstones/scoring: Catalyst pushes it
+    // into the parquet scan
+    val payload = maskTombstones(spark, path,
+      payloadFilter.map(raw.filter).getOrElse(raw))
+    // the cell-id bound marks the probe side selective for DPP (it sits
+    // above the explode, so a local query relation cannot fold it away)
     val q = queries.select(col(qId).as("qid"), col(qVec).as("qvec"),
-      explode(probeClusters(col(qVec), cents, nProbe)).as("cluster"))
+        explode(probeClusters(col(qVec), cents, nProbe)).as("cluster"))
+      .filter(col("cluster") < cents.length)
     val d = cents.head.length
     val qBytes = rowsEstimate(queries, d.toLong * 4 + 8) *
       nProbe * (d.toLong * 4 + 16)
-    val qSide = if (qBytes <= broadcastBytes) broadcast(q) else q
+    val qSide = if (qBytes <= ProbeBroadcastBytes) broadcast(q) else q
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("sim").desc, col("nid").asc)
     payload.join(qSide, Seq("cluster"))
       .withColumn("sim", VectorOps.cosine(col("qvec"), col("nvec")))
-      .withColumn("rank", row_number().over(w))
+      .withColumn("rank", dense_rank().over(w))
       .filter(col("rank") <= k)
+      .dropDuplicates("qid", "nid", "rank")
       .select(Seq(col("qid"), col("nid"),
         col("rank").cast("int").as("rank"),
         col("sim").as("score")) ++ payloadCols.map(col): _*)
@@ -1603,7 +1605,7 @@ object SimilaritySearch {
     * At-least-once semantics: a replayed batch re-appends IDENTICAL
     * rows (the nid is a content hash, so same text ⇒ same nid, vector,
     * payload). Appends stay cheap by NOT checking for duplicates;
-    * [[searchIvfFlatIndex]]'s `dedupReplays` masks them logically and
+    * [[searchIvfFlatIndex]]'s ranking collapses them logically and
     * [[compactIvfFlatIndex]] removes them physically — the standard
     * LSM split of write-path vs read-path vs maintenance cost. */
   def appendIvfFlatBatch(batch: DataFrame, path: String,
@@ -1627,8 +1629,9 @@ object SimilaritySearch {
     * between the two leaves the key temporarily ABSENT (a stale read
     * the replay heals) rather than serving two live versions of one
     * nid with an arbitrary winner. At-least-once replays converge:
-    * re-appended rows are byte-identical (masked by `dedupReplays`
-    * until compaction) and re-appended tombstones are idempotent.
+    * re-appended rows are byte-identical (collapsed by the search's
+    * ranking until compaction) and re-appended tombstones are
+    * idempotent.
     * Multiple versions of one key inside a single batch are
     * self-consistent under the mask rule — only the highest-seq row
     * survives. Sequence numbers must be >= 0 and monotone per key
@@ -1731,8 +1734,8 @@ object SimilaritySearch {
     * [[liveRows]] (replayed duplicates and superseded versions
     * dropped, tombstoned rows removed), one file per cluster
     * partition; refresh cellstats from the rewritten truth and clear
-    * the tombstones. After compaction, searches need neither
-    * `dedupReplays` nor the tombstone mask — the weekly maintenance
+    * the tombstones. After compaction, searches find neither replays
+    * to collapse nor rows to mask — the weekly maintenance
     * pass a real 100 TB index runs (small-file collapse + physical
     * delete). The rewrite goes through [[writeCompacted]], so a crash
     * mid-compact leaves the original payload intact. */
@@ -1742,8 +1745,8 @@ object SimilaritySearch {
       liveRows(spark, Seq(path -> readPayload(spark, path))),
       centroidsOf(spark, path))
 
-  /** THE live-rows rule of the index, shared by the dedupReplays
-    * search, compaction, merge and migration: each index's own
+  /** THE live-rows rule of the index, shared by compaction, merge,
+    * migration and the health report: each index's own
     * tombstones mask its payload ([[maskTombstones]]), then the HIGHEST
     * surviving `__useq` per nid wins. Masking first matters: a nid can
     * carry several versions, and a dedup running first could keep one
@@ -1933,7 +1936,8 @@ object SimilaritySearch {
       val dupRows = payload.groupBy(col("nid")).count()
         .filter(col("count") > 1)
         .agg(coalesce(sum(col("count") - 1), lit(0L))).as[Long].head()
-      // live = what a dedupReplays search serves
+      // live = the rows compaction keeps; a search serves the same
+      // set once every superseded version is tombstoned
       val live = liveRows(spark, Seq(path -> payload)).count()
       // small-file pressure via the Hadoop FS API (any filesystem)
       val payloadDir = new org.apache.hadoop.fs.Path(s"$path/payload")
@@ -2020,17 +2024,6 @@ object SimilaritySearch {
       newCentroids)
   }
 
-  /** The distinct coarse cells a query batch probes at depth `nProbe` —
-    * the exact set [[searchIvfFlatIndex]] pushes as the payload scan's
-    * partition filter (bounded driver collect: ≤ #cells ints).
-    * Public so tests can pin the pruning set independently of plan
-    * string formatting. */
-  def probedCells(queries: DataFrame, centroids: Seq[Seq[Float]],
-                  nProbe: Int, qVec: String = "embedding"): Seq[Int] =
-    queries
-      .select(explode(probeClusters(col(qVec), centroids, nProbe)).as("cluster"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-
   /** [[adaptiveTopK]]'s indexed sibling: corpora under the broadcast
     * budget take the exact broadcast path; past it, retrieval routes
     * through the PERSISTED IVF-Flat index (built on first use at
@@ -2061,7 +2054,7 @@ object SimilaritySearch {
       if (!fs.exists(payloadPath))
         writeIvfFlatIndex(corpus, centroids, indexPath, cId, cVec)
       searchIvfFlatIndex(spark, indexPath, q, k, numCandidates,
-          "qid", "qvec", broadcastBytes = broadcastBytes)
+          "qid", "qvec")
         .select(col("qid"), col("nid"), col("rank"))
     }
   }

@@ -146,11 +146,13 @@ final class TopicParityPipeline(pipeline: CoachingPipeline,
     * partitions, searches prune to probed cells.
     *
     * The retrieve stage runs inside foreachBatch (a per-micro-batch
-    * BATCH plan) rather than as a continuous transform: probe selection
-    * reads the query vectors' nearest cells — a bounded driver
-    * transfer — which cannot be planned as one standing stream-static
-    * join. Stage topology, wire schemas, and delivery semantics are
-    * identical to [[streamStages]]. */
+    * BATCH plan) rather than as a continuous transform: each batch's
+    * search needs a fresh payload file listing and fresh sidecars (the
+    * upsert sink keeps appending), which one standing stream-static
+    * join would freeze at its start; and the probe pruning is dynamic
+    * partition pruning, which only a batch plan gets. Stage topology,
+    * wire schemas, and delivery semantics are identical to
+    * [[streamStages]]. */
   def streamStagesIndexed(spark: SparkSession, checkpointRoot: String,
                           index: graft.store.IvfFlatIndexStore,
                           sourceOptions: Map[String, String] = Map.empty)

@@ -241,10 +241,12 @@ final class IvfFlatIndexStore(spark: SparkSession, path: String,
     if (payloadCache != null) pinPayload()
 
   /** Batch retrieval: (qid, qvec) frame → (qid, nid, rank, score,
-    * document_id, chunks) with only probed cells' files read. Building
+    * document_id, chunks), each nid at most once per query, with only
+    * probed cells' files read (the optimizer prunes the payload scan;
+    * [[graft.operators.SimilaritySearch.searchIvfFlatIndex]]). Building
     * the frame reads the centroid and cellstats sidecars (no job) and,
-    * when the probe depth is below the cell count, runs the probed-cells
-    * Spark job eagerly ([[graft.operators.SimilaritySearch.searchIvfFlatIndex]]). */
+    * unpinned, the payload's parquet footers (one job); a pinned store
+    * builds it with no job. */
   def searchBatch(queries: DataFrame, k: Int, numCandidates: Int = 150,
                   qId: String = "qid", qVec: String = "qvec"): DataFrame =
     graft.operators.SimilaritySearch.searchIvfFlatIndex(

@@ -55,8 +55,8 @@ object IndexSync {
     * Crash safety mirrors the store's own consumer contract
     * ([[StreamingOps.nextChangelogBatch]]): the cursor commits AFTER
     * the index writes, so a crash replays the window; replayed upserts
-    * re-append byte-identical rows (masked by `dedupReplays`, removed
-    * by compaction) and re-appended tombstones are idempotent — the
+    * re-append byte-identical rows (collapsed by the search's ranking,
+    * removed by compaction) and re-appended tombstones are idempotent — the
     * served top-k converges. Deletes become VERSIONED index tombstones
     * at the delete's own seq, so a later re-insert of the key at a
     * higher seq resurrects it, exactly like the store.
@@ -69,7 +69,7 @@ object IndexSync {
     * appends are concurrent Spark write jobs into ONE parquet
     * directory, which share the committer's `_temporary` staging — one
     * job's cleanup can delete the other's in-flight task files, a
-    * SILENT torn append no `dedupReplays` masking can heal. The claim
+    * SILENT torn append no read-side rule can heal. The claim
     * makes the loser fail LOUDLY having written nothing, with the
     * snapshot publish's semantics: a foreign `writerId`'s lock raises,
     * naming the owner; a lock carrying THIS pump's writerId (or none) is
@@ -92,8 +92,8 @@ object IndexSync {
     * bootstrap upserts skip old-version tombstones (see below), so any
     * pre-existing index row NOT re-covered by this pull — a key absent
     * from the store, or a version newer than the store's (a rebuilt
-    * store restarts seqs LOWER, making the stale row the max-`__useq`
-    * winner under `dedupReplays`) — would be served indefinitely with
+    * store restarts seqs LOWER, so no tombstone the pull writes masks
+    * the stale row) — would be served indefinitely with
     * no error. Rows that ARE covered (same key at `__useq` ≤ the
     * pull's seq) are exactly a crashed bootstrap's own appends, which
     * the replay must converge over — those pass. Anything else raises
@@ -209,12 +209,12 @@ object IndexSync {
     *    writing anything: the tombstone-less bootstrap could never
     *    mask it, so it would be served stale forever.
     *  - version EQUAL to the pull's seq → a crashed bootstrap's own
-    *    byte-identical append: converges under `dedupReplays`/
-    *    compaction, pass.
+    *    byte-identical append: collapsed by the search's ranking and
+    *    by compaction, pass.
     *  - version OLDER than the pull's seq (incl. batch-built -1 rows)
     *    → covered but LIVE: the bootstrap's re-append would otherwise
     *    sit NEXT TO it (no tombstone written), serving both versions
-    *    to any `dedupReplays=false` search until compaction — so the
+    *    to every search until compaction — so the
     *    guard BACKFILLS one tombstone per such key at pull-seq−1,
     *    restoring the invariant that superseded versions are always
     *    tombstone-masked. Cost: rows ∝ covered-differing keys, paid on

@@ -1423,7 +1423,7 @@ object StreamingOps {
     * (SimilaritySearch.writeIvfFlatIndex — its centroids fix the cell
     * geometry, and parquet needs at least one payload file to carry
     * the schema). Replays under at-least-once delivery re-append identical
-    * content-keyed rows: searches mask them with `dedupReplays=true`
+    * content-keyed rows: the search's ranking collapses them
     * until SimilaritySearch.compactIvfFlatIndex removes them
     * physically (StreamingSpec pins batch-vs-streamed hash identity
     * and replay idempotence). */

@@ -83,6 +83,34 @@ class FilteredSearchSpec extends SparkSpec {
     plan should include regex "PartitionFilters: \\[[^\\]]*cluster"
   }
 
+  test("a partial-depth filtered search over a tombstoned index reads only its probed cell") {
+    val centroids = emb.filter(col("vec_id") < 4).orderBy(col("vec_id"))
+      .select(col("embedding")).collect()
+      .map(_.getSeq[Float](0).toSeq).toSeq
+    val path = java.nio.file.Files.createTempDirectory("graft-fprune").toString
+    SimilaritySearch.writeIvfFlatIndex(
+      emb.select(col("vec_id").cast("string").as("nid"), col("embedding"),
+        col("label")),
+      centroids, path, cId = "nid", payloadCols = Seq("label"))
+    // the query's own row is its best hit until it is deleted
+    SimilaritySearch.deleteFromIvfFlatIndex(spark, path, Seq("0"))
+    val (qvec, lb) = emb.filter(col("vec_id") === 0)
+      .select(col("embedding"), col("label")).as[(Seq[Float], Int)].head()
+    val q = Seq((0L, qvec)).toDF("qid", "qvec")
+    // ~120-row cells: numCandidates = 100 probes one cell of the four
+    SimilaritySearch.nProbeFor(
+      SimilaritySearch.cellCountsOf(spark, path), 100) shouldBe 1
+    def search = SimilaritySearch.searchIvfFlatIndex(spark, path, q,
+      k = 5, numCandidates = 100, "qid", "qvec",
+      payloadCols = Seq("label"), payloadFilter = Some(col("label") === lb))
+    partitionsRead(search, "cluster") shouldBe 1L
+    val hits = search.select(col("nid"), col("label"))
+      .as[(String, Int)].collect()
+    hits should not be empty
+    hits.map(_._2).distinct shouldBe Array(lb)
+    hits.map(_._1) should not contain "0"
+  }
+
   test("a query whose label matches nothing returns no rows (pre-filter, not padded)") {
     val queries = Seq((1L, Array(1f, 0f), 99)).toDF("vec_id", "embedding", "label")
     val corpus = Seq((10L, Array(1f, 0f), 1), (11L, Array(0f, 1f), 2))

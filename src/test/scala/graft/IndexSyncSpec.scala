@@ -24,11 +24,10 @@ class IndexSyncSpec extends SparkSpec {
   private def emb = graft.core.Tables.load(spark, dir, "embeddings")
 
   /** Exact-regime search (every cell probed) → (qid, nid) pairs. */
-  private def topk(path: String, queries: DataFrame, k: Int = 3,
-                   dedup: Boolean = true): Seq[(Long, String, Int)] =
+  private def topk(path: String, queries: DataFrame,
+                   k: Int = 3): Seq[(Long, String, Int)] =
     SimilaritySearch.searchIvfFlatIndex(spark, path, queries, k,
-        numCandidates = Int.MaxValue, qId = "vec_id", qVec = "embedding",
-        dedupReplays = dedup)
+        numCandidates = Int.MaxValue, qId = "vec_id", qVec = "embedding")
       .select(col("qid").cast("long"), col("nid"), col("rank"))
       .as[(Long, String, Int)].collect().sortBy(r => (r._1, r._3)).toSeq
 
@@ -62,9 +61,9 @@ class IndexSyncSpec extends SparkSpec {
     rep.getAs[Long]("live_rows") shouldBe 50L
     rep.getAs[Long]("dup_rows") shouldBe 1L
     // compaction collapses to the live version and clears tombstones;
-    // served results identical WITHOUT dedupReplays
+    // served results identical with no tombstone left to mask
     SimilaritySearch.compactIvfFlatIndex(spark, path)
-    topk(path, q, dedup = false) shouldBe hits
+    topk(path, q) shouldBe hits
     SimilaritySearch.ivfFlatIndexReport(spark, path).collect().head
       .getAs[Long]("dup_rows") shouldBe 0L
   }
@@ -337,7 +336,7 @@ class IndexSyncSpec extends SparkSpec {
 
       // ...and compaction preserves exactly that serving state
       SimilaritySearch.compactIvfFlatIndex(spark, indexPath)
-      topk(indexPath, queries, k = 5, dedup = false) shouldBe
+      topk(indexPath, queries, k = 5) shouldBe
         topk(rebuilt, queries, k = 5)
     } finally sink.stop()
   }
@@ -628,7 +627,9 @@ class IndexSyncSpec extends SparkSpec {
       // the store (key 7 → vector of 410 at seq 3), sync, then lose the
       // cursor AFTER the store moved again — the re-bootstrap finds 7's
       // seq-3 row older than the pull's seq-4 and must BACKFILL a
-      // tombstone so even dedupReplays=FALSE searches serve one version
+      // tombstone so every search serves one version (the ranking only
+      // collapses byte-identical copies, not a version with another
+      // vector)
       input.addData((7L, 3L, "upsert", vecOf(410)))
       sink.processAllAvailable()
       sync() shouldBe Some(2L)
@@ -636,13 +637,12 @@ class IndexSyncSpec extends SparkSpec {
       sink.processAllAvailable()
       fs.delete(new org.apache.hadoop.fs.Path(cursor), false)
       sync() shouldBe Some(3L)
-      val hits7 = topk(indexPath, emb.filter(col("vec_id") === 420),
-        k = 3, dedup = false)
+      val hits7 = topk(indexPath, emb.filter(col("vec_id") === 420), k = 3)
       hits7.head._2 shouldBe "7"
       // without the backfill the seq-3 row (vector of 410) would also
-      // serve under dedupReplays=false; the tombstone at seq 3 masks it
-      topk(indexPath, emb.filter(col("vec_id") === 410), k = 1,
-        dedup = false).head._2 should not be "7"
+      // serve; the tombstone at seq 3 masks it
+      topk(indexPath, emb.filter(col("vec_id") === 410), k = 1)
+        .head._2 should not be "7"
     } finally sink.stop()
     // SHELL REBUILD clears the tombstones sidecar: the pump wrote
     // tombstones above; a writeIvfFlatIndex at the same path must not
@@ -705,7 +705,7 @@ class IndexSyncSpec extends SparkSpec {
     // replace it with a full scan or a nested-loop broadcast
     val res = SimilaritySearch.searchIvfFlatIndex(spark, path,
       emb.filter(col("vec_id") < 3), k = 3, numCandidates = 40,
-      qId = "vec_id", qVec = "embedding", dedupReplays = true)
+      qId = "vec_id", qVec = "embedding")
     res.collect().length should be > 0
     val plan = res.queryExecution.executedPlan.toString
     // the NON-empty filter form: a bare include("PartitionFilters")
@@ -885,6 +885,58 @@ class IndexSyncSpec extends SparkSpec {
         (0L until 5L).map(d => (d, d.toString))
       SimilaritySearch.compactIvfFlatIndex(spark, kb.index)
       store.size shouldBe 43
+    }
+  }
+
+  test("a pull replayed after a lost cursor commit is served once per nid, from a lazily built search frame") {
+    withKb("kb-replay") { kb =>
+      kb.publish((0L until 40L).map(d => (d, "upsert", Kb.text(d, 0))))
+      kb.pull() shouldBe Some(0L)
+      kb.publish((0L until 5L).map(d => (d, "upsert", Kb.text(d, 1))))
+      kb.pull() shouldBe Some(1L)
+      // the pull's index writes landed but its cursor commit is lost:
+      // the next pull re-applies the window, appending each upserted
+      // doc's new version a second time, byte for byte
+      val cursor = new org.apache.hadoop.fs.Path(kb.cursor)
+      graft.io.SmallFiles.replaceText(
+        cursor.getFileSystem(spark.sparkContext.hadoopConfiguration),
+        cursor, "0")
+      kb.pull() shouldBe Some(1L)
+      // per edited doc: the superseded version and the replayed copy
+      SimilaritySearch.ivfFlatIndexReport(spark, kb.index).collect().head
+        .getAs[Long]("dup_rows") shouldBe 10L
+      val store = new IvfFlatIndexStore(spark, kb.index)
+      val q = (0L until 5L).map(d =>
+          (d, new MockEmbedder(Kb.dim).embed(Kb.text(d, 1)).toSeq))
+        .toDF("qid", "qvec")
+      // every cell, and a depth below the cell count (DPP-pruned scan)
+      SimilaritySearch.nProbeFor(
+        SimilaritySearch.cellCountsOf(spark, kb.index), 10) should be < 8
+      Seq(Int.MaxValue, 10).foreach { nc =>
+        withClue(s"numCandidates=$nc: ") {
+          val hits = store.searchBatch(q, 3, nc)
+            .select(col("qid"), col("nid"), col("rank"))
+            .as[(Long, String, Int)].collect().toSeq
+          hits.groupBy(h => (h._1, h._2)).values
+            .foreach(_ should have length 1)
+          hits.groupBy(_._1).values.foreach { perQ =>
+            perQ.map(_._3).sorted shouldBe (1 to perQ.size)
+          }
+          hits.filter(_._3 == 1).map(h => (h._1, h._2)).sorted shouldBe
+            (0L until 5L).map(d => (d, d.toString))
+        }
+      }
+      // building a partial-depth frame: the unpinned store's one job is
+      // the payload footer read, a pinned store runs none
+      jobsDuring(store.searchBatch(q, 3, 10)) shouldBe 1
+      val pinned = new IvfFlatIndexStore(spark, kb.index).pinPayload()
+      jobsDuring(pinned.searchBatch(q, 3, 10)) shouldBe 0
+      // the probe side and the tombstone aggregate broadcast, the
+      // window shuffles on qid, and the replay collapse rides that
+      // window's partitioning
+      exchanges(pinned.searchBatch(q, 3, 10)) shouldBe 4
+      // and the local query relation still gets the probed-cell pruning
+      partitionsRead(pinned.searchBatch(q, 3, 10), "cluster") should be < 8L
     }
   }
 }

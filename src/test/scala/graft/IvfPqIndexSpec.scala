@@ -189,8 +189,9 @@ class IvfPqIndexSpec extends SparkSpec {
         .as[(Long, String, Int)].collect().sorted.toSeq
     val migrated = res(newPath)
     migrated shouldBe res(freshPath)
-    // deleted rows stayed deleted WITHOUT a tombstones sidecar or
-    // dedupReplays masking — the migration applied both physically
+    // deleted rows stayed deleted WITHOUT a tombstones sidecar, and
+    // replays are gone from the payload — the migration applied both
+    // physically
     migrated.map(_._2) should not contain "n3"
     new java.io.File(s"$newPath/tombstones").exists() shouldBe false
     // cellstats reflect the re-encoded truth (5 cells, live row total)
@@ -316,17 +317,15 @@ class IvfPqIndexSpec extends SparkSpec {
         assign(nid) shouldBe assign(qid)
       }
     }
-    // the pruning SET: a single query at nProbe=1 probes exactly its
-    // own cell — that set is what the search pushes as the payload
-    // scan's partition filter (probedCells is the same computation the
-    // operator runs), so 3 of the 4 partition directories are excluded
+    // the pruning, by the scan's own metric: a single query at nProbe=1
+    // probes exactly its own cell, so the payload scan reads 1 of the 4
+    // partition directories
     val oneQ = queries.filter(col("qid") === 0)
-    SimilaritySearch.probedCells(oneQ, centroids, nProbe = 1, "qvec") shouldBe
-      Seq(assign(0L))
+    val one = SimilaritySearch.searchIvfFlatIndex(spark, path, oneQ,
+      k = 3, numCandidates = 100, "qid", "qvec")
+    partitionsRead(one, "cluster") shouldBe 1L
     // and the single-query search still returns k neighbours from it
-    val oneRes = SimilaritySearch.searchIvfFlatIndex(spark, path, oneQ,
-        k = 3, numCandidates = 100, "qid", "qvec")
-      .select(col("nid")).as[Long].collect()
+    val oneRes = one.select(col("nid")).as[Long].collect()
     oneRes should have length 3
     oneRes.foreach(nid => assign(nid) shouldBe assign(0L))
   }

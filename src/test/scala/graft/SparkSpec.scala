@@ -4,7 +4,10 @@ import java.util.concurrent.{Semaphore, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanLike
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -14,6 +17,9 @@ import org.scalatest.matchers.should.Matchers
 object SharedSpark {
   lazy val spark: SparkSession = graft.core.Sessions.local("4", "graft-test")
 }
+
+/** Plan traversal that enters adaptive plans and their query stages. */
+private object PlanWalk extends AdaptiveSparkPlanHelper
 
 trait SparkSpec extends AnyFunSuite with Matchers {
   // stable identifier so `import spark.implicits._` works in suites
@@ -49,4 +55,25 @@ trait SparkSpec extends AnyFunSuite with Matchers {
     try { runFence(); f; runFence(); started.get() }
     finally sc.removeSparkListener(listener)
   }
+
+  /** Runs `df`, then reads how many partition directories its scans of
+    * tables partitioned by `column` read: the scans' `numPartitions`
+    * metric, which counts what is left after static AND dynamic
+    * partition pruning (a PartitionFilters string cannot tell a pruning
+    * filter from an inferred `isnotnull`). */
+  def partitionsRead(df: DataFrame, column: String): Long = {
+    df.collect()
+    PlanWalk.collect(df.queryExecution.executedPlan) {
+      case s: FileSourceScanLike
+          if s.relation.partitionSchema.fieldNames.contains(column) =>
+        s.metrics("numPartitions").value
+    }.sum
+  }
+
+  /** The Exchanges (shuffle and broadcast) of `df`'s physical plan as
+    * planned, before adaptive execution revises it; call it on a frame
+    * that has not run. */
+  def exchanges(df: DataFrame): Int =
+    PlanWalk.collect(df.queryExecution.executedPlan) { case e: Exchange => e }
+      .size
 }

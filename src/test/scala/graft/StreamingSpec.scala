@@ -385,13 +385,13 @@ class StreamingSpec extends SparkSpec {
 
     val queries = rows.take(5).zipWithIndex
       .map { case ((id, _, e), _) => (id, e) }.toDF("qid", "qvec")
-    def results(path: String, dedup: Boolean): Seq[(String, String, Int)] =
+    def results(path: String): Seq[(String, String, Int)] =
       SimilaritySearch.searchIvfFlatIndex(spark, path, queries, k = 3,
           numCandidates = Int.MaxValue, "qid", "qvec",
-          payloadCols = Seq("document_id"), dedupReplays = dedup)
+          payloadCols = Seq("document_id"))
         .select(col("qid"), col("document_id"), col("rank"))
         .as[(String, String, Int)].collect().sorted.toSeq
-    val expected = results(batchPath, dedup = false)
+    val expected = results(batchPath)
     expected should have length 15
 
     try {
@@ -400,14 +400,14 @@ class StreamingSpec extends SparkSpec {
       input.addData(rows.slice(20, 30): _*); query.processAllAvailable()
       input.addData(rows.slice(30, 40): _*); query.processAllAvailable()
       // streamed-upserted index ≡ batch-built index, hash-identical
-      results(streamPath, dedup = false) shouldBe expected
+      results(streamPath) shouldBe expected
 
       // AT-LEAST-ONCE replay: a delivered-again micro-batch re-appends
-      // identical content-keyed rows; dedupReplays masks them so the
-      // search is idempotent under replay
+      // identical content-keyed rows; the search's ranking collapses
+      // them, so the search is idempotent under replay
       input.addData(rows.slice(20, 30): _*); query.processAllAvailable()
-      results(streamPath, dedup = true) shouldBe expected
-      // the duplicates are physically there (the mask is doing work)
+      results(streamPath) shouldBe expected
+      // the duplicates are physically there (the ranking is doing work)
       spark.read.parquet(s"$streamPath/payload").count() shouldBe 50
 
       // tombstone delete: drop one indexed chunk; it must vanish from
@@ -416,7 +416,7 @@ class StreamingSpec extends SparkSpec {
       val victimNid = prepared(rows).filter(col("document_id") === victim)
         .select(col("__nid")).as[String].collect().head
       SimilaritySearch.deleteFromIvfFlatIndex(spark, streamPath, Seq(victimNid))
-      val afterDelete = results(streamPath, dedup = true)
+      val afterDelete = results(streamPath)
       afterDelete.map(_._2) should not contain victim
       afterDelete should have length 15 // k=3 refilled from survivors
 
@@ -434,7 +434,7 @@ class StreamingSpec extends SparkSpec {
       after should be < before
       spark.read.parquet(s"$streamPath/payload").count() shouldBe 39
       new java.io.File(s"$streamPath/tombstones").exists() shouldBe false
-      results(streamPath, dedup = false) shouldBe afterDelete
+      results(streamPath) shouldBe afterDelete
       // cellstats refreshed to physical truth
       SimilaritySearch.cellCountsOf(spark, streamPath).sum shouldBe 39
     } finally query.stop()
