@@ -928,8 +928,9 @@ object Queries {
       // rag_vector_topk (same oracle — a divergence between the indexed
       // and broadcast paths hash-mismatches), but served by the
       // adaptive chooser FORCED past the broadcast budget, so the
-      // executed plan is the IVF-Flat index scan: probed cells as
-      // PartitionFilters, one equi-join, no corpus broadcast.
+      // executed plan is the IVF-Flat index scan: one equi-join whose
+      // dynamic partition pruning reads only the probed cells, no
+      // corpus broadcast.
       // numCandidates ≥ corpus probes every cell — the exact regime
       // (the reference's own 27-doc corpus under numCandidates=150 is
       // this regime) — which is what makes hash parity structural

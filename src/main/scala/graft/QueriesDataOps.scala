@@ -3081,9 +3081,9 @@ object QueriesDataOps {
     Entry("ann_ivfpq_index", (s, dir) => {
       // the PERSISTED index path: build (cluster-partitioned parquet
       // codes + sidecar artifacts), then search through the stored
-      // index — probe pruning runs as on-disk partition pruning
-      // (IvfPqIndexSpec pins the PartitionFilters and in-memory
-      // parity). Same recipe as ann_ivfpq_adc, so the oracle is
+      // index — probe pruning runs as the optimizer's dynamic
+      // partition pruning on the codes scan (IvfPqIndexSpec pins the
+      // partitions read and in-memory parity). Same recipe as ann_ivfpq_adc, so the oracle is
       // identical: a divergence between the stored and in-memory paths
       // hash-mismatches here.
       val emb = T(s, dir, "embeddings")

@@ -228,7 +228,7 @@ object SimilaritySearch {
 
   def adaptiveTopK(queries: DataFrame, corpus: DataFrame, k: Int,
                    planes: Seq[Seq[Float]],
-                   broadcastBytes: Long = 64L * 1024 * 1024,
+                   broadcastBytes: Long = BroadcastBudget,
                    qId: String = "vec_id", qVec: String = "embedding",
                    cId: String = "vec_id", cVec: String = "embedding"): DataFrame = {
     val corpusBytes = corpus.queryExecution.optimizedPlan.stats.sizeInBytes
@@ -362,13 +362,11 @@ object SimilaritySearch {
     * the corpus annotated with a `cluster` id — callers co-partition /
     * bucket by it so searches touch one partition per probe. */
   def ivfAssign(df: DataFrame, centroids: Seq[Seq[Float]],
-                vecCol: String = "embedding"): DataFrame = {
-    val sims = centroids.zipWithIndex.map { case (c, i) =>
-      struct(VectorOps.cosine(col(vecCol), typedLit(c)).as("sim"),
-        lit(i).as("cid"))
-    }
-    df.withColumn("cluster", greatest(sims: _*)("cid"))
-  }
+                vecCol: String = "embedding"): DataFrame =
+    // a probe at depth 1 (one tie-break; one cell works). Exploded, so a
+    // join's inferred `cluster` filters stay above the assignment
+    // instead of being pushed below it to compute it twice
+    df.withColumn("cluster", explode(probeClusters(col(vecCol), centroids, 1)))
 
   /** One Lloyd (k-means) iteration over the corpus — the IVF TRAINING
     * step the search side assumes: assign every vector to its nearest
@@ -440,16 +438,48 @@ object SimilaritySearch {
     }
   }
 
-  /** Top-`nProbe` clusters of a vector (probe list for IVF search). */
+  /** Top-`nProbe` clusters of a vector (probe list for IVF search; the
+    * first is the cell [[ivfAssign]] assigns). */
   private def probeClusters(vecCol: Column, centroids: Seq[Seq[Float]],
                             nProbe: Int): Column = {
     val sims = centroids.zipWithIndex.map { case (c, i) =>
       struct(VectorOps.cosine(vecCol, typedLit(c)).as("sim"), lit(i).as("cid"))
     }
-    // sort descending by (sim, cid) — matches ivfAssign's greatest-struct
-    // tie-break (larger cid wins ties) — and keep the first nProbe ids
+    // sort descending by (sim, cid) — the larger cid wins ties — and
+    // keep the first nProbe ids
     slice(transform(reverse(array_sort(array(sims: _*))), s => s("cid")),
       1, nProbe)
+  }
+
+  /** How a query batch reaches its probed cells, for every IVF search:
+    * each query row becomes (qid, qvec, cluster) for its `nProbe`
+    * nearest cells, `probeRow` shapes those rows (`probeRowBytes` each),
+    * [[broadcastGuard]] broadcasts them within the budget, and `cells`
+    * (rows keyed by `cluster`) joins them on the cell id. Over a scan
+    * partitioned by `cluster`, dynamic partition pruning then reads only
+    * the probed cells, reusing the join's broadcast. DPP needs a filter
+    * Catalyst deems selective on the build side: the cell-id bound, true
+    * of every probe, above the explode so a local query relation cannot
+    * fold it away. Over the budget the join shuffles and the scan reads
+    * every cell, with the same result. Refuses `nProbe < 1` and empty or
+    * ragged centroids, naming `op`, before `cells` or `probeRowBytes` is
+    * evaluated — so before any job. */
+  private def probeJoin(op: String, cells: => DataFrame, queries: DataFrame,
+                        qId: String, qVec: String,
+                        centroids: Seq[Seq[Float]], nProbe: Int,
+                        probeRowBytes: => Long)
+                       (probeRow: DataFrame => DataFrame): DataFrame = {
+    require(nProbe >= 1, s"$op: nProbe must be >= 1, got $nProbe")
+    require(centroids.nonEmpty, s"$op: need at least one centroid")
+    val d = centroids.head.length
+    require(d >= 1 && centroids.forall(_.length == d),
+      s"$op: centroids must all have one dimension >= 1")
+    val probes = probeRow(queries.select(col(qId).as("qid"),
+        col(qVec).as("qvec"),
+        explode(probeClusters(col(qVec), centroids, nProbe)).as("cluster"))
+      .filter(col("cluster") < centroids.length))
+    cells.join(broadcastGuard(probes, queries, d, nProbe, probeRowBytes),
+      Seq("cluster"))
   }
 
   /** Full IVF ANN search: corpus bucketed by nearest centroid, each query
@@ -458,20 +488,21 @@ object SimilaritySearch {
     *
     * Plan shape: both sides get a narrow centroid-scoring projection
     * (codegen'd cosine vs a literal array — no shuffle), then ONE
-    * hash-partitioned equi-join on the cluster id and a per-query window
-    * top-k. The probe fan-out multiplies the query side by nProbe, not
-    * the corpus; recall is tuned by nProbe exactly like numCandidates in
-    * the reference's index (generate_personalized_commands.sh:304). */
+    * equi-join on the cluster id ([[probeJoin]]: the probe side
+    * broadcasts within the budget) and a per-query window top-k. The
+    * probe fan-out multiplies the query side by nProbe, not the corpus;
+    * recall is tuned by nProbe exactly like numCandidates in the
+    * reference's index (generate_personalized_commands.sh:304). */
   def ivfTopK(queries: DataFrame, corpus: DataFrame,
               centroids: Seq[Seq[Float]], k: Int, nProbe: Int = 1,
               qId: String = "vec_id", qVec: String = "embedding",
               cId: String = "vec_id", cVec: String = "embedding"): DataFrame = {
-    val c = ivfAssign(corpus.select(col(cId).as("nid"), col(cVec).as("nvec")),
-      centroids, "nvec")
-    val q = queries.select(col(qId).as("qid"), col(qVec).as("qvec"),
-        explode(probeClusters(col(qVec), centroids, nProbe)).as("cluster"))
     val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid").asc)
-    q.join(c, "cluster")
+    probeJoin("ivfTopK",
+        ivfAssign(corpus.select(col(cId).as("nid"), col(cVec).as("nvec")),
+          centroids, "nvec"),
+        queries, qId, qVec, centroids, nProbe,
+        probeRowBytes = centroids.head.length * 4L + 16)(identity)
       .withColumn("sim", VectorOps.cosine(col("qvec"), col("nvec")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -592,12 +623,11 @@ object SimilaritySearch {
     * broadcast: there the corpus broadcasts and queries stream; here
     * the corpus (huge, but m ints per row) STREAMS and the LUT-bearing
     * query side broadcasts — the broadcast payload is
-    * queries × m × ksub doubles, so like [[adaptiveTopK]] the hint is
-    * dropped when Catalyst's own size estimate of the LUT projection
-    * exceeds `broadcastBytes` (the executor-memory guard for unbounded
-    * query batches; the join itself stays correct as a partitioned
-    * cartesian). One per-query window top-k; ranking by raw ADC score
-    * with the nid tiebreak (the brute-force convention).
+    * queries × m × ksub doubles, so [[broadcastGuard]] drops the hint
+    * when the estimated LUT projection exceeds the budget (the join
+    * itself stays correct as a partitioned cartesian). One per-query
+    * window top-k; ranking by raw ADC score with the nid tiebreak (the
+    * brute-force convention).
     *
     * `preEncoded`: corpus rows that already carry a `codes` column (the
     * stored-index regime — at 10¹¹ vectors the codes ARE the index and
@@ -608,8 +638,7 @@ object SimilaritySearch {
                 codebooks: Seq[Seq[Seq[Float]]], k: Int,
                 qId: String = "vec_id", qVec: String = "embedding",
                 cId: String = "vec_id", cVec: String = "embedding",
-                preEncoded: Boolean = false,
-                broadcastBytes: Long = 64L * 1024 * 1024): DataFrame = {
+                preEncoded: Boolean = false): DataFrame = {
     val (m, dsub) = validateCodebooks(codebooks)
     // one native LUT kernel per query row
     // ([[org.apache.spark.sql.graft.PqLookupTables]]) instead of m × ksub
@@ -626,21 +655,23 @@ object SimilaritySearch {
       else pqEncode(corpus.select(col(cId).as("nid"), col(cVec).as("nvec")),
           codebooks, "nvec")
         .select(col("nid"), col("codes"))
+    adcTopK(enc.crossJoin(
+      broadcastGuard(q, queries, m * dsub, 1, lutRowBytes(codebooks))), m, k)
+  }
+
+  /** Per-query ADC top-k over joined (qid, nid, luts, codes) rows: the
+    * distance is the sum of m table lookups, ranked by the
+    * 6-decimal-ROUNDED score (the tfidf convention: the oracle's
+    * cross-subspace sum order is engine-chosen, so raw totals can differ
+    * below reordering error and flip a boundary rank), nid tiebreak. */
+  private def adcTopK(joined: DataFrame, m: Int, k: Int): DataFrame = {
     val score = (0 until m).map(j =>
       element_at(element_at(col("luts"), j + 1),
         element_at(col("codes"), j + 1) + 1))
       .reduce(_ + _)
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("adc_dist").asc, col("nid").asc)
-    val qSide =
-      if (lutBytesEstimate(queries, m, dsub, codebooks) <= broadcastBytes)
-        broadcast(q)
-      else q
-    // rank by the 6-decimal-ROUNDED score (the tfidf convention): the
-    // oracle's cross-subspace sum order is engine-chosen, so raw totals
-    // can differ below reordering error and flip a boundary rank
-    enc.crossJoin(qSide)
-      .withColumn("adc_dist", round(score, 6))
+    joined.withColumn("adc_dist", round(score, 6))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("qid"), col("nid"), col("rank").cast("int").as("rank"))
@@ -1065,28 +1096,31 @@ object SimilaritySearch {
     df.withColumn(outCol, rot(col(vecCol)))
   }
 
-  /** Catalyst row-count estimate of an INPUT frame: CBO rowCount when
-    * available, else sizeInBytes over the given row width. Reading
-    * stats off the user's input plan is cheap (a scan+filter optimizes
-    * in ms); reading them off a DERIVED projection is not — the r10
-    * bench A/B measured ~1.1 s of driver time per invocation spent
-    * analyzing+optimizing the 512-expression LUT projection just to
-    * ask its size, doubling ann_pq_adc's planning cost. The guards
-    * below therefore estimate the payload as input rows × projected
-    * row width instead of planning the projection. */
-  private def rowsEstimate(input: DataFrame, rowBytes: Long): BigInt = {
-    val stats = input.queryExecution.optimizedPlan.stats
-    stats.rowCount.getOrElse(stats.sizeInBytes / math.max(1L, rowBytes))
+  /** The broadcast budget every search shares: a query-side frame whose
+    * estimate fits is broadcast ([[broadcastGuard]]). The choosers
+    * ([[adaptiveTopK]], [[adaptiveIndexedTopK]], `VectorStores.adaptive`)
+    * default their corpus threshold to it. */
+  private[graft] val BroadcastBudget: Long = 64L * 1024 * 1024
+
+  /** The one broadcast guard (executor memory vs unbounded query
+    * batches): `side` carries `perQuery` rows of `rowBytes` for each row
+    * of `queries` (vectors of `d` floats) and is broadcast when that fits
+    * [[BroadcastBudget]]; past it the join shuffles (or, with no
+    * equi-key, runs as a partitioned cartesian). Rows are the INPUT
+    * frame's estimate (CBO rowCount, else sizeInBytes over the row
+    * width; an RDD-backed frame reports `spark.sql.defaultSizeInBytes`):
+    * planning a DERIVED projection just to ask its size cost ~1.1 s of
+    * driver time per ann_pq_adc call (r10 bench A/B). */
+  private def broadcastGuard(side: DataFrame, queries: DataFrame, d: Int,
+                             perQuery: Long, rowBytes: Long): DataFrame = {
+    val stats = queries.queryExecution.optimizedPlan.stats
+    val rows = stats.rowCount.getOrElse(stats.sizeInBytes / (d.toLong * 4 + 8))
+    if (rows * perQuery * rowBytes <= BroadcastBudget) broadcast(side) else side
   }
 
-  /** Broadcast payload estimate for a per-query LUT projection: one
-    * double per codebook centroid per row (× nProbe probe fan-out). */
-  private def lutBytesEstimate(queries: DataFrame, m: Int, dsub: Int,
-                               codebooks: Seq[Seq[Seq[Float]]],
-                               nProbe: Int = 1): BigInt = {
-    val lutRowBytes = codebooks.map(_.size.toLong).sum * 8 + 8
-    rowsEstimate(queries, m.toLong * dsub * 4 + 8) * nProbe * lutRowBytes
-  }
+  /** One lookup-table row: a double per codebook centroid, plus the id. */
+  private def lutRowBytes(codebooks: Seq[Seq[Seq[Float]]]): Long =
+    codebooks.map(_.size.toLong).sum * 8 + 8
 
   /** Residual vs the row's assigned coarse centroid: `vec −
     * centroids[cluster]`, elementwise in FLOAT (both engines round the
@@ -1148,55 +1182,48 @@ object SimilaritySearch {
     * Plan shape: the corpus streams as (cluster, m ints) — never
     * shuffled, never broadcast; the probe-expanded query side
     * (queries × nProbe rows, each m × ksub doubles of LUT) broadcasts
-    * into ONE equi-join on the cluster id — a BroadcastHashJoin, so
-    * only cells a query probes are ever scored, vs [[pqAdcTopK]]'s
-    * full-scan cartesian. Same [[adaptiveTopK]]-style stats guard
-    * drops the hint for unbounded query batches. */
+    * into ONE equi-join on the cluster id ([[probeJoin]]) — a
+    * BroadcastHashJoin, so only cells a query probes are ever scored,
+    * vs [[pqAdcTopK]]'s full-scan cartesian. The shared guard drops the
+    * hint for unbounded query batches. */
   def ivfPqAdcTopK(queries: DataFrame, corpus: DataFrame,
                    centroids: Seq[Seq[Float]],
                    codebooks: Seq[Seq[Seq[Float]]], k: Int, nProbe: Int = 1,
                    qId: String = "vec_id", qVec: String = "embedding",
                    cId: String = "vec_id", cVec: String = "embedding",
-                   preEncoded: Boolean = false,
-                   broadcastBytes: Long = 64L * 1024 * 1024): DataFrame = {
-    val (m, dsub) = validateCodebooks(codebooks)
-    require(centroids.nonEmpty && centroids.forall(_.length == m * dsub),
-      s"coarse centroids must have dimension ${m * dsub} (m*dsub)")
+                   preEncoded: Boolean = false): DataFrame =
     // preEncoded: the stored-index regime (pqAdcTopK's contract) — the
     // corpus frame already carries (cluster, codes) from ivfPqEncode /
     // a persisted index, so encoding is skipped entirely
-    val enc =
+    ivfPqAdc("ivfPqAdcTopK", queries,
       if (preEncoded)
         corpus.select(col(cId).as("nid"), col("cluster"), col("codes"))
       else ivfPqEncode(
           corpus.select(col(cId).as("nid"), col(cVec).as("nvec")),
           centroids, codebooks, "nvec")
-        .select(col("nid"), col("cluster"), col("codes"))
-    // per probed cell: residual of the query vs THAT cell's centroid,
-    // then the standard per-subspace distance tables over the residual
-    val q = queries.select(col(qId).as("qid"), col(qVec).as("qvec"),
-        explode(probeClusters(col(qVec), centroids, nProbe)).as("cluster"))
-      .withColumn("rq",
-        residualVs(col("qvec"), col("cluster"), centroids, "ivfPqAdcTopK"))
-    // per-probed-cell LUTs via the native kernel (see pqAdcTopK)
-    val ql = q.select(col("qid"), col("cluster"),
-      org.apache.spark.sql.graft.PqExpressions
-        .lookupTables(col("rq"), codebooks, "ivfPqAdcTopK").as("luts"))
-    val score = (0 until m).map(j =>
-      element_at(element_at(col("luts"), j + 1),
-        element_at(col("codes"), j + 1) + 1))
-      .reduce(_ + _)
-    val qSide =
-      if (lutBytesEstimate(queries, m, dsub, codebooks, nProbe) <= broadcastBytes)
-        broadcast(ql)
-      else ql
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("adc_dist").asc, col("nid").asc)
-    enc.join(qSide, Seq("cluster"))
-      .withColumn("adc_dist", round(score, 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("nid"), col("rank").cast("int").as("rank"))
+        .select(col("nid"), col("cluster"), col("codes")),
+      centroids, codebooks, k, nProbe, qId, qVec)
+
+  /** The ADC scoring of [[ivfPqAdcTopK]] and [[searchIvfPqIndex]] over
+    * `codes` — (nid, cluster, codes) rows, built only after the
+    * refusals. */
+  private def ivfPqAdc(op: String, queries: DataFrame, codes: => DataFrame,
+                       centroids: Seq[Seq[Float]],
+                       codebooks: Seq[Seq[Seq[Float]]], k: Int, nProbe: Int,
+                       qId: String, qVec: String): DataFrame = {
+    val (m, dsub) = validateCodebooks(codebooks)
+    require(centroids.forall(_.length == m * dsub),
+      s"$op: coarse centroids must have dimension ${m * dsub} (m*dsub)")
+    adcTopK(probeJoin(op, codes, queries, qId, qVec, centroids, nProbe,
+        lutRowBytes(codebooks)) { q =>
+      // per probed cell: residual of the query vs THAT cell's centroid,
+      // then the per-subspace distance tables over the residual via the
+      // native kernel (see pqAdcTopK)
+      q.select(col("qid"), col("cluster"),
+        org.apache.spark.sql.graft.PqExpressions.lookupTables(
+          residualVs(col("qvec"), col("cluster"), centroids, op),
+          codebooks, op).as("luts"))
+    }, m, k)
   }
 
   // ——— driver-sized sidecars ————————————————————————————————————————
@@ -1370,17 +1397,19 @@ object SimilaritySearch {
                          path: String): (Seq[Seq[Float]], Seq[Seq[Seq[Float]]]) =
     (centroidsOf(spark, path), readSidecar[Float](spark, path, "codebooks"))
 
-  /** Search a persisted IVFADC index: the probed cells of the query
-    * batch are collected (bounded: ≤ #cells ints) and pushed as a
-    * partition filter on the codes scan — `.explain` shows
-    * PartitionFilters on `cluster`, so only probed cells' files are
-    * read — then the standard preEncoded ADC scoring runs. Identical
-    * results to [[ivfPqAdcTopK]] over the original corpus
-    * (IvfPqIndexSpec pins the equality and the pruned scan). */
+  /** Search a persisted IVFADC index: ONE lazy plan — the codes scan
+    * joins the probe-expanded LUT side on the cell ([[probeJoin]]), and
+    * dynamic partition pruning puts the probed cells on the scan, so
+    * only their files are read; building the frame runs no Spark job
+    * beyond the codes' parquet footer read. Above the broadcast budget
+    * the scan reads every cell (the [[searchIvfFlatIndex]] rule).
+    * Identical results to [[ivfPqAdcTopK]] over the original corpus
+    * (IvfPqIndexSpec pins the equality, the partitions read and the
+    * jobs). */
   def searchIvfPqIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                        queries: DataFrame, k: Int, nProbe: Int = 1,
-                       qId: String = "vec_id", qVec: String = "embedding",
-                       broadcastBytes: Long = 64L * 1024 * 1024): DataFrame = {
+                       qId: String = "vec_id",
+                       qVec: String = "embedding"): DataFrame = {
     val (cents, books) = readIvfPqIndexMeta(spark, path)
     // an OPQ-built index (rotation sidecar present) projects the query
     // batch into the index's rotated space — one UDF pass over the
@@ -1391,13 +1420,8 @@ object SimilaritySearch {
           .select(col(qId), col("__rvec").as(qVec))
       case None => queries
     }
-    val probed = q
-      .select(explode(probeClusters(col(qVec), cents, nProbe)).as("cluster"))
-      .distinct().collect().map(_.getInt(0)).toSeq // bounded by #cells
-    val codes = spark.read.parquet(s"$path/codes")
-      .filter(col("cluster").isin(probed: _*))
-    ivfPqAdcTopK(q, codes, cents, books, k, nProbe, qId, qVec,
-      cId = "nid", preEncoded = true, broadcastBytes = broadcastBytes)
+    ivfPqAdc("searchIvfPqIndex", q, spark.read.parquet(s"$path/codes"),
+      cents, books, k, nProbe, qId, qVec)
   }
 
   /** Parquet tuning every payload write shares: rows sorted by `nid`
@@ -1507,11 +1531,6 @@ object SimilaritySearch {
     math.max(1, p)
   }
 
-  /** The probe-side broadcast guard of [[searchIvfFlatIndex]]: the
-    * probe-expanded query side (|Q| × nProbe skinny rows) broadcasts
-    * when its estimate fits. */
-  private val ProbeBroadcastBytes = 64L * 1024 * 1024
-
   /** IVF-Flat search over a persisted index: map `numCandidates` to a
     * probe depth from the cellstats sidecar (read with the centroids,
     * no Spark job), join the payload to the probe-expanded query side
@@ -1523,19 +1542,9 @@ object SimilaritySearch {
     * Plan shape: ONE lazy plan — building the frame runs no Spark job
     * beyond the payload's parquet footer read (none when the caller
     * hands in a built `payloadFrame`). The probe-expanded query side
-    * broadcasts into ONE equi-join on the cell id + a per-query window
-    * top-k. No corpus broadcast, no cartesian.
-    *
-    * Probe pruning is the optimizer's: dynamic partition pruning puts
-    * the probed cells on the payload scan (`dynamicpruningexpression`
-    * in the PartitionFilters, reusing the join's broadcast), so
-    * unprobed cells' files are never read. DPP fires only when the
-    * build side carries a filter Catalyst deems selective
-    * (`PartitionPruning.hasSelectivePredicate`); the cell-id bound on
-    * the probe list, true of every probe, is that filter. A query side
-    * over the broadcast budget joins by shuffle, DPP does not fire and
-    * the scan reads every cell; the join still scores only the probed
-    * cells, so the result is the same.
+    * broadcasts into ONE equi-join on the cell id ([[probeJoin]]: the
+    * optimizer's dynamic partition pruning reads only the probed cells)
+    * + a per-query window top-k. No corpus broadcast, no cartesian.
     *
     * Live rows: tombstones hide masked rows ([[maskTombstones]]), and
     * the ranking drops at-least-once replays — `dense_rank` over
@@ -1572,18 +1581,10 @@ object SimilaritySearch {
     // into the parquet scan
     val payload = maskTombstones(spark, path,
       payloadFilter.map(raw.filter).getOrElse(raw))
-    // the cell-id bound marks the probe side selective for DPP (it sits
-    // above the explode, so a local query relation cannot fold it away)
-    val q = queries.select(col(qId).as("qid"), col(qVec).as("qvec"),
-        explode(probeClusters(col(qVec), cents, nProbe)).as("cluster"))
-      .filter(col("cluster") < cents.length)
-    val d = cents.head.length
-    val qBytes = rowsEstimate(queries, d.toLong * 4 + 8) *
-      nProbe * (d.toLong * 4 + 16)
-    val qSide = if (qBytes <= ProbeBroadcastBytes) broadcast(q) else q
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("sim").desc, col("nid").asc)
-    payload.join(qSide, Seq("cluster"))
+    probeJoin("searchIvfFlatIndex", payload, queries, qId, qVec, cents,
+        nProbe, probeRowBytes = cents.head.length * 4L + 16)(identity)
       .withColumn("sim", VectorOps.cosine(col("qvec"), col("nvec")))
       .withColumn("rank", dense_rank().over(w))
       .filter(col("rank") <= k)
@@ -2033,7 +2034,7 @@ object SimilaritySearch {
   def adaptiveIndexedTopK(queries: DataFrame, corpus: DataFrame, k: Int,
                           centroids: Seq[Seq[Float]], indexPath: String,
                           numCandidates: Int = 150,
-                          broadcastBytes: Long = 64L * 1024 * 1024,
+                          broadcastBytes: Long = BroadcastBudget,
                           qId: String = "vec_id", qVec: String = "embedding",
                           cId: String = "vec_id", cVec: String = "embedding")
       : DataFrame = {
@@ -2075,36 +2076,30 @@ object SimilaritySearch {
     * the raw corpus on the id (a point-lookup join: the only full-width
     * corpus touch, |candidates| rows out of |corpus|), and the query
     * vectors broadcast back on qid — then one per-query window top-k.
-    * Both broadcasts ride the same stats guard as the ADC stage. */
+    * Both broadcasts ride [[broadcastGuard]], like the ADC stage. */
   def ivfPqRerankTopK(queries: DataFrame, corpus: DataFrame,
                       centroids: Seq[Seq[Float]],
                       codebooks: Seq[Seq[Seq[Float]]], k: Int,
                       shortlist: Int, nProbe: Int = 1,
                       qId: String = "vec_id", qVec: String = "embedding",
-                      cId: String = "vec_id", cVec: String = "embedding",
-                      broadcastBytes: Long = 64L * 1024 * 1024): DataFrame = {
+                      cId: String = "vec_id",
+                      cVec: String = "embedding"): DataFrame = {
     require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
     val (m, dsub) = validateCodebooks(codebooks)
     val short = ivfPqAdcTopK(queries, corpus, centroids, codebooks,
-        shortlist, nProbe, qId, qVec, cId, cVec,
-        broadcastBytes = broadcastBytes)
+        shortlist, nProbe, qId, qVec, cId, cVec)
       .select(col("qid"), col("nid"))
     val cv = corpus.select(col(cId).as("nid"), col(cVec).as("nvec"))
     val qv = queries.select(col(qId).as("qid"), col(qVec).as("qvec"))
-    // both guards estimate off the INPUT query frame (rowsEstimate doc):
     // the shortlist is queries × shortlist (qid, nid) pairs, the query
-    // vectors queries × (id + d floats) — never plan a derived subtree
-    // just to read its size
+    // vectors queries × (id + d floats)
     val d = m * dsub
-    val qRows = rowsEstimate(queries, d.toLong * 4 + 8)
-    def guarded(df: DataFrame, bytes: BigInt): DataFrame =
-      if (bytes <= broadcastBytes) broadcast(df) else df
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("dist").asc, col("nid").asc)
     // rank by the 6-decimal-rounded exact distance (the pqAdcTopK
     // convention) so oracle summation-order noise cannot flip a rank
-    cv.join(guarded(short, qRows * shortlist * 16), "nid")
-      .join(guarded(qv, qRows * (d.toLong * 4 + 8)), "qid")
+    cv.join(broadcastGuard(short, queries, d, shortlist, 16), "nid")
+      .join(broadcastGuard(qv, queries, d, 1, d.toLong * 4 + 8), "qid")
       .withColumn("dist", round(sqDistD(col("qvec"), col("nvec")), 6))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)

@@ -191,13 +191,13 @@ final class CoachingPipeline(embedder: EmbeddingProvider, chat: ChatProvider,
 
   /** Retrieval through the PERSISTED IVF-Flat index (S5/M4 past the
     * broadcast budget): the top-k search is a partition-pruned JOIN
-    * against the on-disk index (IvfFlatIndexStore.searchBatch — probed
-    * cells as PartitionFilters) — no per-row store lookup, no corpus
-    * broadcast, no driver collect of vectors. Same output contract as
-    * [[retrieve]]/[[retrieveJoin]]: exactly-k ARRAY<STRUCT<document_id,
-    * chunks>> with NULL tail entries for <k hits. The reference analog
-    * is the coach querying the external Atlas index rather than
-    * anything in-process (main.tf:649-669). */
+    * against the on-disk index (IvfFlatIndexStore.searchBatch — dynamic
+    * partition pruning reads only the probed cells) — no per-row store
+    * lookup, no corpus broadcast, no driver collect of vectors. Same
+    * output contract as [[retrieve]]/[[retrieveJoin]]: exactly-k
+    * ARRAY<STRUCT<document_id, chunks>> with NULL tail entries for <k
+    * hits. The reference analog is the coach querying the external
+    * Atlas index rather than anything in-process (main.tf:649-669). */
   def retrieveIndexed(embedded: DataFrame,
                       index: graft.store.IvfFlatIndexStore): DataFrame =
     joinHits(embedded)(index.searchBatch(_, k, numCandidates))

@@ -3,6 +3,8 @@ package graft.store
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.SimilaritySearch.BroadcastBudget
+
 /** Vector-store seam behind the VECTOR_SEARCH operator (reference
   * generate_personalized_commands.sh:293-306, 377-384: a MongoDB Atlas
   * vector index queried laterally per row, k=3, cosine, numCandidates=150).
@@ -182,8 +184,8 @@ object BroadcastBruteForceStore {
   *
   * Two serving surfaces:
   *  - [[searchBatch]] (the scale path): DataFrame-in/DataFrame-out —
-  *    probed cells push down as PartitionFilters on the payload scan,
-  *    one equi-join, no corpus broadcast or collect. Retrieval inside a
+  *    one equi-join whose dynamic partition pruning reads only the
+  *    probed cells of the payload scan, no corpus broadcast or collect. Retrieval inside a
   *    pipeline is a JOIN against the index, exactly how a 100 TB corpus
   *    must be searched.
   *  - [[search]] (the trait's per-query contract): DRIVER-side point
@@ -275,9 +277,9 @@ final class IvfFlatIndexStore(spark: SparkSession, path: String,
     * depth max(2k, 8) — the index is IVF-FLAT, so candidates carry
     * their raw `nvec` — followed by the per-query bounded MMR re-rank
     * (SimilaritySearch.mmrRerankHits). Same plan contract as
-    * [[searchBatch]]: PartitionFilters on the payload scan, no corpus
-    * broadcast; the re-rank adds one qid-keyed aggregate over ≤ candN
-    * rows per query. */
+    * [[searchBatch]]: the optimizer's dynamic partition pruning on the
+    * payload scan, no corpus broadcast; the re-rank adds one qid-keyed
+    * aggregate over ≤ candN rows per query. */
   def searchBatchDiverse(queries: DataFrame, k: Int, lambda: Double,
                          numCandidates: Int = 150, qId: String = "qid",
                          qVec: String = "qvec"): DataFrame = {
@@ -324,7 +326,7 @@ object VectorStores {
   def adaptive(indexed: DataFrame, indexPath: String,
                idCol: String = "document_id", chunkCol: String = "chunks",
                embCol: String = "embedding", nCells: Int = 4,
-               broadcastBytes: Long = 64L * 1024 * 1024): VectorStore = {
+               broadcastBytes: Long = BroadcastBudget): VectorStore = {
     val bytes = indexed.queryExecution.optimizedPlan.stats.sizeInBytes
     if (bytes <= broadcastBytes)
       BroadcastBruteForceStore.fromDataFrame(indexed, idCol, chunkCol, embCol)

@@ -24,10 +24,11 @@ import graft.store.{IvfFlatIndexStore, VectorStoreRegistry}
   * anti-pattern IvfFlatIndexStore.search guards against). This rule
   * rewrites the lateral Generate into the index's native plan shape
   * instead: the distinct query vectors search the index as a
-  * partition-pruned equi-join (probed cells → PartitionFilters on the
-  * payload scan, the IvfPqIndexSpec-pinned shape), and the hits join
-  * back to the input rows on the query vector itself — exact array
-  * equality, so no synthetic row id and no correlation-key collisions.
+  * partition-pruned equi-join (the optimizer's dynamic partition
+  * pruning reads only the probed cells of the payload scan, the
+  * IvfPqIndexSpec-pinned shape), and the hits join back to the input
+  * rows on the query vector itself — exact array equality, so no
+  * synthetic row id and no correlation-key collisions.
   *
   * Injected by GraftExtensions as a post-hoc resolution rule: the plan
   * is fully resolved, the standard optimizer then sees (and prunes /

@@ -379,6 +379,12 @@ class AnnRecallSpec extends SparkSpec {
     e.getMessage should include("dimension must be 64")
   }
 
+  /** The same rows as a batch Catalyst cannot size: an RDD-backed frame
+    * reports `spark.sql.defaultSizeInBytes`, so the shared broadcast
+    * guard sees it over any budget. */
+  private def unsized(df: org.apache.spark.sql.DataFrame) =
+    spark.createDataFrame(df.rdd, df.schema)
+
   test("pqAdcTopK stats guard: oversize LUT projection drops the broadcast, result unchanged") {
     val cbRows = emb.filter(col("vec_id") < 32).orderBy(col("vec_id"))
       .select(col("embedding")).collect().map(_.getSeq[Float](0).toSeq).toSeq
@@ -394,8 +400,8 @@ class AnnRecallSpec extends SparkSpec {
     val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val dropped = SimilaritySearch.pqAdcTopK(queries, corpus, books, k,
-        broadcastBytes = 0)
+      val dropped = SimilaritySearch.pqAdcTopK(unsized(queries), corpus,
+        books, k)
       val p = dropped.queryExecution.executedPlan.toString
       p should not include "BroadcastNestedLoopJoin"
       p should include("CartesianProduct")
@@ -417,8 +423,8 @@ class AnnRecallSpec extends SparkSpec {
     val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val dropped = SimilaritySearch.ivfPqAdcTopK(queries, corpus, centroids,
-        books, k, nProbe = 2, broadcastBytes = 0)
+      val dropped = SimilaritySearch.ivfPqAdcTopK(unsized(queries), corpus,
+        centroids, books, k, nProbe = 2)
       // the join stays an equi-join on cluster either way — past the
       // guard it shuffles instead of broadcasting, never a cartesian
       val p = dropped.queryExecution.executedPlan.toString
@@ -439,6 +445,39 @@ class AnnRecallSpec extends SparkSpec {
     r4 should be >= r2
     r4 shouldBe 1.0 +- 1e-9 // probing every cluster IS exact search
     r2 should be >= 0.6
+  }
+
+  test("IVF searches refuse a bad probe depth or bad centroids up front, naming the operator, before any job") {
+    val cbRows = SimilaritySearch.ivfResiduals(
+        emb.filter(col("vec_id") >= 4 && col("vec_id") < 36), centroids)
+      .orderBy(col("vec_id")).select(col("rvec")).collect()
+      .map(_.getSeq[Float](0).toSeq).toSeq
+    val books = (0 until 16).map(j => cbRows.map(_.slice(j * 4, j * 4 + 4)))
+    val path = java.nio.file.Files.createTempDirectory("graft-ivfpq-refuse")
+      .toString
+    SimilaritySearch.writeIvfPqIndex(corpus, centroids, books, path)
+    // unrefused, nProbe = 0 slices an empty probe list (zero rows, no
+    // error) and a negative one fails only inside a task
+    val ragged = centroids.updated(1, centroids(1).take(3))
+    val bad = Seq(("nProbe = 0", centroids, 0), ("nProbe = -1", centroids, -1),
+      ("empty centroids", Nil, 2), ("ragged centroids", ragged, 2))
+    val ops: Seq[(String, (Seq[Seq[Float]], Int) => Any)] = Seq(
+      "ivfTopK" -> ((c, p) =>
+        SimilaritySearch.ivfTopK(queries, corpus, c, k, p)),
+      "ivfPqAdcTopK" -> ((c, p) =>
+        SimilaritySearch.ivfPqAdcTopK(queries, corpus, c, books, k, p)),
+      // the persisted index brings its own (valid) centroids
+      "searchIvfPqIndex" -> ((_, p) =>
+        SimilaritySearch.searchIvfPqIndex(spark, path, queries, k, p)))
+    for ((op, search) <- ops; (what, cents, nProbe) <- bad
+         if op != "searchIvfPqIndex" || cents == centroids)
+      withClue(s"$op, $what: ") {
+        var err: IllegalArgumentException = null
+        jobsDuring {
+          err = intercept[IllegalArgumentException](search(cents, nProbe))
+        } shouldBe 0
+        err.getMessage should include(op)
+      }
   }
 }
 

@@ -11,6 +11,23 @@ class IvfPqIndexSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
+  /** The cells a query batch probes, computed on the driver: each
+    * query's `nProbe` nearest centroids by cosine (ties to the larger
+    * cell id, the operators' rule). */
+  private def probedCells(queries: org.apache.spark.sql.DataFrame,
+                          cents: Seq[Seq[Float]], nProbe: Int): Set[Int] = {
+    def cos(a: Seq[Float], b: Seq[Float]): Double = {
+      def dot(x: Seq[Float], y: Seq[Float]) =
+        x.zip(y).map { case (p, q) => p.toDouble * q }.sum
+      dot(a, b) / math.sqrt(dot(a, a) * dot(b, b))
+    }
+    queries.select(col("embedding")).collect()
+      .map(_.getSeq[Float](0).toSeq)
+      .flatMap(v => cents.indices.sortBy(i => (-cos(v, cents(i)), -i))
+        .take(nProbe))
+      .toSet
+  }
+
   test("index round-trips exactly; pruned search equals in-memory IVFADC") {
     val emb = graft.core.Tables.load(spark, dir, "embeddings")
     val centroids = emb.filter(col("vec_id") < 4).orderBy(col("vec_id"))
@@ -39,12 +56,21 @@ class IvfPqIndexSpec extends SparkSpec {
     fromIndex.as[(Long, Long, Int)].collect().sorted shouldBe
       inMem.as[(Long, Long, Int)].collect().sorted
 
-    // probe pruning reaches the DISK scan: the codes read carries a
-    // partition filter on the coarse cell, so unprobed cells' files are
-    // never touched — the point of partitioning the index by cluster
-    val plan = fromIndex.queryExecution.executedPlan.toString
-    plan should include("PartitionFilters")
-    plan should include("cluster")
+    // probe pruning reaches the DISK scan, by the scan's own metric:
+    // the codes scan reads exactly the probed cells' partition
+    // directories, so unprobed cells' files are never touched — the
+    // point of partitioning the index by cluster
+    partitionsRead(fromIndex, "cluster") shouldBe
+      probedCells(queries, centroids, 2).size
+    // a single query at nProbe=1 probes its own cell: 1 of the 4 read
+    val one = SimilaritySearch.searchIvfPqIndex(spark, path,
+      queries.filter(col("vec_id") === 0), k = 5, nProbe = 1)
+    partitionsRead(one, "cluster") shouldBe 1L
+    one.count() shouldBe 5L
+    // the pruning is in the plan: building the search frame runs one
+    // job, the codes' parquet footer read — no probed-cells collect
+    jobsDuring(SimilaritySearch.searchIvfPqIndex(spark, path, queries,
+      k = 5, nProbe = 2)) shouldBe 1
 
     // a stored index must also serve a DIFFERENT query batch (no
     // residual coupling to the batch that built it)
@@ -116,6 +142,9 @@ class IvfPqIndexSpec extends SparkSpec {
       rCents, rBooks, k = 5, nProbe = 2)
     fromIndex.as[(Long, Long, Int)].collect().sorted shouldBe
       inMem.as[(Long, Long, Int)].collect().sorted
+    // the codes scan reads the cells the ROTATED queries probe
+    partitionsRead(fromIndex, "cluster") shouldBe
+      probedCells(rot(queries), rCents, 2).size
 
     // recall A/B at the same code budget: OPQ index vs plain index,
     // graded against exact cosine top-5 with the in-engine operator

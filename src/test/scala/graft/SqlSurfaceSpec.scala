@@ -482,6 +482,30 @@ class SqlSurfaceSpec extends SparkSpec {
       .getMessage should include("no such index")
   }
 
+  test("CREATE VECTOR INDEX over a one-row table builds a one-cell index that answers vector_search") {
+    import graft.store.{IvfFlatIndexStore, VectorStoreRegistry}
+    // one row ⇒ one seed centroid ⇒ a one-cell index: the assignment
+    // and the probe must both work over a single cell
+    spark.createDataFrame(Seq(("doc/1", "only chunk", Array(0.6f, 0.8f, 0f))))
+      .toDF("document_id", "chunks", "embedding")
+      .createOrReplaceTempView("svi_one")
+    val path = graft.core.TempRoots.scratch("svi-one-cell-index")
+    spark.sql(s"CREATE VECTOR INDEX svi_one_idx ON svi_one (embedding) " +
+      s"WITH ('path' = '$path')")
+    VectorStoreRegistry.get("svi_one_idx") shouldBe an[IvfFlatIndexStore]
+    spark.createDataFrame(Seq((7L, Array(1f, 0f, 0f))))
+      .toDF("qid", "embedding").createOrReplaceTempView("svi_one_q")
+    val hits = spark.sql(
+      """SELECT qid, vs.rank, vs.document_id, vs.chunks
+        |FROM svi_one_q
+        |LATERAL VIEW vector_search('svi_one_idx', 3, embedding) vs
+        |  AS rank, document_id, chunks, score""".stripMargin)
+      .collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getString(3)))
+    hits.toSeq shouldBe Seq((7L, 1, "doc/1", "only chunk"))
+    spark.sql("DROP VECTOR INDEX svi_one_idx")
+  }
+
   test("vector_search_diverse over a persisted index rewrites to the pruned join + bounded MMR re-rank") {
     import graft.store.{BroadcastBruteForceStore, IvfFlatIndexStore, VectorStoreRegistry}
     // a redundant pair a1/a2 near a query direction, one diverse doc b,
